@@ -1079,6 +1079,8 @@ object Bench {
       .map(m => (m.group(1), m.group(2))).toSeq.sortBy(_._1)
     require(qPairs.map(_._1).distinct.size == qPairs.size,
       "query short keys (leading qNN token) must be unique for the stdout map")
+    require(qPairs.size == "\"[^\"]*\":".r.findAllMatchIn(qs).size,
+      "every query of the detail map needs a leading qNN token to reach the stdout map")
     val shortMap = qPairs.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
     def line(withCats: Boolean): String = {

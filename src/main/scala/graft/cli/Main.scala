@@ -289,7 +289,7 @@ object Main {
         val idCol = flag("--id-col", "vec_id")
         val vecCol = flag("--vec-col", "embedding")
         val vecs = spark.read.parquet(vectorsPath)
-        kind match {
+        val n = kind match {
           case "ivf" =>
             graft.index.VectorIndex.build(vecs, idCol, vecCol, nCells, indexDir,
               quantized = flags.contains("--int8"))
@@ -303,7 +303,7 @@ object Main {
           case other2 =>
             System.err.println(s"unknown index kind: $other2 (ivf | hnsw)"); sys.exit(2)
         }
-        println(s"built $kind index over ${vecs.count()} vectors at $indexDir")
+        println(s"built $kind index over $n vectors at $indexDir")
 
       case "index-update" =>
         val Array(_, vectorsPath, indexDir) = args.take(3)

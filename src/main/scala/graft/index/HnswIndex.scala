@@ -52,19 +52,8 @@ object HnswIndex {
     def centroids: String = s"$dir/centroids.parquet"
     def graph: String = s"$dir/graph.parquet"
     def codebooks: String = s"$dir/codebooks.parquet"
-    def metadata: String = s"$dir/metadata.json"
+    def metadata: String = IndexArtifact.metadataPath(dir)
     def staging: String = s"$dir/rebuild_staging.parquet"
-
-    /** Artifact-level commit marker: deleted FIRST and recreated LAST by
-      * every mutation ([[build]], [[update]]'s append), so a crash at ANY
-      * point between the centroids, graph and metadata writes leaves a
-      * detectably-incomplete artifact. Gating on the graph's own
-      * `_SUCCESS` alone missed the cross-file case: a rebuild that died
-      * after `centroids.parquet` but before `graph.parquet` left NEW
-      * centroids beside the OLD graph and its surviving `_SUCCESS`, and
-      * non-exhaustive searches silently routed with a quantizer that no
-      * longer matched cell membership. */
-    def commitMarker: String = s"$dir/_graft_commit"
   }
 
   /** `pqM == 0` ⇒ no PQ codes stored (float / int8 storage only). */
@@ -72,42 +61,13 @@ object HnswIndex {
       efConstruction: Int, seed: Long, pqM: Int, pqK: Int)
 
   /** The sidecar is a bounded single-object JSON this module wrote
-    * itself ([[writeMetadata]]'s fixed field set) — extracted with
+    * itself ([[publishMetadata]]'s fixed field set) — extracted with
     * anchored field patterns, no JSON library dependency. */
-  private def metadataText(spark: SparkSession, p: Paths): String = {
-    val path = new org.apache.hadoop.fs.Path(p.metadata)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def once(): String = {
-      val in = fs.open(path)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    // The local scheme publishes via ATOMIC_MOVE (no file-absent window);
-    // non-local schemes still swap via delete+rename, so a reader landing
-    // exactly on the swap instant can see file-absent (or a checksum
-    // sidecar mid-move). Bounded backoff-retry instead of one immediate
-    // re-read: a single retry can still land inside the same window under
-    // a slow writer. A genuinely missing file rethrows from the last try.
-    var attempt = 0
-    var result: Option[String] = None
-    while (result.isEmpty) {
-      try result = Some(once())
-      catch {
-        case e @ (_: java.io.FileNotFoundException |
-                  _: org.apache.hadoop.fs.ChecksumException) =>
-          attempt += 1
-          if (attempt >= 4) throw e
-          Thread.sleep(25L * attempt)
-      }
-    }
-    result.get
-  }
-
   private def readMetadata(spark: SparkSession, p: Paths): Meta = {
-    val text = metadataText(spark, p)
-    // terminal-brace sentinel: writeMetadata emits the whole object in
-    // one write (now behind an atomic rename besides), so bytes that
-    // don't close the object are a truncated/partial file — fail loudly
+    val text = IndexArtifact.readMetadata(spark, p.dir)
+    // terminal-brace sentinel: publishMetadata emits the whole object in
+    // one write behind a rename, so bytes that don't close the object
+    // are a truncated/partial file — fail loudly
     // instead of letting fieldOr default the pq geometry of a torn read
     if (!text.trim.endsWith("}"))
       throw new IllegalStateException(
@@ -165,53 +125,6 @@ object HnswIndex {
     def n: Int = ids.length
   }
 
-  private def isComplete(spark: SparkSession, p: Paths): Boolean = {
-    val m = new org.apache.hadoop.fs.Path(p.commitMarker)
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
-  }
-
-  /** Legacy-artifact adoption: an index written before the
-    * artifact-level commit marker existed is gated by the graph's own
-    * `_SUCCESS` and carries NO pq fields in its metadata — marker-era
-    * writers always stamp both, so a crashed marker-era mutation
-    * (marker deleted first, metadata already pq-stamped) is never
-    * mistaken for a legacy artifact. Without this, every healthy
-    * pre-marker index would be refused with a misleading
-    * crashed-mid-mutation diagnosis and forced into a full rebuild.
-    * Adoption re-stamps the metadata (adding the pq fields, making the
-    * artifact marker-era from then on) and publishes the marker;
-    * idempotent and cheap, called at every entry point. */
-  private def ensureAdopted(spark: SparkSession, p: Paths): Unit = {
-    if (markerMtime(spark, p) >= 0) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val succ = new org.apache.hadoop.fs.Path(s"${p.graph}/_SUCCESS")
-    val metaP = new org.apache.hadoop.fs.Path(p.metadata)
-    val fs = succ.getFileSystem(conf)
-    if (!fs.exists(succ) || !fs.exists(metaP)) return // genuinely incomplete
-    // an update() staging dir means a mutation is IN FLIGHT right now
-    // (staged before the marker is deleted, removed before it returns) —
-    // a marker-less artifact in that window is mid-maintenance, not
-    // legacy; adopting it would publish a commit marker over files the
-    // concurrent writer is still replacing
-    if (fs.exists(new org.apache.hadoop.fs.Path(p.staging))) return
-    if (metadataText(spark, p).contains("\"pq_m\"")) return // marker-era crash
-    val meta = readMetadata(spark, p)
-    writeMetadata(spark, p, meta.n, meta.nCells, meta.m,
-      meta.efConstruction, meta.seed, meta.pqM, meta.pqK)
-    writeCommitMarker(spark, p)
-  }
-
-  private def deleteCommitMarker(spark: SparkSession, p: Paths): Unit = {
-    val m = new org.apache.hadoop.fs.Path(p.commitMarker)
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(m, false)
-  }
-
-  private def writeCommitMarker(spark: SparkSession, p: Paths): Unit = {
-    val m = new org.apache.hadoop.fs.Path(p.commitMarker)
-    val out = m.getFileSystem(spark.sparkContext.hadoopConfiguration).create(m, true)
-    out.close()
-  }
-
   /** Reconstruct the `_v` column on a frame read from storage (int8
     * rows dequantize; a null scale marks the all-zero vector). */
   private def restored(df: DataFrame): DataFrame = {
@@ -234,17 +147,17 @@ object HnswIndex {
     * and persisted exactly as in int8 mode (structure from the snapped
     * vectors, codes from residual codebooks trained through
     * [[PqIndex.trainCodebooks]]), [[searchPq]] beam-searches on the
-    * codes and reranks its shortlist against the int8 store. */
+    * codes and reranks its shortlist against the int8 store.
+    *
+    * Returns the vector count. The artifact is unpublished throughout
+    * ([[IndexArtifact]]). */
   def build(vectors: DataFrame, idCol: String, vecCol: String, nCells: Int,
       outDir: String, m: Int = 8, efConstruction: Int = 64,
       seed: Long = 42L, quantized: Boolean = false,
-      pqM: Int = 0, pqK: Int = 256): Unit = {
+      pqM: Int = 0, pqK: Int = 256): Long = {
     val p = Paths(outDir)
     val spark = vectors.sparkSession
-    // un-publish BEFORE any file mutates: a crash anywhere below leaves
-    // a marker-less artifact that search/update refuse, never a silently
-    // mismatched centroids/graph pair
-    deleteCommitMarker(spark, p)
+    IndexArtifact.unpublish(spark, outDir)
     val n = vectors.count()
     val cents = Similarity.trainIvfCentroids(
       vectors, idCol, vecCol, nCells, knownN = Some(n))
@@ -270,8 +183,8 @@ object HnswIndex {
       } else if (useQuant) quantizedStorage(nodes)
       else nodes
     stored.write.mode("overwrite").partitionBy("cell_id").parquet(p.graph)
-    writeMetadata(spark, p, n, nCells, m, efConstruction, seed, pqM, pqK)
-    writeCommitMarker(spark, p)
+    publishMetadata(spark, p, Meta(n, nCells, m, efConstruction, seed, pqM, pqK))
+    n
   }
 
   private def loadedCentroids(cents: DataFrame): (Seq[Int], Array[Array[Double]]) = {
@@ -419,12 +332,7 @@ object HnswIndex {
       outDir: String): String = {
     val spark = vectors.sparkSession
     val p = Paths(outDir)
-    ensureAdopted(spark, p)
-    if (!isComplete(spark, p))
-      throw new IllegalStateException(
-        s"index at $outDir is incomplete (no ${p.commitMarker}) — " +
-          "a writer crashed mid-mutation; rebuild from the corpus " +
-          s"(a staged pre-rebuild copy may survive at ${p.staging})")
+    IndexArtifact.published(spark, outDir)
     val meta = readMetadata(spark, p)
     val existingRaw = spark.read.parquet(p.graph)
     val isQuant = existingRaw.columns.contains("_q")
@@ -472,8 +380,8 @@ object HnswIndex {
           .unionByName(if (isQuant) snapToGrid(arrivals) else arrivals)
           .write.mode("overwrite").parquet(p.staging)
         // staging is safe on disk — un-publish before the partition
-        // overwrite and metadata rewrite mutate the artifact
-        deleteCommitMarker(spark, p)
+        // overwrite mutates the artifact
+        IndexArtifact.unpublish(spark, outDir)
         val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try {
@@ -497,362 +405,229 @@ object HnswIndex {
         }
         val sp = new org.apache.hadoop.fs.Path(p.staging)
         sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
-        writeMetadata(spark, p, nExisting + nNew, meta.nCells, meta.m,
-          meta.efConstruction, meta.seed, meta.pqM, meta.pqK)
-        writeCommitMarker(spark, p)
+        publishMetadata(spark, p, meta.copy(n = nExisting + nNew))
         "append"
       }
     } finally fresh.unpersist()
   }
 
-  /** Write-temp + atomic rename: a concurrent reader (ensureAdopted's
-    * vintage sniff, a cold metaFor) sees the OLD bytes or the NEW bytes,
-    * never a truncate-then-write window — the torn read that could
-    * misclassify a marker-era artifact as legacy mid-update. */
-  private def writeMetadata(spark: SparkSession, p: Paths, n: Long,
-      nCells: Int, m: Int, efC: Int, seed: Long,
-      pqM: Int = 0, pqK: Int = 256): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(p.metadata)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.metadata + ".tmp-" + java.util.UUID.randomUUID().toString)
-    val fs = path.getFileSystem(conf)
-    val body = (s"""{"n_vectors": $n, "n_cells": $nCells, "m": $m, """ +
-      s""""ef_construction": $efC, "seed": $seed, """ +
-      s""""pq_m": $pqM, "pq_k": $pqK, "metric": "cosine"}""").getBytes("UTF-8")
-    if (fs.getUri.getScheme == "file") {
-      // Local scheme: NIO rename-over with ATOMIC_MOVE — no file-absent
-      // window at all, and a crash between any two steps leaves either
-      // the old or the new bytes in place (the delete+rename form could
-      // crash after the delete and leave the index permanently
-      // metadata-less). The tmp is written via NIO (no .crc sidecar);
-      // any stale destination sidecar from an older FileSystem-written
-      // vintage is dropped first so a post-swap fs.open doesn't validate
-      // new bytes against an old checksum (no sidecar ⇒ no validation).
-      val dst = java.nio.file.Paths.get(path.toUri.getPath)
-      val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
-      Option(dst.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(tmpNio, body)
-      val crc = dst.resolveSibling("." + dst.getFileName.toString + ".crc")
-      java.nio.file.Files.deleteIfExists(crc)
-      java.nio.file.Files.move(tmpNio, dst,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val out = fs.create(tmp, true)
-      out.write(body)
-      out.close()
-      // FileSystem-level rename keeps checksum sidecars consistent (a
-      // FileContext rename on a checksummed local fs moves only the data
-      // file and leaves the destination's stale .crc behind). The swap's
-      // only observable intermediate is file-ABSENT, which metadataText
-      // retries across (bounded backoff) — never a torn byte stream.
-      fs.delete(path, false)
-      if (!fs.rename(tmp, path))
-        throw new IllegalStateException(
-          s"could not publish metadata at ${p.metadata} (rename failed)")
-    }
-  }
+  private def publishMetadata(spark: SparkSession, p: Paths, meta: Meta): Unit =
+    IndexArtifact.publish(spark, p.dir,
+      s"""{"n_vectors": ${meta.n}, "n_cells": ${meta.nCells}, "m": ${meta.m}, """ +
+        s""""ef_construction": ${meta.efConstruction}, "seed": ${meta.seed}, """ +
+        s""""pq_m": ${meta.pqM}, "pq_k": ${meta.pqK}, "metric": "cosine"}""")
 
   // ------------------------------------------------------------- serving
 
-  /** The loaded graph is a bounded number of cell-sized rows that a
-    * serving loop reads on EVERY batch — persist the grouped dataset
-    * and key the cache on the artifact's commit-marker mtime (the same
-    * residency + invalidation device as the IVF centroid cache): a
-    * rebuild rewrites the marker, evicts the superseded entry, and
-    * unpersists its executor blocks.
-    *
-    * Entries are [[Slot]]s, not datasets: `TrieMap.getOrElseUpdate` may
-    * evaluate its thunk in two racing first loaders, and the loser's
-    * persisted dataset would leak executor blocks with no owner. The
-    * slot decides the winner via `putIfAbsent` BEFORE anything is
-    * built; only the winning slot's lazy body ever runs. */
-  private final class Slot[A](mk: () => Dataset[A]) {
-    @volatile private var built = false
-    @volatile private var released = false
-    lazy val value: Dataset[A] = {
-      val v = mk(); built = true
-      // an eviction that raced the first load saw built=false and
-      // skipped the unpersist — honor it here, or the freshly persisted
-      // dataset would outlive its cache entry with no owner
-      if (released) v.unpersist()
-      v
-    }
-    /** Unpersist once materialized; if the winning loader is still
-      * inside `mk()`, mark the slot so the lazy body unpersists on
-      * completion (unpersist is idempotent, so both firing is safe). */
-    def release(): Unit = { released = true; if (built) value.unpersist() }
-  }
-
-  private val graphCache = new TrieMap[(String, Long), Slot[CellGraph]]
+  /** Serving state is cached per artifact generation
+    * ([[GenerationCache]]): a serving loop reads it on EVERY batch, and a
+    * rebuild publishes a new generation whose first load evicts the
+    * superseded entries. The loaded graph is a bounded number of
+    * cell-sized rows, persisted as a grouped dataset; eviction
+    * unpersists its executor blocks. */
+  private val graphCache = new GenerationCache[Dataset[CellGraph]](_.unpersist())
 
   /** Same residency/invalidation device for the PQ serving form (codes
-    * resident instead of vectors — m + 8 bytes per node vs 8·dim). */
-  private val pqCache = new TrieMap[(String, Long), Slot[CellGraphPq]]
+    * resident instead of vectors — m + 8 bytes per node vs 8·dim), one
+    * key per residency variant ([[pqCacheKey]]). */
+  private val pqCache = new GenerationCache[Dataset[CellGraphPq]](_.unpersist())
 
-  /** Per-generation ROUTING state (sorted centroid rows), cached beside
-    * the graph: routing must come from the SAME generation as the
-    * resident graph it routes into — re-reading centroids.parquet per
-    * batch could pair a mid-rebuild quantizer with the previous resident
-    * graph (the silent-misroute the commit marker exists to prevent),
-    * and costs a driver read per batch besides. */
-  private val routingCache = new TrieMap[(String, Long), Array[(Int, Array[Double])]]
+  /** Metadata, ROUTING state (sorted centroid rows) and PQ model of one
+    * generation, cached beside the graph: they must come from the SAME
+    * generation as the resident graph they route into — re-reading
+    * centroids.parquet or metadata.json per batch could pair a
+    * mid-rebuild quantizer or pq geometry with the previous resident
+    * graph, and costs parquet reads per batch besides. */
+  private final case class Model(meta: Meta, cents: Array[(Int, Array[Double])],
+      pq: Option[PqIndex.PqModel])
 
-  private val pqModelCache = new TrieMap[(String, Long), PqIndex.PqModel]
+  private val modelCache = new GenerationCache[Model]()
 
-  /** Generation-pinned metadata, same discipline as [[routingCache]]:
-    * a searchPq that re-read metadata.json per call could catch
-    * [[writeMetadata]]'s truncate-then-write mid-update and fail (or
-    * pair new pq geometry with the previous resident code graph). A
-    * serving loop that has searched the committed artifact once holds
-    * its generation's meta here and keeps decoding consistently while
-    * update() mutates. */
-  private val metaCache = new TrieMap[(String, Long), Meta]
-
-  private def metaFor(spark: SparkSession, p: Paths, gen: Long): Meta =
-    metaCache.getOrElseUpdate((p.graph, gen), {
-      metaCache.keys.filter(k => k._1 == p.graph && k._2 != gen)
-        .foreach(metaCache.remove)
-      readMetadata(spark, p)
-    })
-
-  private def markerMtime(spark: SparkSession, p: Paths): Long = {
-    val marker = new org.apache.hadoop.fs.Path(p.commitMarker)
-    try marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(marker).getModificationTime
-    catch { case _: Exception => -1L }
-  }
-
-  /** The generation a search serves: the committed marker's mtime when
-    * the artifact is published; during a maintenance window (marker
-    * deleted first, recreated last) the newest generation resident in
-    * THE SPECIFIC CACHE VARIANT the caller will serve from
-    * (`needKey`: `p.graph` for the float graph, [[pqCacheKey]] for a PQ
-    * form) — a serving loop keeps answering consistent old-generation
-    * results while update() mutates, and flips exactly once when the
-    * new marker lands (spec: "serve-during-update"). Accepting a
-    * generation resident only in a DIFFERENT variant would send the
-    * caller's loader to graph.parquet cold, under the concurrent
-    * partition overwrite — the torn old/new mix the guard exists to
-    * prevent. A generation that was never served in the needed form
-    * cannot be recovered mid-mutation — that is the refusal. */
-  private def servingGeneration(spark: SparkSession, p: Paths,
-      needKey: String, needFloat: Boolean): Long = {
-    val mtime = markerMtime(spark, p)
-    if (mtime >= 0) mtime
-    else {
-      val resident =
-        if (needFloat) graphCache.keys.filter(_._1 == needKey).map(_._2).maxOption
-        else pqCache.keys.filter(_._1 == needKey).map(_._2).maxOption
-      resident.getOrElse(throw new IllegalStateException(
-        s"index at ${p.dir} is incomplete (no ${p.commitMarker}) and the " +
-          "serving form this call needs is not resident at any " +
-          "generation — a writer crashed mid-mutation, or the form was " +
-          "never served before the maintenance window; retry after the " +
-          "update commits or rebuild from the corpus"))
-    }
-  }
-
-  private def routingFor(spark: SparkSession, p: Paths,
-      gen: Long): Array[(Int, Array[Double])] =
-    routingCache.getOrElseUpdate((p.graph, gen), {
-      routingCache.keys.filter(k => k._1 == p.graph && k._2 != gen)
-        .foreach(routingCache.remove)
-      spark.read.parquet(p.centroids)
+  private def modelFor(spark: SparkSession, p: Paths, gen: Long): Model =
+    modelCache(p.dir, gen) {
+      val meta = readMetadata(spark, p)
+      val cents = spark.read.parquet(p.centroids)
         .select(col("cell_id"), col("centroid")).collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
-    })
-
-  private[graft] def loadGraph(spark: SparkSession, p: Paths): Dataset[CellGraph] = {
-    val mtime = markerMtime(spark, p)
-    if (mtime < 0) mkGraphLoader(spark, p)()
-    else loadGraphGen(spark, p, mtime)
-  }
-
-  private[graft] def loadGraphGen(spark: SparkSession, p: Paths, gen: Long): Dataset[CellGraph] = {
-    val slot = new Slot(mkGraphLoader(spark, p))
-    val won = graphCache.putIfAbsent((p.graph, gen), slot).getOrElse {
-      graphCache.keys.filter(k => k._1 == p.graph && k._2 != gen).foreach { k =>
-        graphCache.remove(k).foreach(_.release())
-      }
-      slot
+      Model(meta, cents, if (meta.pqM > 0) Some(loadPqModel(spark, p, meta)) else None)
     }
-    won.value
-  }
 
-  private def mkGraphLoader(spark: SparkSession, p: Paths): () => Dataset[CellGraph] = () => {
+  /** The generation a search serves: the published one when
+    * metadata.json exists; during a maintenance window (unpublished
+    * first, published again last) the newest generation resident in
+    * THE SPECIFIC CACHE VARIANT the caller will serve from (`cache` at
+    * `key`) — a serving loop keeps answering consistent old-generation
+    * results while update() mutates, and flips exactly once when the
+    * new generation is published (spec: "serve-during-update").
+    * Accepting a generation resident only in a DIFFERENT variant would
+    * send the caller's loader to graph.parquet cold, under the
+    * concurrent partition overwrite — the torn old/new mix the guard
+    * exists to prevent. A generation that was never served in the
+    * needed form cannot be recovered mid-mutation — that is the
+    * refusal. */
+  private def servingGeneration(p: Paths, published: Option[Long],
+      cache: GenerationCache[_], key: String): Long =
+    published.orElse(cache.newest(key)).getOrElse(throw new IllegalStateException(
+      s"index at ${p.dir} is incomplete (no ${p.metadata}) and the " +
+        "serving form this call needs is not resident at any " +
+        "generation — a writer crashed mid-mutation, or the form was " +
+        "never served before the maintenance window; retry after the " +
+        "update commits or rebuild from the corpus"))
+
+  private[graft] def loadGraph(spark: SparkSession, p: Paths): Dataset[CellGraph] =
+    graphAt(spark, p, IndexArtifact.published(spark, p.dir))
+
+  private def graphAt(spark: SparkSession, p: Paths, gen: Long): Dataset[CellGraph] =
+    graphCache(p.dir, gen)(readGraph(spark, p))
+
+  private def readGraph(spark: SparkSession, p: Paths): Dataset[CellGraph] = {
     import spark.implicits._
-    def load(): Dataset[CellGraph] = {
-      val ds = restored(spark.read.parquet(p.graph))
-        .select(col("cell_id").cast("int"), col("_id"), col("_v"), col("_nn"),
-          col("top_layer"), col("nbrs"))
-        .as[(Int, Long, Seq[Double], Double, Int, Seq[Seq[Int]])]
-        .groupByKey(_._1)
-        .mapGroups { (cell, it) =>
-          val rows = it.toArray.sortBy(_._2)
-          val n = rows.length
-          val dim = if (n == 0) 0 else rows.head._3.length
-          val ids = new Array[Long](n)
-          val norms = new Array[Double](n)
-          val top = new Array[Int](n)
-          val vecs = new Array[Double](n * dim)
-          val nodeBase = new Array[Int](n + 1)
-          var entry = -1
-          var maxLevel = -1
-          var i = 0
-          var segs = 0
-          var edges = 0
-          while (i < n) {
-            val r = rows(i)
-            ids(i) = r._2; norms(i) = r._4; top(i) = r._5
-            val v = r._3
-            var j = 0
-            while (j < dim) { vecs(i * dim + j) = v(j); j += 1 }
-            nodeBase(i) = segs
-            segs += r._6.length
-            r._6.foreach(l => edges += l.length)
-            if (r._5 > maxLevel) { maxLevel = r._5; entry = i }
-            i += 1
-          }
-          nodeBase(n) = segs
-          val adjOff = new Array[Int](segs + 1)
-          val adjData = new Array[Int](edges)
-          var seg = 0
-          var e = 0
-          i = 0
-          while (i < n) {
-            rows(i)._6.foreach { lst =>
-              adjOff(seg) = e
-              lst.foreach { nb => adjData(e) = nb; e += 1 }
-              seg += 1
-            }
-            i += 1
-          }
-          adjOff(segs) = e
-          CellGraph(cell, ids, norms, top, dim, vecs, nodeBase, adjOff,
-            adjData, entry, maxLevel)
+    val ds = restored(spark.read.parquet(p.graph))
+      .select(col("cell_id").cast("int"), col("_id"), col("_v"), col("_nn"),
+        col("top_layer"), col("nbrs"))
+      .as[(Int, Long, Seq[Double], Double, Int, Seq[Seq[Int]])]
+      .groupByKey(_._1)
+      .mapGroups { (cell, it) =>
+        val rows = it.toArray.sortBy(_._2)
+        val n = rows.length
+        val dim = if (n == 0) 0 else rows.head._3.length
+        val ids = new Array[Long](n)
+        val norms = new Array[Double](n)
+        val top = new Array[Int](n)
+        val vecs = new Array[Double](n * dim)
+        val nodeBase = new Array[Int](n + 1)
+        var entry = -1
+        var maxLevel = -1
+        var i = 0
+        var segs = 0
+        var edges = 0
+        while (i < n) {
+          val r = rows(i)
+          ids(i) = r._2; norms(i) = r._4; top(i) = r._5
+          val v = r._3
+          var j = 0
+          while (j < dim) { vecs(i * dim + j) = v(j); j += 1 }
+          nodeBase(i) = segs
+          segs += r._6.length
+          r._6.foreach(l => edges += l.length)
+          if (r._5 > maxLevel) { maxLevel = r._5; entry = i }
+          i += 1
         }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ds.count() // materialize: serving batches never pay the group shuffle
-      ds
-    }
-    load()
+        nodeBase(n) = segs
+        val adjOff = new Array[Int](segs + 1)
+        val adjData = new Array[Int](edges)
+        var seg = 0
+        var e = 0
+        i = 0
+        while (i < n) {
+          rows(i)._6.foreach { lst =>
+            adjOff(seg) = e
+            lst.foreach { nb => adjData(e) = nb; e += 1 }
+            seg += 1
+          }
+          i += 1
+        }
+        adjOff(segs) = e
+        CellGraph(cell, ids, norms, top, dim, vecs, nodeBase, adjOff,
+          adjData, entry, maxLevel)
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    ds.count() // materialize: serving batches never pay the group shuffle
+    ds
   }
 
   /** PQ twin of [[loadGraph]]: column-pruned to (codes, rn, adjacency) —
-    * the int8 exact-store columns stay on disk. */
+    * the int8 exact-store columns stay on disk unless `withStore`. */
   private[graft] def loadGraphPq(spark: SparkSession, p: Paths,
-      withStore: Boolean = false): Dataset[CellGraphPq] = {
-    val mtime = markerMtime(spark, p)
-    if (mtime < 0) mkPqLoader(spark, p, withStore)()
-    else loadGraphPqGen(spark, p, mtime, withStore)
-  }
+      withStore: Boolean = false): Dataset[CellGraphPq] =
+    pqGraphAt(spark, p, IndexArtifact.published(spark, p.dir), withStore)
 
   private def pqCacheKey(p: Paths, withStore: Boolean): String =
-    if (withStore) p.graph + "#store" else p.graph
+    if (withStore) p.dir + "#store" else p.dir
 
-  private[graft] def loadGraphPqGen(spark: SparkSession, p: Paths, gen: Long,
+  private def pqGraphAt(spark: SparkSession, p: Paths, gen: Long,
+      withStore: Boolean): Dataset[CellGraphPq] =
+    pqCache(pqCacheKey(p, withStore), gen)(readGraphPq(spark, p, withStore))
+
+  private def readGraphPq(spark: SparkSession, p: Paths,
       withStore: Boolean): Dataset[CellGraphPq] = {
-    val key1 = pqCacheKey(p, withStore)
-    val slot = new Slot(mkPqLoader(spark, p, withStore))
-    val won = pqCache.putIfAbsent((key1, gen), slot).getOrElse {
-      pqCache.keys.filter(k => k._1 == key1 && k._2 != gen).foreach { k =>
-        pqCache.remove(k).foreach(_.release())
-      }
-      slot
-    }
-    won.value
-  }
-
-  private def mkPqLoader(spark: SparkSession, p: Paths,
-      withStore: Boolean): () => Dataset[CellGraphPq] = () => {
     import spark.implicits._
-    def load(): Dataset[CellGraphPq] = {
-      val base = spark.read.parquet(p.graph)
-      val cols = Seq(col("cell_id").cast("int"), col("_id"), col("_codes"),
-        col("_rn"), col("top_layer"), col("nbrs")) ++
-        (if (withStore) Seq(col("_q"), coalesce(col("_qs"), lit(0.0)).as("_qs"),
-          col("_nn")) else Seq(lit(null).cast("array<tinyint>").as("_q"),
-          lit(0.0).as("_qs"), lit(0.0).as("_nn")))
-      val ds = base.select(cols: _*)
-        .as[(Int, Long, Array[Byte], Double, Int, Seq[Seq[Int]],
-          Seq[Byte], Double, Double)]
-        .groupByKey(_._1)
-        .mapGroups { (cell, it) =>
-          val rows = it.toArray.sortBy(_._2)
-          val n = rows.length
-          val m = if (n == 0) 0 else rows.head._3.length
-          val dim = if (n == 0 || rows.head._7 == null) 0 else rows.head._7.length
-          val ids = new Array[Long](n)
-          val rn = new Array[Double](n)
-          val codes = new Array[Byte](n * m)
-          val qcodes = new Array[Byte](n * dim)
-          val qscale = new Array[Double](if (dim > 0) n else 0)
-          val nnArr = new Array[Double](if (dim > 0) n else 0)
-          val nodeBase = new Array[Int](n + 1)
-          var entry = -1
-          var maxLevel = -1
-          var i = 0
-          var segs = 0
-          var edges = 0
-          while (i < n) {
-            val r = rows(i)
-            ids(i) = r._2; rn(i) = r._4
-            System.arraycopy(r._3, 0, codes, i * m, m)
-            if (dim > 0) {
-              val qv = r._7
-              var t = 0
-              while (t < dim) { qcodes(i * dim + t) = qv(t); t += 1 }
-              qscale(i) = r._8
-              nnArr(i) = r._9
-            }
-            nodeBase(i) = segs
-            segs += r._6.length
-            r._6.foreach(l => edges += l.length)
-            if (r._5 > maxLevel) { maxLevel = r._5; entry = i }
-            i += 1
+    val base = spark.read.parquet(p.graph)
+    val cols = Seq(col("cell_id").cast("int"), col("_id"), col("_codes"),
+      col("_rn"), col("top_layer"), col("nbrs")) ++
+      (if (withStore) Seq(col("_q"), coalesce(col("_qs"), lit(0.0)).as("_qs"),
+        col("_nn")) else Seq(lit(null).cast("array<tinyint>").as("_q"),
+        lit(0.0).as("_qs"), lit(0.0).as("_nn")))
+    val ds = base.select(cols: _*)
+      .as[(Int, Long, Array[Byte], Double, Int, Seq[Seq[Int]],
+        Seq[Byte], Double, Double)]
+      .groupByKey(_._1)
+      .mapGroups { (cell, it) =>
+        val rows = it.toArray.sortBy(_._2)
+        val n = rows.length
+        val m = if (n == 0) 0 else rows.head._3.length
+        val dim = if (n == 0 || rows.head._7 == null) 0 else rows.head._7.length
+        val ids = new Array[Long](n)
+        val rn = new Array[Double](n)
+        val codes = new Array[Byte](n * m)
+        val qcodes = new Array[Byte](n * dim)
+        val qscale = new Array[Double](if (dim > 0) n else 0)
+        val nnArr = new Array[Double](if (dim > 0) n else 0)
+        val nodeBase = new Array[Int](n + 1)
+        var entry = -1
+        var maxLevel = -1
+        var i = 0
+        var segs = 0
+        var edges = 0
+        while (i < n) {
+          val r = rows(i)
+          ids(i) = r._2; rn(i) = r._4
+          System.arraycopy(r._3, 0, codes, i * m, m)
+          if (dim > 0) {
+            val qv = r._7
+            var t = 0
+            while (t < dim) { qcodes(i * dim + t) = qv(t); t += 1 }
+            qscale(i) = r._8
+            nnArr(i) = r._9
           }
-          nodeBase(n) = segs
-          val adjOff = new Array[Int](segs + 1)
-          val adjData = new Array[Int](edges)
-          var seg = 0
-          var e = 0
-          i = 0
-          while (i < n) {
-            rows(i)._6.foreach { lst =>
-              adjOff(seg) = e
-              lst.foreach { nb => adjData(e) = nb; e += 1 }
-              seg += 1
-            }
-            i += 1
-          }
-          adjOff(segs) = e
-          CellGraphPq(cell, ids, rn, m, codes, dim, qcodes, qscale, nnArr,
-            nodeBase, adjOff, adjData, entry, maxLevel)
+          nodeBase(i) = segs
+          segs += r._6.length
+          r._6.foreach(l => edges += l.length)
+          if (r._5 > maxLevel) { maxLevel = r._5; entry = i }
+          i += 1
         }
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ds.count()
-      ds
-    }
-    load()
+        nodeBase(n) = segs
+        val adjOff = new Array[Int](segs + 1)
+        val adjData = new Array[Int](edges)
+        var seg = 0
+        var e = 0
+        i = 0
+        while (i < n) {
+          rows(i)._6.foreach { lst =>
+            adjOff(seg) = e
+            lst.foreach { nb => adjData(e) = nb; e += 1 }
+            seg += 1
+          }
+          i += 1
+        }
+        adjOff(segs) = e
+        CellGraphPq(cell, ids, rn, m, codes, dim, qcodes, qscale, nnArr,
+          nodeBase, adjOff, adjData, entry, maxLevel)
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    ds.count()
+    ds
   }
 
   /** Drop the resident graph and any outstanding query broadcast for
     * `outDir` (tests / bounded-memory callers). */
   def evict(outDir: String): Unit = {
-    val g = Paths(outDir).graph
-    graphCache.keys.filter(_._1 == g).foreach { k =>
-      graphCache.remove(k).foreach(_.release())
-    }
-    pqCache.keys.filter(k => k._1 == g || k._1 == g + "#store").foreach { k =>
-      pqCache.remove(k).foreach(_.release())
-    }
-    routingCache.keys.filter(_._1 == g).foreach(routingCache.remove)
-    pqModelCache.keys.filter(_._1 == g).foreach(pqModelCache.remove)
-    metaCache.keys.filter(_._1 == g).foreach(metaCache.remove)
-    lastQueryBroadcast.remove(g).foreach(_.destroy())
+    val p = Paths(outDir)
+    graphCache.evict(p.dir)
+    Seq(false, true).foreach(s => pqCache.evict(pqCacheKey(p, s)))
+    modelCache.evict(p.dir)
+    lastQueryBroadcast.remove(p.graph).foreach(_.destroy())
   }
 
   /** One outstanding query-batch broadcast per index: a serving loop
@@ -874,10 +649,9 @@ object HnswIndex {
   private final case class RoutedBatch(
       qRows: Array[(Long, Array[Double])],
       routing: Map[Int, Array[Int]],
-      probedCells: Seq[Int],
-      cents: Array[(Int, Array[Double])])
+      probedCells: Seq[Int])
 
-  private def routeBatch(spark: SparkSession, p: Paths, gen: Long,
+  private def routeBatch(cents: Array[(Int, Array[Double])],
       queries: DataFrame, nProbe: Int, maxQueries: Long,
       caller: String): RoutedBatch = {
     Guards.requireAtMost(queries, maxQueries, caller,
@@ -887,7 +661,6 @@ object HnswIndex {
       .select(col("query_id"), col("qv")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
-    val cents = routingFor(spark, p, gen)
     val centVecs = cents.map(_._2)
     val invNorms = centVecs.map { c =>
       var s = 0.0; var i = 0
@@ -908,7 +681,7 @@ object HnswIndex {
     }
     val routing: Map[Int, Array[Int]] =
       routed.map { case (c, b) => (c, b.toArray) }.toMap
-    RoutedBatch(qRows, routing, routing.keys.toSeq, cents)
+    RoutedBatch(qRows, routing, routing.keys.toSeq)
   }
 
   /** Search the persisted index: route each query to its nProbe nearest
@@ -923,19 +696,19 @@ object HnswIndex {
       efSearch: Int, nProbe: Int, maxQueries: Long = 10000L): DataFrame = {
     import spark.implicits._
     val p = Paths(outDir)
-    ensureAdopted(spark, p)
-    // resolve ONE generation for routing + graph: either the committed
-    // marker's, or — mid-maintenance — the newest FLOAT-resident one
-    val gen = servingGeneration(spark, p, p.graph, needFloat = true)
-    val rb = routeBatch(spark, p, gen, queries, nProbe, maxQueries,
-      "HnswIndex.search")
+    // resolve ONE generation for routing + graph: either the published
+    // one, or — mid-maintenance — the newest FLOAT-resident one
+    val gen = servingGeneration(p, IndexArtifact.generation(spark, outDir),
+      graphCache, p.dir)
+    val rb = routeBatch(modelFor(spark, p, gen).cents, queries, nProbe,
+      maxQueries, "HnswIndex.search")
     val probedCells = rb.probedCells
     lastQueryBroadcast.remove(p.graph).foreach(_.destroy())
     val bq = spark.sparkContext.broadcast((rb.qRows, rb.routing))
     lastQueryBroadcast.put(p.graph, bq)
     val kk = k
     val ef = efSearch
-    val sims = loadGraphGen(spark, p, gen)
+    val sims = graphAt(spark, p, gen)
       .filter(col("cellId").isin(probedCells: _*))
       .flatMap { g =>
         val (qs, routing) = bq.value
@@ -969,7 +742,7 @@ object HnswIndex {
       maxQueries: Long = 10000L, residentRerank: Boolean = false): DataFrame = {
     import spark.implicits._
     val p = Paths(outDir)
-    ensureAdopted(spark, p)
+    val published = IndexArtifact.generation(spark, outDir)
     // the on-disk rerank reads graph.parquet per batch, which a
     // concurrent update()'s dynamic partition overwrite may be
     // rewriting — fail fast rather than rerank against a torn old/new
@@ -977,36 +750,30 @@ object HnswIndex {
     // serve-during-update guarantee (its store rides the
     // generation-keyed cache). Checked FIRST: mid-maintenance this is
     // the actionable diagnosis whatever else is or isn't resident.
-    require(residentRerank || markerMtime(spark, p) >= 0,
+    require(residentRerank || published.isDefined,
       s"index at $outDir is mid-maintenance and the disk-rerank form " +
         "reads the store per batch — serve with residentRerank = true " +
         "(generation-consistent) or retry after the update commits")
-    val gen = servingGeneration(spark, p,
-      pqCacheKey(p, residentRerank), needFloat = false)
-    val meta = metaFor(spark, p, gen)
-    require(meta.pqM > 0,
+    val gen = servingGeneration(p, published, pqCache, pqCacheKey(p, residentRerank))
+    val model = modelFor(spark, p, gen)
+    require(model.pq.isDefined,
       s"index at $outDir carries no PQ codes — build(pqM > 0) or use search()")
     require(window >= k, s"pq rerank: window $window must be >= k $k")
-    val rb = routeBatch(spark, p, gen, queries, nProbe, maxQueries,
+    val rb = routeBatch(model.cents, queries, nProbe, maxQueries,
       "HnswIndex.searchPq")
     val qRows = rb.qRows
     val routedImm = rb.routing
     val probedCells = rb.probedCells
-    val centById: Map[Int, Array[Double]] = rb.cents.toMap
-    val model = pqModelCache.getOrElseUpdate((p.graph, gen), {
-      pqModelCache.keys.filter(k2 => k2._1 == p.graph && k2._2 != gen)
-        .foreach(pqModelCache.remove)
-      loadPqModel(spark, p, meta)
-    })
+    val centById: Map[Int, Array[Double]] = model.cents.toMap
     lastQueryBroadcast.remove(p.graph).foreach(_.destroy())
     val bq = spark.sparkContext.broadcast(
-      (qRows, routedImm, centById, model.codebooks))
+      (qRows, routedImm, centById, model.pq.get.codebooks))
     lastQueryBroadcast.put(p.graph, bq)
-    val kSub = meta.pqK
+    val kSub = model.meta.pqK
     val ef = efSearch
     val win = window
     val rr = residentRerank
-    val perCell = loadGraphPqGen(spark, p, gen, withStore = residentRerank)
+    val perCell = pqGraphAt(spark, p, gen, withStore = residentRerank)
       .filter(col("cellId").isin(probedCells: _*))
       .mapPartitions { cells =>
         val (qs, routing, centOf, cbs) = bq.value

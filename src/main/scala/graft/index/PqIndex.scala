@@ -101,7 +101,6 @@ object PqIndex {
     def centroids: String = s"$dir/centroids.parquet"
     def codebooks: String = s"$dir/codebooks.parquet"
     def assigned: String = s"$dir/assigned.parquet"
-    def metadata: String = s"$dir/metadata.json"
   }
 
   /** Train PQ codebooks on a hash-deterministic bounded sample of
@@ -206,11 +205,14 @@ object PqIndex {
 
   /** Build and persist the IVF-PQ index: coarse train + assign, residual
     * PQ train, ONE map-only encode pass, cell-partitioned write. Storage
-    * row: (_id, codes m bytes, _rn reconstructed norm, cell_id). */
+    * row: (_id, codes m bytes, _rn reconstructed norm, cell_id).
+    * Returns the vector count. The artifact is unpublished throughout
+    * ([[IndexArtifact]]). */
   def build(vectors: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, outDir: String, m: Int = 8, k: Int = 256): Unit = {
+      nCells: Int, outDir: String, m: Int = 8, k: Int = 256): Long = {
     val spark = vectors.sparkSession
     val p = Paths(outDir)
+    IndexArtifact.unpublish(spark, outDir)
     val n = vectors.count()
     val cents = Similarity.trainIvfCentroids(vectors, idCol, vecCol, nCells, knownN = Some(n))
     cents.write.mode("overwrite").parquet(p.centroids)
@@ -235,7 +237,8 @@ object PqIndex {
     // persist the ACTUAL cell count (the trainer drops empty cells), the
     // same value the append path recomputes — so metadata.n_cells never
     // silently changes across an update that touched no cells
-    writeMetadata(spark, p, n, cellIds.length, model)
+    publishMetadata(spark, outDir, n, cellIds.length, model)
+    n
   }
 
   private def saveCodebooks(spark: SparkSession, p: Paths, model: PqModel): Unit = {
@@ -248,25 +251,21 @@ object PqIndex {
       .coalesce(1).write.mode("overwrite").parquet(p.codebooks)
   }
 
-  private def writeMetadata(spark: SparkSession, p: Paths, n: Long, nCells: Int,
-      model: PqModel): Unit = {
-    val path = new org.apache.hadoop.fs.Path(p.metadata)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write((s"""{"n_vectors": $n, "n_cells": $nCells, "metric": "cosine", """ +
-      s""""pq_m": ${model.m}, "pq_k": ${model.k}, "pq_dsub": ${model.dsub}}""").getBytes("UTF-8"))
-    out.close()
-  }
+  private def publishMetadata(spark: SparkSession, dir: String, n: Long, nCells: Int,
+      model: PqModel): Unit =
+    IndexArtifact.publish(spark, dir,
+      s"""{"n_vectors": $n, "n_cells": $nCells, "metric": "cosine", """ +
+        s""""pq_m": ${model.m}, "pq_k": ${model.k}, "pq_dsub": ${model.dsub}}""")
 
   /** Coarse centroids + codebooks are bounded model objects a serving
-    * loop reads every batch — cache the collected copies keyed by the
-    * artifact's _SUCCESS mtime (the VectorIndex device; a rebuild
-    * rewrites the marker and invalidates the key). */
-  private val modelCache = new scala.collection.concurrent.TrieMap[
-    (String, Long), (Seq[Int], Array[Array[Double]], PqModel)]
+    * loop reads every batch — cache the collected copies per artifact
+    * generation (the VectorIndex device). */
+  private val modelCache =
+    new GenerationCache[(Seq[Int], Array[Array[Double]], PqModel)]()
 
-  private def loadModel(spark: SparkSession, p: Paths): (Seq[Int], Array[Array[Double]], PqModel) = {
-    def load(): (Seq[Int], Array[Array[Double]], PqModel) = {
+  private def loadModel(spark: SparkSession, p: Paths,
+      gen: Long): (Seq[Int], Array[Array[Double]], PqModel) =
+    modelCache(p.dir, gen) {
       val centRows = spark.read.parquet(p.centroids).select("cell_id", "centroid").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
       val cbRows = spark.read.parquet(p.codebooks)
@@ -279,22 +278,6 @@ object PqIndex {
       val dsub = cb(0)(0).length
       (centRows.map(_._1).toSeq, centRows.map(_._2), PqModel(m, dsub, k, cb))
     }
-    val marker = new org.apache.hadoop.fs.Path(p.codebooks, "_SUCCESS")
-    val mtime =
-      try marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(marker).getModificationTime
-      catch { case _: Exception => -1L }
-    if (mtime < 0) load()
-    else modelCache.getOrElseUpdate((p.codebooks, mtime), {
-      // evict superseded builds of the SAME path: a serving loop that
-      // rebuilds in place would otherwise leak one collected model
-      // (~hundreds of KB) per rebuild for the life of the session
-      modelCache.keys
-        .filter(key => key._1 == p.codebooks && key._2 != mtime)
-        .foreach(modelCache.remove)
-      load()
-    })
-  }
 
   /** ADC search over the persisted index: nProbe-cell pruned top-k per
     * query, scored by (dot(q, coarse_cell) + ADC(lut, codes)) /
@@ -308,7 +291,7 @@ object PqIndex {
     VectorExprs.register(spark)
     import graft.expressions.VectorExprs.vec_dot
     val p = Paths(outDir)
-    val (cellIds, centArr, model) = loadModel(spark, p)
+    val (cellIds, centArr, model) = loadModel(spark, p, IndexArtifact.published(spark, outDir))
     val corpus = spark.read.parquet(p.assigned)
       .select(col("_id").as("neighbor_id"), col("_codes"), col("_rn"), col("cell_id"))
     val qCells = queries
@@ -382,16 +365,9 @@ object PqIndex {
       nCells: Int, outDir: String, m: Int = 8, k: Int = 256): String = {
     val spark = vectors.sparkSession
     val p = Paths(outDir)
-    // the VectorIndex.update contract: a crashed mid-build write leaves
-    // files but no _SUCCESS — appending onto that silently compounds a
-    // corrupt index, so refuse and direct the caller to rebuild
-    val marker = new org.apache.hadoop.fs.Path(p.assigned, "_SUCCESS")
-    val complete =
-      marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker)
-    if (!complete)
-      throw new IllegalStateException(
-        s"index at $outDir is incomplete (no _SUCCESS in ${p.assigned}) — " +
-          "rebuild from the corpus via PqIndex.build before updating")
+    // appending onto an unpublished artifact would compound a crashed
+    // write, so refuse and direct the caller to rebuild
+    val gen = IndexArtifact.published(spark, outDir)
     val existingIds = spark.read.parquet(p.assigned).select(col("_id").as(idCol))
     val fresh = vectors.join(existingIds, Seq(idCol), "left_anti").cache()
     try {
@@ -402,7 +378,7 @@ object PqIndex {
         build(vectors, idCol, vecCol, nCells, outDir, m = m, k = k)
         "rebuild"
       } else {
-        val (cellIds, centArr, model) = loadModel(spark, p)
+        val (cellIds, centArr, model) = loadModel(spark, p, gen)
         val assigned = fresh
           .select(col(idCol).as("_id"), VF.vecAsDouble(col(vecCol)).as("_v"))
           .withColumn("_cp", VectorExprs.nearest_cell(col("_v"), centArr))
@@ -411,9 +387,10 @@ object PqIndex {
           .select(col("_id"),
             col("_e.codes").as("_codes"), col("_e.rnorm").as("_rn"),
             get(typedlit(cellIds), col("_cp")).as("cell_id"))
+        IndexArtifact.unpublish(spark, outDir)
         encoded.repartition(col("cell_id"))
           .write.mode("append").partitionBy("cell_id").parquet(p.assigned)
-        writeMetadata(spark, p, nExisting + nNew, cellIds.length, model)
+        publishMetadata(spark, outDir, nExisting + nNew, cellIds.length, model)
         "append"
       }
     } finally fresh.unpersist()

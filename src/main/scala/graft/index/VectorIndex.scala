@@ -21,15 +21,7 @@ object VectorIndex {
   final case class Paths(dir: String) {
     def centroids: String = s"$dir/centroids.parquet"
     def assigned: String = s"$dir/assigned.parquet"
-    def metadata: String = s"$dir/metadata.json"
     def staging: String = s"$dir/rebuild_staging.parquet"
-  }
-
-  /** A directory written by a Spark job is complete iff its _SUCCESS
-    * marker landed — a crashed writer leaves files but no marker. */
-  private def isComplete(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Build and persist: train centroids (on a sample), assign every
@@ -43,11 +35,13 @@ object VectorIndex {
     * scale) instead of float64 arrays — ~7× less probe IO here, ~4× vs a
     * float32 store — at sub-1% similarity error. Precomputed norms are
     * taken over the RECONSTRUCTED vector, so ranking is exactly
-    * consistent with what search dequantizes. */
+    * consistent with what search dequantizes. Returns the vector count.
+    * The artifact is unpublished throughout ([[IndexArtifact]]). */
   def build(vectors: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, outDir: String, quantized: Boolean = false): Unit = {
+      nCells: Int, outDir: String, quantized: Boolean = false): Long = {
     val p = Paths(outDir)
     val spark = vectors.sparkSession
+    IndexArtifact.unpublish(spark, outDir)
     val n = vectors.count()
     val cents = Similarity.trainIvfCentroids(vectors, idCol, vecCol, nCells, knownN = Some(n))
     cents.write.mode("overwrite").parquet(p.centroids)
@@ -59,7 +53,8 @@ object VectorIndex {
       cents)
     prepareStorage(assigned, quantized).repartition(col("cell_id"))
       .write.mode("overwrite").partitionBy("cell_id").parquet(p.assigned)
-    writeMetadata(spark, p, n, nCells, quantized)
+    publishMetadata(spark, outDir, n, nCells, quantized)
+    n
   }
 
   /** Storage shape: plain keeps `_v` (float64 array); quantized keeps
@@ -104,15 +99,11 @@ object VectorIndex {
   /** The caller always knows the row count it just wrote (input count or
     * existing+appended) — re-reading the whole index to count it would be
     * a full extra scan per build/update. */
-  private def writeMetadata(spark: SparkSession, p: Paths, n: Long, nCells: Int,
-      quantized: Boolean = false): Unit = {
-    val path = new org.apache.hadoop.fs.Path(p.metadata)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write((s"""{"n_vectors": $n, "n_cells": $nCells, "metric": "cosine", """ +
-      s""""quantized": $quantized}""").getBytes("UTF-8"))
-    out.close()
-  }
+  private def publishMetadata(spark: SparkSession, dir: String, n: Long, nCells: Int,
+      quantized: Boolean): Unit =
+    IndexArtifact.publish(spark, dir,
+      s"""{"n_vectors": $n, "n_cells": $nCells, "metric": "cosine", """ +
+        s""""quantized": $quantized}""")
 
   /** Incremental update: add only vectors whose ids aren't indexed yet
     * (left_anti, J6/E3); full rebuild when new/existing > 0.3. Returns the
@@ -121,11 +112,7 @@ object VectorIndex {
       nCells: Int, outDir: String): String = {
     val spark = vectors.sparkSession
     val p = Paths(outDir)
-    if (!isComplete(spark, p.assigned))
-      throw new IllegalStateException(
-        s"index at $outDir is incomplete (no _SUCCESS in ${p.assigned}) — " +
-          s"a writer crashed mid-build; rebuild from the corpus " +
-          s"(a staged pre-rebuild copy may survive at ${p.staging})")
+    IndexArtifact.published(spark, outDir)
     val existingRaw = spark.read.parquet(p.assigned)
     val isQuant = existingRaw.columns.contains("_q")
     val existing = restored(existingRaw)
@@ -160,44 +147,29 @@ object VectorIndex {
           fresh.select(col(idCol).as("_id"),
             graft.functions.VectorFunctions.vecAsDouble(col(vecCol)).as("_v")),
           spark.read.parquet(p.centroids))
+        IndexArtifact.unpublish(spark, outDir)
         prepareStorage(assigned, isQuant).repartition(col("cell_id"))
           .write.mode("append").partitionBy("cell_id").parquet(p.assigned)
-        writeMetadata(spark, p, nExisting + nNew, nCells, isQuant)
+        publishMetadata(spark, outDir, nExisting + nNew, nCells, isQuant)
         "append"
       }
     } finally fresh.unpersist()
   }
 
   /** The coarse quantizer is a bounded model object (nCells rows) that a
-    * serving loop reads on EVERY batch — cache the collected copy keyed
-    * by the artifact's _SUCCESS mtime, so repeat searches skip the
-    * per-batch parquet job (FAISS likewise keeps the quantizer resident;
-    * a rebuild rewrites the marker and naturally invalidates the key). */
-  private val centroidCache =
-    new scala.collection.concurrent.TrieMap[(String, Long), (Seq[Int], Array[Array[Double]])]
+    * serving loop reads on EVERY batch — cache the collected copy per
+    * artifact generation, so repeat searches skip the per-batch parquet
+    * job (FAISS likewise keeps the quantizer resident; a rebuild
+    * publishes a new generation and so invalidates the entry). */
+  private val centroidCache = new GenerationCache[(Seq[Int], Array[Array[Double]])]()
 
-  private def loadCentroids(spark: SparkSession, p: Paths): (Seq[Int], Array[Array[Double]]) = {
-    def load(): (Seq[Int], Array[Array[Double]]) = {
+  private def loadCentroids(spark: SparkSession, p: Paths): (Seq[Int], Array[Array[Double]]) =
+    centroidCache(p.dir, IndexArtifact.published(spark, p.dir)) {
       val rows = spark.read.parquet(p.centroids).select("cell_id", "centroid").collect()
         .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
       (rows.map(_._1).toSeq, rows.map(_._2))
     }
-    val marker = new org.apache.hadoop.fs.Path(p.centroids, "_SUCCESS")
-    val mtime =
-      try marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(marker).getModificationTime
-      catch { case _: Exception => -1L }
-    if (mtime < 0) load()
-    else centroidCache.getOrElseUpdate((p.centroids, mtime), {
-      // evict superseded builds of the SAME path so a rebuild-in-place
-      // serving loop doesn't leak one collected centroid table per rebuild
-      centroidCache.keys
-        .filter(key => key._1 == p.centroids && key._2 != mtime)
-        .foreach(centroidCache.remove)
-      load()
-    })
-  }
 
   /** Search the persisted index: nProbe-cell pruned top-k per query.
     * Partition pruning on cell_id means only the probed cells are read.

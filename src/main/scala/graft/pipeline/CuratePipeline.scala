@@ -487,9 +487,11 @@ object CuratePipeline {
       } else {
         resuming = false // recompute everything past the first gap
         val parts = if (name == "shards") Seq("shard_key") else Nil
-        val dir = Layout.writeVersioned(f(raw, prev), base, layer,
-          partitionCols = parts)
-        prev = spark.read.parquet(dir)
+        val out = f(raw, prev)
+        val dir = Layout.writeVersioned(out, base, layer, partitionCols = parts)
+        // read back with the stage's own schema: a stage that keeps zero
+        // documents may leave no data file to infer one from
+        prev = spark.read.schema(out.schema).parquet(dir)
       }
       materialized += (name -> prev)
       if (crashAfterStage.contains(name))

@@ -418,12 +418,8 @@ class HnswIndexSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     HnswIndex.evict(dir)
-    // rewrite the artifact to the pre-marker vintage: no _graft_commit,
-    // metadata WITHOUT the pq fields (marker-era writers always stamp
-    // both — that pair is the version guard)
-    val marker = new java.io.File(
-      new java.net.URI("file://" + HnswIndex.Paths(dir).commitMarker))
-    assert(marker.delete())
+    // rewrite the metadata to the pre-pq vintage: no pq fields. Such an
+    // artifact still has its metadata.json, so it reads as published
     val metaPath = java.nio.file.Paths.get(
       new java.net.URI("file://" + HnswIndex.Paths(dir).metadata))
     java.nio.file.Files.write(metaPath,
@@ -433,39 +429,14 @@ class HnswIndexSpec extends AnyFunSuite {
     // stale .crc sidecar or the next hadoop read fails verification
     java.nio.file.Files.deleteIfExists(
       metaPath.resolveSibling("." + metaPath.getFileName + ".crc"))
-    // search adopts (re-stamps metadata + publishes the marker) and
-    // serves the same results instead of refusing a healthy artifact
+    // search serves the same results instead of refusing a healthy artifact
     val got = HnswIndex.search(spark, dir, q, k = 3,
         efSearch = Int.MaxValue, nProbe = 2)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == want)
-    assert(marker.exists(), "adoption must publish the commit marker")
-    // update() on the adopted artifact proceeds under normal discipline
+    // update() on the legacy artifact proceeds under normal discipline
     assert(HnswIndex.update(emb, "vec_id", "embedding", dir) == "noop")
     HnswIndex.evict(dir)
-  }
-
-  test("an incomplete artifact (no commit marker) is refused by search and update") {
-    val dir = tmp("crash")
-    val emb = clusteredCorpus(300, 8, 2).localCheckpoint(true)
-    HnswIndex.build(emb, "vec_id", "embedding", nCells = 2, dir,
-      m = 4, efConstruction = 16)
-    // the crash the marker exists to catch is BETWEEN component writes:
-    // e.g. new centroids written, graph not yet — every component file
-    // can look individually complete, only the artifact-level marker
-    // (deleted first, recreated last) knows the mutation never finished
-    val marker = new java.io.File(
-      new java.net.URI("file://" + HnswIndex.Paths(dir).commitMarker))
-    assert(marker.delete())
-    val q = queriesOf(emb, 3L)
-    val e = intercept[IllegalStateException] {
-      HnswIndex.search(spark, dir, q, k = 3, efSearch = 16, nProbe = 2)
-    }
-    assert(e.getMessage.contains("incomplete"))
-    val e2 = intercept[IllegalStateException] {
-      HnswIndex.update(emb, "vec_id", "embedding", dir)
-    }
-    assert(e2.getMessage.contains("incomplete"))
   }
 }

@@ -194,8 +194,8 @@ class HnswPqSpec extends AnyFunSuite {
         residentRerank = true)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val committed = resident() // warms the generation-keyed caches
-    // simulate update()'s maintenance window: marker deleted first
-    val marker = new java.io.File(s"$dir/_graft_commit")
+    // simulate update()'s maintenance window: metadata.json deleted first
+    val marker = new java.io.File(s"$dir/metadata.json")
     assert(marker.delete(), "commit marker should exist after build")
     // the resident form serves the resident old generation, consistent
     assert(resident() == committed)
@@ -220,7 +220,7 @@ class HnswPqSpec extends AnyFunSuite {
     // variant the resident rerank needs is never resident
     HnswIndex.searchPq(spark, dir, q, k = 5, efSearch = Int.MaxValue,
       nProbe = 6, window = Int.MaxValue).collect()
-    val marker = new java.io.File(s"$dir/_graft_commit")
+    val marker = new java.io.File(s"$dir/metadata.json")
     assert(marker.delete(), "commit marker should exist after build")
     // accepting the codes-only generation here would send the #store
     // loader to graph.parquet COLD, under the concurrent partition

@@ -294,20 +294,6 @@ class PqIndexSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/assigned.parquet").count() == 330)
   }
 
-  test("update refuses an incomplete index (no _SUCCESS), naming the rebuild route") {
-    val dir = tmp("crash")
-    val base = losslessCorpus(120).toDF("id", "vec")
-    PqIndex.build(base, "id", "vec", nCells = 2, dir, m = 4, k = 8)
-    // simulate a crashed mid-build write: files present, marker gone
-    val marker = new java.io.File(s"$dir/assigned.parquet/_SUCCESS")
-    assert(marker.delete(), "fixture: _SUCCESS must exist to be deleted")
-    val e = intercept[IllegalStateException] {
-      PqIndex.update(losslessCorpus(130).toDF("id", "vec"), "id", "vec",
-        nCells = 2, dir, m = 4, k = 8)
-    }
-    assert(e.getMessage.contains("incomplete") && e.getMessage.contains("rebuild"))
-  }
-
   test("zero-reconstruction rows (stored _rn == 0) sort last, sims stay finite") {
     // 60 all-zero vectors + 60 copies of one integer-component pattern,
     // nCells = 2: Lloyd's means stay in exact integer fp arithmetic, the

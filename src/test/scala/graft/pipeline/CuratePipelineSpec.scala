@@ -109,4 +109,23 @@ class CuratePipelineSpec extends AnyFunSuite {
     assert(stored.exceptAll(kept).count() == 0 && kept.exceptAll(stored).count() == 0,
       "curriculum stage differs from the apply-form recompute")
   }
+
+  test("a stage that keeps zero documents commits an empty layer and the run completes") {
+    // a Gopher floor no document reaches: quality and every later stage
+    // keep nothing, and their read-backs must not need schema inference
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_curate_empty").toString
+    val docs = (0L until 40L).map { i =>
+      val text = s"episode $i covers topic ${i * 7919 % 101} with guest ${i * 31 % 97}"
+      (i, text, "en", s"source${i % 3}", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val acc = CuratePipeline.run(spark, docs, dir,
+      CurateConfig(gopherMinWords = 1000000, gopherMaxWords = 2000000))
+      .select("stage", "n_docs").collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(acc("exact") == 40L && acc("neardup") > 0L)
+    Seq("quality", "decontam", "curriculum", "mixture", "shards").foreach { stage =>
+      assert(acc(stage) == 0L, s"stage $stage")
+      assert(Layout.committedVersions(spark, dir, s"curated/$stage").nonEmpty)
+    }
+  }
 }
