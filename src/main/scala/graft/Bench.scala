@@ -1,7 +1,14 @@
 package graft
 
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Json
 
 /** Benchmark main: runs every query at SPARK_GRAFT_SF_DIR plus three
   * throughput phases (ingest, ANN, quality-assess), printing ONE JSON
@@ -688,7 +695,7 @@ object Bench {
     * steady-state engine cost with one-off GC hiccups damped, which is
     * what a long-running cluster actually sees.
     * Returns `{"total":…,"queries":{…}}`. */
-  def queriesJson(spark: SparkSession, sfDir: String): String = {
+  def queriesJson(spark: SparkSession, sfDir: String): ObjectNode = {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     ordered.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
@@ -702,11 +709,16 @@ object Bench {
     val results = ordered.map { case (name, _) =>
       name -> math.min(m1(name), m2(name))
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    f"""{"total":$total%.3f,"queries":$qs}"""
+    obj("total" -> r3(results.map(_._2).sum),
+      "queries" -> ListMap.from(results.map { case (k, v) => k -> r3(v) }))
   }
+
+  /** A record object with its fields in the given order. */
+  private def obj(fields: (String, Any)*): ObjectNode =
+    Json.mapper.valueToTree[ObjectNode](ListMap(fields: _*))
+
+  /** The record's 3-decimal seconds and ratios. */
+  private def r3(v: Double): Double = math.rint(v * 1e3) / 1e3
 
   /** Child-JVM entry: run one phase, print its JSON fragment behind a
     * marker so the orchestrator can fish it out of Spark's log noise. */
@@ -722,38 +734,60 @@ object Bench {
       case "queries" => queriesJson(spark, sfDir)
       case "ingest" =>
         val (rows, sec) = ingestThroughput(spark, 200000L, 50)
-        f"""{"sec":$sec%.3f,"rows_per_sec":${(rows / sec).toLong}}"""
+        obj("sec" -> r3(sec), "rows_per_sec" -> (rows / sec).toLong)
       case "ann" =>
         val (nVec, buildSec, nQ, searchSec) = annThroughput(spark)
-        f"""{"build_sec":$buildSec%.3f,"build_vectors_per_sec":${(nVec / buildSec).toLong},"search_sec":$searchSec%.3f,"search_queries_per_sec":${(nQ / searchSec).toLong}}"""
+        obj("build_sec" -> r3(buildSec), "build_vectors_per_sec" -> (nVec / buildSec).toLong,
+          "search_sec" -> r3(searchSec), "search_queries_per_sec" -> (nQ / searchSec).toLong)
       case "ann_pruned" =>
         val (qps, recall, exhaustiveQps) = annPrunedThroughput(spark)
-        f"""{"qps":${qps.toLong},"recall":$recall%.3f,"exhaustive_qps":${exhaustiveQps.toLong}}"""
+        obj("qps" -> qps.toLong, "recall" -> r3(recall), "exhaustive_qps" -> exhaustiveQps.toLong)
       case "hnsw" =>
         val (nVec, buildSec, qps, recall) = hnswThroughput(spark)
         val (pqQps, pqRecall, pqBytes, pqResQps, pqResBytes) = hnswPqThroughput(spark)
-        f"""{"build_sec":$buildSec%.3f,"build_vectors_per_sec":${(nVec / buildSec).toLong},"qps":${qps.toLong},"recall":$recall%.3f,"pq_qps":${pqQps.toLong},"pq_recall":$pqRecall%.3f,"pq_resident_bytes_per_vec":$pqBytes,"pq_resident_rerank_qps":${pqResQps.toLong},"pq_resident_rerank_bytes_per_vec":$pqResBytes}"""
+        obj("build_sec" -> r3(buildSec), "build_vectors_per_sec" -> (nVec / buildSec).toLong,
+          "qps" -> qps.toLong, "recall" -> r3(recall), "pq_qps" -> pqQps.toLong,
+          "pq_recall" -> r3(pqRecall), "pq_resident_bytes_per_vec" -> pqBytes,
+          "pq_resident_rerank_qps" -> pqResQps.toLong,
+          "pq_resident_rerank_bytes_per_vec" -> pqResBytes)
       case "curate_delta" =>
         val (rows, sec, bigRows, bigSec) = curateDeltaThroughput(spark, sfDir)
-        f"""{"sec":$sec%.3f,"delta_rows":$rows,"rows_per_sec":${(rows / sec).toLong},"big_sec":$bigSec%.3f,"big_delta_rows":$bigRows,"big_rows_per_sec":${(bigRows / bigSec).toLong}}"""
+        obj("sec" -> r3(sec), "delta_rows" -> rows, "rows_per_sec" -> (rows / sec).toLong,
+          "big_sec" -> r3(bigSec), "big_delta_rows" -> bigRows,
+          "big_rows_per_sec" -> (bigRows / bigSec).toLong)
       case "ann_pq" =>
         val s = pqThroughput(spark)
-        f"""{"build_sec":${s.buildSec}%.3f,"pq_m":${s.m},"n_probe":${s.nProbe},"qps":${s.qps.toLong},"recall":${s.recall}%.3f,"probe_ceiling_recall":${s.probeCeilingRecall}%.3f,"bytes_per_vec":${s.bytesPerVec},"float_bytes_per_vec":${s.floatBytesPerVec},"rerank_qps":${s.rerankQps.toLong},"rerank_recall":${s.rerankRecall}%.3f,"rerank_window":${s.rerankWindow},"pca_recall":${s.pcaRecall}%.3f,"pca_qps":${s.pcaQps.toLong},"pca_bytes_per_vec":${s.pcaBytesPerVec}}"""
+        obj("build_sec" -> r3(s.buildSec), "pq_m" -> s.m, "n_probe" -> s.nProbe,
+          "qps" -> s.qps.toLong, "recall" -> r3(s.recall),
+          "probe_ceiling_recall" -> r3(s.probeCeilingRecall), "bytes_per_vec" -> s.bytesPerVec,
+          "float_bytes_per_vec" -> s.floatBytesPerVec, "rerank_qps" -> s.rerankQps.toLong,
+          "rerank_recall" -> r3(s.rerankRecall), "rerank_window" -> s.rerankWindow,
+          "pca_recall" -> r3(s.pcaRecall), "pca_qps" -> s.pcaQps.toLong,
+          "pca_bytes_per_vec" -> s.pcaBytesPerVec)
       case "streaming" =>
         val s = streamingThroughput(spark, 2000000L, 5000)
         val nd = streamingNearDupThroughput(spark, 200000L)
-        f"""{"sessionize_rows_per_sec":${(s.rows / s.sessionizeSec).toLong},"sessions":${s.sessions},"state_rows":${s.stateRows},"state_bytes":${s.stateBytes},"batch_ms_p50":${s.batchMsP50},"batch_ms_p95":${s.batchMsP95},"watermark_lag_ms":${s.watermarkLagMs},"window_rows_per_sec":${(s.rows / s.windowSec).toLong},"neardup_docs_per_sec":${(nd.docs / nd.sec).toLong},"neardup_pair_rows":${nd.pairRows},"neardup_state_rows":${nd.stateRows},"neardup_state_bytes":${nd.stateBytes},"neardup_truncated_docs":${nd.truncatedDocs},"neardup_estimated_pairs":${nd.estimatedPairs},"neardup_uncapped_state_bytes":${nd.uncappedStateBytes}}"""
+        obj("sessionize_rows_per_sec" -> (s.rows / s.sessionizeSec).toLong,
+          "sessions" -> s.sessions, "state_rows" -> s.stateRows, "state_bytes" -> s.stateBytes,
+          "batch_ms_p50" -> s.batchMsP50, "batch_ms_p95" -> s.batchMsP95,
+          "watermark_lag_ms" -> s.watermarkLagMs,
+          "window_rows_per_sec" -> (s.rows / s.windowSec).toLong,
+          "neardup_docs_per_sec" -> (nd.docs / nd.sec).toLong,
+          "neardup_pair_rows" -> nd.pairRows, "neardup_state_rows" -> nd.stateRows,
+          "neardup_state_bytes" -> nd.stateBytes,
+          "neardup_truncated_docs" -> nd.truncatedDocs,
+          "neardup_estimated_pairs" -> nd.estimatedPairs,
+          "neardup_uncapped_state_bytes" -> nd.uncappedStateBytes)
       case "quality" =>
         val (_, _, sec, timings) = qualityAssessThroughput(spark)
         // per-category wall seconds so a composite-number regression is
         // localizable (r6: a 2.8x phase swing with unchanged Quality.scala
         // was unattributable from the single total)
-        val cats = timings.toSeq
-          .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-        f"""{"sec":$sec%.3f,"categories":$cats}"""
+        obj("sec" -> r3(sec),
+          "categories" -> ListMap.from(timings.toSeq.map { case (k, v) => k -> r3(v) }))
       case other => throw new IllegalArgumentException(s"unknown phase: $other")
     }
-    println(Marker + json)
+    println(Marker + Json.compact(json))
     spark.stop()
   }
 
@@ -797,7 +831,7 @@ object Bench {
       math.max(2L, math.min(16L, (availKb * 0.6 / 1024 / 1024).toLong))
     } catch { case _: Throwable => 16L }
 
-  private def forkPhase(phase: String): Option[String] =
+  private def forkPhase(phase: String): Option[JsonNode] =
     try {
       val heap = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAP", s"${defaultHeapGb()}g")
       val javaBin = java.nio.file.Paths.get(
@@ -818,7 +852,7 @@ object Bench {
         System.err.println(s"[bench] fork for phase '$phase' failed " +
           s"(rc=$rc, marker=${out.nonEmpty}); phase omitted from JSON " +
           "(stderr above is the forked JVM's own)")
-      out.lastOption.map(_.stripPrefix(Marker)).filter(_ => rc == 0)
+      out.lastOption.filter(_ => rc == 0).map(l => Json.parse(l.stripPrefix(Marker)))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] fork for phase '$phase' threw " +
         s"${e.getClass.getSimpleName}: ${e.getMessage}; phase omitted from JSON")
@@ -876,10 +910,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // All numeric JSON below uses the f interpolator, which follows the
-    // JVM default locale — under a comma-decimal locale (de_DE) that
-    // emits invalid JSON. Pin ROOT before anything formats.
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (args.length >= 2 && args(0) == "--phase") { runPhase(args(1), sfDir); return }
 
@@ -915,7 +945,7 @@ object Bench {
     // record either way, so a polluted single pass is still labeled
     val maxAttempts = sys.env.get("SPARK_GRAFT_BENCH_ATTEMPTS")
       .map(_.toInt).getOrElse(3).max(1)
-    def gatedPhase(name: String): Option[String] = {
+    def gatedPhase(name: String): Option[JsonNode] = {
       // keep the best attempt, not the last: on a box where contention
       // comes in waves, attempt 2 can be clean and attempt 3 polluted
       // again — the record should carry the cleanest measurement it
@@ -924,7 +954,7 @@ object Bench {
       // set, a canary-CLEAN attempt always beats a canary-polluted one
       // even at marginally higher steal — otherwise the gate could
       // commit the very measurement it declared polluted and retried
-      var best: Option[(Double, Double, String, Double)] = None // (steal, canary, json, wall)
+      var best: Option[(Double, Double, JsonNode, Double)] = None // (steal, canary, json, wall)
       var attempt = 1
       var done = false
       while (!done) {
@@ -966,45 +996,34 @@ object Bench {
       val spark = GraftSession.create()
       try queriesJson(spark, sfDir) finally spark.stop()
     }
-    // queries fragment is {"total":T,"queries":{...}} — splice it apart
-    val totalRe = """\{"total":([0-9.]+),"queries":(\{.*\})\}""".r
-    val (total, qs) = queries match {
-      case totalRe(t, q) => (t, q)
-      case _ => ("-1", "{}")
-    }
+    val total = queries.path("total").asDouble(-1.0)
+    val qs = Option(queries.get("queries")).getOrElse(Json.obj())
+    val record = obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> qs, "sf" -> sfDir)
     // the throughput phases run FIXED-SIZE synthetic corpora (200k-row
     // ingest, 50k-vector ANN, the 81k/63k quality assessment, generated
     // streams) — they measure the same workload at every sf, so
     // scale-ladder runs skip them (SPARK_GRAFT_BENCH_PHASES=skip) and
     // point at the official sf0.1 record instead of re-measuring noise
     val skipPhases = sys.env.get("SPARK_GRAFT_BENCH_PHASES").contains("skip")
-    def phaseJson(phase: String, key: String): String =
-      if (skipPhases) ""
-      else gatedPhase(phase).map(j => s""","$key":$j""").getOrElse("")
-    val ingestJson = phaseJson("ingest", "ingest")
-    val annJson = phaseJson("ann", "ann")
-    val annPrunedJson = phaseJson("ann_pruned", "ann_pruned")
-    val annPqJson = phaseJson("ann_pq", "ann_pq")
-    val hnswJson = phaseJson("hnsw", "hnsw")
     // curate_delta reads the sf documents table (not a fixed synthetic
     // corpus) but is still skipped on ladder runs: the ladder's product
     // is per-query ratios, and this phase's full-run setup would
     // dominate its window
-    val curateDeltaJson = phaseJson("curate_delta", "curate_delta")
-    val qaJson = phaseJson("quality", "quality_assess")
-    val streamingJson = phaseJson("streaming", "streaming")
-    val phasesNote = if (skipPhases)
-      s""","phases_note":"fixed-size synthetic phases skipped; see the official sf0.1 record"""" else ""
-    val retriesJson = if (stealRetries > 0) s""","steal_retries":$stealRetries""" else ""
-    val stealJson = steals
-      .map { case (k, v) => f""""$k":$v%.1f""" }
-      .mkString(""","steal_cpu_s":{""", ",", "}") +
-      canaries.map { case (k, v) => f""""$k":${v.round}""" }
-        .mkString(""","canary_ms":{""", ",", "}") +
-      // kept-attempt wall seconds: lets a reader audit the proportional
-      // steal bound (clean ⇔ steal ≤ max(2, 5% of wall)) from the record
-      walls.map { case (k, v) => f""""$k":${v.round}""" }
-        .mkString(""","phase_wall_s":{""", ",", "}") + retriesJson
+    if (skipPhases) record.put("phases_note",
+      "fixed-size synthetic phases skipped; see the official sf0.1 record")
+    else Seq("ingest" -> "ingest", "ann" -> "ann", "ann_pruned" -> "ann_pruned",
+      "ann_pq" -> "ann_pq", "hnsw" -> "hnsw", "curate_delta" -> "curate_delta",
+      "quality" -> "quality_assess", "streaming" -> "streaming").foreach {
+      case (phase, key) => gatedPhase(phase).foreach(record.set[JsonNode](key, _))
+    }
+    record.set[JsonNode]("steal_cpu_s",
+      obj(steals.toSeq.map { case (k, v) => k -> math.rint(v * 10) / 10 }: _*))
+    record.set[JsonNode]("canary_ms", obj(canaries.toSeq.map { case (k, v) => k -> v.round }: _*))
+    // kept-attempt wall seconds: lets a reader audit the proportional
+    // steal bound (clean ⇔ steal ≤ max(2, 5% of wall)) from the record
+    record.set[JsonNode]("phase_wall_s", obj(walls.toSeq.map { case (k, v) => k -> v.round }: _*))
+    if (stealRetries > 0) record.put("steal_retries", stealRetries)
     // Self-defending record (r14 verdict #1): when the kept attempts are
     // NOT canary+steal clean, the top-level JSON says so machine-readably
     // and carries the tracked anchor's total inline — so a round-over-round
@@ -1017,27 +1036,21 @@ object Bench {
         s >= 0 && s <= math.max(2.0, 0.05 * walls.getOrElse(name, 0.0)) } &&
       canaryGateMs.forall(g => canaries.values.forall(c => c >= 0 && c <= g))
     val anchorFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_ANCHOR", "BENCH.anchor.json")
-    val contendedJson = if (phasesClean) "" else {
-      val anchorTotal =
-        try {
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(anchorFile)), "UTF-8")
-          """"value":([0-9.]+)""".r.findFirstMatchIn(txt)
-            .map(m => s""","anchor_total":${m.group(1)}""").getOrElse("")
-        } catch { case _: Exception => "" }
-      s""","contended":true$anchorTotal,"anchor":"$anchorFile""""
+    if (!phasesClean) {
+      record.put("contended", true)
+      try {
+        val anchorTotal = Json.read(new java.io.FileInputStream(anchorFile)).path("value")
+        if (anchorTotal.isNumber) record.set[JsonNode]("anchor_total", anchorTotal)
+      } catch { case _: Exception => () }
+      record.put("anchor", anchorFile)
     }
-    val phases = ingestJson + annJson + annPrunedJson + annPqJson + hnswJson +
-      curateDeltaJson + qaJson + streamingJson + phasesNote + stealJson +
-      contendedJson
 
     // Full artifact (long query names) goes to a FILE: round-5's official
     // record lost q01-q15 because the driver captures only the LAST
     // ~2000 stdout chars and the full-name line overflowed it. The
     // stdout line below carries the SAME numbers so the permanent record
     // never depends on log-tail length.
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$phases}"""
+    val fullLine = Json.compact(record)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.local.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fullLine + "\n").getBytes("UTF-8"))
@@ -1075,20 +1088,17 @@ object Bench {
     // asserted below); the full-name seconds map is in the detail file
     // and on the sacrificial full line printed just above the official
     // one. Values are the same 3-decimal seconds as the file's.
-    val qPairs = "\"(q[0-9]+)[^\"]*\":([0-9.]+)".r.findAllMatchIn(qs)
-      .map(m => (m.group(1), m.group(2))).toSeq.sortBy(_._1)
-    require(qPairs.map(_._1).distinct.size == qPairs.size,
+    val shortQs = qs.fieldNames.asScala.toSeq.map { name =>
+      val digits = name.drop(1).takeWhile(_.isDigit)
+      require(name.startsWith("q") && digits.nonEmpty, s"query $name needs a " +
+        "leading qNN token to reach the stdout map")
+      s"q$digits" -> qs.get(name)
+    }.sortBy(_._1)
+    require(shortQs.map(_._1).distinct.size == shortQs.size,
       "query short keys (leading qNN token) must be unique for the stdout map")
-    require(qPairs.size == "\"[^\"]*\":".r.findAllMatchIn(qs).size,
-      "every query of the detail map needs a leading qNN token to reach the stdout map")
-    val shortMap = qPairs.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    def line(withCats: Boolean): String = {
-      val ph = if (withCats) phases
-        else phases.replaceAll(""","categories":\{[^}]*\}""", "")
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$shortMap,""" +
-        s""""sf":"$sfDir"$ph,"detail":"$outFile"}"""
-    }
+    val short = record.deepCopy()
+    short.set[JsonNode]("queries", obj(shortQs: _*))
+    short.put("detail", outFile)
     // deterministic trim ladder against the 2000-char capture: drop the
     // quality category sub-map first (it lives in the detail file), and
     // if the phase maps THEMSELVES no longer fit (r12's official record
@@ -1097,14 +1107,14 @@ object Bench {
     // always fits: total + named per-query seconds + detail pointer. The
     // budget is 1800, not 2000: sbt's trailing "[success] Total time"
     // line eats ~100 chars of the driver's tail capture after ours.
-    val minimal =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$shortMap,""" +
-        s""""sf":"$sfDir"$retriesJson$contendedJson,""" +
-        s""""trimmed":"phase maps in detail file","detail":"$outFile"}"""
-    val out =
-      if (line(true).length <= 1800) line(true)
-      else if (line(false).length <= 1800) line(false)
-      else minimal
+    val withCats = Json.compact(short)
+    Option(short.get("quality_assess")).collect { case q: ObjectNode => q.remove("categories") }
+    val withoutCats = Json.compact(short)
+    val minimal = obj(Seq("metric", "value", "unit", "queries", "sf", "steal_retries",
+      "contended", "anchor_total", "anchor").flatMap(k => Option(short.get(k)).map(k -> _)) :+
+      ("trimmed" -> "phase maps in detail file") :+ ("detail" -> outFile): _*)
+    val out = Seq(withCats, withoutCats).find(_.length <= 1800)
+      .getOrElse(Json.compact(minimal))
     if (out.length > 1800)
       System.err.println(s"[bench] even the minimal stdout line is ${out.length} " +
         "chars — past the driver's tail capture; the per-query map itself " +
@@ -1113,7 +1123,7 @@ object Bench {
     // stream (and human logs), cut by the 2000-char tail so it can never
     // shadow the official line for a tail parser — it deliberately does
     // not contain the string `"metric"` anywhere
-    println(s"""{"queries_sec_full":$qs}""")
+    println(Json.compact(obj("queries_sec_full" -> qs)))
     println(out)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.core.Json
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Dev use:
   * extra args past <sfDir> <outDir> are query-name prefixes limiting the
@@ -22,21 +24,12 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    dumpSql(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** A query-name → SQL map as JSON, the form the DuckDB checkers
+    * (tools/local_check.py, tools/make_correctness_sf.py) load. */
+  def dumpSql(path: String, sql: Map[String, String]): Unit =
+    Files.writeString(Paths.get(path), Json.dumps(sql))
 }

@@ -1,7 +1,12 @@
 package graft.embed
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+
+import graft.core.Json
 
 /** V1 embedding generation behind a pluggable encoder
   * (reference: src/lakehouse/embeddings/generator.py:128-223,
@@ -72,7 +77,7 @@ final case class ProcessEncoder(command: Seq[String], dim: Int,
     // stdout, hanging the task with no timeout)
     val writer = new Thread(() => {
       try {
-        texts.foreach { t => out.write(jsonString(t)); out.newLine() }
+        texts.foreach { t => out.write(Json.compact(t)); out.newLine() }
         out.close()
       } catch { case _: java.io.IOException => () } // early death → rc check below
     })
@@ -100,21 +105,8 @@ final case class ProcessEncoder(command: Seq[String], dim: Int,
     lines.map(parseVector)
   }
 
-  private def jsonString(s: String): String = {
-    val b = new StringBuilder(s.length + 2)
-    b += '"'
-    s.foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
-      case c => b += c
-    }
-    (b += '"').result()
-  }
-
   private def parseVector(line: String): Array[Float] = {
-    val body = line.trim.stripPrefix("[").stripSuffix("]").trim
-    val v = if (body.isEmpty) Array.empty[Float] else body.split(",").map(_.trim.toFloat)
+    val v = Json.mapper.readValue(line, classOf[Array[Float]])
     require(v.length == dim, s"$name: expected $dim dims, got ${v.length} in '$line'")
     v
   }
@@ -166,19 +158,11 @@ object Embedder {
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta =
       if (!fs.exists(path)) Nil
-      else {
-        // structural parse (spark.read.json), not a regex: the sidecar is
-        // real JSON, so key order / whitespace must not matter
-        val m = spark.read.option("multiLine", "true").json(path.toString)
-        val cols = m.columns.toSet
-        if (!cols.contains("artifact_type")) Nil
-        else m.collect().map { r =>
-          def strOpt(n: String): Option[String] =
-            if (cols(n)) Option(r.getAs[String](n)) else None
-          StoreMeta(r.getAs[String]("artifact_type"), r.getAs[String]("model_name"),
-            strOpt("model_version"), r.getAs[Long]("count"), r.getAs[Long]("dim").toInt)
-        }.toSeq.sortBy(e => (e.artifactType, e.modelName))
-      }
+      else Json.read(fs.open(path)).elements().asScala.map { e =>
+        StoreMeta(e.get("artifact_type").asText, e.get("model_name").asText,
+          Option(e.path("model_version").textValue), e.get("count").asLong,
+          e.get("dim").asInt)
+      }.toSeq.sortBy(e => (e.artifactType, e.modelName))
     (df, meta)
   }
 
@@ -186,18 +170,15 @@ object Embedder {
     * metadata sidecar (model, dim, counts). */
   def store(embeddings: DataFrame, outDir: String): Unit = {
     embeddings.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val meta = embeddings
       .groupBy("artifact_type", "model_name", "model_version")
       .agg(count(lit(1)).as("n"), max(size(col("embedding"))).as("dim"))
       .collect()
-      .map(r => s"""{"artifact_type": "${r.getString(0)}", "model_name": "${r.getString(1)}", "model_version": ${Option(r.getString(2)).map("\"" + _ + "\"").getOrElse("null")}, "count": ${r.getLong(3)}, "dim": ${r.getInt(4)}}""")
-      .mkString("[", ", ", "]")
+      .map(r => ListMap("artifact_type" -> r.getString(0), "model_name" -> r.getString(1),
+        "model_version" -> Option(r.getString(2)), "count" -> r.getLong(3),
+        "dim" -> r.getInt(4)))
     val path = new org.apache.hadoop.fs.Path(s"$outDir/metadata.json")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    out.write(meta.getBytes("UTF-8"))
-    out.close()
+    val fs = path.getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
+    Json.write(fs.create(path, true), meta.toSeq)
   }
 }

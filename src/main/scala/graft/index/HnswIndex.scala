@@ -3,10 +3,12 @@ package graft.index
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Json
 import graft.operators.{Guards, Similarity}
 
 /** X131 — graph-based ANN: an HNSW graph per IVF cell, stored
@@ -60,31 +62,14 @@ object HnswIndex {
   private[index] final case class Meta(n: Long, nCells: Int, m: Int,
       efConstruction: Int, seed: Long, pqM: Int, pqK: Int)
 
-  /** The sidecar is a bounded single-object JSON this module wrote
-    * itself ([[publishMetadata]]'s fixed field set) — extracted with
-    * anchored field patterns, no JSON library dependency. */
   private def readMetadata(spark: SparkSession, p: Paths): Meta = {
-    val text = IndexArtifact.readMetadata(spark, p.dir)
-    // terminal-brace sentinel: publishMetadata emits the whole object in
-    // one write behind a rename, so bytes that don't close the object
-    // are a truncated/partial file — fail loudly
-    // instead of letting fieldOr default the pq geometry of a torn read
-    if (!text.trim.endsWith("}"))
-      throw new IllegalStateException(
-        s"metadata at ${p.metadata} is truncated (no terminal '}') — " +
-          "a writer crashed mid-write; rebuild the index")
-    def field(name: String): Long = {
-      val m = s""""$name"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(text)
-      m.map(_.group(1).toLong).getOrElse(
-        throw new IllegalStateException(s"metadata at ${p.metadata} lacks $name"))
-    }
+    val meta = IndexArtifact.readMetadata(spark, p.dir)
+    def field(name: String): JsonNode = Option(meta.get(name)).getOrElse(
+      throw new IllegalStateException(s"metadata at ${p.metadata} lacks $name"))
     // optional: artifacts written before PQ support have no pq fields
-    def fieldOr(name: String, dflt: Long): Long =
-      s""""$name"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(dflt)
-    Meta(field("n_vectors"), field("n_cells").toInt, field("m").toInt,
-      field("ef_construction").toInt, field("seed"),
-      fieldOr("pq_m", 0L).toInt, fieldOr("pq_k", 256L).toInt)
+    Meta(field("n_vectors").asLong, field("n_cells").asInt, field("m").asInt,
+      field("ef_construction").asInt, field("seed").asLong,
+      meta.path("pq_m").asInt(0), meta.path("pq_k").asInt(256))
   }
 
   /** One indexed vector: `nbrs(layer)` holds neighbor POSITIONS within
@@ -412,10 +397,10 @@ object HnswIndex {
   }
 
   private def publishMetadata(spark: SparkSession, p: Paths, meta: Meta): Unit =
-    IndexArtifact.publish(spark, p.dir,
-      s"""{"n_vectors": ${meta.n}, "n_cells": ${meta.nCells}, "m": ${meta.m}, """ +
-        s""""ef_construction": ${meta.efConstruction}, "seed": ${meta.seed}, """ +
-        s""""pq_m": ${meta.pqM}, "pq_k": ${meta.pqK}, "metric": "cosine"}""")
+    IndexArtifact.publish(spark, p.dir, Json.obj().put("n_vectors", meta.n)
+      .put("n_cells", meta.nCells).put("m", meta.m)
+      .put("ef_construction", meta.efConstruction).put("seed", meta.seed)
+      .put("pq_m", meta.pqM).put("pq_k", meta.pqK).put("metric", "cosine"))
 
   // ------------------------------------------------------------- serving
 

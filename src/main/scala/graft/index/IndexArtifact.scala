@@ -2,8 +2,12 @@ package graft.index
 
 import scala.collection.concurrent.TrieMap
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+
+import graft.core.Json
 
 /** The one commit protocol of an index artifact, shared by the IVF, PQ
   * and HNSW families (reference: faiss_builder.py:181-234 treats the
@@ -49,23 +53,28 @@ private[graft] object IndexArtifact {
     fsOf(spark, path).delete(path, false)
   }
 
-  def publish(spark: SparkSession, dir: String, json: String): Unit = {
+  def publish(spark: SparkSession, dir: String, metadata: ObjectNode): Unit = {
     val path = new Path(metadataPath(dir))
     val tmp = new Path(metadataPath(dir) + ".tmp")
     val fs = fsOf(spark, path)
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    Json.write(fs.create(tmp, true), metadata)
     if (!fs.rename(tmp, path))
       throw new IllegalStateException(s"could not publish $path (rename failed)")
   }
 
-  def readMetadata(spark: SparkSession, dir: String): String = {
+  /** The published metadata object. Bytes that do not parse as one
+    * object are a torn file: refused, never read as defaults. */
+  def readMetadata(spark: SparkSession, dir: String): ObjectNode = {
     val path = new Path(metadataPath(dir))
     val in =
       try fsOf(spark, path).open(path)
       catch { case _: java.io.FileNotFoundException => throw incomplete(dir) }
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    def truncated(why: String) = new IllegalStateException(
+      s"metadata at $path is truncated ($why) — a writer crashed mid-write; rebuild the index")
+    try Json.read(in) match {
+      case o: ObjectNode => o
+      case other => throw truncated(s"not an object: ${other.getNodeType}")
+    } catch { case e: JsonProcessingException => throw truncated(e.getOriginalMessage) }
   }
 }
 

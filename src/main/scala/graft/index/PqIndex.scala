@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Json
 import graft.expressions.{PqExprs, VectorExprs}
 import graft.functions.{VectorFunctions => VF}
 import graft.operators.Similarity
@@ -253,9 +254,9 @@ object PqIndex {
 
   private def publishMetadata(spark: SparkSession, dir: String, n: Long, nCells: Int,
       model: PqModel): Unit =
-    IndexArtifact.publish(spark, dir,
-      s"""{"n_vectors": $n, "n_cells": $nCells, "metric": "cosine", """ +
-        s""""pq_m": ${model.m}, "pq_k": ${model.k}, "pq_dsub": ${model.dsub}}""")
+    IndexArtifact.publish(spark, dir, Json.obj().put("n_vectors", n)
+      .put("n_cells", nCells).put("metric", "cosine").put("pq_m", model.m)
+      .put("pq_k", model.k).put("pq_dsub", model.dsub))
 
   /** Coarse centroids + codebooks are bounded model objects a serving
     * loop reads every batch — cache the collected copies per artifact

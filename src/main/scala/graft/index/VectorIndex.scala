@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Json
 import graft.operators.Similarity
 
 /** Persistent ANN index artifact + incremental maintenance
@@ -101,9 +102,8 @@ object VectorIndex {
     * a full extra scan per build/update. */
   private def publishMetadata(spark: SparkSession, dir: String, n: Long, nCells: Int,
       quantized: Boolean): Unit =
-    IndexArtifact.publish(spark, dir,
-      s"""{"n_vectors": $n, "n_cells": $nCells, "metric": "cosine", """ +
-        s""""quantized": $quantized}""")
+    IndexArtifact.publish(spark, dir, Json.obj().put("n_vectors", n)
+      .put("n_cells", nCells).put("metric", "cosine").put("quantized", quantized))
 
   /** Incremental update: add only vectors whose ids aren't indexed yet
     * (left_anti, J6/E3); full rebuild when new/existing > 0.3. Returns the

@@ -1,7 +1,11 @@
 package graft.ingest
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.core.Json
 
 /** Versioned `{layer}/{vN}` lakehouse layout (S9) and raw-file archival
   * (S16). Reference: src/lakehouse/structure.py:20-40,
@@ -24,7 +28,8 @@ object Layout {
 
   /** Marker file that publishes a version (written last; creation is the
     * commit point). Carries the footer-summed row count so consumers can
-    * sanity-check completeness without a data scan. */
+    * sanity-check completeness without a data scan, and, when
+    * [[writeVersioned]] wrote it, the written schema. */
   val CommitMarker = "_graft_commit.json"
 
   /** Standard layer directories (structure.py:20-30). */
@@ -74,18 +79,19 @@ object Layout {
     walk(root, 0).sorted
   }
 
+  /** The parsed JSON marker `name` of a version dir (None when absent). */
+  private[ingest] def readMarker(spark: SparkSession, dir: String,
+      name: String): Option[JsonNode] = {
+    val p = new Path(dir, name)
+    val f = fs(spark, dir)
+    if (!f.exists(p)) None else Some(Json.read(f.open(p)))
+  }
+
   /** The row count a committed version's marker attests (None when the
     * marker is absent or predates row-count attestation). */
-  def committedRowCount(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new Path(dir, CommitMarker)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      """"row_count"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    }
-  }
+  def committedRowCount(spark: SparkSession, dir: String): Option[Long] =
+    readMarker(spark, dir, CommitMarker).flatMap(m => Option(m.get("row_count")))
+      .map(_.asLong)
 
   /** Versions whose commit marker exists — the only ones readers see. */
   def committedVersions(spark: SparkSession, base: String, layer: String): Seq[Int] =
@@ -132,10 +138,11 @@ object Layout {
     * attested marker, so commit cost never re-reads the whole layer's
     * footers (which grew O(corpus) per batch on an incremental
     * workload). */
-  private[ingest] def commitAttested(spark: SparkSession, dir: String, rows: Long): Long = {
-    val out = fs(spark, dir).create(new Path(dir, CommitMarker), false)
-    out.write(s"""{"row_count": $rows}""".getBytes("UTF-8"))
-    out.close()
+  private[ingest] def commitAttested(spark: SparkSession, dir: String, rows: Long,
+      schema: Option[StructType] = None): Long = {
+    val marker = Json.obj().put("row_count", rows)
+    schema.foreach(s => marker.set[JsonNode]("schema", Json.parse(s.json)))
+    Json.write(fs(spark, dir).create(new Path(dir, CommitMarker), false), marker)
     rows
   }
 
@@ -145,14 +152,17 @@ object Layout {
     * The version is invisible to [[loadLatest]]/[[loadVersion]] until the
     * data write fully succeeds and the commit marker lands; an in-place
     * rewrite (explicit `version`) drops the marker first, so readers fall
-    * back to the previous committed version while it runs. */
+    * back to the previous committed version while it runs. The marker
+    * records the schema as it reads back (partition columns last). */
   def writeVersioned(df: DataFrame, base: String, layer: String,
       version: Option[Int] = None, partitionCols: Seq[String] = Nil): String = {
     val v = version.getOrElse(latestVersion(df.sparkSession, base, layer).getOrElse(0) + 1)
     val dir = versionedDir(base, layer, v)
     val w = df.write.mode(if (version.isDefined) "overwrite" else "errorifexists")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir)
-    commit(df.sparkSession, dir)
+    val data = df.schema.filterNot(f => partitionCols.contains(f.name))
+    commitAttested(df.sparkSession, dir, parquetRows(df.sparkSession, Seq(dir)),
+      Some(StructType(data ++ partitionCols.map(df.schema(_)))))
     dir
   }
 
@@ -169,7 +179,7 @@ object Layout {
           s"(uncommitted: ${stray.map("v" + _).mkString(", ")} — " +
           "in-flight, crashed, or rolled back; vacuum() reclaims them)")
     }
-    Merge.readResolved(spark, base, layer, v)
+    readCommitted(spark, base, layer, v)
   }
 
   /** Time travel: read one specific committed version (merge-aware — a
@@ -179,8 +189,20 @@ object Layout {
     require(isCommitted(spark, dir),
       s"v$version of $layer is not committed (existing: " +
         s"${committedVersions(spark, base, layer).map("v" + _).mkString(", ")})")
-    Merge.readResolved(spark, base, layer, version)
+    readCommitted(spark, base, layer, version)
   }
+
+  /** A committed version's rows. A marker that attests zero rows and
+    * carries the written schema reads as an empty frame of that schema:
+    * an empty write leaves no data file to infer one from. */
+  private def readCommitted(spark: SparkSession, base: String, layer: String,
+      version: Int): DataFrame =
+    readMarker(spark, versionedDir(base, layer, version), CommitMarker)
+      .filter(m => m.path("row_count").asLong(-1L) == 0L && m.has("schema"))
+      .fold(Merge.readResolved(spark, base, layer, version)) { m =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType])
+      }
 
   /** Time travel by TIMESTAMP: the newest version committed at or before
     * `epochMs` (commit-marker mtime is the commit instant — the marker is

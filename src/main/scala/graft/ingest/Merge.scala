@@ -2,11 +2,12 @@ package graft.ingest
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
+
+import graft.core.Json
 
 /** Partition-scoped MERGE (upsert/delete) on the versioned layout — the
   * Delta-MERGE idea expressed through [[Layout]]'s marker protocol.
@@ -55,69 +56,46 @@ object Merge {
   // ---- marker IO -----------------------------------------------------
 
   private[ingest] def writeMarker(spark: SparkSession, dir: String, info: MergeInfo): Unit = {
-    val json = new ObjectMapper().createObjectNode()
+    val json = Json.obj()
     json.put("base_version", info.baseVersion)
     json.put("partition_col", info.partitionCol)
     if (info.evolved) json.put("evolved", true)
     val arr = json.putArray("affected")
     info.affected.foreach(arr.add)
-    val out = fs(spark, dir).create(new Path(dir, MergeMarker), false)
-    out.write(json.toString.getBytes("UTF-8"))
-    out.close()
+    Json.write(fs(spark, dir).create(new Path(dir, MergeMarker), false), json)
   }
 
   private[ingest] def writeManifestMarker(spark: SparkSession, dir: String,
       manifest: Map[String, String], evolved: Boolean = false): Unit = {
-    val json = new ObjectMapper().createObjectNode()
+    val json = Json.obj()
     if (evolved) json.put("evolved", true)
     val m = json.putObject("manifest")
     manifest.toSeq.sortBy(_._1).foreach { case (k, v) => m.put(k, v) }
-    val out = fs(spark, dir).create(new Path(dir, ManifestMarker), false)
-    out.write(json.toString.getBytes("UTF-8"))
-    out.close()
+    Json.write(fs(spark, dir).create(new Path(dir, ManifestMarker), false), json)
   }
 
-  private def manifestEvolved(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir, ManifestMarker)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) false
-    else {
-      val in = f.open(p)
-      val node = try new ObjectMapper().readTree(in) finally in.close()
-      Option(node.get("evolved")).exists(_.asBoolean(false))
-    }
-  }
+  private def manifestEvolved(spark: SparkSession, dir: String): Boolean =
+    Layout.readMarker(spark, dir, ManifestMarker)
+      .exists(_.path("evolved").asBoolean(false))
 
   /** Structural parse of the manifest marker: partition-dir name →
     * absolute data path (none ⇒ not a checkpoint version). */
-  def manifestInfo(spark: SparkSession, dir: String): Option[Map[String, String]] = {
-    val p = new Path(dir, ManifestMarker)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val node = try new ObjectMapper().readTree(in) finally in.close()
+  def manifestInfo(spark: SparkSession, dir: String): Option[Map[String, String]] =
+    Layout.readMarker(spark, dir, ManifestMarker).map { node =>
       val m = node.get("manifest")
-      Some(m.fieldNames().asScala.map(k => k -> m.get(k).asText()).toMap)
+      m.fieldNames().asScala.map(k => k -> m.get(k).asText()).toMap
     }
-  }
 
   /** Structural parse of the merge marker (none ⇒ a plain, self-contained
     * version). */
-  def mergeInfo(spark: SparkSession, dir: String): Option[MergeInfo] = {
-    val p = new Path(dir, MergeMarker)
-    val f = fs(spark, dir)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val node = try new ObjectMapper().readTree(in) finally in.close()
-      Some(MergeInfo(
+  def mergeInfo(spark: SparkSession, dir: String): Option[MergeInfo] =
+    Layout.readMarker(spark, dir, MergeMarker).map { node =>
+      MergeInfo(
         node.get("base_version").asInt(),
         node.get("partition_col").asText(),
         node.get("affected").elements().asScala.map(_.asText()).toSeq,
-        evolved = Option(node.get("evolved")).exists(_.asBoolean(false))))
+        evolved = node.path("evolved").asBoolean(false))
     }
-  }
 
   // ---- resolution ----------------------------------------------------
 

@@ -252,11 +252,11 @@ object TextAnalysis {
       labelCol: String, profileSize: Int = 50,
       trainDf: Option[DataFrame] = None,
       /** Extra per-doc columns to CARRY through the classify aggregation
-        * (r16) — they join the group key beside idCol, which is exact for
-        * columns functionally determined by the id (a doc's own label,
-        * source, …) and spares the caller a corpus-sized join-back onto
-        * the prediction frame just to recover them (q27's confusion
-        * matrix dropped two exchanges this way). */
+        * (r16) as `any_value`s — one output row per id, so a column the id
+        * does not determine yields one of its values rather than extra
+        * predictions. Spares the caller a corpus-sized join-back onto the
+        * prediction frame just to recover them (q27's confusion matrix
+        * dropped two exchanges this way). */
       carryCols: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
     graft.expressions.TextExprs.register(spark)
@@ -284,10 +284,10 @@ object TextAnalysis {
       (col(idCol) +: carryCols.map(col) :+ TE.xx_sorted_hash(gramsOf).as("gh")): _*)
     docs.crossJoin(broadcast(profile))
       .withColumn("score", HF.sorted_intersect_count(col("gh"), col("parr")))
-      .groupBy((col(idCol) +: carryCols.map(col)): _*)
+      .groupBy(col(idCol))
       .agg(
         min_by(col("plabel"), struct(-col("score"), col("plabel"))).as("predicted"),
-        max(col("score")).as("_best"))
+        (max(col("score")).as("_best") +: carryCols.map(c => any_value(col(c)).as(c))): _*)
       // a doc sharing no trigram with ANY profile is unclassifiable —
       // absent from the output, like the join-based formulation
       .filter(col("_best") > 0)

@@ -1,10 +1,10 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.functions.{TextFunctions => TF}
 import graft.operators.{Dedup, Intervals, Stats}
 
 /** Seven-category data-quality assessment engine with threshold-driven
@@ -42,11 +42,7 @@ object Quality {
       adjacencyBiasMaxPercent: Double = 40.0,
       adjacencyToleranceSeconds: Double = 5.0,
       neighborK: Int = 10,
-      neighborSampleSize: Int = 100,
-      randomPairsSampleSize: Int = 500,
-      neighborListSampleSize: Int = 30,
-      outlierCount: Int = 20,
-      topSpeakersCount: Int = 10)
+      neighborSampleSize: Int = 100)
 
   /** thresholds.py:120-188 `from_dict`/`apply_overrides`: snake_case keys
     * (the reference's field names), unknown keys ignored. */
@@ -75,10 +71,6 @@ object Quality {
         case "adjacency_tolerance_seconds"       => t.copy(adjacencyToleranceSeconds = v.trim.toDouble)
         case "neighbor_k"                        => t.copy(neighborK = v.trim.toInt)
         case "neighbor_sample_size"              => t.copy(neighborSampleSize = v.trim.toInt)
-        case "random_pairs_sample_size"          => t.copy(randomPairsSampleSize = v.trim.toInt)
-        case "neighbor_list_sample_size"         => t.copy(neighborListSampleSize = v.trim.toInt)
-        case "outlier_count"                     => t.copy(outlierCount = v.trim.toInt)
-        case "top_speakers_count"                => t.copy(topSpeakersCount = v.trim.toInt)
         case _                                   => t
       }
     }
@@ -126,17 +118,6 @@ object Quality {
 
   // ---- Category B: distribution (distribution.py) -------------------
 
-  def durationStats(segments: DataFrame): DataFrame =
-    segments.agg(
-      count(lit(1)).as("n"),
-      min(col("duration")).as("min_s"),
-      max(col("duration")).as("max_s"),
-      avg(col("duration")).as("mean_s"),
-      percentile(col("duration"), lit(0.05)).as("p05"),
-      percentile(col("duration"), lit(0.5)).as("p50"),
-      percentile(col("duration"), lit(0.95)).as("p95"),
-      stddev_samp(col("duration")).as("std_s"))
-
   /** A5: % within [min,max] — forced to sum to 100.00 like the
     * reference (distribution.py:111-215). */
   def lengthCompliance(segments: DataFrame, minLen: Double, maxLen: Double): DataFrame =
@@ -167,35 +148,6 @@ object Quality {
     segments
       .withColumn("_prev_end", lag(col("end_time"), 1).over(w))
       .filter(col("_prev_end").isNotNull && col("_prev_end") > col("start_time"))
-  }
-
-  /** A11 violation counters — the full reference counter set
-    * (integrity.py:173-260 + checks.py:554-607 NaN/Inf), one row of
-    * conditional aggregates in a single scan. Schema-aware: counters for
-    * absent columns (e.g. `speaker` on beats) are omitted. */
-  def integrityCounters(segments: DataFrame): DataFrame = {
-    val cols = segments.columns.toSet
-    val zero = sum(when(lit(false), 1L).otherwise(0L)) // typed 0 placeholder
-    def cnt(cond: org.apache.spark.sql.Column) = sum(when(cond, 1L).otherwise(0L))
-    val aggs = Seq(
-      count(lit(1)).as("total_segments"),
-      cnt(col("duration") < 0).as("negative_durations"),
-      cnt(col("duration") === 0).as("zero_durations"),
-      cnt(col("duration") <= 0).as("nonpositive_durations"),
-      cnt(isnan(col("duration"))).as("nan_durations"),
-      cnt(col("duration") === Double.PositiveInfinity ||
-        col("duration") === Double.NegativeInfinity).as("inf_durations"),
-      cnt(col("start_time").isNull || col("end_time").isNull).as("missing_timestamps"),
-      cnt(col("start_time") > col("end_time")).as("inverted_timestamps"),
-      cnt(col("start_time") < 0 || col("end_time") < 0).as("negative_timestamps"),
-      cnt(col("episode_id").isNull || col("episode_id") === "").as("missing_episode")) ++
-      (if (cols("speaker"))
-        Seq(cnt(col("speaker").isNull || trim(col("speaker")) === "").as("missing_speaker"))
-       else Seq(zero.as("missing_speaker"))) ++
-      (if (cols("text"))
-        Seq(cnt(col("text").isNull || col("text") === "").as("missing_text"))
-       else Seq(zero.as("missing_text")))
-    segments.agg(aggs.head, aggs.tail: _*)
   }
 
   /** A12 exact duplicates: normalized text + 5-min bin composite key
@@ -252,66 +204,6 @@ object Quality {
       .withColumn("speaker", lit("<other>"))
       .select("speaker", "n", "total_s", "pct")
     top.unionByName(tail).filter(col("n") > 0)
-  }
-
-  // ---- Category E: text quality (text_quality.py) -------------------
-
-  def textQuality(segments: DataFrame): DataFrame =
-    segments
-      .withColumn("_tok", TF.tokenCount(col("text")))
-      .withColumn("_content", TF.contentTokenCount(col("text")))
-      .withColumn("_punct", TF.punctRatio(col("text")))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("_tok")).as("total_tokens"),
-        avg(col("_tok")).as("avg_tokens"),
-        avg(length(col("text"))).as("avg_chars"),
-        (sum(col("_content")).cast("double") / sum(col("_tok"))).as("lexical_density"),
-        avg(col("_punct")).as("avg_punct_ratio"))
-
-  // ---- Category F: embedding sanity (embedding.py) ------------------
-
-  /** V8/V9: % of k-NN sharing the query's speaker / episode. Queries are
-    * a deterministic sample (hash-ordered — V7's seeded-sample analog). */
-  def neighborLeakage(spark: SparkSession, segments: DataFrame, embeddings: DataFrame,
-      k: Int, sampleSize: Int): DataFrame = {
-    val joined = segments
-      .join(embeddings.select(col("artifact_id"), col("embedding")),
-        segments("span_id") === col("artifact_id"))
-      .select(col("span_id"), col("episode_id"), col("speaker"),
-        VF.vecAsDouble(col("embedding")).as("v"))
-      .cache()
-    try {
-      val queries = joined
-        .withColumn("_h", xxhash64(col("span_id")))
-        .orderBy("_h").limit(sampleSize)
-        .select(col("span_id").as("query_id"), col("episode_id").as("q_ep"),
-          col("speaker").as("q_spk"), col("v").as("qv"))
-      val corpus = joined.select(col("span_id").as("neighbor_id"),
-        col("episode_id").as("n_ep"), col("speaker").as("n_spk"), col("v").as("nv"))
-      val knn = graft.operators.Similarity.topKExact(
-        queries.select("query_id", "qv"), corpus.select("neighbor_id", "nv"), k)
-      knn.join(queries, "query_id").join(corpus, "neighbor_id")
-        .agg(
-          (lit(100.0) * sum(when(col("q_spk") === col("n_spk"), 1).otherwise(0)) / count(lit(1)))
-            .as("same_speaker_pct"),
-          (lit(100.0) * sum(when(col("q_ep") === col("n_ep"), 1).otherwise(0)) / count(lit(1)))
-            .as("same_episode_pct"))
-        // 1-row result materialized eagerly so the cache can be released
-        .localCheckpoint(true)
-    } finally joined.unpersist()
-  }
-
-  // ---- Category G: diagnostics (diagnostics.py:20-156) --------------
-
-  def durationOutliers(segments: DataFrame, idCol: String, k: Int): DataFrame = {
-    val longest = segments.select(col(idCol), col("duration"))
-      .orderBy(col("duration").desc, col(idCol)).limit(k)
-      .withColumn("kind", lit("longest"))
-    val shortest = segments.select(col(idCol), col("duration"))
-      .orderBy(col("duration").asc, col(idCol)).limit(k)
-      .withColumn("kind", lit("shortest"))
-    longest.unionByName(shortest)
   }
 
   // ---- Assessment: thresholds + RAG (assessor.py:1040-1067) ---------

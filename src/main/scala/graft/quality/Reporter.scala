@@ -1,7 +1,10 @@
 package graft.quality
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.core.Json
 import graft.quality.Quality.{Assessment, Thresholds, Violation}
 
 /** Quality report rendering + exports (reference:
@@ -184,36 +187,21 @@ object Reporter {
     (cols.mkString(",") +: rows).mkString("", "\n", "\n")
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def jsonNum(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else BigDecimal(d).toString
-
   /** Global metrics JSON: metadata, dataset summary, flat metrics map,
-    * violations list (FR-4 export shape). */
-  def metricsJson(a: Assessment, counts: DatasetCounts, timestamp: String): String = {
-    val metrics = a.metrics.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonNum(v)}" }.mkString(", ")
-    val violations = a.violations.map { v =>
-      s"""{"threshold_name": ${jsonStr(v.name)}, "expected": ${jsonStr(v.expected)}, """ +
-        s""""actual": ${jsonStr(v.actual)}, "severity": ${jsonStr(v.severity)}}"""
-    }.mkString(", ")
-    s"""{
-       |  "metadata": {"assessment_timestamp": ${jsonStr(timestamp)}, "rag_status": ${jsonStr(a.ragStatus)}, "embeddings_available": ${counts.embeddingsAvailable}},
-       |  "dataset_summary": {"total_episodes": ${counts.episodes}, "total_spans": ${counts.spans}, "total_beats": ${counts.beats}},
-       |  "metrics": {$metrics},
-       |  "violations": {"total_count": ${a.violations.size}, "error_count": ${a.violations.count(_.severity == "error")}, "warning_count": ${a.violations.count(_.severity == "warning")}, "violations_list": [$violations]}
-       |}""".stripMargin
-  }
+    * violations list (FR-4 export shape). A non-finite metric is null. */
+  def metricsJson(a: Assessment, counts: DatasetCounts, timestamp: String): String =
+    Json.dumps(ListMap(
+      "metadata" -> ListMap("assessment_timestamp" -> timestamp,
+        "rag_status" -> a.ragStatus, "embeddings_available" -> counts.embeddingsAvailable),
+      "dataset_summary" -> ListMap("total_episodes" -> counts.episodes,
+        "total_spans" -> counts.spans, "total_beats" -> counts.beats),
+      "metrics" -> ListMap.from(a.metrics.toSeq.sortBy(_._1).map { case (k, v) =>
+        k -> Option(v).filterNot(d => d.isNaN || d.isInfinite) }),
+      "violations" -> ListMap("total_count" -> a.violations.size,
+        "error_count" -> a.violations.count(_.severity == "error"),
+        "warning_count" -> a.violations.count(_.severity == "warning"),
+        "violations_list" -> a.violations.map(v => ListMap("threshold_name" -> v.name,
+          "expected" -> v.expected, "actual" -> v.actual, "severity" -> v.severity)))))
 
   /** Write the md + json + csv report set under `dir`. */
   def writeAll(a: Assessment, counts: DatasetCounts, timestamp: String, dir: String,

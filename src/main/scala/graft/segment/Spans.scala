@@ -81,20 +81,4 @@ object Spans {
         "speaker_role", "is_expert", "start_time", "end_time", "duration",
         "text", "utterance_ids")
   }
-
-  /** Simple `name: canonical,role,expert?` config-line parser, standing in
-    * for the reference's speaker_roles.yaml without a YAML dependency. */
-  def parseRoleLines(lines: Seq[String]): Map[String, SpeakerRole] =
-    lines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).flatMap { l =>
-      l.split(":", 2) match {
-        case Array(name, rest) =>
-          val parts = rest.split(",").map(_.trim)
-          val canonical = parts.headOption.filter(_.nonEmpty).getOrElse(name.trim)
-          val role = if (parts.length > 1) parts(1) else "other"
-          val expert = parts.length > 2 && parts(2).equalsIgnoreCase("expert") ||
-            role == "expert"
-          Some(name.trim -> SpeakerRole(canonical, role, expert))
-        case _ => None
-      }
-    }.toMap
 }

@@ -1,7 +1,11 @@
 package graft.snapshot
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Json
 
 /** Versioned, checksummed snapshots (reference:
   * src/lakehouse/snapshot/artifacts.py:231-452, config.py:148-303,
@@ -133,22 +137,16 @@ object Snapshot {
     }.getOrElse("v0.1.0")
 
   def renderManifestJson(m: Manifest): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    def num(d: Double): String =
-      if (d.isWhole && math.abs(d) < 1e15) d.toLong.toString else d.toString
-    val files = m.files.map { f =>
-      val rows = f.rows.map(_.toString).getOrElse("null")
-      s"""{"path": "${esc(f.path)}", "bytes": ${f.bytes}, "sha256": "${f.sha256}", "rows": $rows}"""
-    }.mkString("[", ", ", "]")
-    val inv = m.qa.invariants.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": ${num(v)}""" }.mkString("{", ", ", "}")
-    val qa = s"""{"state": "${esc(m.qa.state)}", "summary": "${esc(m.qa.summary)}", """ +
-      s""""invariants": $inv, "provisional": ${m.qa.provisional}}"""
-    s"""{"version": "${esc(m.version)}", "created_utc": "${esc(m.createdUtc)}", """ +
-      s""""qa_status": $qa, "files": $files}"""
+    // whole invariants (counts) print as integers
+    def num(d: Double): Any = if (d.isWhole && math.abs(d) < 1e15) d.toLong else d
+    Json.dumps(ListMap(
+      "version" -> m.version, "created_utc" -> m.createdUtc,
+      "qa_status" -> ListMap("state" -> m.qa.state, "summary" -> m.qa.summary,
+        "invariants" -> ListMap.from(m.qa.invariants.toSeq.sortBy(_._1).map {
+          case (k, v) => k -> num(v) }),
+        "provisional" -> m.qa.provisional),
+      "files" -> m.files.map(f => ListMap("path" -> f.path, "bytes" -> f.bytes,
+        "sha256" -> f.sha256, "rows" -> f.rows))))
   }
 
   /** Snapshot = copy artifacts dir + manifest with checksums + row counts.

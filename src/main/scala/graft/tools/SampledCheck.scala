@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
 /** Ladder-scale sampled-oracle dump (VERDICT r10, What's-wrong #3): at
@@ -16,7 +14,7 @@ import org.apache.spark.sql.functions._
   *    comparison is exact on the sampled aggregate at ~1% of the
   *    quadratic candidate mass.
   *  - `sampled_oracle_sql.json` — the sampled-oracle SQL map, dumped
-  *    with the same JSON escaping as Verify's oracle_sql.json.
+  *    by the same function as Verify's oracle_sql.json.
   *
   * Usage: runMain graft.tools.SampledCheck <sfDir> <outDir>
   */
@@ -32,18 +30,8 @@ object SampledCheck {
       graft.operators.Corpus.crossCorpusDedup(docs)
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/q87_sampled")
 
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val json = graft.SparkEntry.sampledOracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/sampled_oracle_sql.json"), json)
+      graft.Verify.dumpSql(s"$outDir/sampled_oracle_sql.json",
+        graft.SparkEntry.sampledOracleSql)
       println(s"sampled-check artifacts written under $outDir")
     } finally spark.stop()
   }

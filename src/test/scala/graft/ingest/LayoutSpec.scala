@@ -24,6 +24,20 @@ class LayoutSpec extends AnyFunSuite {
     assert(spark.read.parquet(p1).count() == 1)
   }
 
+  test("a committed zero-row version loads as an empty frame of the written schema") {
+    val base = Files.createTempDirectory("graft_layout_empty").toString
+    val empty = Seq((1L, "a", 0.5)).toDF("id", "x", "score").filter(col("id") < 0)
+    Layout.writeVersioned(empty, base, "spans")
+    Layout.writeVersioned(empty, base, "beats", partitionCols = Seq("x"))
+    for ((layer, cols) <- Seq("spans" -> Seq("id", "x", "score"), "beats" -> Seq("id", "score", "x"))) {
+      val back = Layout.loadLatest(spark, base, layer)
+      assert(back.count() == 0)
+      assert(back.columns.toSeq == cols)
+      assert(back.schema("id").dataType == org.apache.spark.sql.types.LongType)
+      assert(Layout.loadVersion(spark, base, layer, 1).columns.toSeq == cols)
+    }
+  }
+
   test("explicit version overwrites in place") {
     val base = Files.createTempDirectory("graft_layout2").toString
     Layout.writeVersioned(Seq((1, "a")).toDF("id", "x"), base, "spans", Some(3))

@@ -196,6 +196,20 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(joined.forall(r => r.getString(0) == r.getString(1)))
   }
 
+  test("trigram langid: one prediction per id when a carried column varies within the id") {
+    val langA = (1 to 20).map(i => (i.toLong, "aaa bbb aab abb aba bab", "A", "web"))
+    val langB = (21 to 40).map(i => (i.toLong, "xxx yyy xxy xyy xyx yxy", "B", "web"))
+    // doc 1 arrives twice from different sources: the id does not determine `source`
+    val df = (langA ++ langB :+ ((1L, "aaa bbb aab abb aba bab", "A", "books")))
+      .toDF("doc_id", "text", "lang", "source")
+    val pred = TextAnalysis.langIdByTrigramProfile(df, "doc_id", col("text"), "lang",
+      carryCols = Seq("lang", "source"))
+    assert(pred.columns.toSeq == Seq("doc_id", "lang", "source", "predicted"))
+    val rows = pred.collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to 40L))
+    assert(rows.forall(r => r.getString(1) == r.getString(3)))
+  }
+
   test("zipf audit: hand-computed slope; flat corpus -> slope 0; repartition-invariant") {
     // source a: counts 4/2/1 for tokens x/y/z -> three ranked points
     val aText = (Seq.fill(4)("xx") ++ Seq.fill(2)("yy") ++ Seq("zz")).mkString(" ")
