@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Json
@@ -278,8 +278,8 @@ object Bench {
       .localCheckpoint(true)
     // same methodology as the search below and the query suite: one
     // untimed warmup build (Catalyst analysis + codegen JIT of the
-    // build plan shapes — ~3.5 s of the ~4.8 s cold time, measured in
-    // tools/AnnBuildProbe), then time a full fresh build. Steady-state
+    // build plan shapes — ~3.5 s of the ~4.8 s cold time in a cold vs
+    // warm build A/B), then time a full fresh build. Steady-state
     // is what the baseline measures too: FAISS's C++ is compiled ahead
     // of time, so its build numbers never include compiler warmup.
     val warmDir = java.nio.file.Files.createTempDirectory("graft_bench_annw").toString + "/ivf"
@@ -304,6 +304,28 @@ object Bench {
     (nVec, buildSec, 200L, searchSec)
   }
 
+  /** The clustered ANN corpus every pruned index phase serves from:
+    * `nVec` float vectors of `dim` components, each its cluster's center
+    * (cluster `id % nCells`) plus 50% per-vector noise, both hashed with
+    * `xxhash64`, so every run builds the same corpus. IVF's recall
+    * contract assumes clusterable data (real embedding corpora are); on
+    * UNIFORM random vectors a query's true neighbors scatter across
+    * cells and no coarse quantizer can prune — measured recall@10 was
+    * 0.30 there, vs this shape where pruned probing is exercised the
+    * way production embeddings exercise it. Checkpointed eagerly: the
+    * corpus must exist before a build is timed. */
+  def clusteredCorpus(spark: SparkSession, nVec: Long, dim: Int,
+      nCells: Int): DataFrame = {
+    val cluster = col("id") % nCells
+    def u(seed: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
+      pmod(xxhash64(seed * dim + i), lit(1000)).cast("double") / 500.0 - 1.0
+    spark.range(nVec).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(dim - 1)),
+        i => (u(cluster, i) + u(col("id") + 7919L * nVec, i) * 0.5)
+          .cast("float")).as("embedding"))
+      .localCheckpoint(true)
+  }
+
   /** Production ANN configuration: pruned probe (nProbe << nCells), the
     * path a user actually serves from — q56's oracle run deliberately
     * probes every cell so it can be hash-compared to brute force, which
@@ -315,20 +337,7 @@ object Bench {
       dim: Int = 64, nCells: Int = 64, nProbe: Int = 4,
       k: Int = 10): (Double, Double, Double) = {
     val dir = java.nio.file.Files.createTempDirectory("graft_bench_annp").toString + "/ivf"
-    // Clustered corpus: per-cluster center + 50% noise. IVF's recall
-    // contract assumes clusterable data (real embedding corpora are);
-    // on UNIFORM random vectors a query's true neighbors scatter across
-    // cells and no coarse quantizer can prune — measured recall@10 was
-    // 0.30 there, vs the clustered shape below where pruned probing is
-    // actually exercised the way production embeddings exercise it.
-    val cluster = col("id") % nCells
-    def u(seed: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      pmod(xxhash64(seed * dim + i), lit(1000)).cast("double") / 500.0 - 1.0
-    val emb = spark.range(nVec).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)),
-        i => (u(cluster, i) + u(col("id") + 7919L * nVec, i) * 0.5)
-          .cast("float")).as("embedding"))
-      .localCheckpoint(true)
+    val emb = clusteredCorpus(spark, nVec, dim, nCells)
     graft.index.VectorIndex.build(emb, "vec_id", "embedding", nCells, dir)
     val queries = emb.limit(200).select(col("vec_id").as("query_id"),
       graft.functions.VectorFunctions.vecAsDouble(col("embedding")).as("qv"))
@@ -421,14 +430,7 @@ object Bench {
       dim: Int = 64, nCells: Int = 64, nProbe: Int = 4, efSearch: Int = 64,
       k: Int = 10): (Long, Double, Double, Double) = {
     val dir = java.nio.file.Files.createTempDirectory("graft_bench_hnsw").toString + "/hnsw"
-    val cluster = col("id") % nCells
-    def u(seed: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      pmod(xxhash64(seed * dim + i), lit(1000)).cast("double") / 500.0 - 1.0
-    val emb = spark.range(nVec).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)),
-        i => (u(cluster, i) + u(col("id") + 7919L * nVec, i) * 0.5)
-          .cast("float")).as("embedding"))
-      .localCheckpoint(true)
+    val emb = clusteredCorpus(spark, nVec, dim, nCells)
     // warmup build (codegen of the assign plan + JIT of the in-cell
     // builder), then the timed fresh build — same methodology as ann
     val warmDir = java.nio.file.Files.createTempDirectory("graft_bench_hnsww").toString + "/hnsw"
@@ -446,7 +448,7 @@ object Bench {
       require(got > 0, "hnsw search returned no rows")
       (System.nanoTime() - t1) / 1e9
     }
-    searchOnce() // warmup: codegen + graph residency (loadGraph persist)
+    searchOnce() // warmup: codegen + graph residency (the persisted graph)
     val qps = 200.0 / math.min(searchOnce(), searchOnce())
     val approx = graft.index.HnswIndex.search(
       spark, dir, queries, k, efSearch, nProbe)
@@ -473,14 +475,7 @@ object Bench {
       window: Int = 60, k: Int = 10,
       pqM: Int = 16): (Double, Double, Long, Double, Long) = {
     val dir = java.nio.file.Files.createTempDirectory("graft_bench_hnswpq").toString + "/hnsw"
-    val cluster = col("id") % nCells
-    def u(seed: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-      pmod(xxhash64(seed * dim + i), lit(1000)).cast("double") / 500.0 - 1.0
-    val emb = spark.range(nVec).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(dim - 1)),
-        i => (u(cluster, i) + u(col("id") + 7919L * nVec, i) * 0.5)
-          .cast("float")).as("embedding"))
-      .localCheckpoint(true)
+    val emb = clusteredCorpus(spark, nVec, dim, nCells)
     graft.index.HnswIndex.build(emb, "vec_id", "embedding", nCells, dir, pqM = pqM)
     val queries = emb.limit(200).select(col("vec_id").as("query_id"),
       graft.functions.VectorFunctions.vecAsDouble(col("embedding")).as("qv"))
@@ -531,8 +526,9 @@ object Bench {
     * shape as [[annPrunedThroughput]] (so the recall/qps rows are
     * directly comparable): build the compressed index, time warm ADC and
     * two-stage reranked search at the PRODUCTION setting (m = 16,
-    * nProbe = 8, window = 10·k — chosen from the tools/PqRecallProbe
-    * grid, where it measures rerank recall 0.992 at bench scale), measure
+    * nProbe = 8, window = 10·k — chosen from the nProbe × m × window
+    * grid recorded in docs/SCALE.md "IVF-PQ", where it measures rerank
+    * recall 0.992 at bench scale), measure
     * recall@k against exact brute-force cosine WITH the probe-ceiling
     * control, and put the storage ratio vs the float64 index ON the
     * record — compression is the entire reason PQ exists, so a phase
@@ -551,7 +547,7 @@ object Bench {
     val pqDir = base + "/pq"
     val plainDir = base + "/ivf"
     val window = 10 * k
-    val emb = graft.tools.PqRecallProbe.clusteredCorpus(spark, nVec, dim, nCells)
+    val emb = clusteredCorpus(spark, nVec, dim, nCells)
     // one untimed warmup build (codegen JIT of the build plan shapes —
     // the annThroughput methodology), then time a fresh build
     graft.index.PqIndex.build(emb, "vec_id", "embedding", nCells, pqDir + "w", m = m)

@@ -1,5 +1,8 @@
 package graft.cli
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -17,7 +20,9 @@ object Main {
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
     val spark = GraftSession.create()
-    try run(spark, args) finally spark.stop()
+    try run(spark, args)
+    catch { case e: UsageError => System.err.println(e.getMessage); usage(); sys.exit(2) }
+    finally spark.stop()
   }
 
   /** Command dispatch on a caller-owned session — `main` wraps this with
@@ -27,7 +32,7 @@ object Main {
   def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
     args(0) match {
       case "ingest" =>
-        val Array(_, in, out) = args.take(3)
+        val Array(in, out) = positional(args, 2)
         val (norm, errors) = Ingest.ingestDirectory(spark, in)
         Ingest.writeNormalized(norm, s"$out/normalized")
         errors.write.mode("overwrite").parquet(s"$out/errors")
@@ -40,7 +45,7 @@ object Main {
           s"archived ${archived.length} raw files")
 
       case "materialize" =>
-        val Array(_, base) = args.take(2)
+        val Array(base) = positional(args, 1)
         val encoder = chooseEncoder(args.drop(2))
         val utts = spark.read.parquet(s"$base/normalized")
         val spansRaw = Spans.enrichWithRoles(Spans.generate(utts), Map.empty)
@@ -67,7 +72,7 @@ object Main {
           s"${spark.read.parquet(s"$base/sections").count()} sections")
 
       case "catalog" =>
-        val Array(_, base) = args.take(2)
+        val Array(base) = positional(args, 1)
         val utts = spark.read.parquet(s"$base/normalized")
         val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")
           .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
@@ -78,7 +83,7 @@ object Main {
         println(s"catalogs written: $p1, $p2")
 
       case "quality" =>
-        val Array(_, base) = args.take(2)
+        val Array(base) = positional(args, 1)
         val thresholds = if (args.length > 2) Quality.loadThresholds(args(2))
                          else Quality.Thresholds()
         val utts = spark.read.parquet(s"$base/normalized")
@@ -101,7 +106,7 @@ object Main {
         println(s"reports: ${written.mkString(", ")}")
 
       case "validate" =>
-        val Array(_, base) = args.take(2)
+        val Array(base) = positional(args, 1)
         import graft.validation.Validation
         import graft.core.Schemas
         def maybe(p: String) =
@@ -129,7 +134,7 @@ object Main {
         } finally checks.unpersist()
 
       case "snapshot" =>
-        val Array(_, base, out, version) = args.take(4)
+        val Array(base, out, version) = positional(args, 3)
         val m = Snapshot.create(spark, base, out, version,
           java.time.Instant.now().toString)
         println(s"snapshot ${m.version}: ${m.files.length} files")
@@ -137,7 +142,7 @@ object Main {
       case "curate" =>
         // corpus-curation report suite over a documents parquet
         // (doc_id, text, lang, source)
-        val Array(_, docsPath, outDir) = args.take(3)
+        val Array(docsPath, outDir) = positional(args, 2)
         val docs = spark.read.parquet(docsPath)
         import graft.operators.Corpus
         val reports = Seq(
@@ -171,17 +176,14 @@ object Main {
         // mixture → training shards, each stage a committed Layout
         // version under <lakeDir>/curated/<stage>, with a per-stage
         // accounting table (the q122-oracle-replayed keep chain)
-        val Array(_, docsPath, lakeDir) = args.take(3)
+        val Array(docsPath, lakeDir) = positional(args, 2)
         val docs = spark.read.parquet(docsPath)
           .select(col("doc_id"), col("text"), col("lang"), col("source"))
         // --resume: crash recovery — reuse the longest contiguous
         // committed stage prefix, recompute from the first gap
         val acc = graft.pipeline.CuratePipeline.run(spark, docs, lakeDir,
           resume = args.contains("--resume"))
-        acc.collect().foreach { r =>
-          println(f"${r.getAs[String]("stage")}%-12s docs=${r.getAs[Long]("n_docs")}%-8d " +
-            f"tokens=${r.getAs[Long]("n_tokens")}%-10d id_sum=${r.getAs[Long]("id_sum")}")
-        }
+        printAccounting(acc)
         println(s"curated lake written under $lakeDir/curated " +
           s"(stages: ${graft.pipeline.CuratePipeline.StageNames.drop(1).mkString(", ")})")
 
@@ -190,14 +192,11 @@ object Main {
         // against a curate-apply lake at delta-proportional cost —
         // frozen parameters applied, banked docs win dedup contests,
         // MERGE-appended layers (the q123-oracle-replayed keep chain)
-        val Array(_, docsPath, lakeDir) = args.take(3)
+        val Array(docsPath, lakeDir) = positional(args, 2)
         val delta = spark.read.parquet(docsPath)
           .select(col("doc_id"), col("text"), col("lang"), col("source"))
         val acc = graft.pipeline.CuratePipeline.runIncremental(spark, delta, lakeDir)
-        acc.collect().foreach { r =>
-          println(f"${r.getAs[String]("stage")}%-12s docs=${r.getAs[Long]("n_docs")}%-8d " +
-            f"tokens=${r.getAs[Long]("n_tokens")}%-10d id_sum=${r.getAs[Long]("id_sum")}")
-        }
+        printAccounting(acc)
         println(s"delta batch curated into $lakeDir/curated")
 
       // ---- lakehouse table maintenance (Layout/Merge/ZOrder) ---------
@@ -207,7 +206,7 @@ object Main {
         // row count (commit-marker metadata — no data reads), merge-chain
         // depth (compaction pressure; reads cost O(depth)), and effective
         // partition-dir count
-        val base = args(1)
+        val Array(base) = positional(args, 1)
         val layers = graft.ingest.Layout.listLayers(spark, base)
         if (layers.isEmpty) println(s"no layers under $base")
         else {
@@ -232,25 +231,25 @@ object Main {
         }
 
       case "compact" =>
-        val Array(_, base, layer) = args.take(3)
+        val Array(base, layer) = positional(args, 2)
         val sortCol = if (args.length > 3) Some(args(3)) else None
         val dir = graft.ingest.Layout.compact(spark, base, layer, sortCol = sortCol)
         println(s"compacted $layer -> $dir")
 
       case "vacuum" =>
-        val Array(_, base, layer) = args.take(3)
+        val Array(base, layer) = positional(args, 2)
         val removed = graft.ingest.Layout.vacuum(spark, base, layer)
         println(s"vacuumed ${removed.length} unpublished versions" +
           (if (removed.isEmpty) "" else s": ${removed.mkString(", ")}"))
 
       case "rollback" =>
-        val Array(_, base, layer, keep) = args.take(4)
+        val Array(base, layer, keep) = positional(args, 3)
         val undone = graft.ingest.Layout.rollbackTo(spark, base, layer, keep.toInt)
         println(s"rolled back $layer to v$keep (unpublished: " +
           s"${undone.map("v" + _).mkString(", ")})")
 
       case "versions" =>
-        val Array(_, base, layer) = args.take(3)
+        val Array(base, layer) = positional(args, 2)
         val committed = graft.ingest.Layout.committedVersions(spark, base, layer).toSet
         graft.ingest.Layout.versions(spark, base, layer).foreach { v =>
           val dir = graft.ingest.Layout.versionedDir(base, layer, v)
@@ -263,14 +262,14 @@ object Main {
         // upsert a parquet directory of updates into a layer by key;
         // --evolve permits ADDITIVE new columns (older partitions read
         // null in them — Delta's mergeSchema at partition-COW grain)
-        val Array(_, base, layer, updatesPath, keyCol, partCol) = args.take(6)
+        val Array(base, layer, updatesPath, keyCol, partCol) = positional(args, 5)
         val dir = graft.ingest.Merge.merge(spark, base, layer,
           spark.read.parquet(updatesPath), Seq(keyCol), partCol,
           allowSchemaEvolution = args.contains("--evolve"))
         println(s"merged $updatesPath into $layer -> $dir")
 
       case "diff" =>
-        val Array(_, base, layer, v1, v2, keyCol) = args.take(6)
+        val Array(base, layer, v1, v2, keyCol) = positional(args, 5)
         val d = graft.ingest.Diff.changes(spark, base, layer,
           v1.toInt, v2.toInt, Seq(keyCol))
         d.groupBy("_change").count().orderBy("_change").show()
@@ -279,15 +278,12 @@ object Main {
       // ANN index surface (reference: scripts around faiss_builder.py —
       // build_and_save_index / search as user-facing operations)
       case "index-build" =>
-        val Array(_, vectorsPath, indexDir) = args.take(3)
+        val Array(vectorsPath, indexDir) = positional(args, 2)
         val flags = args.drop(3)
-        def flag(name: String, default: String): String = {
-          val i = flags.indexOf(name); if (i >= 0 && i + 1 < flags.length) flags(i + 1) else default
-        }
-        val kind = flag("--kind", "ivf")
-        val nCells = flag("--cells", "64").toInt
-        val idCol = flag("--id-col", "vec_id")
-        val vecCol = flag("--vec-col", "embedding")
+        val kind = flag(flags, "--kind", "ivf")
+        val nCells = flag(flags, "--cells", "64").toInt
+        val idCol = flag(flags, "--id-col", "vec_id")
+        val vecCol = flag(flags, "--vec-col", "embedding")
         val vecs = spark.read.parquet(vectorsPath)
         val n = kind match {
           case "ivf" =>
@@ -295,28 +291,25 @@ object Main {
               quantized = flags.contains("--int8"))
           case "hnsw" =>
             graft.index.HnswIndex.build(vecs, idCol, vecCol, nCells, indexDir,
-              m = flag("--m", "8").toInt,
-              efConstruction = flag("--ef-construction", "64").toInt,
+              m = flag(flags, "--m", "8").toInt,
+              efConstruction = flag(flags, "--ef-construction", "64").toInt,
               quantized = flags.contains("--int8"),
-              pqM = flag("--pq-m", "0").toInt,
-              pqK = flag("--pq-k", "256").toInt)
+              pqM = flag(flags, "--pq-m", "0").toInt,
+              pqK = flag(flags, "--pq-k", "256").toInt)
           case other2 =>
             System.err.println(s"unknown index kind: $other2 (ivf | hnsw)"); sys.exit(2)
         }
         println(s"built $kind index over $n vectors at $indexDir")
 
       case "index-update" =>
-        val Array(_, vectorsPath, indexDir) = args.take(3)
+        val Array(vectorsPath, indexDir) = positional(args, 2)
         val flags = args.drop(3)
-        def flag(name: String, default: String): String = {
-          val i = flags.indexOf(name); if (i >= 0 && i + 1 < flags.length) flags(i + 1) else default
-        }
-        val idCol = flag("--id-col", "vec_id")
-        val vecCol = flag("--vec-col", "embedding")
+        val idCol = flag(flags, "--id-col", "vec_id")
+        val vecCol = flag(flags, "--vec-col", "embedding")
         val vecs = spark.read.parquet(vectorsPath)
-        val action = flag("--kind", "ivf") match {
+        val action = flag(flags, "--kind", "ivf") match {
           case "ivf" => graft.index.VectorIndex.update(
-            vecs, idCol, vecCol, flag("--cells", "64").toInt, indexDir)
+            vecs, idCol, vecCol, flag(flags, "--cells", "64").toInt, indexDir)
           case "hnsw" => graft.index.HnswIndex.update(vecs, idCol, vecCol, indexDir)
           case other2 =>
             System.err.println(s"unknown index kind: $other2 (ivf | hnsw)"); sys.exit(2); ""
@@ -324,25 +317,22 @@ object Main {
         println(s"index update: $action")
 
       case "index-search" =>
-        val Array(_, indexDir, queriesPath, outPath) = args.take(4)
+        val Array(indexDir, queriesPath, outPath) = positional(args, 3)
         val flags = args.drop(4)
-        def flag(name: String, default: String): String = {
-          val i = flags.indexOf(name); if (i >= 0 && i + 1 < flags.length) flags(i + 1) else default
-        }
-        val k = flag("--k", "10").toInt
-        val nProbe = flag("--probes", "4").toInt
-        val idCol = flag("--id-col", "vec_id")
-        val vecCol = flag("--vec-col", "embedding")
+        val k = flag(flags, "--k", "10").toInt
+        val nProbe = flag(flags, "--probes", "4").toInt
+        val idCol = flag(flags, "--id-col", "vec_id")
+        val vecCol = flag(flags, "--vec-col", "embedding")
         val queries = spark.read.parquet(queriesPath)
           .select(col(idCol).as("query_id"),
             graft.functions.VectorFunctions.vecAsDouble(col(vecCol)).as("qv"))
-        val hits = flag("--kind", "ivf") match {
+        val hits = flag(flags, "--kind", "ivf") match {
           case "ivf" => graft.index.VectorIndex.search(spark, indexDir, queries, k, nProbe)
           case "hnsw" => graft.index.HnswIndex.search(spark, indexDir, queries, k,
-            efSearch = flag("--ef", "64").toInt, nProbe = nProbe)
+            efSearch = flag(flags, "--ef", "64").toInt, nProbe = nProbe)
           case "hnsw-pq" => graft.index.HnswIndex.searchPq(spark, indexDir, queries, k,
-            efSearch = flag("--ef", "64").toInt, nProbe = nProbe,
-            window = flag("--window", "50").toInt,
+            efSearch = flag(flags, "--ef", "64").toInt, nProbe = nProbe,
+            window = flag(flags, "--window", "50").toInt,
             residentRerank = flags.contains("--resident-rerank"))
           case other2 =>
             System.err.println(s"unknown index kind: $other2 (ivf | hnsw | hnsw-pq)"); sys.exit(2); null
@@ -350,8 +340,7 @@ object Main {
         hits.write.mode("overwrite").parquet(outPath)
         println(s"wrote ${spark.read.parquet(outPath).count()} hit rows to $outPath")
 
-      case other =>
-        System.err.println(s"unknown command: $other"); usage(); sys.exit(2)
+      case other => throw new UsageError(s"unknown command: $other")
     }
   }
 
@@ -386,27 +375,55 @@ object Main {
     }
   }
 
-  private def usage(): Unit = System.err.println(
-    """usage: graft.cli.Main <command> [args]
-      |  ingest <inputDir> <lakeDir>
-      |  materialize <lakeDir> [--encoder-cmd <cmd>] [--encoder-dim <d>]
-      |  catalog <lakeDir>
-      |  validate <lakeDir>
-      |  quality <lakeDir> [thresholdsConfig]
-      |  snapshot <lakeDir> <snapshotsDir> <version>
-      |  curate <documentsParquet> <outDir>
-      |  curate-apply <documentsParquet> <lakeDir> [--resume]
+  /** A command line `run` cannot dispatch: an unknown command, or too
+    * few positional arguments. `main` prints usage and exits 2. */
+  private[cli] final class UsageError(msg: String) extends IllegalArgumentException(msg)
+
+  /** The `n` positional arguments after the command name; fewer is a
+    * [[UsageError]] naming the command's usage line. */
+  private def positional(args: Array[String], n: Int): Array[String] = {
+    if (args.length <= n) throw new UsageError(
+      s"${args(0)} takes $n arguments, got ${args.length - 1}; usage: ${Usage(args(0))}")
+    args.slice(1, n + 1)
+  }
+
+  /** The value after `name` in `flags`, or `default` when absent. */
+  private def flag(flags: Array[String], name: String, default: String): String = {
+    val i = flags.indexOf(name); if (i >= 0 && i + 1 < flags.length) flags(i + 1) else default
+  }
+
+  /** The per-stage accounting table of a curation run, one line a stage. */
+  private def printAccounting(acc: DataFrame): Unit =
+    acc.collect().foreach { r =>
+      println(f"${r.getAs[String]("stage")}%-12s docs=${r.getAs[Long]("n_docs")}%-8d " +
+        f"tokens=${r.getAs[Long]("n_tokens")}%-10d id_sum=${r.getAs[Long]("id_sum")}")
+    }
+
+  /** Each command's usage line, keyed by the command, in `usage` order. */
+  private val Usage: ListMap[String, String] = ListMap.from(Seq(
+    "ingest <inputDir> <lakeDir>",
+    "materialize <lakeDir> [--encoder-cmd <cmd>] [--encoder-dim <d>]",
+    "catalog <lakeDir>",
+    "validate <lakeDir>",
+    "quality <lakeDir> [thresholdsConfig]",
+    "snapshot <lakeDir> <snapshotsDir> <version>",
+    "curate <documentsParquet> <outDir>",
+    """curate-apply <documentsParquet> <lakeDir> [--resume]
       |      (holds the lake's single-writer lease; a concurrent
-      |       curate-apply on the same lake fails fast)
-      |  curate-delta <documentsParquet> <lakeDir>
-      |  lake-status <lakeDir>
-      |  compact <lakeDir> <layer> [sortCol]
-      |  vacuum <lakeDir> <layer>
-      |  rollback <lakeDir> <layer> <keepVersion>
-      |  versions <lakeDir> <layer>
-      |  merge <lakeDir> <layer> <updatesParquet> <keyCol> <partitionCol> [--evolve]
-      |  diff <lakeDir> <layer> <fromV> <toV> <keyCol>
-      |  index-build <vectorsParquet> <indexDir> [--kind ivf|hnsw] [--cells n] [--int8] [--pq-m n] [--pq-k n] [--m n] [--ef-construction n] [--id-col c] [--vec-col c]
-      |  index-update <vectorsParquet> <indexDir> [--kind ivf|hnsw] [--cells n] [--id-col c] [--vec-col c]
-      |  index-search <indexDir> <queriesParquet> <outParquet> [--kind ivf|hnsw|hnsw-pq] [--k n] [--probes n] [--ef n] [--window n] [--id-col c] [--vec-col c]""".stripMargin)
+      |       curate-apply on the same lake fails fast)""".stripMargin,
+    "curate-delta <documentsParquet> <lakeDir>",
+    "lake-status <lakeDir>",
+    "compact <lakeDir> <layer> [sortCol]",
+    "vacuum <lakeDir> <layer>",
+    "rollback <lakeDir> <layer> <keepVersion>",
+    "versions <lakeDir> <layer>",
+    "merge <lakeDir> <layer> <updatesParquet> <keyCol> <partitionCol> [--evolve]",
+    "diff <lakeDir> <layer> <fromV> <toV> <keyCol>",
+    "index-build <vectorsParquet> <indexDir> [--kind ivf|hnsw] [--cells n] [--int8] [--pq-m n] [--pq-k n] [--m n] [--ef-construction n] [--id-col c] [--vec-col c]",
+    "index-update <vectorsParquet> <indexDir> [--kind ivf|hnsw] [--cells n] [--id-col c] [--vec-col c]",
+    "index-search <indexDir> <queriesParquet> <outParquet> [--kind ivf|hnsw|hnsw-pq] [--k n] [--probes n] [--ef n] [--window n] [--id-col c] [--vec-col c]"
+  ).map(line => line.takeWhile(_ != ' ') -> line))
+
+  private def usage(): Unit = System.err.println(
+    ("usage: graft.cli.Main <command> [args]" +: Usage.values.toSeq.map("  " + _)).mkString("\n"))
 }

@@ -17,10 +17,11 @@ object Par {
     * Parquet written as few files / single row groups plans as ~1 scan
     * partition, so the whole first stage — scan + ngram/regex/hash
     * explode + partial aggregation — runs on one core no matter how many
-    * the cluster has (measured 3.5× on the langid kernel, see
-    * `tools/SpreadProbe`). The fix is one round-robin exchange of the
-    * (pruned) input columns before the kernel; `repartition(n)` with an
-    * explicit count so AQE cannot coalesce the spread away.
+    * the cluster has (measured 3.5× on the langid kernel; docs/SCALE.md,
+    * "Box-noise canary", second scale bug). The fix is one round-robin
+    * exchange of the (pruned) input columns before the kernel;
+    * `repartition(n)` with an explicit count so AQE cannot coalesce the
+    * spread away.
     *
     * Two gates keep the exchange strictly profitable:
     *   - parallelism: no-op when `2×partitions ≥ cores` — at real scale

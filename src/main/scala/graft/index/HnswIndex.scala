@@ -460,9 +460,6 @@ object HnswIndex {
         "never served before the maintenance window; retry after the " +
         "update commits or rebuild from the corpus"))
 
-  private[graft] def loadGraph(spark: SparkSession, p: Paths): Dataset[CellGraph] =
-    graphAt(spark, p, IndexArtifact.published(spark, p.dir))
-
   private def graphAt(spark: SparkSession, p: Paths, gen: Long): Dataset[CellGraph] =
     graphCache(p.dir, gen)(readGraph(spark, p))
 
@@ -522,7 +519,7 @@ object HnswIndex {
     ds
   }
 
-  /** PQ twin of [[loadGraph]]: column-pruned to (codes, rn, adjacency) —
+  /** PQ twin of [[graphAt]]: column-pruned to (codes, rn, adjacency) —
     * the int8 exact-store columns stay on disk unless `withStore`. */
   private[graft] def loadGraphPq(spark: SparkSession, p: Paths,
       withStore: Boolean = false): Dataset[CellGraphPq] =
@@ -1039,8 +1036,7 @@ object HnswIndex {
   }
 
   private[graft] def searchCell(g: CellGraph, q: Array[Double], efSearch: Int,
-      k: Int, excludeId: Long,
-      simCounter: java.util.concurrent.atomic.LongAdder = null): Array[(Long, Double)] = {
+      k: Int, excludeId: Long): Array[(Long, Double)] = {
     val n = g.n
     if (n == 0) return Array.empty
     val dim = g.dim
@@ -1059,7 +1055,6 @@ object HnswIndex {
         while (j < dim) { acc += q(j) * g.vecs(off + j); j += 1 }
         simArr(pos) = acc / (qn * g.norms(pos))
         simSet.set(pos)
-        if (simCounter != null) simCounter.increment()
       }
       simArr(pos)
     }
@@ -1084,8 +1079,7 @@ object HnswIndex {
     * full-window rerank path is exhaustive-exact over the int8 store. */
   private[graft] def searchCellPq(g: CellGraphPq, lut: Array[Double],
       qCoarse: Double, qn: Double, kSub: Int, efSearch: Int, window: Int,
-      excludeId: Long, qv: Array[Double] = null,
-      simCounter: java.util.concurrent.atomic.LongAdder = null): Array[(Long, Double)] = {
+      excludeId: Long, qv: Array[Double] = null): Array[(Long, Double)] = {
     val n = g.n
     if (n == 0) return Array.empty
     val m = g.m
@@ -1099,7 +1093,6 @@ object HnswIndex {
         while (j < m) { acc += lut(j * kSub + (g.codes(off + j) + 128)); j += 1 }
         simArr(pos) = acc / (qn * g.rn(pos))
         simSet.set(pos)
-        if (simCounter != null) simCounter.increment()
       }
       simArr(pos)
     }

@@ -848,11 +848,11 @@ object Dedup {
     // distinct-grams-per-mapper, the dup set is bounded by the duplicated
     // vocabulary (AQE broadcasts it when it fits), and the semi-join
     // probe streams — a hot gram costs a streaming probe, never a sort.
-    // Measured (tools/SpanProbe, planted boilerplate): at sf1 with no hot
-    // mass the window is ~1.1 s faster (the gram chain recompute below);
-    // that edge is gone by sf4 (7.21 vs 7.19 s) and INVERTS whenever a
-    // gram is actually hot (sf1 5%x30: window 3.67 s vs two-phase
-    // 2.71 s; sf4: 9.20 vs 8.78 s) — full table in docs/SCALE.md. The
+    // Measured (planted boilerplate): at sf1 with no hot mass the window
+    // is ~1.1 s faster (the gram chain recompute below); that edge is
+    // gone by sf4 (7.21 vs 7.19 s) and INVERTS whenever a gram is
+    // actually hot (sf1 5%x30: window 3.67 s vs two-phase 2.71 s; sf4:
+    // 9.20 vs 8.78 s) — full table in docs/SCALE.md, "Dedup pipeline". The
     // gram chain is recomputed for the probe side: map-only work, the
     // price of never materializing the gram stream.
     val dupGrams = grams.groupBy("g").agg(count(lit(1)).as("_n"))
@@ -911,8 +911,10 @@ object Dedup {
 
   /** The retired window-count formulation of [[duplicatedSpans]] — ONE
     * gram-keyed shuffle (beats two-phase when no gram is hot and the
-    * corpus fits few partitions), kept for the straggler probe
-    * ([[graft.tools.SpanProbe]]) that justifies the two-phase default. */
+    * corpus fits few partitions), kept as the reference implementation
+    * `DuplicatedSpansSpec` checks the two-phase default against; the
+    * straggler A/B that justifies that default is in docs/SCALE.md,
+    * "Dedup pipeline". */
   def duplicatedSpansWindowed(docs: DataFrame, idCol: String, textCol: Column,
       k: Int): DataFrame = {
     require(k >= 2, s"span gram width must be >= 2, got $k")

@@ -532,7 +532,8 @@ object Similarity {
   /** The hyperplane-cell regime of [[cosinePairsAbove]] — the sibling of
     * [[cosinePairsAboveIvf]] with data-independent sign-bit cells
     * (2^nPlanes of them) instead of trained centroids. Recall trade
-    * measured head-to-head by `tools/SemDedupRecallProbe`. */
+    * measured head-to-head in docs/SCALE.md, "SemDeDup cell
+    * quantizers". */
   def cosinePairsAboveHyperplane(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int): DataFrame = {
     val assigned = df.select(col(idCol), col(vecCol))
@@ -552,8 +553,8 @@ object Similarity {
     * (bounded moment fold) and the assignment stays map-only; the pair
     * CONTRACT is unchanged — exact raw cosine within cells — so output
     * pairs are always a subset of [[cosinePairsAbove]]'s, at whatever
-    * recall the cells achieve (measured: `tools/SemDedupRecallProbe`,
-    * table in docs/SCALE.md). */
+    * recall the cells achieve (table in docs/SCALE.md, "Whitened cell
+    * assignment"). */
   def cosinePairsAboveHyperplaneWhitened(df: DataFrame, idCol: String,
       vecCol: String, threshold: Double, nPlanes: Int,
       eps: Double = 1e-6): DataFrame = {

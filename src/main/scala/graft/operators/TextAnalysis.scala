@@ -117,7 +117,8 @@ object TextAnalysis {
     // and there is no second pass: an earlier hash+join-back variant
     // shuffled 8-byte gram hashes instead of strings but paid for it
     // with a re-explode of the corpus and three joins — measured 3×
-    // slower at 10× data (tools/NgramMassProbe: 6.5 s vs 2.2 s).
+    // slower at 10× data (6.5 s vs 2.2 s; docs/SCALE.md, "Empirical
+    // scale proof").
     val counts = grams.groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("cnt"))
     counts.groupBy(col(idCol))
       .agg(sum(col("cnt")).as("n_grams"),

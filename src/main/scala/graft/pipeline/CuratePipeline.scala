@@ -292,7 +292,8 @@ object CuratePipeline {
         // inlining cost 41-60 s at sf0.1 (O(tokens²) shingle re-eval);
         // after the token-materialization and one-pass gram-stats fixes
         // the barrier-free chain is merely ~45% slower than the measured
-        // barrier set (6.6 s vs 4.5 s at sf0.1, CurateBarrierProbe r12) —
+        // barrier set (6.6 s vs 4.5 s at sf0.1; docs/SCALE.md, "Which
+        // barriers are load-bearing") —
         // exchange reuse dedupes the agg subtrees within the one plan,
         // so the barriers are now a measured optimization, not a cliff
         (name, if (barriers(name)) out.localCheckpoint(true) else out)

@@ -113,15 +113,6 @@ object EmbeddingSanity {
       .select(round(when(col("sd_d") > 0 && col("sd_s") > 0,
         col("cv") / (col("sd_d") * col("sd_s"))), 6).as("length_bias_corr"))
 
-  /** V8/V9 from a precomputed neighbor frame: % of neighbors sharing the
-    * query's speaker / episode (leakage). */
-  def leakagePcts(neigh: DataFrame): DataFrame =
-    neigh.agg(
-      (lit(100.0) * sum(when(col("q_speaker") === col("n_speaker"), 1).otherwise(0))
-        / count(lit(1))).as("same_speaker_pct"),
-      (lit(100.0) * sum(when(col("q_episode_id") === col("n_episode_id"), 1).otherwise(0))
-        / count(lit(1))).as("same_episode_pct"))
-
   /** V14: neighbor coherence — per query, the share of its neighbors'
     * top term; corpus-level assessment by thresholds (embedding.py:475-696). */
   def neighborCoherence(neigh: DataFrame, segments: DataFrame, idCol: String): DataFrame = {

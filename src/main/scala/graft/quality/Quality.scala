@@ -267,10 +267,11 @@ object Quality {
         try {
           if (neigh.isEmpty) None
           else {
-            // leakage + adjacency FUSED into one aggregation job over the
-            // checkpointed neighbor frame (r16): same expressions as
-            // EmbeddingSanity.leakagePcts / adjacencyBiasPct, one job
-            // fewer of fixed scheduling latency
+            // leakage (V8/V9: % of neighbors sharing the query's speaker
+            // / episode) + adjacency FUSED into one aggregation job over
+            // the checkpointed neighbor frame (r16): adjacency is the
+            // same expression as EmbeddingSanity.adjacencyBiasPct, one
+            // job fewer of fixed scheduling latency
             val leak = neigh.agg(
               (lit(100.0) * sum(when(col("q_speaker") === col("n_speaker"), 1).otherwise(0))
                 / count(lit(1))).as("same_speaker_pct"),

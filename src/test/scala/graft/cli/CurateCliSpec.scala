@@ -74,4 +74,12 @@ class CurateCliSpec extends AnyFunSuite {
       assert(status.contains(l), s"lake-status missing $l:\n$status")
     }
   }
+
+  test("a command given too few arguments names its usage line") {
+    val lake = Files.createTempDirectory("graft_cli_arity").toString
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, Array("snapshot", lake))
+    }
+    assert(e.getMessage.contains("snapshot <lakeDir> <snapshotsDir> <version>"), e.getMessage)
+  }
 }
