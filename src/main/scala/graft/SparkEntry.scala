@@ -896,9 +896,10 @@ object SparkEntry {
       .orderBy("event_type")
 
   /** Validation check suite (F9/F10/F6): PK uniqueness, null keys, FK
-    * cardinality + orphan detection, NaN/Inf — every per-row counter
-    * fused into ONE aggregation job per table, plus one anti-join per FK
-    * ([[graft.validation.Validation]]; reference checks.py:401-607). */
+    * cardinality + orphan detection, NaN/Inf — the whole battery as ONE
+    * query with two exchanges, per-key checks sharing one keyed
+    * aggregation ([[graft.validation.Validation]]; reference
+    * checks.py:401-607). */
   def validationChecks(spark: SparkSession, dir: String): DataFrame = {
     import graft.validation.Validation
     import graft.validation.Validation.TableSpec

@@ -1,15 +1,16 @@
 package graft.cli
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.catalogs.DomainCatalogs
 import graft.embed.{Embedder, HashEncoder}
 import graft.ingest.Ingest
-import graft.quality.Quality
+import graft.quality.{Guardrails, Quality, Reporter}
 import graft.segment.{Beats, Sections, Spans}
 import graft.snapshot.Snapshot
 
@@ -21,7 +22,10 @@ object Main {
     if (args.isEmpty) { usage(); sys.exit(2) }
     val spark = GraftSession.create()
     try run(spark, args)
-    catch { case e: UsageError => System.err.println(e.getMessage); usage(); sys.exit(2) }
+    catch {
+      case e: UsageError => System.err.println(e.getMessage); usage(); sys.exit(2)
+      case e: ValidationFailed => System.err.println(e.getMessage); sys.exit(1)
+    }
     finally spark.stop()
   }
 
@@ -34,42 +38,44 @@ object Main {
       case "ingest" =>
         val Array(in, out) = positional(args, 2)
         val (norm, errors) = Ingest.ingestDirectory(spark, in)
-        Ingest.writeNormalized(norm, s"$out/normalized")
+        val ingested = Observation()
+        Ingest.writeNormalized(norm.observe(ingested, count(lit(1)).as("n")), s"$out/normalized")
         errors.write.mode("overwrite").parquet(s"$out/errors")
         // S16: archive raw sources under {lake}/raw, named by episode stem
         val rawFiles = Option(new java.io.File(in).listFiles()).getOrElse(Array.empty)
           .filter(_.getName.endsWith(".jsonl"))
           .map(f => (f.getPath, f.getName.stripSuffix(".jsonl")))
         val archived = graft.ingest.Layout.archiveRaw(spark, rawFiles.toSeq, out)
-        println(s"ingested: ${spark.read.parquet(s"$out/normalized").count()} utterances; " +
+        println(s"ingested: ${ingested.get("n")} utterances; " +
           s"archived ${archived.length} raw files")
 
       case "materialize" =>
         val Array(base) = positional(args, 1)
         val encoder = chooseEncoder(args.drop(2))
         val utts = spark.read.parquet(s"$base/normalized")
-        val spansRaw = Spans.enrichWithRoles(Spans.generate(utts), Map.empty)
+        // Each layer is generated once, by its write; later steps read the
+        // written layer back under the schema they wrote (no inference
+        // job), and every printed count is observed on a write.
+        def readBack(path: String, like: DataFrame) = spark.read.schema(like.schema).parquet(path)
         // F5 duration guardrail between steps (drop + log top offenders)
-        val guard = graft.quality.Guardrails(spansRaw, "span_id",
-          graft.quality.Guardrails.SpanMaxDuration)
-        if (guard.topOffenders.nonEmpty)
-          System.err.println(s"[guardrail] dropped spans: ${guard.topOffenders.mkString(", ")}")
-        guard.kept.write.mode("overwrite").parquet(s"$base/spans")
-        val spansR = spark.read.parquet(s"$base/spans")
+        val guard = Guardrails(Spans.enrichWithRoles(Spans.generate(utts), Map.empty),
+          "span_id", Guardrails.SpanMaxDuration)
+        val (nSpans, offenders) = guard.writeKept(s"$base/spans")
+        if (offenders.nonEmpty)
+          System.err.println(s"[guardrail] dropped spans: ${offenders.mkString(", ")}")
+        val spansR = readBack(s"$base/spans", guard.kept)
         val spanEmb = Embedder.embed(spansR, "span_id", "text", "span", encoder)
         Embedder.store(spanEmb, s"$base/span_embeddings")
         val beats = Beats.generateFromDf(spansR,
-          Some(spark.read.parquet(s"$base/span_embeddings/embeddings.parquet")))
-        beats.write.mode("overwrite").parquet(s"$base/beats")
-        val beatsR = spark.read.parquet(s"$base/beats")
+          Some(readBack(s"$base/span_embeddings/embeddings.parquet", spanEmb))).toDF()
+        val nBeats = writeCounted(beats, s"$base/beats")
+        val beatsR = readBack(s"$base/beats", beats)
         val beatEmb = Embedder.embed(beatsR, "beat_id", "text", "beat", encoder)
         Embedder.store(beatEmb, s"$base/beat_embeddings")
         val sections = Sections.generateFromDf(beatsR,
-          Some(spark.read.parquet(s"$base/beat_embeddings/embeddings.parquet")))
-        sections.write.mode("overwrite").parquet(s"$base/sections")
-        println(s"materialized: ${spark.read.parquet(s"$base/spans").count()} spans, " +
-          s"${spark.read.parquet(s"$base/beats").count()} beats, " +
-          s"${spark.read.parquet(s"$base/sections").count()} sections")
+          Some(readBack(s"$base/beat_embeddings/embeddings.parquet", beatEmb))).toDF()
+        val nSections = writeCounted(sections, s"$base/sections")
+        println(s"materialized: $nSpans spans, $nBeats beats, $nSections sections")
 
       case "catalog" =>
         val Array(base) = positional(args, 1)
@@ -94,14 +100,14 @@ object Main {
         val spans = spark.read.parquet(s"$base/spans")
         val beats = spark.read.parquet(s"$base/beats")
         val a = Quality.assess(spans, beats, episodes, thresholds, emb)
-        val counts = graft.quality.Reporter.DatasetCounts(
-          episodes.count(), spans.count(), beats.count(), emb.isDefined)
-        val written = graft.quality.Reporter.writeAll(
-          a, counts, java.time.Instant.now().toString, s"$base/quality_reports",
-          spanHist = Some(Quality.durationHistogram(spans, Quality.SpanHistEdges)),
-          beatHist = Some(Quality.durationHistogram(beats, Quality.BeatHistEdges)),
-          episodeFrame = Some(Quality.coverage(spans, episodes)
-            .select("episode_id", "episode_duration", "union_s", "coverage_pct")))
+        // the report's counts, histograms and per-episode rows come from
+        // the assessment's own passes
+        val d = a.detail.get
+        val written = Reporter.writeAll(
+          a, Reporter.DatasetCounts(d.episodes, d.spans, d.beats, emb.isDefined),
+          java.time.Instant.now().toString, s"$base/quality_reports",
+          spanHist = Some(d.spanHistogram), beatHist = Some(d.beatHistogram),
+          episodeRows = Some(d.episodeCoverage))
         println(Quality.renderMarkdown(a))
         println(s"reports: ${written.mkString(", ")}")
 
@@ -123,15 +129,17 @@ object Main {
           "utterances" -> Schemas.utterance, "spans" -> Schemas.span,
           "beats" -> Schemas.beat, "sections" -> Schemas.section,
           "embeddings" -> Schemas.embedding)
-        val checks = Validation.validateAll(tables, specs, schemas).cache()
-        try {
-          val failed = checks.filter(!col("passed"))
-          if (!failed.isEmpty) failed.show(200, truncate = false)
-          val s = Validation.summarize(checks).first()
-          println(s"validation: ${s.getAs[Long]("passed_checks")}/${s.getAs[Long]("total_checks")} " +
-            s"checks passed (errors=${s.getAs[Long]("errors")}, warnings=${s.getAs[Long]("warnings")})")
-          if (s.getAs[Long]("errors") > 0) sys.exit(1)
-        } finally checks.unpersist()
+        // one action: the check rows are sorted and summarized here
+        val rows = Validation.checks(tables, specs, schemas).collect()
+          .sortBy(r => (r.getString(0), r.getString(1)))
+        val failed = rows.filterNot(_.getAs[Boolean]("passed"))
+        if (failed.nonEmpty) // a local frame: show starts no job
+          spark.createDataFrame(failed.toSeq.asJava, Validation.CheckSchema)
+            .show(200, truncate = false)
+        val s = Validation.Summary.of(rows.toSeq)
+        println(s"validation: ${s.passed}/${s.total} " +
+          s"checks passed (errors=${s.errors}, warnings=${s.warnings})")
+        if (s.errors > 0) throw new ValidationFailed(s"validation failed: ${s.errors} errors")
 
       case "snapshot" =>
         val Array(base, out, version) = positional(args, 3)
@@ -296,8 +304,7 @@ object Main {
               quantized = flags.contains("--int8"),
               pqM = flag(flags, "--pq-m", "0").toInt,
               pqK = flag(flags, "--pq-k", "256").toInt)
-          case other2 =>
-            System.err.println(s"unknown index kind: $other2 (ivf | hnsw)"); sys.exit(2)
+          case other2 => throw new UsageError(s"unknown index kind: $other2 (ivf | hnsw)")
         }
         println(s"built $kind index over $n vectors at $indexDir")
 
@@ -311,8 +318,7 @@ object Main {
           case "ivf" => graft.index.VectorIndex.update(
             vecs, idCol, vecCol, flag(flags, "--cells", "64").toInt, indexDir)
           case "hnsw" => graft.index.HnswIndex.update(vecs, idCol, vecCol, indexDir)
-          case other2 =>
-            System.err.println(s"unknown index kind: $other2 (ivf | hnsw)"); sys.exit(2); ""
+          case other2 => throw new UsageError(s"unknown index kind: $other2 (ivf | hnsw)")
         }
         println(s"index update: $action")
 
@@ -335,7 +341,7 @@ object Main {
             window = flag(flags, "--window", "50").toInt,
             residentRerank = flags.contains("--resident-rerank"))
           case other2 =>
-            System.err.println(s"unknown index kind: $other2 (ivf | hnsw | hnsw-pq)"); sys.exit(2); null
+            throw new UsageError(s"unknown index kind: $other2 (ivf | hnsw | hnsw-pq)")
         }
         hits.write.mode("overwrite").parquet(outPath)
         println(s"wrote ${spark.read.parquet(outPath).count()} hit rows to $outPath")
@@ -375,9 +381,22 @@ object Main {
     }
   }
 
-  /** A command line `run` cannot dispatch: an unknown command, or too
-    * few positional arguments. `main` prints usage and exits 2. */
+  /** A command line `run` cannot dispatch: an unknown command or index
+    * kind, or too few positional arguments. `main` prints usage and
+    * exits 2. */
   private[cli] final class UsageError(msg: String) extends IllegalArgumentException(msg)
+
+  /** `validate` found failed error-severity checks, after printing them
+    * and the summary line. `main` exits 1. */
+  private[cli] final class ValidationFailed(msg: String) extends RuntimeException(msg)
+
+  /** Writes `df` as parquet at `path` and returns its row count, observed
+    * on the write itself (no counting job). */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(path)
+    rows.get("n").asInstanceOf[Long]
+  }
 
   /** The `n` positional arguments after the command name; fewer is a
     * [[UsageError]] naming the command's usage line. */

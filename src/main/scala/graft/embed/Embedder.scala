@@ -167,10 +167,15 @@ object Embedder {
   }
 
   /** S12 storage layout: parquet per artifact type + a small JSON
-    * metadata sidecar (model, dim, counts). */
+    * metadata sidecar (model, dim, counts). The sidecar is aggregated
+    * from the WRITTEN rows, read back under the frame's own schema: the
+    * frame itself runs once, so the encoder behind an [[embed]] frame
+    * sees each text once. */
   def store(embeddings: DataFrame, outDir: String): Unit = {
-    embeddings.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    val meta = embeddings
+    val spark = embeddings.sparkSession
+    val data = s"$outDir/embeddings.parquet"
+    embeddings.write.mode("overwrite").parquet(data)
+    val meta = spark.read.schema(embeddings.schema).parquet(data)
       .groupBy("artifact_type", "model_name", "model_version")
       .agg(count(lit(1)).as("n"), max(size(col("embedding"))).as("dim"))
       .collect()
@@ -178,7 +183,7 @@ object Embedder {
         "model_version" -> Option(r.getString(2)), "count" -> r.getLong(3),
         "dim" -> r.getInt(4)))
     val path = new org.apache.hadoop.fs.Path(s"$outDir/metadata.json")
-    val fs = path.getFileSystem(embeddings.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     Json.write(fs.create(path, true), meta.toSeq)
   }
 }

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -97,21 +97,43 @@ object EmbeddingSanity {
         abs(col("q_start_time") - col("n_start_time")) <= toleranceS, 1).otherwise(0))
       / count(lit(1))).as("adjacency_bias_pct"))
 
-  /** V10: corr(query segment duration, mean neighbor similarity) — a
-    * strong correlation means the embedding encodes length, not meaning
-    * (FR-27; embedding.py length-bias check). */
-  def lengthBiasCorr(neigh: DataFrame): DataFrame =
-    neigh
+  /** Leakage, adjacency and length bias of a neighbor frame. */
+  final case class NeighborStats(sameSpeakerPct: Double, sameEpisodePct: Double,
+      adjacencyBiasPct: Double, lengthBiasCorr: Option[Double])
+
+  /** V8/V9 leakage (% of neighbors sharing the query's speaker /
+    * episode), V13 adjacency ([[adjacencyBiasPct]]'s expression) and V10
+    * length bias — corr(query segment duration, mean neighbor
+    * similarity); a strong correlation means the embedding encodes
+    * length, not meaning (FR-27; embedding.py length-bias check) — from
+    * ONE aggregation: per query, the neighbor counts and mean
+    * similarity; then the corpus sums and the correlation. None for an
+    * empty neighbor frame. */
+  def neighborStats(neigh: DataFrame, toleranceS: Double = 5.0): Option[NeighborStats] = {
+    def share(c: String): Column = (lit(100.0) * sum(col(c)) / sum(col("_n"))).as(c)
+    val sameEpisode = col("q_episode_id") === col("n_episode_id")
+    val r = neigh
       .groupBy(col("query_id"), (col("q_end_time") - col("q_start_time")).as("dur"))
-      .agg(avg(col("sim")).as("mean_sim"))
-      // corr() spelled out so the zero-variance case (all sampled segments
-      // the same length) yields NULL instead of an ANSI divide-by-zero
-      .agg(
+      .agg(avg(col("sim")).as("mean_sim"), count(lit(1)).as("_n"),
+        sum(when(col("q_speaker") === col("n_speaker"), 1).otherwise(0)).as("spk"),
+        sum(when(sameEpisode, 1).otherwise(0)).as("ep"),
+        sum(when(sameEpisode &&
+          abs(col("q_start_time") - col("n_start_time")) <= toleranceS, 1).otherwise(0)).as("adj"))
+      .agg(coalesce(sum(col("_n")), lit(0L)).as("_n"), share("spk"), share("ep"), share("adj"),
+        // corr() spelled out so the zero-variance case (all sampled
+        // segments the same length) yields NULL instead of an ANSI
+        // divide-by-zero
         covar_samp(col("dur"), col("mean_sim")).as("cv"),
         stddev_samp(col("dur")).as("sd_d"),
         stddev_samp(col("mean_sim")).as("sd_s"))
-      .select(round(when(col("sd_d") > 0 && col("sd_s") > 0,
-        col("cv") / (col("sd_d") * col("sd_s"))), 6).as("length_bias_corr"))
+      .select(col("_n"), col("spk"), col("ep"), col("adj"),
+        round(when(col("sd_d") > 0 && col("sd_s") > 0,
+          col("cv") / (col("sd_d") * col("sd_s"))), 6))
+      .first()
+    if (r.getLong(0) == 0) None
+    else Some(NeighborStats(r.getDouble(1), r.getDouble(2), r.getDouble(3),
+      Option(r.getAs[java.lang.Double](4)).map(_.doubleValue)))
+  }
 
   /** V14: neighbor coherence — per query, the share of its neighbors'
     * top term; corpus-level assessment by thresholds (embedding.py:475-696). */

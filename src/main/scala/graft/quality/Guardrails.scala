@@ -1,7 +1,9 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+
+import graft.expressions.TopKMin
 
 /** F5 duration guardrails + F12 check routing.
   *
@@ -18,20 +20,35 @@ object Guardrails {
   val SpanMaxDuration = 240.0 // materialize.py guardrail defaults
   val BeatMaxDuration = 360.0
 
-  final case class GuardrailResult(kept: DataFrame, dropped: DataFrame, topOffenders: Seq[(String, Double)])
+  /** `kept` and `dropped` split `segments` at the ceiling. */
+  final case class GuardrailResult(kept: DataFrame, dropped: DataFrame,
+      private val keptObserved: Observation => DataFrame) {
+    /** Writes `kept` as parquet at `path` (overwriting) and returns the
+      * kept-row count and the top-5 dropped (id, duration), longest
+      * first. Both are observed on the write itself, so they cost no job
+      * and no second pass over the segments. */
+    def writeKept(path: String): (Long, Seq[(String, Double)]) = {
+      val observed = Observation()
+      keptObserved(observed).write.mode("overwrite").parquet(path)
+      (observed.get("kept").asInstanceOf[Long],
+        observed.get("top").asInstanceOf[Seq[Row]].map(r => (r.getString(2), -r.getDouble(1))))
+    }
+  }
 
   /** Split at the ceiling; capture the top-5 dropped by duration
     * (materialize.py logs exactly these). No caching: the split is a
-    * pushed-down filter, so `kept`/`dropped` each cost one pruned scan —
-    * cheaper than pinning the whole table in executor storage for the
-    * session's lifetime. */
+    * pushed-down filter, so `kept`/`dropped` each cost one pruned scan,
+    * and the offenders ride on `kept`'s write in a bounded top-k
+    * aggregate. The top-k key orders duration descending (NaN first,
+    * like a descending sort), then id. */
   def apply(segments: DataFrame, idCol: String, maxDuration: Double): GuardrailResult = {
-    val kept = segments.filter(col("duration") <= maxDuration)
-    val dropped = segments.filter(col("duration") > maxDuration)
-    val top = dropped.select(col(idCol), col("duration"))
-      .orderBy(col("duration").desc, col(idCol)).limit(5)
-      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    GuardrailResult(kept, dropped, top)
+    val d = col("duration")
+    val key = struct(when(isnan(d), 0).otherwise(1), -d, col(idCol))
+    GuardrailResult(segments.filter(d <= maxDuration), segments.filter(d > maxDuration),
+      observed => segments
+        .observe(observed, count(when(d <= maxDuration, true)).as("kept"),
+          TopKMin.topkMin(when(d > maxDuration, key), 5).as("top"))
+        .filter(d <= maxDuration))
   }
 
   // ---- F12: check routing -------------------------------------------

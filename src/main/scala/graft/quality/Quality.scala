@@ -1,7 +1,8 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
@@ -11,10 +12,10 @@ import graft.operators.{Dedup, Intervals, Stats}
   * RAG gating (reference: src/lakehouse/quality/assessor.py:467-843,
   * the metrics modules, thresholds.py:29-188).
   *
-  * Each category is a handful of Spark aggregation/window jobs over
-  * shared cached inputs; metric values are collected (they're tiny) and
-  * threshold evaluation + RAG stay driver-side, exactly like the
-  * reference's `ThresholdViolation` flow.
+  * Each category is one aggregation or window pass over shared cached
+  * inputs; metric values are collected (they're tiny) and threshold
+  * evaluation + RAG stay driver-side, exactly like the reference's
+  * `ThresholdViolation` flow.
   */
 object Quality {
 
@@ -90,7 +91,20 @@ object Quality {
         * bench-level regression in the composite number is localizable to
         * the category that moved (r6 postmortem: the one-number phase hid
         * a 2.8× swing). */
-      timings: Map[String, Double] = Map.empty)
+      timings: Map[String, Double] = Map.empty,
+      /** What the report shows beyond the metrics, computed by the same
+        * passes; None for a hand-built assessment. */
+      detail: Option[Detail] = None)
+
+  /** Row counts, the A6 duration histograms (bin id → rows, empty bins
+    * absent) and the per-episode coverage rows ([[EpisodeCoverageColumns]],
+    * in the episodes frame's order) of one [[assess]] run, already on
+    * the driver. */
+  final case class Detail(episodes: Long, spans: Long, beats: Long,
+      spanHistogram: Map[Int, Long], beatHistogram: Map[Int, Long],
+      episodeCoverage: Seq[Row])
+
+  val EpisodeCoverageColumns = Seq("episode_id", "episode_duration", "union_s", "coverage_pct")
 
   // ---- Category A: coverage (coverage.py:19-279) --------------------
 
@@ -104,51 +118,69 @@ object Quality {
       .join(episodes, "episode_id")
       .withColumn("coverage_pct", lit(100.0) * col("union_s") / col("episode_duration"))
 
-  /** A9 gaps between consecutive segments per episode. */
-  def gapMetrics(segments: DataFrame): DataFrame =
-    Intervals.withGapFromPrev(
-        segments.select(col("episode_id"), col("start_time"), col("end_time")),
-        Seq("episode_id"), "start_time", "end_time")
+  /** One segment table's silence and overlap seconds (summed per
+    * episode, then over episodes) and its timestamp regressions (rows). */
+  final case class Gaps(gapS: Double, overlapS: Double, regressions: Long)
+
+  /** A9 gaps and A10 timestamp regressions of several segment tables
+    * from ONE window pass: per table and episode, in (start, end) order,
+    * `_gap` = start − previous end. A positive gap is silence, a
+    * negative one an overlap, and a negative gap is exactly a regression
+    * (previous end > next start). One result per table, in order. */
+  def gaps(tables: Seq[DataFrame]): Seq[Gaps] = {
+    val segments = tables.zipWithIndex.map { case (t, i) =>
+      t.select(lit(i).as("_t"), col("episode_id"), col("start_time"), col("end_time"))
+    }.reduce(_.unionByName(_))
+    val byTable = Intervals.withGapFromPrev(segments, Seq("_t", "episode_id"),
+        "start_time", "end_time")
       .filter(col("_gap").isNotNull)
-      .groupBy("episode_id")
+      .groupBy("_t", "episode_id")
       .agg(
         sum(when(col("_gap") > 0, col("_gap")).otherwise(0.0)).as("total_gap_s"),
         sum(when(col("_gap") < 0, -col("_gap")).otherwise(0.0)).as("total_overlap_s"),
-        max(col("_gap")).as("max_gap_s"))
+        count(when(col("_gap") < 0, 1)).as("regressions"))
+      .groupBy("_t")
+      .agg(
+        sum(col("total_gap_s")).as("gap_s"),
+        sum(col("total_overlap_s")).as("overlap_s"),
+        sum(col("regressions")).as("regressions"))
+      .collect().map(r => r.getInt(0) -> Gaps(r.getDouble(1), r.getDouble(2), r.getLong(3)))
+      .toMap
+    tables.indices.map(byTable.getOrElse(_, Gaps(0.0, 0.0, 0L)))
+  }
 
   // ---- Category B: distribution (distribution.py) -------------------
-
-  /** A5: % within [min,max] — forced to sum to 100.00 like the
-    * reference (distribution.py:111-215). */
-  def lengthCompliance(segments: DataFrame, minLen: Double, maxLen: Double): DataFrame =
-    segments.agg(
-      count(lit(1)).as("n"),
-      round(lit(100.0) * sum(when(col("duration") >= minLen && col("duration") <= maxLen, 1)
-        .otherwise(0)) / count(lit(1)), 2).as("within_pct"),
-      round(lit(100.0) * sum(when(col("duration") < minLen, 1).otherwise(0)) / count(lit(1)), 2)
-        .as("too_short_pct"),
-      round(lit(100.0) * sum(when(col("duration") > maxLen, 1).otherwise(0)) / count(lit(1)), 2)
-        .as("too_long_pct"))
 
   /** A6 fixed-edge histograms (span edges distribution.py:230; beat :231). */
   val SpanHistEdges = Seq(0.0, 20.0, 40.0, 60.0, 90.0, 120.0, 180.0)
   val BeatHistEdges = Seq(0.0, 60.0, 90.0, 120.0, 150.0, 180.0, 240.0)
 
-  def durationHistogram(segments: DataFrame, edges: Seq[Double]): DataFrame =
-    Stats.histogram(segments, col("duration"), edges).orderBy("bin_id")
+  /** One segment table's single-row distribution metrics. */
+  final case class Distribution(rows: Long, withinPct: Double, nonPositive: Long,
+      histogram: Map[Int, Long])
+
+  /** A5 + A6 in ONE aggregation: rows; % within [minLen, maxLen], forced
+    * to two decimals like the reference (distribution.py:111-215); rows
+    * with duration ≤ 0; and the fixed-edge histogram over `edges` (bin id
+    * as [[Stats.binIndex]] → rows, empty bins absent). */
+  def distribution(segments: DataFrame, minLen: Double, maxLen: Double,
+      edges: Seq[Double]): Distribution = {
+    val d = col("duration")
+    val bin = Stats.binIndex(d, edges)
+    val bins = -1 until edges.size
+    val r = segments.agg(
+      count(lit(1)).as("n"),
+      (Seq(
+        round(lit(100.0) * sum(when(d >= minLen && d <= maxLen, 1).otherwise(0))
+          / count(lit(1)), 2).as("within_pct"),
+        sum(when(d <= 0, 1L).otherwise(0L)).as("nonpositive")) ++
+        bins.map(b => count(when(bin === b, 1)).as(s"bin_$b"))): _*).first()
+    Distribution(r.getAs[Long]("n"), r.getAs[Double]("within_pct"),
+      r.getAs[Long]("nonpositive"),
+      bins.map(b => b -> r.getAs[Long](s"bin_$b")).filter(_._2 > 0).toMap)
+  }
 
   // ---- Category C: integrity (integrity.py) -------------------------
-
-  /** A10 timestamp monotonicity: prev end > next start, per episode
-    * (and per episode+speaker when `bySpeaker`). */
-  def timestampRegressions(segments: DataFrame, bySpeaker: Boolean = false): DataFrame = {
-    val parts = if (bySpeaker) Seq("episode_id", "speaker") else Seq("episode_id")
-    val w = Window.partitionBy(parts.map(col): _*)
-      .orderBy(col("start_time"), col("end_time"))
-    segments
-      .withColumn("_prev_end", lag(col("end_time"), 1).over(w))
-      .filter(col("_prev_end").isNotNull && col("_prev_end") > col("start_time"))
-  }
 
   /** A12 exact duplicates: normalized text + 5-min bin composite key
     * (integrity.py:379-549); returns (dup_groups, dup_rows, pct). */
@@ -211,15 +243,26 @@ object Quality {
   /** Full assessment over spans/beats (+ optional embeddings for the
     * category-F checks).
     *
-    * Scale shape: both inputs are CACHED for the duration (the reference
-    * loads each table once, assessor.py:260-385 — without this every one
-    * of the ~10 metric jobs would rescan the corpus from parquet), the
-    * single-row span metrics (compliance + integrity counters) are FUSED
-    * into one aggregation job, and all embedding checks share one sampled
-    * k-NN job. Unpersist happens before returning. */
+    * Scale shape: every category is one aggregation or window pass.
+    * Spans are CACHED for the duration (the reference loads each table
+    * once, assessor.py:260-385); the cache is filled by their first
+    * pass, one aggregation for the row count, compliance, non-positive
+    * durations and duration histogram. Beats take two passes, that
+    * aggregation and the ordering window, so they stay uncached. The
+    * episodes frame (one row per episode) is collected once: its count
+    * and total duration are summed on the driver, and the coverage join
+    * reads the local copy. The remaining categories then run
+    * concurrently: ONE window pass over spans and beats together for
+    * gaps, overlaps and regressions, the coverage union (its
+    * per-episode rows collected once and averaged on the driver), exact
+    * and near duplicates, and the embedding checks, which share one
+    * sampled k-NN frame and one aggregation over it. The counts,
+    * histograms and coverage rows come back in [[Assessment.detail]] for
+    * the report. The cache is released before returning. */
   def assess(spans: DataFrame, beats: DataFrame, episodes: DataFrame,
       t: Thresholds = Thresholds(),
       embeddings: Option[DataFrame] = None): Assessment = {
+    val spark = spans.sparkSession
     val m = scala.collection.mutable.Map[String, Double]()
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     def timed[A](name: String)(body: => A): A = {
@@ -229,22 +272,31 @@ object Quality {
       timings.synchronized { timings(name) = (System.nanoTime() - t0) / 1e9 }
       r
     }
+    // the episodes frame is derived once: its count, total duration and
+    // row order come from these rows, and the coverage join reads them
+    val epRows = episodes.collect()
+    val ep = spark.createDataFrame(epRows.toSeq.asJava, episodes.schema)
+    val epDur = epRows.foldLeft(0.0)((s, r) => s + r.getAs[Double]("episode_duration"))
     val sp = spans.cache()
-    val bt = beats.cache()
     try {
-      // The seven categories are INDEPENDENT jobs over the same two
-      // cached inputs — run them from a small thread pool so the next
+      // The spans' first pass fills their cache, sequentially, BEFORE the
+      // fan-out so the concurrent first actions don't race to compute the
+      // same cache blocks.
+      val spanDist = timed("distribution") {
+        distribution(sp, t.spanLengthMin, t.spanLengthMax, SpanHistEdges) }
+      val beatDist = timed("beat_distribution") {
+        distribution(beats, t.beatLengthMin, t.beatLengthMax, BeatHistEdges) }
+
+      // The other categories are INDEPENDENT jobs over the cached spans
+      // — run them from a small thread pool so the next
       // category's tasks back-fill executors freed by the current one's
       // stragglers (optimization guide §2.6: actions are only sequential
       // because driver code calls them sequentially). Each category's
       // own wall time is still recorded (now overlapping, so the
       // category map sums to MORE than the assessment wall — that is the
-      // point). The caches are populated once, sequentially, BEFORE the
-      // fan-out so the concurrent first actions don't race to compute
-      // the same cache blocks. Parallelism 4: enough to overlap the
-      // long categories (embedding/near_dup/coverage), not so many that
-      // they fight for executor cores mid-stage.
-      sp.count(); bt.count()
+      // point). Parallelism 3: enough to overlap the long categories
+      // (embedding/near_dup/coverage), not so many that they fight for
+      // executor cores mid-stage.
       import scala.concurrent.{Await, Future, ExecutionContext}
       import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
@@ -263,31 +315,8 @@ object Quality {
       // checks, not NPE on null aggregates or record bogus 0.0 metrics.
       val embF = timedF("embedding") { embeddings.flatMap { e =>
         val neigh = EmbeddingSanity.sampledNeighbors(
-          sp, e, "span_id", t.neighborK, t.neighborSampleSize).cache()
-        try {
-          if (neigh.isEmpty) None
-          else {
-            // leakage (V8/V9: % of neighbors sharing the query's speaker
-            // / episode) + adjacency FUSED into one aggregation job over
-            // the checkpointed neighbor frame (r16): adjacency is the
-            // same expression as EmbeddingSanity.adjacencyBiasPct, one
-            // job fewer of fixed scheduling latency
-            val leak = neigh.agg(
-              (lit(100.0) * sum(when(col("q_speaker") === col("n_speaker"), 1).otherwise(0))
-                / count(lit(1))).as("same_speaker_pct"),
-              (lit(100.0) * sum(when(col("q_episode_id") === col("n_episode_id"), 1).otherwise(0))
-                / count(lit(1))).as("same_episode_pct"),
-              (lit(100.0) * sum(when(
-                  col("q_episode_id") === col("n_episode_id") &&
-                  abs(col("q_start_time") - col("n_start_time")) <= t.adjacencyToleranceSeconds,
-                  1).otherwise(0))
-                / count(lit(1))).as("adjacency_bias_pct")).first()
-            val bias = Option(EmbeddingSanity.lengthBiasCorr(neigh)
-              .first().getAs[java.lang.Double]("length_bias_corr")).map(_.doubleValue())
-            Some((leak.getAs[Double]("same_speaker_pct"), leak.getAs[Double]("same_episode_pct"),
-              leak.getAs[Double]("adjacency_bias_pct"), bias))
-          }
-        } finally neigh.unpersist()
+          sp, e, "span_id", t.neighborK, t.neighborSampleSize)
+        EmbeddingSanity.neighborStats(neigh, t.adjacencyToleranceSeconds)
       } }
 
       // near-duplicates via MinHash-LSH at the reference's 0.95 bar;
@@ -297,55 +326,39 @@ object Quality {
           .select(explode(array(col("id_a"), col("id_b"))).as("id"))
           .distinct().count() }
 
-      val covF = timedF("coverage") { coverage(sp, episodes)
-        .agg(avg(col("coverage_pct"))).first().getDouble(0) }
+      // per-episode coverage rows, collected once: the report's
+      // episodes.csv and the corpus mean (Spark's avg arithmetic: a
+      // running sum over the rows in order, then one division)
+      val covF = timedF("coverage") {
+        coverage(sp, ep).select(EpisodeCoverageColumns.map(col): _*).collect() }
 
-      // corpus-level gap/overlap % of total episode time
-      val gapsF = timedF("gaps") {
-        val d = episodes.agg(coalesce(sum(col("episode_duration")), lit(0.0)))
-          .first().getDouble(0)
-        val g = gapMetrics(sp).agg(
-          coalesce(sum(col("total_gap_s")), lit(0.0)).as("gap_s"),
-          coalesce(sum(col("total_overlap_s")), lit(0.0)).as("overlap_s")).first()
-        (d, g)
-      }
+      // corpus-level gap/overlap % of total episode time, and the
+      // regressions, from one window pass over both tables
+      val gapsF = timedF("gaps") { gaps(Seq(sp, beats)) }
 
       // integrity per level, NOT concatenated (assessor.py:617-679 bug-fix note)
-      val integrityF = timedF("integrity") {
-        (timestampRegressions(sp).count(),
-          timestampRegressions(bt).count(),
-          exactDuplicates(sp).first().getAs[Double]("dup_pct"))
-      }
+      val spanDupF = timedF("integrity") {
+        exactDuplicates(sp).first().getAs[Double]("dup_pct") }
 
-      // one fused aggregation job for every single-row span metric
-      val spanRowF = timedF("distribution") { sp.agg(
-        count(lit(1)).as("n"),
-        round(lit(100.0) * sum(when(
-          col("duration") >= t.spanLengthMin && col("duration") <= t.spanLengthMax, 1)
-          .otherwise(0)) / count(lit(1)), 2).as("within_pct"),
-        sum(when(col("duration") <= 0, 1L).otherwise(0L)).as("nonpositive_durations"))
-        .first() }
-
-      val beatComplianceF = timedF("beat_distribution") {
-        lengthCompliance(bt, t.beatLengthMin, t.beatLengthMax)
-          .first().getAs[Double]("within_pct") }
-
-      def await[A](f: Future[A]): A =
-        try Await.result(f, Duration.Inf)
-        finally ()
-      val (cov, (epDur, gaps), spanRow, beatCompliance,
-          (spanRegr, beatRegr, spanDup), nearDupIds, emb) =
-        try (await(covF), await(gapsF), await(spanRowF), await(beatComplianceF),
-          await(integrityF), await(nearDupIdsF), await(embF))
+      def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+      val (covRows, Seq(spanGaps, beatGaps), spanDup, nearDupIds, emb) =
+        try (await(covF), await(gapsF), await(spanDupF), await(nearDupIdsF), await(embF))
         finally pool.shutdown()
+      // the mean in the rows' join order; the report lists them in the
+      // episodes frame's order
+      val covered = covRows.flatMap(r => Option(r.getAs[java.lang.Double]("coverage_pct")))
+      val cov = covered.foldLeft(0.0)(_ + _.doubleValue) / covered.length
       m("coverage_pct") = cov
-      val gapPct = if (epDur > 0) 100.0 * gaps.getAs[Double]("gap_s") / epDur else 0.0
-      val overlapPct = if (epDur > 0) 100.0 * gaps.getAs[Double]("overlap_s") / epDur else 0.0
+      val gapPct = if (epDur > 0) 100.0 * spanGaps.gapS / epDur else 0.0
+      val overlapPct = if (epDur > 0) 100.0 * spanGaps.overlapS / epDur else 0.0
       m("gap_pct") = gapPct
       m("overlap_pct") = overlapPct
-      val nSpans = spanRow.getAs[Long]("n")
-      val spanCompliance = spanRow.getAs[Double]("within_pct")
-      val negDur = spanRow.getAs[Long]("nonpositive_durations")
+      val nSpans = spanDist.rows
+      val spanCompliance = spanDist.withinPct
+      val negDur = spanDist.nonPositive
+      val beatCompliance = beatDist.withinPct
+      val spanRegr = spanGaps.regressions
+      val beatRegr = beatGaps.regressions
       m("span_compliance_pct") = spanCompliance
       m("nonpositive_durations") = negDur.toDouble
       m("beat_compliance_pct") = beatCompliance
@@ -354,12 +367,16 @@ object Quality {
       m("span_dup_pct") = spanDup
       val nearDupPct = if (nSpans > 0) 100.0 * nearDupIds / nSpans else 0.0
       m("near_dup_pct") = nearDupPct
-      emb.foreach { case (spk, ep, adj, bias) =>
-        m("same_speaker_pct") = spk
-        m("same_episode_pct") = ep
-        m("adjacency_bias_pct") = adj
-        bias.foreach(b => m("length_bias_corr") = b)
+      emb.foreach { e =>
+        m("same_speaker_pct") = e.sameSpeakerPct
+        m("same_episode_pct") = e.sameEpisodePct
+        m("adjacency_bias_pct") = e.adjacencyBiasPct
+        e.lengthBiasCorr.foreach(b => m("length_bias_corr") = b)
       }
+      val epOrder = epRows.map(_.getAs[Any]("episode_id")).zipWithIndex.toMap
+      val detail = Detail(epRows.length.toLong, nSpans, beatDist.rows,
+        spanDist.histogram, beatDist.histogram,
+        covRows.sortBy(r => epOrder.getOrElse(r.getAs[Any]("episode_id"), -1)).toSeq)
 
       val violations = Seq.newBuilder[Violation]
       def check(cond: Boolean, name: String, expected: String, actual: String,
@@ -385,14 +402,15 @@ object Quality {
         s"<= ${t.exactDuplicateMaxPercent}", f"$spanDup%.2f")
       check(nearDupPct <= t.nearDuplicateMaxPercent, "near_duplicate_pct",
         s"<= ${t.nearDuplicateMaxPercent}", f"$nearDupPct%.2f", "warning")
-      emb.foreach { case (spk, ep, adj, bias) =>
+      emb.foreach { e =>
+        val (spk, ep, adj) = (e.sameSpeakerPct, e.sameEpisodePct, e.adjacencyBiasPct)
         check(spk <= t.sameSpeakerNeighborMaxPercent, "same_speaker_neighbor_pct",
           s"<= ${t.sameSpeakerNeighborMaxPercent}", f"$spk%.2f", "warning")
         check(ep <= t.sameEpisodeNeighborMaxPercent, "same_episode_neighbor_pct",
           s"<= ${t.sameEpisodeNeighborMaxPercent}", f"$ep%.2f", "warning")
         check(adj <= t.adjacencyBiasMaxPercent, "adjacency_bias_pct",
           s"<= ${t.adjacencyBiasMaxPercent}", f"$adj%.2f", "warning")
-        bias.foreach(b =>
+        e.lengthBiasCorr.foreach(b =>
           check(math.abs(b) <= t.lengthBiasCorrelationMax, "length_bias_correlation",
             s"|corr| <= ${t.lengthBiasCorrelationMax}", f"$b%.4f", "warning"))
       }
@@ -405,10 +423,9 @@ object Quality {
         if (vs.exists(_.severity == "error") || nWarnings > 2) "RED"
         else if (nWarnings > 0) "AMBER"
         else "GREEN"
-      Assessment(m.toMap, vs, rag, timings.toMap)
+      Assessment(m.toMap, vs, rag, timings.toMap, Some(detail))
     } finally {
       sp.unpersist()
-      bt.unpersist()
     }
   }
 

@@ -2,7 +2,7 @@ package graft.quality
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 
 import graft.core.Json
 import graft.quality.Quality.{Assessment, Thresholds, Violation}
@@ -53,13 +53,11 @@ object Reporter {
     sb.toString
   }
 
-  /** FR-37 ASCII histogram from a histogram frame
-    * ([[graft.operators.Stats.histogram]] output: bin_id, n) with the
-    * edges the frame was built from. */
-  def asciiHistogram(hist: DataFrame, edges: Seq[Double], title: String,
+  /** FR-37 ASCII histogram from bin counts (bin id as
+    * [[graft.operators.Stats.binIndex]] → rows) with the edges they were
+    * binned by. */
+  def asciiHistogram(counts: Map[Int, Long], edges: Seq[Double], title: String,
       maxWidth: Int = 60): String = {
-    val counts = hist.select("bin_id", "n").collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (counts.isEmpty) return s"**$title**\n\n(No data available)\n"
     val maxCount = math.max(counts.values.max, 1L)
     val sb = new StringBuilder
@@ -127,7 +125,8 @@ object Reporter {
   /** Full markdown report: exec summary → metrics → histograms → findings
     * → go/no-go (reporter.py's section order). */
   def renderFull(a: Assessment, counts: DatasetCounts, timestamp: String,
-      spanHist: Option[DataFrame] = None, beatHist: Option[DataFrame] = None): String = {
+      spanHist: Option[Map[Int, Long]] = None,
+      beatHist: Option[Map[Int, Long]] = None): String = {
     val sb = new StringBuilder
     sb.append("# Quality Assessment Report\n\n")
     sb.append(executiveSummary(a, counts, timestamp)).append("\n")
@@ -176,16 +175,13 @@ object Reporter {
         Seq(v.name, v.expected, v.actual, v.severity).map(csvField).mkString(",")))
       .mkString("", "\n", "\n")
 
-  /** A small DataFrame as CSV — header + escaped rows (per-episode
-    * metrics export; callers pass an already-aggregated frame). */
-  def frameCsv(df: DataFrame): String = {
-    val cols = df.columns
-    val rows = df.collect().map { r: Row =>
-      cols.indices.map(i => csvField(Option(r.get(i)).map(_.toString).getOrElse("")))
+  /** Small driver-side rows as CSV — header + escaped rows (per-episode
+    * metrics export). */
+  def frameCsv(columns: Seq[String], rows: Seq[Row]): String =
+    (columns.mkString(",") +: rows.map { r =>
+      columns.indices.map(i => csvField(Option(r.get(i)).map(_.toString).getOrElse("")))
         .mkString(",")
-    }
-    (cols.mkString(",") +: rows).mkString("", "\n", "\n")
-  }
+    }).mkString("", "\n", "\n")
 
   /** Global metrics JSON: metadata, dataset summary, flat metrics map,
     * violations list (FR-4 export shape). A non-finite metric is null. */
@@ -205,8 +201,8 @@ object Reporter {
 
   /** Write the md + json + csv report set under `dir`. */
   def writeAll(a: Assessment, counts: DatasetCounts, timestamp: String, dir: String,
-      spanHist: Option[DataFrame] = None, beatHist: Option[DataFrame] = None,
-      episodeFrame: Option[DataFrame] = None): Seq[String] = {
+      spanHist: Option[Map[Int, Long]] = None, beatHist: Option[Map[Int, Long]] = None,
+      episodeRows: Option[Seq[Row]] = None): Seq[String] = {
     val d = new java.io.File(dir)
     d.mkdirs()
     def write(name: String, content: String): String = {
@@ -218,6 +214,7 @@ object Reporter {
       write("report.md", renderFull(a, counts, timestamp, spanHist, beatHist)),
       write("global_metrics.json", metricsJson(a, counts, timestamp)),
       write("violations.csv", violationsCsv(a))) ++
-      episodeFrame.map(f => write("episodes.csv", frameCsv(f))).toSeq
+      episodeRows.map(rs =>
+        write("episodes.csv", frameCsv(Quality.EpisodeCoverageColumns, rs))).toSeq
   }
 }

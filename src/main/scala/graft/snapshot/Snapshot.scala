@@ -1,6 +1,7 @@
 package graft.snapshot
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -34,19 +35,23 @@ object Snapshot {
   final case class Manifest(version: String, createdUtc: String,
       files: Seq[FileEntry], qa: QaStatus = UnknownQa)
 
-  /** sha256 + size for every file under a directory (distributed), plus
-    * footer row counts for parquet parts. `withRowCounts = false` skips
-    * the footer reads — [[validate]] only compares hashes. */
+  /** sha256 + size for every file under a directory, plus footer row
+    * counts for parquet parts, all in ONE distributed job over the bytes
+    * it already reads to hash. `withRowCounts = false` skips the footer
+    * parse — [[validate]] only compares hashes. */
   def checksumDirectory(spark: SparkSession, dir: String,
       withRowCounts: Boolean = true): Seq[FileEntry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val rowCount = udf((path: String, content: Array[Byte]) =>
+      footerRowCount(path, content).map(Long.box).orNull)
+    val rows =
+      if (withRowCounts) rowCount(col("path"), col("content")) else lit(null).cast("long")
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .select(col("path"), col("length"), sha2(col("content"), 256).as("sha256"))
+      .select(col("path"), col("length"), sha2(col("content"), 256).as("sha256"), rows)
       .collect()
       .map(r => FileEntry(r.getString(0), r.getLong(1), r.getString(2),
-        if (withRowCounts) parquetRowCount(conf, r.getString(0)) else None))
+        Option(r.getAs[java.lang.Long](3)).map(_.longValue)))
       .sortBy(_.path).toSeq
   }
 
@@ -61,6 +66,23 @@ object Snapshot {
         .fromPath(new org.apache.hadoop.fs.Path(path), conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try Some(reader.getRecordCount) finally reader.close()
+    } catch { case _: Exception => None }
+
+  /** [[parquetRowCount]] from a file's bytes already in hand: the footer's
+    * row-group counts summed, as `ParquetFileReader.getRecordCount`
+    * does; no data page is decoded. */
+  def footerRowCount(path: String, content: Array[Byte]): Option[Long] =
+    if (!path.endsWith(".parquet")) None
+    else try {
+      val n = content.length
+      val magic = new String(content, n - 4, 4, java.nio.charset.StandardCharsets.US_ASCII)
+      val footerLen = java.nio.ByteBuffer.wrap(content, n - 8, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      val start = n - 8 - footerLen
+      if (magic != "PAR1" || footerLen <= 0 || start < 4) None
+      else Some(org.apache.parquet.format.Util
+        .readFileMetaData(new java.io.ByteArrayInputStream(content, start, footerLen))
+        .getRow_groups.asScala.map(_.getNum_rows).sum)
     } catch { case _: Exception => None }
 
   /** Parse a quality report (Reporter.renderFull / the reference's

@@ -1,6 +1,10 @@
 package graft.validation
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,17 +19,35 @@ import org.apache.spark.sql.types._
   *   - ID nulls, PK uniqueness, FK cardinality    (checks.py:401-479)
   *   - referential integrity, incl. DEEP child-ID (checks.py:482-551 —
   *     the reference only null-checks the array column; here orphans are
-  *     found for real via explode + LEFT ANTI join against the child table)
+  *     found for real against the child table's keys)
   *   - numeric NaN / Inf                          (checks.py:554-607)
   *
   * Scale design: the reference runs one pandas pass per check (~20 scans
-  * of each table). Here every per-row counter — null IDs, PK duplicate
-  * rows, FK cardinality, NaN/Inf, negative/inverted timestamps, empty
-  * text — folds into ONE aggregation job per table (duplicate rows via
-  * count − count_distinct, both distributed hash aggregates), and only
-  * the referential checks add joins, each an equi-shuffle or broadcast
-  * on the key being checked. Validating a 100 TB table costs one scan
-  * plus one join per FK/child-array constraint.
+  * of each table). Here the whole battery, over every table, is ONE
+  * query with two exchanges:
+  *   1. KEY ENTRIES (space, key, own, refs): one narrow select per key
+  *      space a table owns (its primary keys, the parent keys FKs point
+  *      at, the child keys ID arrays point at) and one per FK column or
+  *      exploded ID array that references a space; one
+  *      `groupBy(space, key)` over their union sums them, so only keys
+  *      shuffle, typed and without per-row payload;
+  *   2. COUNTER ROWS: one select per spec table of its per-row
+  *      indicators (null IDs, NaN/Inf, negative/inverted timestamps,
+  *      empty text, null child arrays);
+  *   3. one global aggregation over the key groups and the counter rows
+  *      yields every check's metric: PK duplicate rows are
+  *      Σ(owned − 1), orphans the references of groups nobody owns, FK
+  *      cardinality the referenced groups, counters their sums.
+  * Each select scans only the columns it reads, and all of them run as
+  * tasks of the same two stages. Per-key checks whose keys match share a
+  * group: utterances' PK and the spans' utterance_ids references are one
+  * key space, and orders' PK and lineitem's l_orderkey FK (q49) another.
+  * No count_distinct (several distinct aggregates plan an Expand(×k)
+  * that multiplies every input row) and no join. A space's references
+  * compare with its keys in the type a join would coerce both to; keys
+  * shuffle as longs when every key space is integral, else as strings
+  * (floating-point keys then compare by their string form, so 0.0 and
+  * -0.0 differ).
   *
   * Check rows come back as a DataFrame (table_name, check_name, severity,
   * passed, metric) so downstream gating/reporting is itself relational.
@@ -74,216 +96,236 @@ object Validation {
       Some(("start", "end"))
     else None
 
-  private def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+  /** One check: its metric over the grouped entries and its pass rule
+    * (`orTrue`: a null metric — an empty table's sum — passes). */
+  private final case class Check(table: String, name: String, severity: String,
+      metric: Column, passed: Column => Column, orTrue: Boolean = false)
 
-  /** All single-pass checks for a table: ONE plain aggregation job for
-    * every per-row counter, plus one per-key aggregate per PK/FK
-    * uniqueness check, unpivoted to check rows.
-    *
-    * The distinct-style counters deliberately avoid `count_distinct`:
-    * several distinct aggregates in one job make Catalyst plan an
-    * Expand(×k) that multiplies every input row before the first
-    * aggregate — at 100 TB that triples shuffle input. A groupBy(key)
-    * per check collapses duplicate keys map-side instead, and the
-    * resulting single-row frames are crossJoined (1×1 rows) back onto
-    * the main counter row. */
+  /** One key space: `owner`'s rows hold `key`, of `types` when `owner`
+    * is a given table (entries with a null key part are not owned,
+    * unless `keepNulls`). */
+  private final case class Space(owner: String, key: Seq[Column], types: Seq[DataType],
+      keepNulls: Boolean = false)
+
+  /** A reference into a key space: `table`'s non-null `column` values,
+    * or every element of an array `column`, of `dataType`, counted in ref
+    * slot `slot`. */
+  private final case class Ref(table: String, column: String, isArray: Boolean,
+      space: Int, slot: Int, dataType: DataType)
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** The check battery over `specs` (see the object doc for its shape).
+    * `enabled` is each table's routed check-family set (None = run
+    * everything); a parent or child named in a spec takes part only when
+    * it is in `tables` and is another table. */
+  private def battery(tables: Map[String, DataFrame], specs: Seq[TableSpec],
+      enabled: Map[String, Option[Set[String]]],
+      expectedSchemas: Map[String, StructType]): DataFrame = {
+    val spaces = mutable.LinkedHashMap.empty[(String, String), (Int, Space)]
+    def space(id: (String, String), make: => Space): Int =
+      spaces.getOrElseUpdate(id, (spaces.size, make))._1
+    def keySpace(owner: String, cols: Seq[String]): Int =
+      space((owner, cols.mkString(",")), Space(owner, cols.map(col),
+        tables.get(owner).toSeq.flatMap(df => cols.map(df.schema(_).dataType))))
+    val refs = mutable.ArrayBuffer.empty[Ref]
+    def ref(table: String, column: String, isArray: Boolean, sp: Int): Ref = {
+      val dt = tables(table).schema(column).dataType match {
+        case ArrayType(e, _) if isArray => e
+        case other => other
+      }
+      val r = Ref(table, column, isArray, sp, refs.count(_.space == sp), dt)
+      refs += r
+      r
+    }
+    // per spec table: its row space and per-row counter indicators
+    val counters = mutable.LinkedHashMap.empty[String, (Int, Seq[Column])]
+    val checks = mutable.ArrayBuffer.empty[Check]
+    val schemaRows = mutable.ArrayBuffer.empty[Row]
+    val sp = col("space")
+    val own = col("own")
+    def refCol(r: Ref): Column = col(s"r${r.slot}")
+
+    specs.foreach { spec =>
+      val t = spec.name
+      val df = tables(t)
+      val on: String => Boolean = f => enabled.getOrElse(t, None).forall(_.contains(f))
+      def related(n: String): Boolean = n != t && tables.contains(n)
+      val ind = mutable.ArrayBuffer.empty[Column]
+      val rowSpace = space((t, ""), Space(t, Nil, Nil))
+      def counter(name: String, severity: String, hit: Column, passed: Column => Column,
+          orTrue: Boolean = true, orZero: Boolean = false): Unit = {
+        val m = sum(when(sp === rowSpace, col(s"c${ind.size}")))
+        ind += when(hit, 1L).otherwise(0L)
+        checks += Check(t, name, severity, if (orZero) coalesce(m, lit(0L)) else m,
+          passed, orTrue)
+      }
+      val ids =
+        if (on("ids")) (idColumns(df) ++ spec.idCols.filter(df.columns.contains)).distinct
+        else Nil
+      counter("non_empty_table", "error", lit(true), _ > 0, orZero = true)
+      ids.foreach(c => counter(s"id_nulls_$c", "error", col(c).isNull, _ === 0))
+      if (on("numerics")) floatingColumns(df).foreach { c =>
+        counter(s"numeric_nans_$c", "error", isnan(col(c)), _ === 0)
+        counter(s"numeric_inf_$c", "error",
+          col(c) === Double.PositiveInfinity || col(c) === Double.NegativeInfinity, _ === 0)
+      }
+      if (on("timestamps")) {
+        timeColumns(df).foreach { c =>
+          counter(s"timestamp_nulls_$c", "error", col(c).isNull, _ === 0)
+          counter(s"timestamp_negative_$c", "error", col(c) < 0, _ === 0)
+        }
+        timePair(df).foreach { case (s, e) =>
+          counter("timestamp_monotonic", "error", col(s) > col(e), _ === 0)
+        }
+      }
+      if (on("text") && df.columns.contains("text")) {
+        counter("text_nulls", "error", col("text").isNull, _ === 0)
+        counter("text_empty", "warning", length(col("text")) === 0, _ === 0)
+      }
+      // PK duplicate rows = Σ over owned key groups of (n − 1)
+      if (on("duplicates"))
+        spec.primaryKeys.filter(_.forall(df.columns.contains)).foreach { pk =>
+          val s = keySpace(t, pk)
+          checks += Check(t, s"id_duplicates_${pk.mkString("_")}", "error",
+            coalesce(sum(when(sp === s && own > 0, own - 1)), lit(0L)), _ === 0)
+        }
+      def orphans(r: Ref): Column =
+        coalesce(sum(when(sp === r.space && own === 0, refCol(r))), lit(0L))
+      if (on("referential")) {
+        // FK cardinality (info: distinct non-null values) and, against a
+        // parent, orphan rows (row-weighted, null FKs excluded)
+        spec.foreignKeys.foreach { case (fk, parent, parentKey) =>
+          val r = ref(t, fk, isArray = false, keySpace(parent, Seq(parentKey)))
+          checks += Check(t, s"id_foreign_key_$fk", "info",
+            count(when(sp === r.space && refCol(r) > 0, 1)), _ => lit(true))
+          if (related(parent))
+            checks += Check(t, s"referential_integrity_$fk", "error", orphans(r), _ === 0)
+        }
+        // DEEP referential integrity over child-ID arrays (the reference
+        // stubs this out with a null test — checks.py:496-498): every
+        // element, nulls included, must be a child key; null arrays count
+        spec.childArrays.filter(c => related(c._2)).foreach { case (arr, child, childKey) =>
+          val r = ref(t, arr, isArray = true, keySpace(child, Seq(childKey)))
+          checks += Check(t, s"referential_orphans_$arr", "error", orphans(r), _ === 0)
+          counter(s"referential_integrity_$arr", "error", col(arr).isNull, _ === 0,
+            orTrue = false)
+        }
+      } else if (on("id_join_back"))
+        // embedding-role tables check their FK rows against the parent
+        spec.foreignKeys.filter(f => related(f._2)).foreach { case (fk, parent, parentKey) =>
+          val r = ref(t, fk, isArray = false, keySpace(parent, Seq(parentKey)))
+          checks += Check(t, s"id_join_back_$fk", "error", orphans(r), _ === 0)
+        }
+      // V16 dimension consistency, only when explicitly routed: the number
+      // of distinct embedding sizes; passes when ≤ 1
+      if (enabled.getOrElse(t, None).exists(_.contains("dim_consistency")) &&
+          df.columns.contains("embedding")) {
+        val s = space((t, "size(embedding)"),
+          Space(t, Seq(size(col("embedding"))), Seq(IntegerType), keepNulls = true))
+        checks += Check(t, "dim_consistency", "error", count(when(sp === s, 1)), _ <= 1)
+      }
+      counters(t) = (rowSpace, ind.toSeq)
+      // schema compliance is metadata: driver-side rows
+      expectedSchemas.get(t).foreach(e => schemaRows ++= schemaCheckRows(df, spec, e))
+    }
+
+    // ---- key entries (space, k0.., own, r0..): one select per owned
+    // space and per reference. A space's keys and references compare in
+    // the type a join would coerce them to (an int FK against a double
+    // key compares as double); every key column then shuffles as one
+    // type: long when all are integral, else string.
+    val keyTypes = spaces.values.collect { case (id, s) if s.key.nonEmpty =>
+      id -> (if (s.types.size > 1) s.types
+        else Seq(TypeCoercion.findWiderCommonType(s.types ++
+          refs.filter(_.space == id).map(_.dataType)).getOrElse(StringType)))
+    }.toMap
+    val keyType = if (keyTypes.values.flatten.forall(isIntegral)) LongType else StringType
+    val keyCols = (0 until (keyTypes.values.map(_.size).toSeq :+ 1).max).map(i => s"k$i")
+    val nRefs = (refs.map(_.slot + 1) :+ 0).max
+    def entries(df: DataFrame, space: Int, key: Seq[Column], ownN: Long, slot: Int): DataFrame = {
+      val k = key.zip(keyTypes(space)).map { case (c, t) => c.cast(t).cast(keyType) }
+      df.select((lit(space).as("space") +: keyCols.zipWithIndex.map { case (n, i) =>
+          k.lift(i).getOrElse(lit(null).cast(keyType)).as(n) }) ++
+        (lit(ownN).as("own") +: (0 until nRefs).map(j => lit(if (j == slot) 1L else 0L).as(s"r$j"))): _*)
+    }
+    val owned = spaces.values.toSeq.collect {
+      case (id, s) if s.key.nonEmpty && tables.contains(s.owner) =>
+        val df = tables(s.owner)
+        entries(if (s.keepNulls) df else df.filter(s.key.map(_.isNotNull).reduce(_ && _)),
+          id, s.key, 1L, -1)
+    }
+    val referenced = refs.toSeq.map { r =>
+      val df = tables(r.table)
+      // a null array holds no element; a null element is a reference
+      if (r.isArray)
+        entries(df.select(explode(col(r.column)).as("_x")), r.space, Seq(col("_x")), 0L, r.slot)
+      else entries(df.filter(col(r.column).isNotNull), r.space, Seq(col(r.column)), 0L, r.slot)
+    }
+    val groups = (owned ++ referenced).reduceOption(_.union(_)).map(
+      _.groupBy((sp +: keyCols.map(col)): _*)
+        .agg(sum(own).as("own"), (0 until nRefs).map(j => sum(col(s"r$j")).as(s"r$j")): _*)
+        .drop(keyCols: _*))
+    // ---- counter rows: each spec table's indicators, one row per row ----
+    val nCounters = (counters.values.map(_._2.size).toSeq :+ 0).max
+    val counted = counters.toSeq.map { case (t, (rowSpace, cs)) =>
+      tables(t).select(lit(rowSpace).as("space") +:
+        (0 until nCounters).map(i => cs.lift(i).getOrElse(lit(0L)).as(s"c$i")): _*)
+    }
+    val grouped = (groups.toSeq ++ counted)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val metrics = checks.zipWithIndex.map { case (c, i) => c.metric.cast("long").as(s"m$i") }
+    val rows = checks.zipWithIndex.map { case (c, i) =>
+      val m = col(s"m$i")
+      struct(lit(c.table).as("table_name"), lit(c.name).as("check_name"),
+        lit(c.severity).as("severity"),
+        (if (c.orTrue) coalesce(c.passed(m), lit(true)) else c.passed(m)).as("passed"),
+        m.as("metric"))
+    }
+    val checked = grouped.agg(metrics.head, metrics.tail.toSeq: _*)
+      .select(explode(array(rows.toSeq: _*)).as("c")).select(col("c.*"))
+    if (schemaRows.isEmpty) checked
+    else checked.unionByName(
+      tables.values.head.sparkSession.createDataFrame(schemaRows.asJava, CheckSchema))
+  }
+
+  /** The per-row counters and PK duplicate checks of one table (plus
+    * FK cardinality when referential checks are on), without any
+    * related table — [[battery]] over the table alone. */
   def counterChecks(df: DataFrame, spec: TableSpec,
-      enabled: Option[Set[String]] = None,
-      skipFkCardinality: Boolean = false): DataFrame = {
-    def on(family: String): Boolean = enabled.forall(_.contains(family))
-    val ids =
-      if (on("ids")) (idColumns(df) ++ spec.idCols.filter(df.columns.contains)).distinct
-      else Nil
-    val pkCols =
-      if (on("duplicates")) spec.primaryKeys.filter(_.forall(df.columns.contains)) else Nil
-    val floats = if (on("numerics")) floatingColumns(df) else Nil
-    val times = if (on("timestamps")) timeColumns(df) else Nil
-    val hasText = on("text") && df.columns.contains("text")
-
-    val aggs = Seq.newBuilder[Column]
-    val checks = Seq.newBuilder[(String, String, Column)] // (name, severity, passedExpr)
-    def add(name: String, severity: String, agg: Column, passed: Column): Unit = {
-      aggs += agg.cast("long").as(s"_m_$name")
-      checks += ((name, severity, passed))
-    }
-    def m(name: String): Column = col(s"_m_$name")
-
-    add("non_empty_table", "error", count(lit(1)), m("non_empty_table") > 0)
-    ids.foreach { c =>
-      add(s"id_nulls_$c", "error", cnt(col(c).isNull), m(s"id_nulls_$c") === 0)
-    }
-    floats.foreach { c =>
-      add(s"numeric_nans_$c", "error", cnt(isnan(col(c))), m(s"numeric_nans_$c") === 0)
-      add(s"numeric_inf_$c", "error",
-        cnt(col(c) === Double.PositiveInfinity || col(c) === Double.NegativeInfinity),
-        m(s"numeric_inf_$c") === 0)
-    }
-    times.foreach { c =>
-      add(s"timestamp_nulls_$c", "error", cnt(col(c).isNull), m(s"timestamp_nulls_$c") === 0)
-      add(s"timestamp_negative_$c", "error", cnt(col(c) < 0), m(s"timestamp_negative_$c") === 0)
-    }
-    if (on("timestamps")) timePair(df).foreach { case (s, e) =>
-      add("timestamp_monotonic", "error", cnt(col(s) > col(e)), m("timestamp_monotonic") === 0)
-    }
-    if (hasText) {
-      add("text_nulls", "error", cnt(col("text").isNull), m("text_nulls") === 0)
-      add("text_empty", "warning", cnt(length(col("text")) === 0), m("text_empty") === 0)
-    }
-
-    val aggList = aggs.result()
-    val agged = df.agg(aggList.head, aggList.tail: _*)
-    val rows = checks.result().map { case (name, severity, passed) =>
-      struct(
-        lit(spec.name).as("table_name"),
-        lit(name).as("check_name"),
-        lit(severity).as("severity"),
-        coalesce(passed, lit(true)).as("passed"), // empty-table aggs → null counters
-        m(name).as("metric"))
-    }
-    val mainRows = agged.select(explode(array(rows: _*)).as("c")).select(col("c.*"))
-
-    // The per-key aggregates come back as UNIONED check rows, not
-    // crossJoined 1-row frames: each crossJoin side is a separate
-    // broadcast job, so k constraints cost k+1 driver actions; a union
-    // schedules all of them inside the one job that consumes the result.
-    val extra = Seq.newBuilder[DataFrame]
-    def checkRow(frame: DataFrame, name: String, severity: String,
-        passed: Column): DataFrame =
-      frame.select(
-        lit(spec.name).as("table_name"),
-        lit(name).as("check_name"),
-        lit(severity).as("severity"),
-        passed.as("passed"),
-        col("metric"))
-
-    // PK duplicate rows = Σ over key groups of (n − 1): a two-phase
-    // hash aggregate on the key, no Expand
-    pkCols.foreach { pk =>
-      val name = s"id_duplicates_${pk.mkString("_")}"
-      extra += checkRow(
-        df.filter(pk.map(col(_).isNotNull).reduce(_ && _))
-          .groupBy(pk.map(col): _*)
-          .agg(count(lit(1)).as("_n"))
-          .agg(coalesce(sum(col("_n") - 1), lit(0L)).cast("long").as("metric")),
-        name, "error", col("metric") === 0)
-    }
-    // FK cardinality (info): count of distinct non-null values (skipped
-    // when validateTable routes the FK through the fused key-space path)
-    if (on("referential") && !skipFkCardinality) spec.foreignKeys.foreach { case (fk, _, _) =>
-      extra += checkRow(
-        df.filter(col(fk).isNotNull).select(col(fk)).distinct()
-          .agg(count(lit(1)).cast("long").as("metric")),
-        s"id_foreign_key_$fk", "info", lit(true))
-    }
-    (mainRows +: extra.result()).reduce(_.unionByName(_))
-  }
-
-  /** Fused key-space checks for one FK column — FK cardinality (info)
-    * and orphan rows (vs the parent key) from ONE `groupBy(fk)`
-    * aggregation: the naive formulation shuffles the full child table
-    * once for `count(DISTINCT fk)` and AGAIN for the row-level orphan
-    * anti-join; here the child shuffles once into fk groups, orphans fold
-    * in as a LEFT join against the DISTINCT parent keys (an unmatched
-    * group keeps its row with a null hit marker, weighted by its row
-    * count to match the row-level anti-join metric), and both metrics
-    * come out of one global aggregation. At 100 TB that halves the
-    * fact-table shuffle volume for referential checks. The grouped side
-    * is already hash-partitioned on fk, so the join re-exchanges only the
-    * parent key set (or broadcasts it, for dimension parents).
-    *
-    * PK-duplicate checks deliberately stay in their own branch
-    * ([[counterChecks]]): folding them in here (per-group countDistinct
-    * of the key remainder) was measured SLOWER end-to-end — it serializes
-    * the whole check suite behind one 4-phase distinct-aggregate chain,
-    * while separate branches execute as concurrent stages. */
-  private def fusedKeyChecks(df: DataFrame, spec: TableSpec, fk: String,
-      parent: Option[DataFrame], parentKey: String): Seq[DataFrame] = {
-    val g = df.filter(col(fk).isNotNull).groupBy(col(fk))
-      .agg(count(lit(1)).cast("long").as("_n"))
-    val joined = parent match {
-      case Some(p) =>
-        g.join(p.select(col(parentKey).as(fk)).distinct().withColumn("_hit", lit(true)),
-          Seq(fk), "left")
-      case None => g.withColumn("_hit", lit(true))
-    }
-    val metrics = Seq(count(lit(1)).cast("long").as("_card")) ++
-      parent.map(_ =>
-        coalesce(sum(when(col("_hit").isNull, col("_n"))), lit(0L)).cast("long").as("_orph"))
-    val agged = joined.agg(metrics.head, metrics.tail: _*)
-    val rows = Seq(
-      struct(
-        lit(spec.name).as("table_name"),
-        lit(s"id_foreign_key_$fk").as("check_name"),
-        lit("info").as("severity"),
-        lit(true).as("passed"),
-        col("_card").as("metric"))) ++
-      parent.map(_ => struct(
-        lit(spec.name).as("table_name"),
-        lit(s"referential_integrity_$fk").as("check_name"),
-        lit("error").as("severity"),
-        (col("_orph") === 0).as("passed"),
-        col("_orph").as("metric")))
-    Seq(agged.select(explode(array(rows: _*)).as("c")).select(col("c.*")))
-  }
+      enabled: Option[Set[String]] = None): DataFrame =
+    battery(Map(spec.name -> df), Seq(spec.copy(childArrays = Nil)),
+      Map(spec.name -> enabled.map(_ - "dim_consistency")), Map.empty)
 
   /** Scalar-FK orphan check: non-null FK values missing from the parent
-    * key set (LEFT ANTI join on the FK — broadcast when the parent is a
-    * dimension, shuffle-on-key otherwise; Catalyst/AQE picks).
-    * `checkName` defaults to referential_integrity_<fk>; embedding-table
-    * routing reuses the same join as its id_join_back check. */
+    * key set, row-weighted. `checkName` defaults to
+    * referential_integrity_<fk>. */
   def fkOrphanCheck(child: DataFrame, childName: String, fkCol: String,
       parent: DataFrame, parentKeyCol: String,
       checkName: Option[String] = None): DataFrame = {
-    val orphans = child.select(col(fkCol)).filter(col(fkCol).isNotNull)
-      .join(parent.select(col(parentKeyCol).as(fkCol)), Seq(fkCol), "left_anti")
-    orphans.agg(count(lit(1)).cast("long").as("metric"))
-      .select(
-        lit(childName).as("table_name"),
-        lit(checkName.getOrElse(s"referential_integrity_$fkCol")).as("check_name"),
-        lit("error").as("severity"),
-        (col("metric") === 0).as("passed"),
-        col("metric"))
+    val name = s"id_join_back_$fkCol"
+    battery(Map(childName -> child, s"$childName parent" -> parent),
+        Seq(TableSpec(childName, foreignKeys = Seq((fkCol, s"$childName parent", parentKeyCol)))),
+        Map(childName -> Some(Set("id_join_back"))), Map.empty)
+      .filter(col("check_name") === name)
+      .withColumn("check_name",
+        lit(checkName.getOrElse(s"referential_integrity_$fkCol")))
   }
 
-  /** V16 dimension consistency as a check row: metric = number of
-    * distinct embedding dimensions (groupBy(size) — no count_distinct
-    * Expand); passes when ≤ 1. */
-  def dimConsistencyCheck(df: DataFrame, tableName: String,
-      vecCol: String = "embedding"): DataFrame =
-    df.select(size(col(vecCol)).as("_d")).groupBy("_d").agg(count(lit(1)))
-      .agg(count(lit(1)).cast("long").as("metric"))
-      .select(
-        lit(tableName).as("table_name"),
-        lit("dim_consistency").as("check_name"),
-        lit("error").as("severity"),
-        (col("metric") <= 1).as("passed"),
-        col("metric"))
-
-  /** DEEP referential integrity over a child-ID array column: explode the
-    * array and anti-join the child table's key (the check the reference
-    * stubs out with a null test — checks.py:496-498 "would need to be
-    * checked against the utterances table"). Also counts null arrays. */
+  /** DEEP referential integrity over a child-ID array column: elements
+    * missing from the child table's key (referential_orphans_<arr>) and
+    * null arrays (referential_integrity_<arr>). */
   def childArrayOrphanCheck(parent: DataFrame, parentName: String, arrayCol: String,
-      child: DataFrame, childKeyCol: String): DataFrame = {
-    val exploded = parent.select(explode(col(arrayCol)).as("_cid"))
-    val orphans = exploded
-      .join(child.select(col(childKeyCol).as("_cid")), Seq("_cid"), "left_anti")
-    val orphanRow = orphans.agg(count(lit(1)).cast("long").as("metric"))
-      .select(
-        lit(parentName).as("table_name"),
-        lit(s"referential_orphans_$arrayCol").as("check_name"),
-        lit("error").as("severity"),
-        (col("metric") === 0).as("passed"),
-        col("metric"))
-    val nullRow = parent.agg(cnt(col(arrayCol).isNull).cast("long").as("metric"))
-      .select(
-        lit(parentName).as("table_name"),
-        lit(s"referential_integrity_$arrayCol").as("check_name"),
-        lit("error").as("severity"),
-        (col("metric") === 0).as("passed"),
-        col("metric"))
-    orphanRow.unionByName(nullRow)
-  }
+      child: DataFrame, childKeyCol: String): DataFrame =
+    battery(Map(parentName -> parent, s"$parentName child" -> child),
+        Seq(TableSpec(parentName,
+          childArrays = Seq((arrayCol, s"$parentName child", childKeyCol)))),
+        Map(parentName -> Some(Set("referential"))), Map.empty)
+      .filter(col("check_name").isin(
+        s"referential_orphans_$arrayCol", s"referential_integrity_$arrayCol"))
 
   /** Strip nullability (and array/map containsNull) recursively: parquet
     * round-trips everything back nullable, and the reference's schema
@@ -299,17 +341,17 @@ object Validation {
 
   /** Schema compliance: required fields present with compatible types
     * (checks.py:150-228). Driver-side — schemas are metadata. */
-  def schemaChecks(df: DataFrame, spec: TableSpec, expected: StructType): DataFrame = {
+  def schemaChecks(df: DataFrame, spec: TableSpec, expected: StructType): DataFrame =
+    df.sparkSession.createDataFrame(schemaCheckRows(df, spec, expected).asJava, CheckSchema)
+
+  private def schemaCheckRows(df: DataFrame, spec: TableSpec, expected: StructType): Seq[Row] = {
     val actual = df.schema.fields.map(f => f.name -> shapeOf(f.dataType)).toMap
     val missing = expected.fields.count(f => !actual.contains(f.name))
     val mistyped = expected.fields.count(f =>
       actual.get(f.name).exists(_ != shapeOf(f.dataType)))
-    val spark = df.sparkSession
-    import spark.implicits._
     Seq(
-      (spec.name, "required_fields", "error", missing == 0, missing.toLong),
-      (spec.name, "schema_compliance", "error", mistyped == 0, mistyped.toLong))
-      .toDF("table_name", "check_name", "severity", "passed", "metric")
+      Row(spec.name, "required_fields", "error", missing == 0, missing.toLong),
+      Row(spec.name, "schema_compliance", "error", mistyped == 0, mistyped.toLong))
   }
 
   /** Full check suite for one table (against its related tables).
@@ -320,52 +362,27 @@ object Validation {
   def validateTable(df: DataFrame, spec: TableSpec,
       related: Map[String, DataFrame] = Map.empty,
       expectedSchema: Option[StructType] = None,
-      enabled: Option[Set[String]] = None): DataFrame = {
-    def on(family: String): Boolean = enabled.forall(_.contains(family))
-    val parts = Seq.newBuilder[DataFrame]
-    // referential-routed FKs take the fused key-space path (one child
-    // exchange for cardinality + orphans)
-    val fkFusion: Seq[(String, String, String)] =
-      if (on("referential")) spec.foreignKeys else Nil
-    parts += counterChecks(df, spec, enabled, skipFkCardinality = fkFusion.nonEmpty)
-    expectedSchema.foreach(s => parts += schemaChecks(df, spec, s))
-    fkFusion.foreach { case (fk, parentName, parentKey) =>
-      parts ++= fusedKeyChecks(df, spec, fk, related.get(parentName), parentKey)
-    }
-    if (!on("referential") && on("id_join_back"))
-      spec.foreignKeys.foreach { case (fk, parentName, parentKey) =>
-        related.get(parentName).foreach { parent =>
-          // embedding-role tables route this join as their id_join_back
-          parts += fkOrphanCheck(df, spec.name, fk, parent, parentKey,
-            Some(s"id_join_back_$fk"))
-        }
-      }
-    if (on("referential"))
-      spec.childArrays.foreach { case (arr, childName, childKey) =>
-        related.get(childName).foreach { child =>
-          parts += childArrayOrphanCheck(df, spec.name, arr, child, childKey)
-        }
-      }
-    // only when explicitly routed: unrouted validateAll keeps its exact
-    // historical check set (q49's oracle contract)
-    if (enabled.exists(_.contains("dim_consistency")) && df.columns.contains("embedding"))
-      parts += dimConsistencyCheck(df, spec.name)
-    parts.result().reduce(_.unionByName(_))
-  }
+      enabled: Option[Set[String]] = None): DataFrame =
+    battery(related + (spec.name -> df), Seq(spec), Map(spec.name -> enabled),
+      expectedSchema.map(spec.name -> _).toMap)
 
   /** Validate a set of tables against their specs; FK/child references
-    * resolve within the set. Returns all check rows, deterministically
-    * ordered. With `routing`, each table runs only the checks its role
-    * enables (unrouted tables run everything, like the reference). */
+    * resolve within the set. Rows come back unordered: one action runs
+    * the whole battery. With `routing`, each table runs only the checks
+    * its role enables (unrouted tables run everything, like the
+    * reference). */
+  def checks(tables: Map[String, DataFrame], specs: Seq[TableSpec],
+      expectedSchemas: Map[String, StructType] = Map.empty,
+      routing: Option[graft.quality.Guardrails.Routing] = None): DataFrame =
+    battery(tables, specs,
+      specs.map(s => s.name -> routing.flatMap(_.tableChecks(s.name))).toMap,
+      expectedSchemas)
+
+  /** [[checks]], deterministically ordered by table and check name. */
   def validateAll(tables: Map[String, DataFrame], specs: Seq[TableSpec],
       expectedSchemas: Map[String, StructType] = Map.empty,
       routing: Option[graft.quality.Guardrails.Routing] = None): DataFrame =
-    specs.map { spec =>
-      validateTable(tables(spec.name), spec, tables - spec.name,
-        expectedSchemas.get(spec.name),
-        routing.flatMap(_.tableChecks(spec.name)))
-    }.reduce(_.unionByName(_))
-      .orderBy("table_name", "check_name")
+    checks(tables, specs, expectedSchemas, routing).orderBy("table_name", "check_name")
 
   /** The lakehouse's own artifact tables wired with their PK/FK/child-array
     * constraints (schemas.py:12-93; ids are C3's deterministic IDs). */
@@ -384,11 +401,27 @@ object Validation {
     TableSpec("embeddings", primaryKeys = Seq(Seq("artifact_id"))))
 
   /** Summary counts (reference ValidationReport.summary, checks.py:98-119). */
-  def summarize(checks: DataFrame): DataFrame =
-    checks.agg(
-      count(lit(1)).as("total_checks"),
-      cnt(col("passed")).as("passed_checks"),
-      cnt(!col("passed")).as("failed_checks"),
-      cnt(!col("passed") && col("severity") === "error").as("errors"),
-      cnt(!col("passed") && col("severity") === "warning").as("warnings"))
+  final case class Summary(total: Long, passed: Long, failed: Long, errors: Long,
+      warnings: Long)
+
+  object Summary {
+    /** The counts over check rows already on the driver. */
+    def of(rows: Seq[Row]): Summary = {
+      def n(p: Row => Boolean): Long = rows.count(p).toLong
+      val failed = (r: Row) => !r.getAs[Boolean]("passed")
+      Summary(rows.size.toLong, n(r => !failed(r)), n(failed),
+        n(r => failed(r) && r.getAs[String]("severity") == "error"),
+        n(r => failed(r) && r.getAs[String]("severity") == "warning"))
+    }
+  }
+
+  /** [[Summary.of]] the collected check rows, as a local one-row frame
+    * (total_checks, passed_checks, failed_checks, errors, warnings). */
+  def summarize(checks: DataFrame): DataFrame = {
+    val s = Summary.of(checks.collect().toSeq)
+    checks.sparkSession.createDataFrame(
+      Seq(Row(s.total, s.passed, s.failed, s.errors, s.warnings)).asJava,
+      StructType(Seq("total_checks", "passed_checks", "failed_checks", "errors", "warnings")
+        .map(StructField(_, LongType, nullable = false))))
+  }
 }

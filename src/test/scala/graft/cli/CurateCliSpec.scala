@@ -82,4 +82,23 @@ class CurateCliSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("snapshot <lakeDir> <snapshotsDir> <version>"), e.getMessage)
   }
+
+  test("validate with failed error checks throws after printing its summary") {
+    import spark.implicits._
+    val lake = Files.createTempDirectory("graft_cli_validate").toString
+    // a duplicated utterance_id: id_duplicates_utterance_id fails
+    Seq(("u1", "ep1", 0.0, 1.0), ("u1", "ep1", 1.0, 2.0))
+      .toDF("utterance_id", "episode_id", "start", "end")
+      .write.parquet(s"$lake/normalized")
+    val out = new java.io.ByteArrayOutputStream()
+    intercept[Main.ValidationFailed] {
+      Console.withOut(new java.io.PrintStream(out)) {
+        Main.run(spark, Array("validate", lake))
+      }
+    }
+    val printed = out.toString
+    assert(printed.contains("id_duplicates_utterance_id"), printed)
+    assert(printed.linesIterator.exists(l => l.startsWith("validation: ") &&
+      !l.contains("errors=0")), printed)
+  }
 }

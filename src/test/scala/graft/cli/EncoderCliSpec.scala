@@ -75,4 +75,26 @@ class EncoderCliSpec extends AnyFunSuite {
     val dims = emb.select(size(col("embedding"))).distinct().collect().map(_.getInt(0)).toSeq
     assert(dims == Seq(16), s"fallback HashEncoder(16) dims: $dims")
   }
+
+  test("the external encoder sees each span and beat text once") {
+    val lake = mkLake()
+    val seen = Files.createTempFile("graft_encoder_seen", ".txt")
+    val sh = Files.createTempFile("graft_counting_encoder", ".sh")
+    // one line appended to `seen` per text received, one vector answered
+    Files.write(sh, s"""#!/bin/sh
+      |while IFS= read -r line; do
+      |  echo x >> '$seen'
+      |  echo "[0.5,0.5,0.5,0.5]"
+      |done
+      |""".stripMargin.getBytes)
+    sh.toFile.setExecutable(true)
+    Main.run(spark, Array("materialize", lake, "--encoder-cmd", sh.toString,
+      "--encoder-dim", "4"))
+    val spans = spark.read.parquet(s"$lake/spans").count()
+    val beats = spark.read.parquet(s"$lake/beats").count()
+    val encoded = Files.readAllLines(seen).size
+    // + 1: the selection probe encodes one text
+    assert(encoded == spans + beats + 1,
+      s"encoder saw $encoded texts for $spans spans + $beats beats + 1 probe")
+  }
 }

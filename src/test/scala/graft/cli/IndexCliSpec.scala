@@ -45,4 +45,16 @@ class IndexCliSpec extends AnyFunSuite {
       assert(q0 == want, s"$kind: top-1 mismatch")
     }
   }
+
+  test("an unknown index kind is a usage error, not an exit of the caller's JVM") {
+    val base = Files.createTempDirectory("graft_cli_idx_kind").toString
+    Seq(
+      Array("index-build", emb, s"$base/index", "--kind", "annoy"),
+      Array("index-update", emb, s"$base/index", "--kind", "annoy"),
+      Array("index-search", s"$base/index", emb, s"$base/hits", "--kind", "annoy")
+    ).foreach { args =>
+      val e = intercept[Main.UsageError](Main.run(spark, args))
+      assert(e.getMessage.contains("unknown index kind: annoy"), e.getMessage)
+    }
+  }
 }

@@ -26,7 +26,9 @@ class QualityModulesSpec extends AnyFunSuite {
       .toDF("span_id", "duration")
     val r = Guardrails(df, "span_id", maxDuration = 240.0)
     assert(r.kept.count() == 1 && r.dropped.count() == 2)
-    assert(r.topOffenders == Seq(("b", 500.0), ("c", 300.0)))
+    val out = java.nio.file.Files.createTempDirectory("guardrail").resolve("kept").toString
+    assert(r.writeKept(out) == ((1L, Seq(("b", 500.0), ("c", 300.0)))))
+    assert(spark.read.parquet(out).count() == 1)
   }
 
   test("A14 speakerBalance: a NULL speaker in the top-N is not double-counted into the tail") {

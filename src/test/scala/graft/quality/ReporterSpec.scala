@@ -2,15 +2,12 @@ package graft.quality
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
 import graft.quality.Quality.{Assessment, Violation}
 
 class ReporterSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
   private val counts = Reporter.DatasetCounts(2, 20, 6, embeddingsAvailable = true)
   private val clean = Assessment(
     Map("coverage_pct" -> 97.5, "span_dup_pct" -> 0.0), Nil, "GREEN")
@@ -45,8 +42,7 @@ class ReporterSpec extends AnyFunSuite {
   }
 
   test("ascii histogram renders one bar per bin with counts") {
-    val hist = Seq((0, 5L, 50.0), (1, 10L, 100.0), (2, 0L, 0.0))
-      .toDF("bin_id", "n", "pct")
+    val hist = Map(0 -> 5L, 1 -> 10L, 2 -> 0L)
     val md = Reporter.asciiHistogram(hist, Seq(0.0, 20.0, 40.0), "Test Dist", maxWidth = 10)
     assert(md.contains("Test Dist"))
     assert(md.contains("█" * 10)) // the max bin fills the width
@@ -89,9 +85,8 @@ class ReporterSpec extends AnyFunSuite {
   }
 
   test("frameCsv escapes embedded delimiters and round-trips row counts") {
-    val df = Seq(("a,b", "say \"hi\"", 1.5), ("plain", "line\nbreak", -2.0))
-      .toDF("k", "msg", "v")
-    val csv = Reporter.frameCsv(df)
+    val csv = Reporter.frameCsv(Seq("k", "msg", "v"),
+      Seq(Row("a,b", "say \"hi\"", 1.5), Row("plain", "line\nbreak", -2.0)))
     assert(csv.startsWith("k,msg,v"))
     assert(csv.contains("\"a,b\"") && csv.contains("\"say \"\"hi\"\"\""))
     // RFC-4180: quoted newline stays inside one logical record
@@ -101,11 +96,9 @@ class ReporterSpec extends AnyFunSuite {
 
   test("writeAll emits md + json + csv and they read back") {
     val dir = Files.createTempDirectory("graft_reports").toString
-    val hist = Seq((0, 5L, 100.0)).toDF("bin_id", "n", "pct")
-    val episodes = Seq(("ep1", 100.0, 97.0, 97.0))
-      .toDF("episode_id", "episode_duration", "union_s", "coverage_pct")
     val files = Reporter.writeAll(dirty, counts, "2026-08-12T00:00:00Z", dir,
-      spanHist = Some(hist), beatHist = None, episodeFrame = Some(episodes))
+      spanHist = Some(Map(0 -> 5L)), beatHist = None,
+      episodeRows = Some(Seq(Row("ep1", 100.0, 97.0, 97.0))))
     assert(files.length == 4)
     val md = Files.readString(Paths.get(s"$dir/report.md"))
     assert(md.contains("Executive Summary") && md.contains("NO-GO")

@@ -118,6 +118,38 @@ class ValidationSpec extends AnyFunSuite {
     assert(checks("id_foreign_key_parent_key") == ((true, Some(2L))))
   }
 
+  test("a reference matches a key of another type as a join would") {
+    val intFk = Seq((1L, 10), (2L, 11), (3L, 99)).toDF("id", "parent_key")
+    def orphans(child: org.apache.spark.sql.DataFrame,
+        parent: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      val spec = TableSpec("child", foreignKeys = Seq(("parent_key", "parent", "pk")))
+      val table = checkMap(Validation.validateTable(child, spec,
+        related = Map("parent" -> parent), enabled = Some(Set("referential"))))
+      // beside a string-keyed table, keys shuffle as strings
+      val all = checkMap(Validation.validateAll(
+        Map("child" -> child, "parent" -> parent, "other" -> Seq("x").toDF("other_id")),
+        Seq(spec, TableSpec("other", primaryKeys = Seq(Seq("other_id"))))))
+      Map("validateTable" -> table("referential_integrity_parent_key")._2.get,
+        "validateAll" -> all("referential_integrity_parent_key")._2.get,
+        "fkOrphanCheck" -> Validation.fkOrphanCheck(child, "child", "parent_key", parent, "pk")
+          .first().getAs[Long]("metric"))
+    }
+    val one = Map("validateTable" -> 1L, "validateAll" -> 1L, "fkOrphanCheck" -> 1L)
+    // int FK against long and double keys: only 99 is an orphan
+    assert(orphans(intFk, Seq(10L, 11L).toDF("pk")) == one)
+    assert(orphans(intFk, Seq(10.0, 11.0).toDF("pk")) == one)
+    // decimals of different scales compare by value
+    val decFk = intFk.select(col("id"), col("parent_key").cast("decimal(10,2)").as("parent_key"))
+    assert(orphans(decFk, Seq(10, 11).toDF("pk").select(col("pk").cast("decimal(12,4)").as("pk")))
+      == one)
+    // child-ID array elements of int against long keys
+    val arrays = Seq(("b1", Seq(10, 11)), ("b2", Seq(12))).toDF("beat_id", "span_ids")
+    val rows = Validation.childArrayOrphanCheck(arrays, "beats", "span_ids",
+        Seq(10L, 11L).toDF("span_id"), "span_id")
+      .filter(col("check_name") === "referential_orphans_span_ids").first()
+    assert(rows.getAs[Long]("metric") == 1L)
+  }
+
   test("composite PK dup count ignores rows with a null key part") {
     val df = Seq(
       (Some(1L), Some(1)), (Some(1L), Some(1)), // dup pair
