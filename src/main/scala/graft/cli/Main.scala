@@ -343,8 +343,7 @@ object Main {
           case other2 =>
             throw new UsageError(s"unknown index kind: $other2 (ivf | hnsw | hnsw-pq)")
         }
-        hits.write.mode("overwrite").parquet(outPath)
-        println(s"wrote ${spark.read.parquet(outPath).count()} hit rows to $outPath")
+        println(s"wrote ${writeCounted(hits, outPath)} hit rows to $outPath")
 
       case other => throw new UsageError(s"unknown command: $other")
     }

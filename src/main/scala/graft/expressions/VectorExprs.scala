@@ -53,6 +53,13 @@ case class VecDotD(left: Expression, right: Expression) extends BinaryExpression
   * as (cosine desc, cell_id asc) — the vector's own norm is a positive
   * constant across cells, so dividing by it cannot change the argmax). */
 object CellKernels {
+  /** 1/‖centroid‖ per cell, 0 for a zero centroid: the scale both
+    * kernels take, computed once per model. */
+  def invNorms(cents: Array[Array[Double]]): Array[Double] = cents.map { c =>
+    val n = math.sqrt(c.map(x => x * x).sum)
+    if (n > 0) 1.0 / n else 0.0
+  }
+
   def nearestCell(v: ArrayData, cents: Array[Array[Double]], invNorms: Array[Double]): Int = {
     val d = v.numElements()
     var best = 0
@@ -269,12 +276,9 @@ object VectorExprs {
     * construction binds each Column to its own centroid payload, and the
     * registry never pins a centroid array for the session's lifetime. */
   def nearest_cell(v: Column, cents: Array[Array[Double]]): Column = {
-    val invNorms = cents.map { c =>
-      val n = math.sqrt(c.map(x => x * x).sum)
-      if (n > 0) 1.0 / n else 0.0
-    }
     import org.apache.spark.sql.graftshim.ColumnShim
-    ColumnShim.column(NearestCellExpr(ColumnShim.expression(v), cents, invNorms))
+    ColumnShim.column(
+      NearestCellExpr(ColumnShim.expression(v), cents, CellKernels.invNorms(cents)))
   }
 
   /** Whitening transform W(x − μ) of a double-array column; `wPacked` is
@@ -297,11 +301,8 @@ object VectorExprs {
     * (cosine desc, position asc). Same eager Column wrapping rationale as
     * [[nearest_cell]]. */
   def probe_cells(v: Column, cents: Array[Array[Double]], nProbe: Int): Column = {
-    val invNorms = cents.map { c =>
-      val n = math.sqrt(c.map(x => x * x).sum)
-      if (n > 0) 1.0 / n else 0.0
-    }
     import org.apache.spark.sql.graftshim.ColumnShim
-    ColumnShim.column(ProbeCellsExpr(ColumnShim.expression(v), cents, invNorms, nProbe))
+    ColumnShim.column(
+      ProbeCellsExpr(ColumnShim.expression(v), cents, CellKernels.invNorms(cents), nProbe))
   }
 }

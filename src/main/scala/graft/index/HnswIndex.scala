@@ -5,10 +5,12 @@ import scala.collection.mutable
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Json
+import graft.expressions.CellKernels
 import graft.operators.{Guards, Similarity}
 
 /** X131 — graph-based ANN: an HNSW graph per IVF cell, stored
@@ -626,8 +628,8 @@ object HnswIndex {
   /** Shared serving-side routing step, used verbatim by [[search]] and
     * [[searchPq]] (extracted so the two serving paths cannot drift):
     * bound + collect the query batch, probe each query's nProbe nearest
-    * cells against the generation's routing model, invert to per-cell
-    * query-index lists. */
+    * cells against the generation's routing model with the IVF probe
+    * kernel, invert to per-cell query-index lists. */
   private final case class RoutedBatch(
       qRows: Array[(Long, Array[Double])],
       routing: Map[Int, Array[Int]],
@@ -644,15 +646,12 @@ object HnswIndex {
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
     val centVecs = cents.map(_._2)
-    val invNorms = centVecs.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      if (s > 0) 1.0 / math.sqrt(s) else 0.0
-    }
+    val invNorms = CellKernels.invNorms(centVecs)
     val routed = mutable.Map.empty[Int, mutable.ArrayBuffer[Int]]
     var qi = 0
     while (qi < qRows.length) {
-      val cellPos = probeCellPositions(qRows(qi)._2, centVecs, invNorms, nProbe)
+      val cellPos = CellKernels.probeCells(UnsafeArrayData.fromPrimitiveArray(qRows(qi)._2),
+        centVecs, invNorms, nProbe).toIntArray()
       var j = 0
       while (j < cellPos.length) {
         routed.getOrElseUpdate(cents(cellPos(j))._1,
@@ -667,10 +666,10 @@ object HnswIndex {
   }
 
   /** Search the persisted index: route each query to its nProbe nearest
-    * cells (driver replay of the IVF probe kernel — the model is
-    * nCells rows), beam-search those cells' resident graphs with
-    * `efSearch`, merge through the bounded top-k heap. The query side
-    * is a bounded serving batch (same contract as
+    * cells (the IVF probe kernel [[CellKernels.probeCells]], run on the
+    * driver — the model is nCells rows), beam-search those cells'
+    * resident graphs with `efSearch`, merge through the bounded top-k
+    * heap. The query side is a bounded serving batch (same contract as
     * [[Similarity.topKExact]]); the corpus side never leaves its
     * executors. `efSearch ≥ cell size` (e.g. Int.MaxValue) plus
     * `nProbe = nCells` is the exhaustive, oracle-exact configuration. */
@@ -841,44 +840,6 @@ object HnswIndex {
             .as("sim"))
       Similarity.perQueryTopK(sims, k)
     }
-  }
-
-  /** Driver replay of [[graft.expressions.CellKernels.probeCells]]:
-    * top-nProbe cell positions by (dot/‖cent‖ desc, position asc). */
-  private def probeCellPositions(q: Array[Double], cents: Array[Array[Double]],
-      invNorms: Array[Double], nProbe: Int): Array[Int] = {
-    val m = cents.length
-    val scores = new Array[Double](m)
-    var c = 0
-    while (c < m) {
-      val cent = cents(c)
-      val n = math.min(q.length, cent.length)
-      var acc = 0.0; var i = 0
-      while (i < n) { acc += q(i) * cent(i); i += 1 }
-      // NaN query values make every score NaN and `score > bestS` never
-      // fires on NaN — map to a sentinel below the zero-norm -2.0 so one
-      // degenerate query routes deterministically instead of crashing
-      // the whole batch on used(-1) (the CellKernels.probeCells guard)
-      val s = if (invNorms(c) > 0) acc * invNorms(c) else -2.0
-      scores(c) = if (s.isNaN) -3.0 else s
-      c += 1
-    }
-    val np = math.min(nProbe, m)
-    val out = new Array[Int](np)
-    val used = new Array[Boolean](m)
-    var r = 0
-    while (r < np) {
-      var best = -1; var bestS = Double.NegativeInfinity
-      var i = 0
-      while (i < m) {
-        if (!used(i) && (best < 0 || scores(i) > bestS)) {
-          best = i; bestS = scores(i)
-        }
-        i += 1
-      }
-      used(best) = true; out(r) = best; r += 1
-    }
-    out
   }
 
   // --------------------------------------------------- in-cell kernels

@@ -5,7 +5,8 @@ import scala.collection.concurrent.TrieMap
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, get, typedlit}
 
 import graft.core.Json
 
@@ -113,6 +114,21 @@ private[graft] final class GenerationCache[V](release: V => Unit = (_: V) => ())
     }.value
   }
 
+  /** [[apply]] for a value bound to a `SparkSession`: a resident value
+    * of another session is evicted and loaded again, so no session
+    * plans against a relation another session resolved. If a racing
+    * session takes the slot back, the load is served uncached. */
+  def apply(path: String, gen: Long, spark: SparkSession, sessionOf: V => SparkSession)(
+      load: => V): V = {
+    val v = apply(path, gen)(load)
+    if (sessionOf(v) eq spark) v
+    else {
+      evict(path)
+      val w = apply(path, gen)(load)
+      if (sessionOf(w) eq spark) w else load
+    }
+  }
+
   /** Drop every resident generation of `path` except `keep`. */
   def evict(path: String, keep: Option[Long] = None): Unit =
     slots.keys.filter(k => k._1 == path && !keep.contains(k._2))
@@ -120,4 +136,46 @@ private[graft] final class GenerationCache[V](release: V => Unit = (_: V) => ())
 
   def newest(path: String): Option[Long] =
     slots.keys.filter(_._1 == path).map(_._2).maxOption
+}
+
+/** One generation of a cell-partitioned artifact (IVF and PQ) as a
+  * search holds it: the routing centroids sorted by cell id, and the
+  * relation over the cell-partitioned vectors. Resolving that relation
+  * (`spark.read.parquet`) lists every `cell_id=` directory — a Spark job
+  * once there are more than 32 — and infers the parquet schema, another
+  * job; held per generation, a search plans against the listed file
+  * index instead. Nothing is persisted: the relation is a file listing
+  * plus a schema. It belongs to `spark`, so it is cached with
+  * [[GenerationCache]]'s session-bound `apply`. */
+private[index] final class CellTable(val spark: SparkSession, val cellIds: Seq[Int],
+    val cents: Array[Array[Double]], assignedPath: String) {
+
+  /** Resolved on first use, so an update that only routes new vectors
+    * never lists the cells. */
+  lazy val assigned: DataFrame = spark.read.parquet(assignedPath)
+
+  /** The candidate rows of a probed query batch: `probes` holds one row
+    * per (query, probed cell), with the cell's position `_pi` into
+    * [[cellIds]] and a `query_id`; `corpus` carries `cell_id` and
+    * `neighbor_id`. The probe side is broadcast, so Catalyst's
+    * PartitionPruning turns the probed cells into a dynamic partition
+    * filter on the `cell_id` scan and unprobed cells are never read.
+    * That rule only fires when the probe side holds a filter it counts
+    * as selective (`hasSelectivePredicate`); a driver-local batch
+    * (`Seq(...).toDF`) has none, so `_pi >= 0`, which every row passes,
+    * stands in for one. */
+  def candidates(probes: DataFrame, corpus: DataFrame): DataFrame =
+    broadcast(probes.filter(col("_pi") >= 0)
+        .withColumn("cell_id", get(typedlit(cellIds), col("_pi"))))
+      .join(corpus, "cell_id")
+      .filter(col("query_id") =!= col("neighbor_id"))
+}
+
+private[index] object CellTable {
+  def load(spark: SparkSession, centroidsPath: String, assignedPath: String): CellTable = {
+    val rows = spark.read.parquet(centroidsPath).select("cell_id", "centroid").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+    new CellTable(spark, rows.map(_._1).toSeq, rows.map(_._2), assignedPath)
+  }
 }

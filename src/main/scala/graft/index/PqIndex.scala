@@ -30,7 +30,8 @@ import graft.operators.Similarity
   *    range and roughly halves the distortion vs flat PQ at equal bits.
   *  - encode: ONE map-only codegen pass ([[graft.expressions.PqEncodeExpr]]);
   *    the corpus never shuffles except the cell-partitioned write.
-  *  - search: partition-pruned probe (same cell pruning as VectorIndex) +
+  *  - search: probe that reads only the probed cells' files (the
+  *    VectorIndex dynamic partition pruning, [[CellTable]]) +
   *    per-query LUT built BEFORE the probe fan-out + m-lookup ADC per
   *    candidate + the bounded-heap top-k aggregate.
   *
@@ -259,16 +260,13 @@ object PqIndex {
       .put("pq_k", model.k).put("pq_dsub", model.dsub))
 
   /** Coarse centroids + codebooks are bounded model objects a serving
-    * loop reads every batch — cache the collected copies per artifact
-    * generation (the VectorIndex device). */
-  private val modelCache =
-    new GenerationCache[(Seq[Int], Array[Array[Double]], PqModel)]()
+    * loop reads every batch, and the codes a relation every batch plans
+    * against — keep them per artifact generation ([[CellTable]], the
+    * VectorIndex device). */
+  private val modelCache = new GenerationCache[(CellTable, PqModel)]()
 
-  private def loadModel(spark: SparkSession, p: Paths,
-      gen: Long): (Seq[Int], Array[Array[Double]], PqModel) =
-    modelCache(p.dir, gen) {
-      val centRows = spark.read.parquet(p.centroids).select("cell_id", "centroid").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+  private def loadModel(spark: SparkSession, p: Paths, gen: Long): (CellTable, PqModel) =
+    modelCache(p.dir, gen, spark, _._1.spark) {
       val cbRows = spark.read.parquet(p.codebooks)
         .select("subspace", "code", "centroid").collect()
         .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
@@ -277,7 +275,7 @@ object PqIndex {
       val k = cbRows.keys.map(_._2).max + 1
       val cb = Array.tabulate(m, k)((j, c) => cbRows((j, c)))
       val dsub = cb(0)(0).length
-      (centRows.map(_._1).toSeq, centRows.map(_._2), PqModel(m, dsub, k, cb))
+      (CellTable.load(spark, p.centroids, p.assigned), PqModel(m, dsub, k, cb))
     }
 
   /** ADC search over the persisted index: nProbe-cell pruned top-k per
@@ -285,27 +283,25 @@ object PqIndex {
     * (‖q‖·‖x̂‖). The per-query LUT (m·k doubles) is computed BEFORE the
     * probe explode — once per query, not once per probed cell — and the
     * per-(query, cell) coarse dot is one vec_dot against the literal
-    * centroid list. Only the probed cell partitions are read, and each
-    * candidate row carries m bytes instead of d floats. */
+    * centroid list. Only the probed cells' files are read (the
+    * VectorIndex pruning, [[CellTable.candidates]]), and each candidate
+    * row carries m bytes instead of d floats. */
   def search(spark: SparkSession, outDir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
     VectorExprs.register(spark)
     import graft.expressions.VectorExprs.vec_dot
-    val p = Paths(outDir)
-    val (cellIds, centArr, model) = loadModel(spark, p, IndexArtifact.published(spark, outDir))
-    val corpus = spark.read.parquet(p.assigned)
+    val (table, model) = loadModel(spark, Paths(outDir), IndexArtifact.published(spark, outDir))
+    val corpus = table.assigned
       .select(col("_id").as("neighbor_id"), col("_codes"), col("_rn"), col("cell_id"))
-    val qCells = queries
+    val probes = queries
       .withColumn("_qn", sqrt(vec_dot(col("qv"), col("qv"))))
       .withColumn("_lut", PqExprs.pq_lut(col("qv"), model.codebooks, model.k))
       .withColumn("_pi",
-        explode(graft.expressions.VectorExprs.probe_cells(col("qv"), centArr, nProbe)))
-      .withColumn("_qc", vec_dot(col("qv"), get(typedlit(centArr.map(_.toSeq).toSeq), col("_pi"))))
-      .select(col("query_id"),
-        get(typedlit(cellIds), col("_pi")).as("cell_id"),
-        col("_lut"), col("_qc"), col("_qn"))
-    val cands = broadcast(qCells).join(corpus, "cell_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
+        explode(graft.expressions.VectorExprs.probe_cells(col("qv"), table.cents, nProbe)))
+      .withColumn("_qc",
+        vec_dot(col("qv"), get(typedlit(table.cents.map(_.toSeq).toSeq), col("_pi"))))
+      .select(col("query_id"), col("_pi"), col("_lut"), col("_qc"), col("_qn"))
+    val cands = table.candidates(probes, corpus)
     // degenerate norms (zero query vector, or a code whose reconstruction
     // is the zero vector) have UNDEFINED cosine — 0/0 = NaN would rank
     // FIRST under perQueryTopK's SQL-DESC ordering (NaN largest), so such
@@ -379,19 +375,20 @@ object PqIndex {
         build(vectors, idCol, vecCol, nCells, outDir, m = m, k = k)
         "rebuild"
       } else {
-        val (cellIds, centArr, model) = loadModel(spark, p, gen)
+        val (table, model) = loadModel(spark, p, gen)
         val assigned = fresh
           .select(col(idCol).as("_id"), VF.vecAsDouble(col(vecCol)).as("_v"))
-          .withColumn("_cp", VectorExprs.nearest_cell(col("_v"), centArr))
+          .withColumn("_cp", VectorExprs.nearest_cell(col("_v"), table.cents))
         val encoded = assigned
-          .withColumn("_e", PqExprs.pq_encode(col("_v"), col("_cp"), centArr, model.codebooks))
+          .withColumn("_e",
+            PqExprs.pq_encode(col("_v"), col("_cp"), table.cents, model.codebooks))
           .select(col("_id"),
             col("_e.codes").as("_codes"), col("_e.rnorm").as("_rn"),
-            get(typedlit(cellIds), col("_cp")).as("cell_id"))
+            get(typedlit(table.cellIds), col("_cp")).as("cell_id"))
         IndexArtifact.unpublish(spark, outDir)
         encoded.repartition(col("cell_id"))
           .write.mode("append").partitionBy("cell_id").parquet(p.assigned)
-        publishMetadata(spark, outDir, nExisting + nNew, cellIds.length, model)
+        publishMetadata(spark, outDir, nExisting + nNew, table.cellIds.length, model)
         "append"
       }
     } finally fresh.unpersist()

@@ -157,22 +157,23 @@ object VectorIndex {
   }
 
   /** The coarse quantizer is a bounded model object (nCells rows) that a
-    * serving loop reads on EVERY batch — cache the collected copy per
-    * artifact generation, so repeat searches skip the per-batch parquet
-    * job (FAISS likewise keeps the quantizer resident; a rebuild
-    * publishes a new generation and so invalidates the entry). */
-  private val centroidCache = new GenerationCache[(Seq[Int], Array[Array[Double]])]()
+    * serving loop reads on EVERY batch, and the assigned vectors are a
+    * relation every batch plans against — keep both per artifact
+    * generation ([[CellTable]]), so repeat searches run no centroid,
+    * listing or schema job (FAISS likewise keeps the quantizer
+    * resident; a rebuild or append publishes a new generation and so
+    * invalidates the entry). */
+  private val tableCache = new GenerationCache[CellTable]()
 
-  private def loadCentroids(spark: SparkSession, p: Paths): (Seq[Int], Array[Array[Double]]) =
-    centroidCache(p.dir, IndexArtifact.published(spark, p.dir)) {
-      val rows = spark.read.parquet(p.centroids).select("cell_id", "centroid").collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1)
-      (rows.map(_._1).toSeq, rows.map(_._2))
+  private def loadTable(spark: SparkSession, p: Paths): CellTable =
+    tableCache(p.dir, IndexArtifact.published(spark, p.dir), spark, _.spark) {
+      CellTable.load(spark, p.centroids, p.assigned)
     }
 
   /** Search the persisted index: nProbe-cell pruned top-k per query.
-    * Partition pruning on cell_id means only the probed cells are read.
+    * The probed cells prune the `cell_id` scan at run time (dynamic
+    * partition pruning, [[CellTable.candidates]]), so only their files
+    * are read, for any query batch.
     *
     * Probe routing is MAP-ONLY: the centroid model rides into codegen
     * ([[graft.expressions.VectorExprs.probe_cells]], same device as the
@@ -185,23 +186,20 @@ object VectorIndex {
       k: Int, nProbe: Int): DataFrame = {
     graft.expressions.VectorExprs.register(spark)
     import graft.expressions.VectorExprs.vec_dot
-    val p = Paths(outDir)
-    val (cellIds, centArr) = loadCentroids(spark, p)
+    val table = loadTable(spark, Paths(outDir))
     // corpus norms were precomputed at build time; query norms are a
     // handful of sqrt-dots — both stay one-per-vector instead of one per
     // (query, candidate) pair after the fan-out
-    val corpus = restored(spark.read.parquet(p.assigned))
+    val corpus = restored(table.assigned)
       .select(col("_id").as("neighbor_id"), col("_v").as("nv"), col("cell_id"), col("_nn"))
-    val qCells = queries
+    // the expression returns positions into the sorted cell list;
+    // candidates translates them back to the (possibly sparse) cell_id
+    val probes = queries
       .withColumn("_qn", sqrt(vec_dot(col("qv"), col("qv"))))
       .withColumn("_pi",
-        explode(graft.expressions.VectorExprs.probe_cells(col("qv"), centArr, nProbe)))
-      // the expression returns positions into the sorted cell list;
-      // translate back to the (possibly sparse) cell_id
-      .select(col("query_id"), col("qv"),
-        get(typedlit(cellIds), col("_pi")).as("cell_id"), col("_qn"))
-    val cands = broadcast(qCells).join(corpus, "cell_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
+        explode(graft.expressions.VectorExprs.probe_cells(col("qv"), table.cents, nProbe)))
+      .select(col("query_id"), col("qv"), col("_pi"), col("_qn"))
+    val cands = table.candidates(probes, corpus)
     val sims = cands
       .select(col("query_id"), col("neighbor_id"),
         round(vec_dot(col("qv"), col("nv")) / (col("_qn") * col("_nn")), 6).as("sim"))

@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +16,9 @@ import graft.functions.{VectorFunctions => VF}
   * when `metadata.json` exists, so a crash between component writes is
   * refused by search and update, a rebuild publishes again, and a
   * rebuild in place never serves the previous generation's cached
-  * model. */
+  * model. The cell-partitioned families (ivf, pq) also hold a resolved
+  * relation per generation: an append must be seen by the next search,
+  * and a second session must resolve its own. */
 class IndexCommitSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -101,6 +104,50 @@ class IndexCommitSpec extends AnyFunSuite {
       f.build(b, fresh)
       assert(pairs(f.search(queries(b), dir)) == pairs(f.search(queries(b), fresh)))
       Seq(dir, fresh).foreach(HnswIndex.evict)
+    }
+  }
+
+  /** The ivf and pq rows, searched in the session of the query batch
+    * with a given k. */
+  private val cellFamilies = Seq[(Family, (DataFrame, String, Int) => DataFrame)](
+    families(0) -> ((q, d, k) => VectorIndex.search(q.sparkSession, d, q, k, nProbe = 1)),
+    families(1) -> ((q, d, k) => PqIndex.search(q.sparkSession, d, q, k, nProbe = 1)))
+
+  /** The sessions of the file relations a search plans against. */
+  private def relationSessions(df: DataFrame) =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.sparkSession }
+
+  cellFamilies.foreach { case (f, search) =>
+    test(s"${f.name}: a search after an append sees the appended vectors") {
+      val dir = tmp(s"${f.name}_append")
+      val a = corpus(300, 0L)
+      f.build(a, dir)
+      f.search(queries(a), dir).collect() // resolves the generation's state
+      val far = Seq.fill(8)(50.0)
+      val appended = a.unionByName(Seq((10000L, far)).toDF("vec_id", "embedding"))
+      assert(f.update(appended, dir) == "append")
+      // k past any cell's size: the hits are every vector of the probed
+      // cell that the scan saw
+      val hits = search(Seq((-1L, far)).toDF("query_id", "qv"), dir, 1000)
+      assert(hits.select("neighbor_id").as[Long].collect().contains(10000L))
+    }
+
+    test(s"${f.name}: a second session resolves its own relation") {
+      val dir = tmp(s"${f.name}_sessions")
+      val a = corpus(300, 0L)
+      f.build(a, dir)
+      val q = queries(a)
+      val first = search(q, dir, 3)
+      val want = pairs(first)
+      assert(relationSessions(first).nonEmpty && relationSessions(first).forall(_ eq spark))
+      val other = spark.newSession()
+      val q2 = other.createDataFrame(java.util.Arrays.asList(q.collect(): _*), q.schema)
+      val second = search(q2, dir, 3)
+      assert(relationSessions(second).nonEmpty && relationSessions(second).forall(_ eq other))
+      assert(pairs(second) == want)
+      val again = search(q, dir, 3)
+      assert(relationSessions(again).forall(_ eq spark) && pairs(again) == want)
     }
   }
 }
