@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Json
+import graft.queries.{Query, Registry}
 
 /** Benchmark main: runs every query at SPARK_GRAFT_SF_DIR plus three
   * throughput phases (ingest, ANN, quality-assess), printing ONE JSON
@@ -689,25 +690,41 @@ object Bench {
   /** Warmup pass pays Catalyst analysis + whole-stage-codegen JIT per
     * query shape; then TWO measured passes, reporting each query's MIN —
     * steady-state engine cost with one-off GC hiccups damped, which is
-    * what a long-running cluster actually sees.
-    * Returns `{"total":…,"queries":{…}}`. */
-  def queriesJson(spark: SparkSession, sfDir: String): ObjectNode = {
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    * what a long-running cluster actually sees. A query that throws in
+    * either measured pass gets no time: it is named in `failed` and left
+    * out of `queries` and `total`.
+    * Returns `{"total":…,"queries":{…},"failed":[…]}`. */
+  def queriesJson(spark: SparkSession, sfDir: String, registry: Seq[Query]): ObjectNode = {
+    val ordered = registry.sortBy(_.name)
+    ordered.foreach { q =>
+      try q.run(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    def measure(): Map[String, Double] = ordered.map { case (name, fn) =>
+    def measure(): Map[String, Option[Double]] = ordered.map { q =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      q.name -> (try { q.run(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case _: Throwable => None })
     }.toMap
     val (m1, m2) = (measure(), measure())
-    val results = ordered.map { case (name, _) =>
-      name -> math.min(m1(name), m2(name))
-    }
+    val (ok, failed) = ordered.map(_.name).partition(n => m1(n).nonEmpty && m2(n).nonEmpty)
+    val results = ok.map(n => n -> math.min(m1(n).get, m2(n).get))
     obj("total" -> r3(results.map(_._2).sum),
-      "queries" -> ListMap.from(results.map { case (k, v) => k -> r3(v) }))
+      "queries" -> ListMap.from(results.map { case (k, v) => k -> r3(v) }),
+      "failed" -> failed)
   }
+
+  /** Whether a clean run on `cpus` cores may replace the anchor whose
+    * text is `existing` (`None`: no anchor yet). `Left(why)` refuses: an
+    * anchor recorded on another core count, or one with no `cpus` stamp
+    * to compare, would be silently replaced by numbers it cannot be
+    * diffed against. */
+  def anchorVerdict(existing: Option[String], cpus: Int): Either[String, Unit] =
+    existing.map(text => scala.util.Try(Json.parse(text).path("cpus")).toOption) match {
+      case None => Right(())
+      case Some(Some(c)) if c.isInt && c.asInt == cpus => Right(())
+      case Some(Some(c)) if c.isInt =>
+        Left(s"it was recorded on ${c.asInt} cpus, this run used $cpus")
+      case Some(_) => Left("it carries no cpus stamp to compare with this run's")
+    }
 
   /** A record object with its fields in the given order. */
   private def obj(fields: (String, Any)*): ObjectNode =
@@ -727,7 +744,7 @@ object Bench {
     // every echoed constant risks pushing the one-line artifact past it
     // (r8's official record lost its per-query block exactly this way)
     val json = phase match {
-      case "queries" => queriesJson(spark, sfDir)
+      case "queries" => queriesJson(spark, sfDir, Registry.all)
       case "ingest" =>
         val (rows, sec) = ingestThroughput(spark, 200000L, 50)
         obj("sec" -> r3(sec), "rows_per_sec" -> (rows / sec).toLong)
@@ -990,12 +1007,16 @@ object Bench {
     val queries = gatedPhase("queries").getOrElse {
       // fork unavailable (unexpected classpath) — degrade to in-process
       val spark = GraftSession.create()
-      try queriesJson(spark, sfDir) finally spark.stop()
+      try queriesJson(spark, sfDir, Registry.all) finally spark.stop()
     }
     val total = queries.path("total").asDouble(-1.0)
     val qs = Option(queries.get("queries")).getOrElse(Json.obj())
+    val cpus = GraftSession.cpus.toInt
     val record = obj("metric" -> "total", "value" -> total, "unit" -> "sec",
-      "queries" -> qs, "sf" -> sfDir)
+      "queries" -> qs, "sf" -> sfDir, "cpus" -> cpus)
+    // a query that threw has no time; the record names it instead
+    Option(queries.get("failed")).filter(_.size > 0)
+      .foreach(record.set[JsonNode]("failed", _))
     // the throughput phases run FIXED-SIZE synthetic corpora (200k-row
     // ingest, 50k-vector ANN, the 81k/63k quality assessment, generated
     // streams) — they measure the same workload at every sf, so
@@ -1066,12 +1087,22 @@ object Bench {
     // single-thread cleanliness signal.
     if (phasesClean && !skipPhases) {
       try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(anchorFile),
-          (fullLine + "\n").getBytes("UTF-8"))
-        System.err.println(s"[bench] all phases canary+steal clean — anchor " +
-          s"written to $anchorFile (commit it: the anchor is the tracked " +
-          "detail record SCALE.md cites; an uncommitted anchor is just a " +
-          "scratch file the next run overwrites)")
+        val anchorPath = java.nio.file.Paths.get(anchorFile)
+        val existing = Option.when(java.nio.file.Files.exists(anchorPath))(
+          java.nio.file.Files.readString(anchorPath))
+        anchorVerdict(existing, cpus) match {
+          case Left(why) =>
+            System.err.println(s"[bench] all phases canary+steal clean, but " +
+              s"$anchorFile is left as it is: $why (its per-query seconds " +
+              "are not comparable with this run's; move it aside to re-anchor " +
+              "on this core count)")
+          case Right(()) =>
+            java.nio.file.Files.write(anchorPath, (fullLine + "\n").getBytes("UTF-8"))
+            System.err.println(s"[bench] all phases canary+steal clean — anchor " +
+              s"written to $anchorFile (commit it: the anchor is the tracked " +
+              "detail record SCALE.md cites; an uncommitted anchor is just a " +
+              "scratch file the next run overwrites)")
+        }
       } catch { case e: Exception =>
         System.err.println(s"[bench] could not write $anchorFile: $e") }
     }
@@ -1106,8 +1137,9 @@ object Bench {
     val withCats = Json.compact(short)
     Option(short.get("quality_assess")).collect { case q: ObjectNode => q.remove("categories") }
     val withoutCats = Json.compact(short)
-    val minimal = obj(Seq("metric", "value", "unit", "queries", "sf", "steal_retries",
-      "contended", "anchor_total", "anchor").flatMap(k => Option(short.get(k)).map(k -> _)) :+
+    val minimal = obj(Seq("metric", "value", "unit", "queries", "sf", "cpus", "failed",
+      "steal_retries", "contended", "anchor_total", "anchor")
+      .flatMap(k => Option(short.get(k)).map(k -> _)) :+
       ("trimmed" -> "phase maps in detail file") :+ ("detail" -> outFile): _*)
     val out = Seq(withCats, withoutCats).find(_.length <= 1800)
       .getOrElse(Json.compact(minimal))

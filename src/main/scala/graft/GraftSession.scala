@@ -24,9 +24,12 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
 
+  /** The local core count a session runs with: SPARK_GRAFT_CPUS, else
+    * the machine's cores, at least 4. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.max(4, Runtime.getRuntime.availableProcessors()).toString)
+
   def create(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
     val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -20,9 +20,10 @@ object Profile {
   /** The executed plan of the first run, and every run's wall time and
     * row count. An unknown name throws, listing the known ones. */
   def profile(spark: SparkSession, sfDir: String, query: String): (String, Seq[Run]) = {
-    val fn = graft.SparkEntry.queries.getOrElse(query,
+    val known = graft.queries.Registry.all
+    val fn = known.find(_.name == query).map(_.run).getOrElse(
       throw new IllegalArgumentException(
-        s"unknown query $query; known: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+        s"unknown query $query; known: ${known.map(_.name).sorted.mkString(", ")}"))
     val timed = (1 to Runs).map { _ =>
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 /** Ladder-scale sampled-oracle dump (VERDICT r10, What's-wrong #3): at
   * scale factors where q22/q87/q113's full DuckDB oracles are quadratic
   * SQL, the checker (tools/make_correctness_sf.py) verifies them through
-  * [[graft.SparkEntry.sampledOracleSql]] instead. This main produces the
-  * two artifacts that path needs beyond the ordinary Verify dump:
+  * the sampled oracle SQL their registry entries carry instead. This
+  * main produces the two artifacts that path needs beyond the ordinary
+  * Verify dump:
   *
   *  - `q87_sampled/` — q87's aggregate with the NEW side restricted to
   *    the doc_id%101==7 sliver (base corpus intact). The matching SQL in
@@ -20,6 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object SampledCheck {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: graft.tools.SampledCheck <sfDir> <outDir>")
+      sys.exit(2)
+    }
     val Array(sfDir, outDir) = args.take(2)
     val spark = graft.GraftSession.create()
     try {
@@ -31,7 +36,7 @@ object SampledCheck {
         .coalesce(1).write.mode("overwrite").parquet(s"$outDir/q87_sampled")
 
       graft.Verify.dumpSql(s"$outDir/sampled_oracle_sql.json",
-        graft.SparkEntry.sampledOracleSql)
+        graft.queries.Registry.sampledOracleSql)
       println(s"sampled-check artifacts written under $outDir")
     } finally spark.stop()
   }

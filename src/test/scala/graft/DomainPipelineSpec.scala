@@ -262,7 +262,7 @@ class DomainPipelineSpec extends AnyFunSuite {
     // FULL sf0.01 output — counts and the order-free bit_xor of the
     // perceptual hashes — as golden values over the same fixture the
     // driver runs: a content gate equivalent to the oracle hash check.
-    val got = graft.SparkEntry.mediaPipelineQuery(spark, "/root/testdata/sf0.01")
+    val got = graft.queries.CurationQueries.mediaPipelineQuery(spark, "/root/testdata/sf0.01")
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toList

@@ -24,7 +24,7 @@ class PsiDriftSpec extends AnyFunSuite {
     rows.map { case (id, t, v) => (id, t, v, id * 1000000L, id) }
       .toDF("event_id", "event_type", "value", "ts", "user_id")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.psiDrift(spark, dir).collect()
+    val out = queries.EventQueries.psiDrift(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(out("same") == ((2L, 2L, 0.0)), s"identical halves drifted: $out")
     val (nb, nc, psi) = out("drift")
@@ -46,7 +46,7 @@ class PsiDriftSpec extends AnyFunSuite {
     rows.map { case (id, t, v) => (id, t, v, id * 1000000L, id) }
       .toDF("event_id", "event_type", "value", "ts", "user_id")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = SparkEntry.psiDrift(spark, dir).collect().head
+    val r = queries.EventQueries.psiDrift(spark, dir).collect().head
     assert(r.getLong(1) == 1L, s"n_base must exclude the below-range event: $r")
     assert(r.getLong(2) == 2L)
     // closed form with tb=1, tc=2 over B=6 bins: only bin 0 is occupied

@@ -24,7 +24,7 @@ class UserEntropySpec extends AnyFunSuite {
       ("u2", "view", 5000000L), ("u2", "view", 6000000L))
     rows.toDF("user_id", "event_type", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.userEntropy(spark, dir)
+    val out = queries.EventQueries.userEntropy(spark, dir)
       .select("bin", "n_users", "avg_entropy").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(out.contains((-1, 1L, 0.0)), s"control user missing from bin -1: $out")

@@ -181,7 +181,7 @@ class CorpusSpec extends AnyFunSuite {
 
   test("group split: every user lands in exactly one split, totals conserved") {
     val dir = "/root/testdata/sf0.001"
-    val out = graft.SparkEntry.groupSplit(spark, dir).collect()
+    val out = graft.queries.EventQueries.groupSplit(spark, dir).collect()
     assert(out.map(_.getAs[String]("split")).toSet == Set("train", "val", "test"))
     val events = graft.Tables.events(spark, dir)
     assert(out.map(_.getAs[Long]("n_events")).sum == events.count())
