@@ -439,7 +439,7 @@ object Main {
     "diff <lakeDir> <layer> <fromV> <toV> <keyCol>",
     "index-build <vectorsParquet> <indexDir> [--kind ivf|hnsw] [--cells n] [--int8] [--pq-m n] [--pq-k n] [--m n] [--ef-construction n] [--id-col c] [--vec-col c]",
     "index-update <vectorsParquet> <indexDir> [--kind ivf|hnsw] [--cells n] [--id-col c] [--vec-col c]",
-    "index-search <indexDir> <queriesParquet> <outParquet> [--kind ivf|hnsw|hnsw-pq] [--k n] [--probes n] [--ef n] [--window n] [--id-col c] [--vec-col c]"
+    "index-search <indexDir> <queriesParquet> <outParquet> [--kind ivf|hnsw|hnsw-pq] [--k n] [--probes n] [--ef n] [--window n] [--resident-rerank] [--id-col c] [--vec-col c]"
   ).map(line => line.takeWhile(_ != ' ') -> line))
 
   private def usage(): Unit = System.err.println(

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.core.Json
 import graft.expressions.CellKernels
-import graft.operators.{Guards, Similarity}
+import graft.operators.{Guards, Similarity, SimilarityKernels}
 
 /** X131 — graph-based ANN: an HNSW graph per IVF cell, stored
   * relationally (reference: indexing/faiss_builder.py:60-147 builds a
@@ -712,9 +712,9 @@ object HnswIndex {
     * shortlist with EXACT cosines against the int8 store — which stays
     * on DISK (column-pruned out of the resident cache) and is read only
     * for the probed cells, |Q|·window·nProbe candidate rows per batch.
-    * The rerank replays [[Similarity.topKExact]]'s formula and NaN
-    * placement bit-for-bit, so `efSearch ≥ cell size`, `nProbe =
-    * nCells`, `window ≥ cell size` reproduces the int8-exhaustive
+    * The rerank scores by the [[Similarity.cosine]] contract
+    * bit-for-bit, so `efSearch ≥ cell size`, `nProbe = nCells`,
+    * `window ≥ cell size` reproduces the int8-exhaustive
     * result exactly (the beam returns every node when ef ≥ n — the
     * backbone-connectivity device — and a full-window rerank is then an
     * exhaustive exact scan). */
@@ -822,34 +822,16 @@ object HnswIndex {
       Similarity.perQueryTopK(sims, k)
     } else {
       // exact rerank against the ON-DISK int8 store: probed-cell parquet
-      // read per batch (the IO the codes-only residency trades for), the
-      // bounded shortlist broadcasts, sims replay topKExact's formula
+      // read per batch (the IO the codes-only residency trades for)
       val shortlist = perCell.map(t => (t._1, t._2)).toDF("query_id", "neighbor_id")
-      import graft.expressions.VectorExprs.vec_dot
-      graft.expressions.VectorExprs.register(spark)
       val store = restored(spark.read.parquet(p.graph)
           .filter(col("cell_id").isin(probedCells: _*)))
-        .select(col("_id").as("neighbor_id"), col("_v").as("_nv"))
-        .withColumn("_nn", sqrt(vec_dot(col("_nv"), col("_nv"))))
-      val q = queries.select(col("query_id"), col("qv"))
-        .withColumn("_qn", sqrt(vec_dot(col("qv"), col("qv"))))
-      val sims = broadcast(shortlist.join(q, "query_id"))
-        .join(store, "neighbor_id")
-        .select(col("query_id"), col("neighbor_id"),
-          round(vec_dot(col("qv"), col("_nv")) / (col("_qn") * col("_nn")), 6)
-            .as("sim"))
-      Similarity.perQueryTopK(sims, k)
+        .select(col("_id").as("neighbor_id"), col("_v").as("nv"))
+      Similarity.rerank(shortlist, queries, store, k)
     }
   }
 
   // --------------------------------------------------- in-cell kernels
-
-  /** Ranking key: smaller is better. NaN cosine (zero-norm row) maps to
-    * −∞ so it ranks FIRST — the exact path's SQL-DESC NaN placement
-    * ([[Similarity.perQueryTopK]]'s sort key), replicated so the
-    * exhaustive configuration stays bit-compatible on degenerate rows. */
-  @inline private def rankKey(sim: Double): Double =
-    if (sim.isNaN) Double.NegativeInfinity else -sim
 
   @inline private def better(k1: Double, p1: Int, k2: Double, p2: Int): Boolean =
     k1 < k2 || (k1 == k2 && p1 < p2)
@@ -861,10 +843,11 @@ object HnswIndex {
     * primitive arrays — the boxed `PriorityQueue[(Double, Int)]` in the
     * build/serve inner loops allocated two objects per candidate and
     * dominated the 10⁵-vector-cell build profile. Ordering is the
-    * lexicographic (key, pos) total order (keys are [[rankKey]] outputs,
-    * never NaN), `maxHeap = true` puts the LARGEST pair at the head (the
-    * beam's worst-kept), `false` the smallest (the best candidate). Heap
-    * internals never affect results: each pop is the unique total-order
+    * lexicographic (key, pos) total order (keys are
+    * [[SimilarityKernels.cosineKey]] outputs, never NaN), `maxHeap =
+    * true` puts the LARGEST pair at the head (the beam's worst-kept),
+    * `false` the smallest (the best candidate). Heap internals never
+    * affect results: each pop is the unique total-order
     * extremum of the current set, so the pop sequence — and therefore
     * every search and build decision — is identical to the boxed form's. */
   private[index] final class KeyHeap(cap0: Int, maxHeap: Boolean) {
@@ -921,20 +904,16 @@ object HnswIndex {
     }
   }
 
-  /** Beam-search one cell for one query; returns (neighbor_id, rawSim)
-    * candidates. With ef ≥ n every node is returned (minus the query's
-    * own id) — exactness relies on the backbone-connected layer 0.
-    * Otherwise the best `k` by (sim desc, pos asc) of the beam result
-    * (positions are id-sorted, so pos asc == id asc). */
   /** The shared greedy-descent + ef-beam walk over one cell's CSR
-    * adjacency, parameterized by the (memoized) similarity: the float /
-    * int8 path scores with full dot products, the PQ path with
-    * LUT-summed asymmetric distances — the traversal itself is
+    * adjacency, parameterized by the (memoized) ranking key — the
+    * [[Similarity.cosine]] contract's [[SimilarityKernels.cosineKey]]:
+    * the float / int8 path scores with full dot products, the PQ path
+    * with LUT-summed asymmetric distances — the traversal itself is
     * identical, so both serve through one deterministic kernel.
     * Returns the beam's positions best-first. */
   private def beamWalk(n: Int, nodeBase: Array[Int], adjOff: Array[Int],
       adjData: Array[Int], entry: Int, maxLevel: Int,
-      simOf: Int => Double, ef: Int): Array[Int] = {
+      keyOf: Int => Double, ef: Int): Array[Int] = {
     @inline def segStart(pos: Int, layer: Int): Int = adjOff(nodeBase(pos) + layer)
     @inline def segEnd(pos: Int, layer: Int): Int = adjOff(nodeBase(pos) + layer + 1)
     @inline def layersOf(pos: Int): Int = nodeBase(pos + 1) - nodeBase(pos)
@@ -946,12 +925,12 @@ object HnswIndex {
       while (moved) {
         moved = false
         if (lc < layersOf(ep)) {
-          var bestK = rankKey(simOf(ep)); var bestP = ep
+          var bestK = keyOf(ep); var bestP = ep
           var e = segStart(ep, lc)
           val end = segEnd(ep, lc)
           while (e < end) {
             val cand = adjData(e)
-            val ck = rankKey(simOf(cand))
+            val ck = keyOf(cand)
             if (better(ck, cand, bestK, bestP)) { bestK = ck; bestP = cand }
             e += 1
           }
@@ -964,7 +943,7 @@ object HnswIndex {
     val visited = new java.util.BitSet(n)
     val cand = new KeyHeap(ef + 1, maxHeap = false) // head = best candidate
     val w = new KeyHeap(ef + 1, maxHeap = true) // head = worst kept
-    val epk = rankKey(simOf(ep))
+    val epk = keyOf(ep)
     visited.set(ep); cand.enqueue(epk, ep); w.enqueue(epk, ep)
     while (cand.nonEmpty) {
       val ck = cand.headKey
@@ -978,7 +957,7 @@ object HnswIndex {
           val nb = adjData(e)
           if (!visited.get(nb)) {
             visited.set(nb)
-            val nk = rankKey(simOf(nb))
+            val nk = keyOf(nb)
             val admit = w.size < ef || better(nk, nb, w.headKey, w.headPos)
             if (admit) {
               cand.enqueue(nk, nb); w.enqueue(nk, nb)
@@ -996,8 +975,14 @@ object HnswIndex {
     drained
   }
 
+  /** Beam-search one cell for one query; returns (neighbor_id, raw sim)
+    * candidates, the sim null for a zero norm product. With ef ≥ n every
+    * node is returned (minus the query's own id) — exactness relies on
+    * the backbone-connected layer 0. Otherwise the best `k` by (key,
+    * pos asc) of the beam result (positions are id-sorted, so pos asc
+    * == id asc). */
   private[graft] def searchCell(g: CellGraph, q: Array[Double], efSearch: Int,
-      k: Int, excludeId: Long): Array[(Long, Double)] = {
+      k: Int, excludeId: Long): Array[(Long, Option[Double])] = {
     val n = g.n
     if (n == 0) return Array.empty
     val dim = g.dim
@@ -1008,24 +993,25 @@ object HnswIndex {
     // memoized per-node sim; validity tracked by bitset (no O(n) prefill)
     val simArr = new Array[Double](n)
     val simSet = new java.util.BitSet(n)
-    def simOf(pos: Int): Double = {
+    def keyOf(pos: Int): Double = {
+      val denom = qn * g.norms(pos)
       if (!simSet.get(pos)) {
         var acc = 0.0
         var j = 0
         val off = pos * dim
         while (j < dim) { acc += q(j) * g.vecs(off + j); j += 1 }
-        simArr(pos) = acc / (qn * g.norms(pos))
+        simArr(pos) = acc / denom
         simSet.set(pos)
       }
-      simArr(pos)
+      SimilarityKernels.cosineKey(simArr(pos), denom)
     }
     val ef = math.max(math.max(1, k),
       math.min(efSearch.toLong, n.toLong).toInt)
     val drained = beamWalk(n, g.nodeBase, g.adjOff, g.adjData, g.entry,
-      g.maxLevel, simOf, ef)
+      g.maxLevel, keyOf, ef)
     val all = drained.iterator
       .filter(pos => g.ids(pos) != excludeId)
-      .map(pos => (g.ids(pos), simArr(pos)))
+      .map(pos => (g.ids(pos), simOrNull(simArr(pos), qn * g.norms(pos))))
       .toArray
     if (ef >= n) all else all.take(k)
   }
@@ -1040,39 +1026,41 @@ object HnswIndex {
     * full-window rerank path is exhaustive-exact over the int8 store. */
   private[graft] def searchCellPq(g: CellGraphPq, lut: Array[Double],
       qCoarse: Double, qn: Double, kSub: Int, efSearch: Int, window: Int,
-      excludeId: Long, qv: Array[Double] = null): Array[(Long, Double)] = {
+      excludeId: Long, qv: Array[Double] = null): Array[(Long, Option[Double])] = {
     val n = g.n
     if (n == 0) return Array.empty
     val m = g.m
     val simArr = new Array[Double](n)
     val simSet = new java.util.BitSet(n)
-    def simOf(pos: Int): Double = {
+    def keyOf(pos: Int): Double = {
+      val denom = qn * g.rn(pos)
       if (!simSet.get(pos)) {
         var acc = qCoarse
         var j = 0
         val off = pos * m
         while (j < m) { acc += lut(j * kSub + (g.codes(off + j) + 128)); j += 1 }
-        simArr(pos) = acc / (qn * g.rn(pos))
+        simArr(pos) = acc / denom
         simSet.set(pos)
       }
-      simArr(pos)
+      SimilarityKernels.cosineKey(simArr(pos), denom)
     }
     val ef = math.max(math.max(1, window),
       math.min(efSearch.toLong, n.toLong).toInt)
     val drained = beamWalk(n, g.nodeBase, g.adjOff, g.adjData, g.entry,
-      g.maxLevel, simOf, ef)
+      g.maxLevel, keyOf, ef)
     val kept = {
       val all = drained.filter(pos => g.ids(pos) != excludeId)
       if (ef >= n) all else all.take(window)
     }
     if (g.dim == 0 || qv == null)
-      kept.map(pos => (g.ids(pos), simArr(pos))) // ADC sims: caller reranks
+      // ADC sims: caller reranks
+      kept.map(pos => (g.ids(pos), simOrNull(simArr(pos), qn * g.rn(pos))))
     else kept.map { pos =>
       // in-cell EXACT rerank from the resident int8 store: replays
       // dequantizeInt8 (code / scale; zero-scale = zero vector) and the
-      // sequential VecDotD accumulation, denominator qn·nn — identical
-      // doubles to the disk-rerank/searchCell int8 path, so exhaustive
-      // parity carries over
+      // sequential VecDotD accumulation, the cosine contract over qn·nn —
+      // identical doubles to the disk-rerank/searchCell int8 path, so
+      // exhaustive parity carries over
       val sc = g.qscale(pos)
       var acc = 0.0
       var j = 0
@@ -1082,9 +1070,13 @@ object HnswIndex {
         acc += qv(j) * v
         j += 1
       }
-      (g.ids(pos), acc / (qn * g.nn(pos)))
+      (g.ids(pos), simOrNull(acc / (qn * g.nn(pos)), qn * g.nn(pos)))
     }
   }
+
+  /** The contract's output sim: null when the norm product is 0. */
+  @inline private def simOrNull(sim: Double, denom: Double): Option[Double] =
+    if (denom == 0.0) None else Some(sim)
 
   /** Per-cell in-memory HNSW builder. Simple top-M neighbor selection
     * (Malkov & Yashunin 2016 §4 note it performs comparably to the

@@ -289,30 +289,21 @@ object PqIndex {
   def search(spark: SparkSession, outDir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
     VectorExprs.register(spark)
-    import graft.expressions.VectorExprs.vec_dot
     val (table, model) = loadModel(spark, Paths(outDir), IndexArtifact.published(spark, outDir))
     val corpus = table.assigned
       .select(col("_id").as("neighbor_id"), col("_codes"), col("_rn"), col("cell_id"))
     val probes = queries
-      .withColumn("_qn", sqrt(vec_dot(col("qv"), col("qv"))))
+      .withColumn("_qn", Similarity.norm(col("qv")))
       .withColumn("_lut", PqExprs.pq_lut(col("qv"), model.codebooks, model.k))
       .withColumn("_pi",
         explode(graft.expressions.VectorExprs.probe_cells(col("qv"), table.cents, nProbe)))
       .withColumn("_qc",
-        vec_dot(col("qv"), get(typedlit(table.cents.map(_.toSeq).toSeq), col("_pi"))))
+        VectorExprs.vec_dot(col("qv"), get(typedlit(table.cents.map(_.toSeq).toSeq), col("_pi"))))
       .select(col("query_id"), col("_pi"), col("_lut"), col("_qc"), col("_qn"))
     val cands = table.candidates(probes, corpus)
-    // degenerate norms (zero query vector, or a code whose reconstruction
-    // is the zero vector) have UNDEFINED cosine — 0/0 = NaN would rank
-    // FIRST under perQueryTopK's SQL-DESC ordering (NaN largest), so such
-    // rows are guarded to NaN and then EXCLUDED before the top-k, leaving
-    // genuine candidates to fill the k slots
     val sims = cands.select(col("query_id"), col("neighbor_id"),
-      when(col("_qn") > 0 && col("_rn") > 0,
-        round((col("_qc") + PqExprs.pq_adc(col("_lut"), col("_codes"), model.k)) /
-          (col("_qn") * col("_rn")), 6))
-        .otherwise(lit(Double.NaN)).as("sim"))
-      .filter(not(isnan(col("sim"))))
+      Similarity.cosineSim(col("_qc") + PqExprs.pq_adc(col("_lut"), col("_codes"), model.k),
+        col("_qn"), col("_rn")).as("sim"))
     Similarity.perQueryTopK(sims, k)
   }
 
@@ -321,31 +312,15 @@ object PqIndex {
     * the standard IVFADC+refine pattern (FAISS's `IndexRefineFlat`). A
     * code quantizer cannot resolve sim gaps below its distortion, so the
     * codes pick the shortlist cheaply (m-byte candidates) and the float
-    * store is touched only for |Q|·window rows.
-    *
+    * store is touched only for |Q|·window rows ([[Similarity.rerank]]).
     * `vectors` is the primary (id, vector) store — the embeddings table
-    * or the float index's columns. Scale shape: the shortlist is
-    * |Q|·window rows (bounded, broadcast), so the vector store never
-    * shuffles and its scan prunes to the two consumed columns; the
-    * re-rank is one map-side join + codegen dot per shortlisted pair. */
+    * or the float index's columns. */
   def searchReranked(spark: SparkSession, outDir: String, queries: DataFrame,
       vectors: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int, window: Int = 50): DataFrame = {
-    import graft.expressions.VectorExprs.vec_dot
     require(window >= k, s"pq rerank: window $window must be >= k $k")
-    val shortlist = search(spark, outDir, queries, window, nProbe)
-      .select("query_id", "neighbor_id")
-    val q = queries.withColumn("_qn", sqrt(vec_dot(col("qv"), col("qv"))))
-    val pairs = broadcast(shortlist.join(q, "query_id"))
-      .join(vectors.select(col(idCol).as("neighbor_id"),
-        VF.vecAsDouble(col(vecCol)).as("_nv")), "neighbor_id")
-    // same degenerate-row exclusion as search(): a zero stored vector's
-    // cosine is undefined (0/0 = NaN ranks first under SQL-DESC ordering)
-    val sims = pairs.select(col("query_id"), col("neighbor_id"),
-      round(vec_dot(col("qv"), col("_nv")) /
-        (col("_qn") * sqrt(vec_dot(col("_nv"), col("_nv")))), 6).as("sim"))
-      .filter(not(isnan(col("sim"))))
-    Similarity.perQueryTopK(sims, k)
+    Similarity.rerank(search(spark, outDir, queries, window, nProbe), queries,
+      vectors.select(col(idCol).as("neighbor_id"), VF.vecAsDouble(col(vecCol)).as("nv")), k)
   }
 
   /** Incremental update, the VectorIndex J6/E3 contract with one honest

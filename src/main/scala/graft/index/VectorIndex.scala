@@ -93,8 +93,7 @@ object VectorIndex {
     * (FAISS likewise preprocesses vectors into the index). */
   private def withNorm(assigned: DataFrame): DataFrame = {
     graft.expressions.VectorExprs.register(assigned.sparkSession)
-    assigned.withColumn("_nn",
-      sqrt(graft.expressions.VectorExprs.vec_dot(col("_v"), col("_v"))))
+    assigned.withColumn("_nn", Similarity.norm(col("_v")))
   }
 
   /** The caller always knows the row count it just wrote (input count or
@@ -185,7 +184,6 @@ object VectorIndex {
   def search(spark: SparkSession, outDir: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
     graft.expressions.VectorExprs.register(spark)
-    import graft.expressions.VectorExprs.vec_dot
     val table = loadTable(spark, Paths(outDir))
     // corpus norms were precomputed at build time; query norms are a
     // handful of sqrt-dots — both stay one-per-vector instead of one per
@@ -195,19 +193,16 @@ object VectorIndex {
     // the expression returns positions into the sorted cell list;
     // candidates translates them back to the (possibly sparse) cell_id
     val probes = queries
-      .withColumn("_qn", sqrt(vec_dot(col("qv"), col("qv"))))
+      .withColumn("_qn", Similarity.norm(col("qv")))
       .withColumn("_pi",
         explode(graft.expressions.VectorExprs.probe_cells(col("qv"), table.cents, nProbe)))
       .select(col("query_id"), col("qv"), col("_pi"), col("_qn"))
     val cands = table.candidates(probes, corpus)
-    val sims = cands
-      .select(col("query_id"), col("neighbor_id"),
-        round(vec_dot(col("qv"), col("nv")) / (col("_qn") * col("_nn")), 6).as("sim"))
-      // a zero-norm row's cosine is undefined: 0/0 = NaN would rank FIRST
-      // under perQueryTopK's SQL-DESC ordering — exclude it instead
-      .filter(not(isnan(col("sim"))))
+    val sims = cands.select(col("query_id"), col("neighbor_id"),
+      Similarity.cosineSim(graft.expressions.VectorExprs.vec_dot(col("qv"), col("nv")),
+        col("_qn"), col("_nn")).as("sim"))
     // bounded top-k aggregate, not a ranking window: the shuffle carries
     // ≤ k rows per (query, partition) instead of every probed candidate
-    graft.operators.Similarity.perQueryTopK(sims, k)
+    Similarity.perQueryTopK(sims, k)
   }
 }

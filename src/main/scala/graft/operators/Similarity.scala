@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.VectorExprs
@@ -17,64 +17,95 @@ import graft.functions.{VectorFunctions => VF}
   */
 object Similarity {
 
+  /** The cosine ranking contract every top-k path shares — the DuckDB
+    * oracle's: sim = dot(q, n) / (‖q‖·‖n‖), ranked rounded HALF_UP to 6
+    * dp. A zero norm on either side gives a NULL sim, the oracle's
+    * `x / 0.0 → NULL` (`try_divide`, so ANSI never throws), which
+    * [[perQueryTopK]] ranks after every real sim; NaN ranks first; ties
+    * break on the ascending neighbor id. The JVM kernels ([[TopKKernel]],
+    * HNSW's in-cell scorers) apply the same rule through
+    * [[SimilarityKernels.cosineKey]]; CosineContractSpec pins every path. */
+  def cosine(dot: Column, normA: Column, normB: Column): Column =
+    try_divide(dot, normA * normB)
+
+  /** [[cosine]] rounded HALF_UP to `roundDp` places: the ranked sim. */
+  def cosineSim(dot: Column, normA: Column, normB: Column, roundDp: Int = 6): Column =
+    round(cosine(dot, normA, normB), roundDp)
+
+  /** ‖v‖ in the kernels' accumulation order ([[VectorExprs.vec_dot]];
+    * requires [[VectorExprs.register]]). */
+  def norm(v: Column): Column = sqrt(VectorExprs.vec_dot(v, v))
+
   /** Exact top-k by cosine: queries × corpus.
     * queries: (query_id, qv double[]); corpus: (neighbor_id, nv double[]).
     * The (small, guarded) query side is collected and broadcast; the
-    * corpus side runs a partition-local exact top-k KERNEL (r16): each
-    * task scores its rows against every query in a tight primitive-array
-    * loop and keeps only the per-partition top-k per query under the SAME
-    * total order as [[perQueryTopK]] (sim desc — NaN first — then
-    * neighbor id asc), so the final agg merges |Q|·partitions·k candidate
-    * rows into exactly the result the former |Q|·n broadcast-nested-loop
-    * join produced, without materializing the |Q|·n joined rows. Dot
-    * accumulation order, sqrt, and HALF_UP rounding replicate the
-    * vec_dot/round codegen bit for bit (pinned by SimilaritySpec against
-    * the join formulation). Non-(long/int/string) id types fall back to
-    * the join path. Still O(|Q|·n) compute — guarded on the QUERY side
-    * like its blocked/LSH siblings; bulk query sets belong on the IVF
-    * path. */
+    * corpus side runs a partition-local exact top-k KERNEL
+    * ([[TopKKernel]]): each task scores its rows against every query in
+    * a tight primitive-array loop and keeps only the per-partition top-k
+    * per query under the [[cosine]] contract, so the final agg merges
+    * |Q|·partitions·k candidate rows into exactly the result of
+    * [[topKExactJoin]], without materializing the |Q|·n joined rows. A
+    * null query id yields no rows; ids must both be strings or both
+    * integral. Still O(|Q|·n) compute — guarded on the QUERY side like
+    * its blocked/LSH siblings; bulk query sets belong on the IVF path. */
   def topKExact(queries: DataFrame, corpus: DataFrame, k: Int,
       roundDp: Int = 6, maxQueries: Long = 10000L): DataFrame = {
     Guards.requireAtMost(queries, maxQueries, "topKExact",
       "switch to the IVF path (VectorIndex.build + VectorIndex.search) for bulk query sets")
-    VectorExprs.register(queries.sparkSession)
+    kernelTopK(queries.select(col("query_id"), col("qv")),
+      corpus.select(col("neighbor_id"), col("nv")), k, roundDp)
+  }
+
+  /** Collect the query side (id, vector[, label]) and run [[TopKKernel]]
+    * over the spread corpus side (id, vector[, label]). */
+  private def kernelTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+      roundDp: Int): DataFrame = {
     import org.apache.spark.sql.types._
-    val idTypes = Seq(queries.schema("query_id").dataType,
-      corpus.schema("neighbor_id").dataType)
-    val kernelTypes = idTypes.forall {
-      case StringType | LongType | IntegerType => true
-      case _ => false
-    }
-    if (!kernelTypes) return topKExactJoin(queries, corpus, k, roundDp)
-    val qRows = queries.select(col("query_id"), col("qv")).collect()
-    if (qRows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      return topKExactJoin(queries, corpus, k, roundDp) // null query id/vec: join semantics
-    val cands = TopKKernel.partitionTopK(
-      graft.core.Par.spread(corpus).select(col("neighbor_id"), col("nv")),
-      qRows, idTypes.head, idTypes(1), k, roundDp)
+    val idTypes = Seq(queries.schema.head.dataType, corpus.schema.head.dataType)
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    require(idTypes.forall(_ == StringType) || idTypes.forall(integral),
+      "top-k ids must both be strings or both integral (byte, short, int, long); " +
+        s"got query ${idTypes.head.simpleString}, neighbor ${idTypes(1).simpleString}")
+    if (queries.schema.length == 3)
+      require(queries.schema(2).dataType == corpus.schema(2).dataType,
+        s"query and neighbor labels must share a type; got " +
+          s"${queries.schema(2).dataType.simpleString}, ${corpus.schema(2).dataType.simpleString}")
+    val qRows = queries.filter(col("query_id").isNotNull).collect()
+    val cands = TopKKernel.partitionTopK(graft.core.Par.spread(corpus), qRows,
+      idTypes.head, idTypes(1), k, roundDp)
     perQueryTopK(cands, k)
   }
 
-  /** The retired broadcast-nested-loop formulation of [[topKExact]] —
-    * fallback for exotic id types and the equivalence oracle the kernel
-    * path is spec-pinned against. */
+  /** The broadcast-nested-loop formulation of [[topKExact]]: the
+    * reference CosineContractSpec and SimilaritySpec pin the kernel
+    * paths against. */
   private[graft] def topKExactJoin(queries: DataFrame, corpus: DataFrame,
       k: Int, roundDp: Int = 6): DataFrame = {
     VectorExprs.register(queries.sparkSession)
-    // norms once per vector (columns, so they survive the join), codegen
-    // dot per pair: dot/(sqrt·sqrt) keeps oracle-bit-exact association.
-    // The |Q|·n dot products all run in the corpus-side stage (the query
-    // side broadcasts), so that stage must not inherit a 1-split scan's
-    // parallelism — spread it first (no-op on well-split inputs).
-    val q = queries.withColumn("_qn", sqrt(VectorExprs.vec_dot(col("qv"), col("qv"))))
-    val c = graft.core.Par.spread(corpus)
-      .withColumn("_nn", sqrt(VectorExprs.vec_dot(col("nv"), col("nv"))))
+    val q = queries.withColumn("_qn", norm(col("qv")))
+    val c = corpus.withColumn("_nn", norm(col("nv")))
     val joined = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-    val sims = joined.select(
-      col("query_id"), col("neighbor_id"),
-      round(VectorExprs.vec_dot(col("qv"), col("nv")) / (col("_qn") * col("_nn")), roundDp)
-        .as("sim"))
-    perQueryTopK(sims, k)
+    perQueryTopK(joined.select(col("query_id"), col("neighbor_id"),
+      cosineSim(VectorExprs.vec_dot(col("qv"), col("nv")), col("_qn"), col("_nn"), roundDp)
+        .as("sim")), k)
+  }
+
+  /** Exact rerank of a (query_id, neighbor_id) shortlist: the bounded
+    * shortlist joins the query vectors (query_id, qv) and broadcasts
+    * onto the vector store (neighbor_id, nv double[]), so the store
+    * never shuffles and its scan prunes to the two columns; each pair
+    * is scored by the [[cosine]] contract and ranked by
+    * [[perQueryTopK]]. The refine step of the PQ and HNSW+PQ serving
+    * paths (FAISS's `IndexRefineFlat`). */
+  def rerank(shortlist: DataFrame, queries: DataFrame, store: DataFrame,
+      k: Int): DataFrame = {
+    VectorExprs.register(queries.sparkSession)
+    val q = queries.select(col("query_id"), col("qv")).withColumn("_qn", norm(col("qv")))
+    val pairs = broadcast(shortlist.select("query_id", "neighbor_id").join(q, "query_id"))
+      .join(store.select(col("neighbor_id"), col("nv")), "neighbor_id")
+    perQueryTopK(pairs.select(col("query_id"), col("neighbor_id"),
+      cosineSim(VectorExprs.vec_dot(col("qv"), col("nv")), col("_qn"), norm(col("nv")))
+        .as("sim")), k)
   }
 
   /** Per-query top-k over a (query_id, neighbor_id, sim) frame via the
@@ -86,8 +117,7 @@ object Similarity {
     * `row_number over (sim DESC, id ASC)` bit-for-bit: the sort key maps
     * NaN sims first (SQL DESC puts NaN largest) and null sims last
     * (DESC NULLS LAST), ties break on the ascending neighbor id, and the
-    * original sim rides along unmapped. Shared by the exact, IVF, and
-    * hard-negative top-k paths. */
+    * original sim rides along unmapped. Shared by every top-k path. */
   def perQueryTopK(sims: DataFrame, k: Int): DataFrame = {
     val sortKey = when(isnan(col("sim")), lit(Double.NegativeInfinity))
       .when(col("sim").isNull, lit(Double.PositiveInfinity))
@@ -107,27 +137,17 @@ object Similarity {
     * "hard" negatives a contrastive objective learns most from (random
     * negatives are trivially separable).
     *
-    * Same scale shape as [[topKExact]]: the bounded query side
-    * broadcasts, the corpus never shuffles (the label predicate rides in
-    * the join condition, so disqualified pairs die before the sim
-    * projection), and the per-query top-k is the size-capped heap
-    * aggregate. queries: (query_id, qv, qlabel); corpus: (neighbor_id,
-    * nv, nlabel). */
+    * Same kernel as [[topKExact]], with the label predicate inside its
+    * loop: a pair qualifies only when both labels are non-null and
+    * differ (the SQL `c.label <> q.label`), so disqualified pairs are
+    * never scored and the corpus never shuffles. queries: (query_id, qv,
+    * qlabel); corpus: (neighbor_id, nv, nlabel), labels of one type. */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int,
       roundDp: Int = 6, maxQueries: Long = 10000L): DataFrame = {
     Guards.requireAtMost(queries, maxQueries, "hardNegatives",
       "mine hard negatives in IVF-bucketed batches for bulk query sets")
-    VectorExprs.register(queries.sparkSession)
-    val q = queries.withColumn("_qn", sqrt(VectorExprs.vec_dot(col("qv"), col("qv"))))
-    val c = graft.core.Par.spread(corpus)
-      .withColumn("_nn", sqrt(VectorExprs.vec_dot(col("nv"), col("nv"))))
-    val joined = broadcast(q).join(c,
-      col("query_id") =!= col("neighbor_id") && col("qlabel") =!= col("nlabel"))
-    val sims = joined.select(
-      col("query_id"), col("neighbor_id"),
-      round(VectorExprs.vec_dot(col("qv"), col("nv")) / (col("_qn") * col("_nn")), roundDp)
-        .as("sim"))
-    perQueryTopK(sims, k)
+    kernelTopK(queries.select(col("query_id"), col("qv"), col("qlabel")),
+      corpus.select(col("neighbor_id"), col("nv"), col("nlabel")), k, roundDp)
   }
 
   /** X85 embedding-space benchmark decontamination — the semantic sibling
@@ -149,13 +169,13 @@ object Similarity {
     Guards.requireAtMost(evalSet, maxEval, "decontamByEmbedding",
       "an eval benchmark is bounded; route corpus-vs-corpus similarity through cosinePairsAboveIvf")
     VectorExprs.register(corpus.sparkSession)
-    val ev = evalSet.withColumn("_en", sqrt(VectorExprs.vec_dot(col("eval_vec"), col("eval_vec"))))
-    val c = graft.core.Par.spread(corpus)
-      .withColumn("_cn", sqrt(VectorExprs.vec_dot(col(vecCol), col(vecCol))))
+    val ev = evalSet.withColumn("_en", norm(col("eval_vec")))
+    val c = graft.core.Par.spread(corpus).withColumn("_cn", norm(col(vecCol)))
     c.crossJoin(broadcast(ev))
       .select(col(idCol), col("eval_id"),
-        (VectorExprs.vec_dot(col(vecCol), col("eval_vec")) / (col("_cn") * col("_en"))).as("sim"))
-      .filter(col("sim") >= tau)
+        cosine(VectorExprs.vec_dot(col(vecCol), col("eval_vec")), col("_cn"), col("_en"))
+          .as("sim"))
+      .filter(col("sim") >= tau) // a null (zero-norm) sim is never flagged
       // argmax as min(struct): (−sim, eval_id) ascending == (sim desc,
       // eval_id asc) — one agg, map-side combinable, no window
       .groupBy(col(idCol))
@@ -269,33 +289,6 @@ object Similarity {
       get(typedlit(cellIds), idx).as("cell_id"))
   }
 
-  /** IVF search: route each query to its nProbe nearest cells, join only
-    * those cells' vectors, rank within query. Same output shape as
-    * [[topKExact]]; recall < 1 by design (measured in tests). Probe
-    * routing is map-only ([[VectorExprs.probe_cells]] — the centroid
-    * model rides into codegen like the assignment side), not a
-    * crossJoin + window, which would add a shuffle per search. */
-  def topKIvf(spark: SparkSession, queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    val assigned = assignToNearest(
-      corpus.select(col("neighbor_id").as("_id"), col("nv").as("_v")), centroids)
-      .select(col("_id").as("neighbor_id"), col("_v").as("nv"), col("cell_id"))
-    val centRows = centroids.select(col("cell_id"), col("centroid")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val qCells = queries
-      .withColumn("_pi",
-        explode(VectorExprs.probe_cells(col("qv"), centRows.map(_._2), nProbe)))
-      .select(col("query_id"), col("qv"),
-        get(typedlit(centRows.map(_._1).toSeq), col("_pi")).as("cell_id"))
-    val candidates = broadcast(qCells).join(assigned, "cell_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val sims = candidates.select(
-      col("query_id"), col("neighbor_id"),
-      round(VF.cosine(col("qv"), col("nv")), 6).as("sim"))
-    perQueryTopK(sims, k)
-  }
-
   /** Exact global top-k most-similar pairs by cosine — blocked all-pairs.
     *
     * The naive shape (crossJoin + per-pair expression) materializes an
@@ -333,7 +326,7 @@ object Similarity {
     Guards.requireAtMost(df, maxRows, "topPairsExactBlocked",
       "on a duplicate-dense corpus collapse exact twins first via " +
         "topPairsExactCollapsed (preserves the exact contract); otherwise " +
-        "switch to the IVF path (trainIvfCentroids + topKIvf) for the approximate regime")
+        "switch to the IVF path (VectorIndex.build + VectorIndex.search) for the approximate regime")
     blockedTopCore(
       df.select(col(idCol).cast("long").as("_id"), VF.vecAsDouble(col(vecCol)).as("_v")),
       k, nBlocks, roundDp)
@@ -414,7 +407,7 @@ object Similarity {
       .localCheckpoint(false)
     val reps = grouped.select(col("_rep").as("_id"), col("_v"))
     Guards.requireAtMost(reps, maxReps, "topPairsExactCollapsed",
-      "switch to the IVF path (trainIvfCentroids + topKIvf) for the approximate regime")
+      "switch to the IVF path (VectorIndex.build + VectorIndex.search) for the approximate regime")
     val repTop = blockedTopCore(reps, k, nBlocks, roundDp)
     // cross-group: every member of A × every member of B at the reps'
     // sim; ids re-ordered (members of a later group can carry smaller
@@ -451,13 +444,12 @@ object Similarity {
     val a = base.select((blockCols.map(col) :+ col(idCol).as("id_a") :+ col("_v").as("va")): _*)
     val b = base.select((blockCols.map(col) :+ col(idCol).as("id_b") :+ col("_v").as("vb")): _*)
     VectorExprs.register(df.sparkSession)
-    val an = a.withColumn("_na", sqrt(VectorExprs.vec_dot(col("va"), col("va"))))
-    val bn = b.withColumn("_nb", sqrt(VectorExprs.vec_dot(col("vb"), col("vb"))))
+    val an = a.withColumn("_na", norm(col("va")))
+    val bn = b.withColumn("_nb", norm(col("vb")))
     val joined = if (blockCols.nonEmpty) an.join(bn, blockCols) else an.crossJoin(bn)
     joined.filter(col("id_a") < col("id_b"))
-      .withColumn("sim",
-        round(VectorExprs.vec_dot(col("va"), col("vb")) / (col("_na") * col("_nb")), 6))
-      .filter(col("sim") >= threshold)
+      .withColumn("sim", cosineSim(VectorExprs.vec_dot(col("va"), col("vb")), col("_na"), col("_nb")))
+      .filter(col("sim") >= threshold) // a null (zero-norm) sim never pairs
       .select((blockCols.map(col) :+ col("id_a") :+ col("id_b") :+ col("sim")): _*)
   }
 
@@ -621,9 +613,8 @@ object Similarity {
     val b = sums.select(col("_g").as("source_b"), col("_c").as("_cb"))
     a.join(b, col("source_a") < col("source_b"))
       .select(col("source_a"), col("source_b"),
-        round(VectorExprs.vec_dot(col("_ca"), col("_cb")) /
-          (sqrt(VectorExprs.vec_dot(col("_ca"), col("_ca"))) *
-            sqrt(VectorExprs.vec_dot(col("_cb"), col("_cb")))), 6).as("cos_sim"))
+        cosineSim(VectorExprs.vec_dot(col("_ca"), col("_cb")), norm(col("_ca")), norm(col("_cb")))
+          .as("cos_sim"))
       .orderBy("source_a", "source_b")
   }
 
@@ -700,6 +691,19 @@ object SimilarityKernels {
     }
   }
 
+  /** Ranking key of a null sim under [[cosineKey]]: after every real sim. */
+  val NullKey: Double = Double.PositiveInfinity
+
+  /** The [[Similarity.cosine]] contract as a JVM ranking key, smaller =
+    * better, for `sim` = dot / `denom` with `denom` = ‖q‖·‖n‖: a zero
+    * `denom` is the contract's null sim ([[NullKey]]), NaN ranks first
+    * (−∞), any other sim keys as −sim. Callers break ties on the
+    * ascending neighbor id. */
+  @inline def cosineKey(sim: Double, denom: Double): Double =
+    if (denom == 0.0) NullKey
+    else if (java.lang.Double.isNaN(sim)) Double.NegativeInfinity
+    else -sim
+
   /** Spark/DuckDB-compatible HALF_UP decimal rounding of a double. */
   def roundHalfUp(x: Double, dp: Int): Double =
     if (x.isNaN || x.isInfinite) x
@@ -772,7 +776,9 @@ object SimilarityKernels {
     }
   }
 
-  private def dot(a: Array[Double], b: Array[Double]): Double = {
+  /** The [[graft.expressions.VecDotD]] loop: ascending index order over
+    * min(|a|, |b|) elements. */
+  private[operators] def dot(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var acc = 0.0; var i = 0
     while (i < n) { acc += a(i) * b(i); i += 1 }

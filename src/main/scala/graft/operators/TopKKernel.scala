@@ -1,43 +1,38 @@
 package graft.operators
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Partition-local exact top-k scoring kernel behind
-  * [[Similarity.topKExact]] (r16).
+  * [[Similarity.topKExact]] and [[Similarity.hardNegatives]].
   *
   * Replaces the |Q|·n broadcast-nested-loop join + full-stream heap agg
   * with a tight per-task loop over primitive arrays: each corpus
   * partition scores its rows against every (collected, bounded) query
   * and keeps only the top-k candidates per query under the SAME total
-  * order [[Similarity.perQueryTopK]] uses — rounded sim desc with NaN
-  * first and null last, ties on ascending neighbor id (UTF8 byte order
-  * for strings, i.e. Spark's own string ordering). Merging per-partition
-  * top-k supersets through the unchanged final agg therefore reproduces
-  * the join formulation's output EXACTLY (spec-pinned):
+  * order [[Similarity.perQueryTopK]] uses, so merging the per-partition
+  * top-k supersets through that final agg reproduces the join
+  * formulation ([[Similarity.topKExactJoin]]) EXACTLY (spec-pinned by
+  * CosineContractSpec). Per pair it applies the cosine contract
+  * ([[Similarity.cosine]], [[SimilarityKernels.cosineKey]]):
   *
   *  - dot products accumulate in ascending index order over
   *    min(|a|,|b|) elements — the [[graft.expressions.VecDotD]] loop;
-  *  - sim = dot / (qn · nn), then HALF_UP rounding via
-  *    BigDecimal.valueOf — the Round expression's double path (NaN and
-  *    infinities pass through unrounded, as Round does);
-  *  - rows with a NULL vector keep join semantics: their sim is null and
-  *    ranks last, so each partition forwards its k+1 smallest null-vector
-  *    ids (superset of anything the global top-k could admit);
-  *  - rows whose id equals the query's are skipped (the join condition).
+  *  - sim = dot / (qn · nn), then HALF_UP rounding
+  *    ([[SimilarityKernels.roundHalfUp]], the Round expression's double
+  *    path); NaN ranks first;
+  *  - a zero norm product, a null vector on either side, gives a null
+  *    sim that ranks after every real sim — offered to the heap like any
+  *    candidate, with the worst key;
+  *  - ties break on the ascending neighbor id (UTF8 byte order for
+  *    strings, i.e. Spark's own string ordering);
+  *  - rows whose id equals the query's are skipped (the join condition),
+  *    and with labels a pair qualifies only when both labels are
+  *    non-null and differ (the SQL `c.label <> q.label`).
   *
-  * One documented divergence: a ZERO-norm vector makes the ANSI join
-  * formulation throw DIVIDE_BY_ZERO (0.0 divisor), while this kernel's
-  * scalar division yields NaN (ranked first, like any NaN sim). No
-  * declared query or bench corpus produces zero-norm vectors — the
-  * oracle pins that — so the divergence is unreachable there; where it
-  * would be reached, a result beats an engine error.
-  *
-  * A cheap pre-round reject (raw sim more than half an ulp-of-scale
-  * below the current worst kept key) skips the BigDecimal allocation for
-  * the overwhelming majority of pairs.
+  * A cheap pre-round reject (raw sim more than one unit of the rounding
+  * scale below the current worst kept sim) skips the BigDecimal
+  * allocation for the overwhelming majority of pairs.
   */
 private[operators] object TopKKernel {
 
@@ -53,43 +48,35 @@ private[operators] object TopKKernel {
     x.length - y.length
   }
 
-  /** Spark Round(double, dp) exactly: NaN/Inf pass through, else
-    * BigDecimal.valueOf (Double.toString semantics) + HALF_UP. */
-  private def roundLike(x: Double, dp: Int): Double =
-    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
-    else JBigDecimal.valueOf(x).setScale(dp, RoundingMode.HALF_UP).doubleValue()
-
-  /** corpus: (neighbor_id, nv array<double>); qRows: collected
-    * (query_id, qv) rows, none null. Returns (query_id, neighbor_id,
-    * sim) candidate rows — ≤ (k + k+1)·|Q| per partition — for
+  /** corpus: (neighbor_id, nv array<double>[, nlabel]); qRows: collected
+    * (query_id, qv[, qlabel]) rows with non-null ids, the label column
+    * present on both sides or neither. Returns (query_id, neighbor_id,
+    * sim) candidate rows — ≤ k·|Q| per partition — for
     * [[Similarity.perQueryTopK]]. Id types must both be string or both
     * be integral (caller-checked). */
   def partitionTopK(corpus: DataFrame, qRows: Array[Row],
       qIdType: DataType, nIdType: DataType, k: Int, roundDp: Int): DataFrame = {
     val spark = corpus.sparkSession
     val stringIds = qIdType == StringType
+    val labeled = corpus.schema.length == 3
     val eQIds: Array[AnyRef] = qRows.map(_.get(0).asInstanceOf[AnyRef])
-    val qVecs: Array[Array[Double]] = qRows.map(_.getSeq[Double](1).toArray)
-    val qNorms: Array[Double] = qVecs.map { v =>
-      var acc = 0.0; var i = 0
-      while (i < v.length) { acc += v(i) * v(i); i += 1 }
-      math.sqrt(acc)
-    }
-    val bQIds = spark.sparkContext.broadcast(eQIds)
-    val bVecs = spark.sparkContext.broadcast(qVecs)
-    val bNorms = spark.sparkContext.broadcast(qNorms)
+    // a null query vector scores null against every row
+    val qVecs: Array[Array[Double]] =
+      qRows.map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)
+    val qNorms: Array[Double] = qVecs.map(v => if (v == null) 0.0 else norm(v))
+    val qLabels: Array[AnyRef] =
+      if (labeled) qRows.map(_.get(2).asInstanceOf[AnyRef]) else null
+    val bQ = spark.sparkContext.broadcast((eQIds, qVecs, qNorms, qLabels))
     val outSchema = StructType(Seq(
       StructField("query_id", qIdType, nullable = true),
       StructField("neighbor_id", nIdType, nullable = true),
       StructField("sim", DoubleType, nullable = true)))
-    // round(x) can exceed x by at most half an ulp-of-scale; anything
-    // further below the current worst kept key cannot enter the heap
+    // round(x) exceeds x by at most half a unit of the rounding scale; a
+    // raw sim a full unit below the current worst kept sim cannot enter
     val rejectMargin = math.pow(10.0, -roundDp)
 
     val out = corpus.mapPartitions { it =>
-      val qIds = bQIds.value
-      val vecs = bVecs.value
-      val norms = bNorms.value
+      val (qIds, vecs, norms, labels) = bQ.value
       val nQ = qIds.length
 
       def cmpId(a: AnyRef, b: AnyRef): Int =
@@ -99,11 +86,12 @@ private[operators] object TopKKernel {
       def idEq(a: AnyRef, b: AnyRef): Boolean =
         if (stringIds) a == b
         else a.asInstanceOf[Number].longValue() == b.asInstanceOf[Number].longValue()
-      // heap root = WORST kept candidate: smallest key, ties LARGEST id
+      // keys are cosineKey outputs (smaller = better); heap root = WORST
+      // kept candidate: largest key, ties LARGEST id
       def worse(ka: Double, ia: AnyRef, kb: Double, ib: AnyRef): Boolean =
-        ka < kb || (ka == kb && cmpId(ia, ib) > 0)
+        ka > kb || (ka == kb && cmpId(ia, ib) > 0)
 
-      // per-query bounded min-heaps (root = worst kept)
+      // per-query bounded max-heaps (root = worst kept)
       val sizes = new Array[Int](nQ)
       val keys = Array.fill(nQ)(new Array[Double](k))
       val hIds = Array.fill(nQ)(new Array[AnyRef](k))
@@ -150,46 +138,36 @@ private[operators] object TopKKernel {
         }
       }
 
-      // k+1 smallest null-vector ids (ascending) — superset of any null
-      // rows the global top-k could admit for any query
-      val nullIds = new java.util.ArrayList[AnyRef]()
-      def offerNull(id: AnyRef): Unit = {
-        var pos = 0
-        while (pos < nullIds.size() && cmpId(nullIds.get(pos), id) < 0) pos += 1
-        if (pos < k + 1) {
-          nullIds.add(pos, id)
-          if (nullIds.size() > k + 1) nullIds.remove(k + 1)
-        }
-      }
-
       it.foreach { row =>
-        val nid = if (row.isNullAt(0)) null else row.get(0).asInstanceOf[AnyRef]
-        if (nid != null) { // null neighbor id never satisfies the join condition
-          if (row.isNullAt(1)) offerNull(nid)
-          else {
-            val nv = row.getSeq[Double](1).toArray
-            var acc = 0.0; var i = 0
-            while (i < nv.length) { acc += nv(i) * nv(i); i += 1 }
-            val nn = math.sqrt(acc)
-            var q = 0
-            while (q < nQ) {
-              if (!idEq(qIds(q), nid)) {
-                val qv = vecs(q)
-                val n = math.min(qv.length, nv.length)
-                var dot = 0.0; i = 0
-                while (i < n) { dot += qv(i) * nv(i); i += 1 }
-                val raw = dot / (norms(q) * nn)
-                val rawKey =
-                  if (java.lang.Double.isNaN(raw)) Double.PositiveInfinity else raw
-                if (sizes(q) < k || !(rawKey + rejectMargin < keys(q)(0))) {
-                  val sim = roundLike(raw, roundDp)
-                  val key =
-                    if (java.lang.Double.isNaN(sim)) Double.PositiveInfinity else sim
-                  offer(q, key, nid, java.lang.Double.valueOf(sim))
+        // a null neighbor id never satisfies the join condition
+        if (!row.isNullAt(0)) {
+          val nid = row.get(0).asInstanceOf[AnyRef]
+          val nv = if (row.isNullAt(1)) null else row.getSeq[Double](1).toArray
+          val nn = if (nv == null) 0.0 else norm(nv)
+          val nLabel = if (labeled) row.get(2).asInstanceOf[AnyRef] else null
+          var q = 0
+          while (q < nQ) {
+            val qualifies = !idEq(qIds(q), nid) &&
+              (!labeled || (nLabel != null && labels(q) != null && nLabel != labels(q)))
+            if (qualifies) {
+              val qv = vecs(q)
+              if (qv == null || nv == null) offer(q, SimilarityKernels.NullKey, nid, null)
+              else {
+                val denom = norms(q) * nn
+                val raw = SimilarityKernels.dot(qv, nv) / denom
+                val rawKey = SimilarityKernels.cosineKey(raw, denom)
+                if (sizes(q) < k || !(rawKey - rejectMargin > keys(q)(0))) {
+                  if (rawKey == SimilarityKernels.NullKey)
+                    offer(q, rawKey, nid, null)
+                  else {
+                    val sim = SimilarityKernels.roundHalfUp(raw, roundDp)
+                    offer(q, SimilarityKernels.cosineKey(sim, denom), nid,
+                      java.lang.Double.valueOf(sim))
+                  }
                 }
               }
-              q += 1
             }
+            q += 1
           }
         }
       }
@@ -202,16 +180,12 @@ private[operators] object TopKKernel {
           rows += Row(qIds(q), hIds(q)(j), hSims(q)(j))
           j += 1
         }
-        var p = 0
-        while (p < nullIds.size()) {
-          if (!idEq(qIds(q), nullIds.get(p)))
-            rows += Row(qIds(q), nullIds.get(p), null)
-          p += 1
-        }
         q += 1
       }
       rows.result().iterator
     }(Encoders.row(outSchema))
     out.toDF("query_id", "neighbor_id", "sim")
   }
+
+  private def norm(v: Array[Double]): Double = math.sqrt(SimilarityKernels.dot(v, v))
 }

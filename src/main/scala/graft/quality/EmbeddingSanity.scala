@@ -22,7 +22,7 @@ object EmbeddingSanity {
     segments.join(
         embeddings.select(col("artifact_id").as(idCol), col("embedding")), idCol)
       .withColumn("v", VF.vecAsDouble(col("embedding")))
-      .withColumn("nrm", sqrt(VectorExprs.vec_dot(col("v"), col("v"))))
+      .withColumn("nrm", Similarity.norm(col("v")))
   }
 
   /** Deterministic sample of n rows by hashed id. */
@@ -56,7 +56,8 @@ object EmbeddingSanity {
     left.join(right, "pair")
       .withColumn("jac", HashFunctions.sorted_intersect_count(col("ha"), col("hb")).cast("double")
         / (col("sz_a") + col("sz_b") - HashFunctions.sorted_intersect_count(col("ha"), col("hb"))))
-      .withColumn("cos", VectorExprs.vec_dot(col("va"), col("vb")) / (col("na") * col("nb")))
+      .withColumn("cos", Similarity.cosine(VectorExprs.vec_dot(col("va"), col("vb")),
+        col("na"), col("nb")))
       .agg(count(lit(1)).as("n_pairs"),
         round(corr(col("jac"), col("cos")), 6).as("lexical_embedding_corr"))
   }

@@ -151,7 +151,6 @@ object Registry {
     Query("q94_source_overlap", spread(Corpus.sourceOverlap(_)), Sql(sourceOverlapSql)),
     Query("q95_contam_spans", contamSpans, Sql(contamSpansSql)),
     Query("q96_nb_quality", nbQuality, Sql(nbQualitySql)),
-    // q97 still ranks through a broadcast nested-loop join, not TopKKernel
     Query("q97_hard_negatives", hardNegativesQuery, Sql(hardNegativesSql)),
     Query("q98_norm_dedup", spread(Dedup.normalizedDupAudit(_, col("text"), col("source"))),
       Sql(normDedupAuditSql)),

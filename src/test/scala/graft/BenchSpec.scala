@@ -16,11 +16,13 @@ class BenchSpec extends AnyFunSuite {
       // throws when counted, like a query whose plan fails at run time
       Query("q02_boom", (s, _) => s.range(1).toDF().where("raise_error('boom') IS NULL"), none),
       // throws while the frame is built
-      Query("q03_unbuilt", (_, _) => throw new IllegalStateException("no frame"), none))
+      Query("q03_unbuilt", (_, _) => throw new IllegalStateException("no frame"), none),
+      // throws only where its output column is evaluated, which a count prunes
+      Query("q04_projected", (s, _) => s.range(1).selectExpr("raise_error('boom') AS x"), none))
     val json = Bench.queriesJson(spark, "/no/such/dir", registry)
     val timed = json.get("queries").fieldNames.asScala.toSeq
     assert(timed == Seq("q01_ok"))
-    assert(json.get("failed").elements.asScala.map(_.asText).toSeq == Seq("q02_boom", "q03_unbuilt"))
+    assert(json.get("failed").elements.asScala.map(_.asText).toSeq == Seq("q02_boom", "q03_unbuilt", "q04_projected"))
     assert(json.get("total").asDouble == json.get("queries").get("q01_ok").asDouble)
   }
 

@@ -68,19 +68,34 @@ class SimilaritySpec extends AnyFunSuite {
       "kernel and join differ when null-vector rows enter the top-k")
   }
 
-  test("kernel topKExact ranks zero-norm (NaN-sim) corpus rows first (r16)") {
-    // the ANSI join formulation THROWS on a 0.0 norm divisor, so there is
-    // nothing to be equivalent to — pin the kernel's documented behavior:
-    // 0/0 = NaN sim sorts first (SQL DESC puts NaN largest), ties by id
-    val c = Seq(("za", Seq(0.0, 0.0)), ("nb", Seq(0.9, 0.1)))
+  test("kernel topKExact = join on zero-norm rows: null sim, ranked last") {
+    // the cosine contract: a zero norm product gives a null sim (the
+    // oracle's x / 0.0 → NULL, try_divide on the join side) that ranks
+    // after every real sim, ties by id — for a zero corpus row and a
+    // zero query alike; a null query vector scores null too, and a null
+    // query id yields no rows (the join condition is never true)
+    val c = Seq(("za", Seq(0.0, 0.0)), ("nb", Seq(0.9, 0.1)), ("nc", Seq(0.0, 1.0)))
       .toDF("neighbor_id", "nv")
-    val q = Seq(("qa", Seq(1.0, 0.0))).toDF("query_id", "qv")
-    val out = Similarity.topKExact(q, c, k = 2)
-      .orderBy("rnk").collect()
-    assert(out.length == 2)
-    assert(out(0).getAs[String]("neighbor_id") == "za" &&
-      out(0).getAs[Double]("sim").isNaN)
-    assert(out(1).getAs[String]("neighbor_id") == "nb")
+    val q = Seq(("qa", Seq(1.0, 0.0)), ("qz", Seq(0.0, 0.0)),
+      ("qn", null.asInstanceOf[Seq[Double]]), (null, Seq(1.0, 0.0))).toDF("query_id", "qv")
+    val kern = Similarity.topKExact(q, c, k = 3)
+    val join = Similarity.topKExactJoin(q, c, k = 3)
+    assert(kern.exceptAll(join).count() == 0 && join.exceptAll(kern).count() == 0,
+      "kernel and join top-k differ on zero-norm rows")
+    val out = kern.orderBy("query_id", "rnk").collect()
+      .map(r => (r.getAs[String]("query_id"), r.getAs[String]("neighbor_id"),
+        Option(r.getAs[java.lang.Double]("sim")).map(_.doubleValue)))
+    assert(out.toSeq == Seq(("qa", "nb", Some(0.993884)), ("qa", "nc", Some(0.0)),
+      ("qa", "za", None), ("qn", "nb", None), ("qn", "nc", None), ("qn", "za", None),
+      ("qz", "nb", None), ("qz", "nc", None), ("qz", "za", None)))
+  }
+
+  test("topKExact refuses ids that are neither strings nor integral, naming the supported types") {
+    val err = intercept[IllegalArgumentException] {
+      Similarity.topKExact(queries.withColumn("query_id", col("query_id").cast("double")),
+        corpus.withColumn("neighbor_id", col("neighbor_id").cast("double")), k = 5)
+    }
+    assert(err.getMessage.contains("strings") && err.getMessage.contains("integral"))
   }
 
   test("top-1 neighbor of a clustered vector is from the same cluster") {
@@ -117,9 +132,14 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  private lazy val ivfDir = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sim_ivf").toString + "/idx"
+    graft.index.VectorIndex.build(vectors, "vec_id", "embedding", nCells = 4, dir)
+    dir
+  }
+
   test("IVF with all cells probed equals exact search") {
-    val cents = Similarity.trainIvfCentroids(vectors, "vec_id", "embedding", nCells = 4)
-    val ivf = Similarity.topKIvf(spark, queries, corpus, cents, k = 5, nProbe = 4)
+    val ivf = graft.index.VectorIndex.search(spark, ivfDir, queries, k = 5, nProbe = 4)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.topKExact(queries, corpus, k = 5)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -127,8 +147,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF with 1 probe achieves >= 0.6 recall on clustered data") {
-    val cents = Similarity.trainIvfCentroids(vectors, "vec_id", "embedding", nCells = 4)
-    val ivf = Similarity.topKIvf(spark, queries, corpus, cents, k = 5, nProbe = 1)
+    val ivf = graft.index.VectorIndex.search(spark, ivfDir, queries, k = 5, nProbe = 1)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = Similarity.topKExact(queries, corpus, k = 5)
       .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
