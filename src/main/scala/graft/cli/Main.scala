@@ -271,10 +271,12 @@ object Main {
         // --evolve permits ADDITIVE new columns (older partitions read
         // null in them — Delta's mergeSchema at partition-COW grain)
         val Array(base, layer, updatesPath, keyCol, partCol) = positional(args, 5)
-        val dir = graft.ingest.Merge.merge(spark, base, layer,
+        graft.ingest.Merge.merge(spark, base, layer,
           spark.read.parquet(updatesPath), Seq(keyCol), partCol,
-          allowSchemaEvolution = args.contains("--evolve"))
-        println(s"merged $updatesPath into $layer -> $dir")
+          allowSchemaEvolution = args.contains("--evolve")) match {
+          case Some(dir) => println(s"merged $updatesPath into $layer -> $dir")
+          case None => println(s"$updatesPath is empty; $layer unchanged")
+        }
 
       case "diff" =>
         val Array(base, layer, v1, v2, keyCol) = positional(args, 5)

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * results are bit-identical to any engine that sums left-to-right in
   * double (the DuckDB oracle does).
   *
-  * Semantics match the reference's cosine/L2 helpers
+  * Semantics match the reference's L2 helpers
   * (reference: src/lakehouse/aggregation/beats.py:198-217,
-  * src/lakehouse/quality/metrics/embedding.py:310-405,976-998), including
-  * the clipped-to-[0,1] cosine variant quirk (beats.py:217).
+  * src/lakehouse/quality/metrics/embedding.py:310-405,976-998). Cosine
+  * lives in one place, [[graft.operators.Similarity.cosine]], so every
+  * path gives a zero vector the same NULL sim.
   */
 object VectorFunctions {
 
@@ -30,13 +31,6 @@ object VectorFunctions {
   def l2NormSq(a: Column): Column = dot(a, a)
 
   def l2Norm(a: Column): Column = sqrt(l2NormSq(a))
-
-  /** Cosine similarity in [-1, 1]; inputs double arrays. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Reference quirk: cosine clipped to [0, 1] (beats.py:217). */
-  def cosineClipped01(a: Column, b: Column): Column =
-    greatest(lit(0.0), least(lit(1.0), cosine(a, b)))
 
   /** L2-normalize a vector (keeps zero vectors as zero). */
   def l2Normalize(a: Column): Column = {

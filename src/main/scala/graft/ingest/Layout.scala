@@ -2,7 +2,8 @@ package graft.ingest
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Json
@@ -27,9 +28,10 @@ import graft.core.Json
 object Layout {
 
   /** Marker file that publishes a version (written last; creation is the
-    * commit point). Carries the footer-summed row count so consumers can
-    * sanity-check completeness without a data scan, and, when
-    * [[writeVersioned]] wrote it, the written schema. */
+    * commit point). Carries the row count the version holds, so
+    * consumers can sanity-check completeness without a data scan, and
+    * the schema the version reads back under (partition columns last),
+    * so loads need no inference job. */
   val CommitMarker = "_graft_commit.json"
 
   /** Standard layer directories (structure.py:20-30). */
@@ -93,6 +95,33 @@ object Layout {
     readMarker(spark, dir, CommitMarker).flatMap(m => Option(m.get("row_count")))
       .map(_.asLong)
 
+  /** The schema a committed version's marker records (None when the
+    * marker is absent or predates schema recording). */
+  private[ingest] def committedSchema(spark: SparkSession, dir: String): Option[StructType] =
+    readMarker(spark, dir, CommitMarker).flatMap(m => Option(m.get("schema")))
+      .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+
+  /** A reader for the data under version dir `dir`: under the schema
+    * its commit marker records, so the load starts no schema-inference
+    * job; inferring only for a marker that records none (an older lake,
+    * or a version a rollback unpublished). */
+  private[ingest] def reader(spark: SparkSession, dir: String): DataFrameReader =
+    committedSchema(spark, dir).fold(spark.read)(spark.read.schema(_))
+
+  /** `df` with a fresh row-count [[Observation]] attached, and the count
+    * it saw once one action over the returned frame has run — a count
+    * taken on the write itself, no counting job. Place it where that
+    * action evaluates each row once (above, never below, a range
+    * exchange: the partitioner's sampling job re-runs the plan beneath
+    * it). Adaptive execution can drop an empty subtree whole, and its
+    * observation with it; the count then falls back to the footers of
+    * `dirs`, the files holding the same rows. */
+  private[ingest] def observeRows(df: DataFrame, dirs: Seq[String]): (DataFrame, () => Long) = {
+    val rows = Observation()
+    (df.observe(rows, count(lit(1)).as("rows")),
+      () => rows.get.get("rows").fold(parquetRows(df.sparkSession, dirs))(_.asInstanceOf[Long]))
+  }
+
   /** Versions whose commit marker exists — the only ones readers see. */
   def committedVersions(spark: SparkSession, base: String, layer: String): Seq[Int] =
     versions(spark, base, layer)
@@ -101,12 +130,15 @@ object Layout {
   def isCommitted(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(dir, CommitMarker))
 
-  /** Publish a written version: footer-summed row count (metadata reads,
-    * no data pages) into the marker, created atomically and exactly once
-    * (`overwrite = false` — a concurrent committer loses with a clear
-    * FileAlreadyExists instead of silently double-publishing).
-    * `extraDirs` lets a merged version (see [[Merge]]) attest its
-    * EFFECTIVE row count — inherited partition dirs count too. */
+  /** Publish a version written outside [[writeVersioned]]/[[Merge]]:
+    * its footer-summed row count (metadata reads, no data pages; one
+    * driver-side file open per parquet file) into the marker, created
+    * atomically and exactly once (`overwrite = false` — a concurrent
+    * committer loses with a clear FileAlreadyExists instead of silently
+    * double-publishing). `extraDirs` lets a merged version attest its
+    * EFFECTIVE row count — inherited partition dirs count too. The
+    * writers in this package attest the count their write job observed
+    * instead, and walk footers only without one. */
   def commit(spark: SparkSession, dir: String, extraDirs: Seq[String] = Nil): Long =
     commitAttested(spark, dir, parquetRows(spark, dir +: extraDirs))
 
@@ -132,11 +164,12 @@ object Layout {
     rows
   }
 
-  /** Publish with an already-derived effective row count. [[Merge]] uses
-    * this to commit in O(touched dirs): the inherited portion of a merged
-    * or checkpointed version's count comes from the PREVIOUS version's
-    * attested marker, so commit cost never re-reads the whole layer's
-    * footers (which grew O(corpus) per batch on an incremental
+  /** Publish with an already-derived effective row count and the schema
+    * the version reads back under. [[writeVersioned]] passes the count
+    * its write job observed; [[Merge]] derives a merged or checkpointed
+    * version's count from the PREVIOUS version's attested marker plus
+    * the rows its own write observed, so commit cost never re-reads a
+    * footer (walking them grew O(corpus) per batch on an incremental
     * workload). */
   private[ingest] def commitAttested(spark: SparkSession, dir: String, rows: Long,
       schema: Option[StructType] = None): Long = {
@@ -153,15 +186,19 @@ object Layout {
     * data write fully succeeds and the commit marker lands; an in-place
     * rewrite (explicit `version`) drops the marker first, so readers fall
     * back to the previous committed version while it runs. The marker
-    * records the schema as it reads back (partition columns last). */
+    * attests the row count the write job itself observed (no footer
+    * walk; a failed write never reaches the commit) and records the
+    * schema as it reads back (partition columns last). */
   def writeVersioned(df: DataFrame, base: String, layer: String,
       version: Option[Int] = None, partitionCols: Seq[String] = Nil): String = {
-    val v = version.getOrElse(latestVersion(df.sparkSession, base, layer).getOrElse(0) + 1)
+    val spark = df.sparkSession
+    val v = version.getOrElse(latestVersion(spark, base, layer).getOrElse(0) + 1)
     val dir = versionedDir(base, layer, v)
-    val w = df.write.mode(if (version.isDefined) "overwrite" else "errorifexists")
+    val (observed, rows) = observeRows(df, Seq(dir))
+    val w = observed.write.mode(if (version.isDefined) "overwrite" else "errorifexists")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir)
     val data = df.schema.filterNot(f => partitionCols.contains(f.name))
-    commitAttested(df.sparkSession, dir, parquetRows(df.sparkSession, Seq(dir)),
+    commitAttested(spark, dir, rows(),
       Some(StructType(data ++ partitionCols.map(df.schema(_)))))
     dir
   }
@@ -179,7 +216,7 @@ object Layout {
           s"(uncommitted: ${stray.map("v" + _).mkString(", ")} — " +
           "in-flight, crashed, or rolled back; vacuum() reclaims them)")
     }
-    readCommitted(spark, base, layer, v)
+    Merge.readResolved(spark, base, layer, v)
   }
 
   /** Time travel: read one specific committed version (merge-aware — a
@@ -189,20 +226,8 @@ object Layout {
     require(isCommitted(spark, dir),
       s"v$version of $layer is not committed (existing: " +
         s"${committedVersions(spark, base, layer).map("v" + _).mkString(", ")})")
-    readCommitted(spark, base, layer, version)
+    Merge.readResolved(spark, base, layer, version)
   }
-
-  /** A committed version's rows. A marker that attests zero rows and
-    * carries the written schema reads as an empty frame of that schema:
-    * an empty write leaves no data file to infer one from. */
-  private def readCommitted(spark: SparkSession, base: String, layer: String,
-      version: Int): DataFrame =
-    readMarker(spark, versionedDir(base, layer, version), CommitMarker)
-      .filter(m => m.path("row_count").asLong(-1L) == 0L && m.has("schema"))
-      .fold(Merge.readResolved(spark, base, layer, version)) { m =>
-        spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          DataType.fromJson(m.get("schema").toString).asInstanceOf[StructType])
-      }
 
   /** Time travel by TIMESTAMP: the newest version committed at or before
     * `epochMs` (commit-marker mtime is the commit instant — the marker is

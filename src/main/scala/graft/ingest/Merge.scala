@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.core.Json
 
@@ -134,12 +134,15 @@ object Merge {
   /** Read a version with merge resolution. Plain versions read straight
     * from their directory; merged versions read each contributing
     * version's partitions with that version dir as `basePath` (so the
-    * partition column survives) and union by name. */
+    * partition column survives) and union by name. Every contributing
+    * version dir reads under the schema its own commit marker records
+    * ([[Layout.reader]]), so a load starts no inference job and a
+    * zero-row version reads as an empty frame of its schema. */
   def readResolved(spark: SparkSession, base: String, layer: String,
       version: Int): DataFrame = {
     val dir = Layout.versionedDir(base, layer, version)
     if (mergeInfo(spark, dir).isEmpty && manifestInfo(spark, dir).isEmpty)
-      spark.read.parquet(dir)
+      Layout.reader(spark, dir).parquet(dir)
     else {
       val eff = effectiveDirs(spark, base, layer, version)
       require(eff.nonEmpty, s"merged v$version of $layer resolves to zero partitions")
@@ -150,10 +153,12 @@ object Merge {
       // evolved columns — the standard additive-evolution semantics of
       // a real table format. On a never-evolved chain a root-level
       // column mismatch is corruption and must keep failing loudly,
-      // not silently null-fill into the next compaction.
+      // not silently null-fill into the next compaction. Each root
+      // reads under its OWN marker's schema, never the head's, so a
+      // narrower root stays narrower and the mismatch stays visible.
       val tolerant = chainEvolved(spark, base, layer, version)
       byRoot.toSeq.sortBy(_._1).map { case (root, dirs) =>
-        spark.read.option("basePath", root).parquet(dirs.sorted: _*)
+        Layout.reader(spark, root).option("basePath", root).parquet(dirs.sorted: _*)
       }.reduce(_.unionByName(_, allowMissingColumns = tolerant))
     }
   }
@@ -246,13 +251,15 @@ object Merge {
     fs(spark, newDir).mkdirs(new Path(newDir))
     writeManifestMarker(spark, newDir, manifest,
       evolved = chainEvolved(spark, base, layer, vCur))
-    // commit attests the effective row count across the referenced dirs —
-    // the checkpoint references exactly vCur's effective data, so vCur's
-    // attested count carries over without re-walking any footer
-    Layout.committedRowCount(spark, Layout.versionedDir(base, layer, vCur)) match {
-      case Some(prior) => Layout.commitAttested(spark, newDir, prior)
-      case None => Layout.commit(spark, newDir, manifest.values.toSeq)
-    }
+    // commit attests the effective row count and schema — the
+    // checkpoint references exactly vCur's effective data, so vCur's
+    // attested count and recorded schema carry over without re-walking
+    // any footer
+    val curDir = Layout.versionedDir(base, layer, vCur)
+    Layout.commitAttested(spark, newDir,
+      Layout.committedRowCount(spark, curDir)
+        .getOrElse(Layout.parquetRows(spark, manifest.values.toSeq)),
+      Layout.committedSchema(spark, curDir))
     newDir
   }
 
@@ -269,7 +276,11 @@ object Merge {
 
   /** Upsert `updates` (and optionally delete `deleteKeys`) into the
     * latest committed version of a layer, publishing a new committed
-    * version that rewrites ONLY the touched partitions.
+    * version that rewrites ONLY the touched partitions; returns its
+    * directory. An update that touches no partition (no rows in
+    * `updates` or `deleteKeys`) publishes nothing and returns None —
+    * the touched-partition collect below already evaluated it, so a
+    * caller needs no emptiness probe of its own.
     *
     * Last-wins per `keyCols`: a surviving old row is one whose key does
     * not appear in `updates`/`deleteKeys`. The touched-partition list is
@@ -288,7 +299,7 @@ object Merge {
         * granularity). Dropping or retyping columns stays refused:
         * survivors are projected to updates' shape before the union, so
         * a narrower frame would silently destroy data. */
-      allowSchemaEvolution: Boolean = false): String = {
+      allowSchemaEvolution: Boolean = false): Option[String] = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(updates.schema(partitionCol).dataType == StringType,
       s"merge partitions on a string column; '$partitionCol' is " +
@@ -298,6 +309,34 @@ object Merge {
       throw new IllegalArgumentException(
         s"no committed versions of $layer under $base — write the initial " +
           "version with Layout.writeVersioned first"))
+    val curDir = Layout.versionedDir(base, layer, vCur)
+
+    // inheritance works at partition-dir granularity: a base version
+    // written WITHOUT partitionBy has no partition dirs to inherit, and
+    // merging onto it would silently drop every untouched row
+    val effCur = effectiveDirs(spark, base, layer, vCur)
+    require(effCur.nonEmpty,
+      s"v$vCur of $layer is not hive-partitioned — rewrite it with " +
+        s"Layout.writeVersioned(partitionCols = Seq(\"$partitionCol\")) before merging")
+
+    // the layer's columns as vCur's marker records them (the widened
+    // schema on an evolved chain); a marker that records none (an older
+    // lake) falls back to the resolved read's inferred schema
+    val layerColumns: Seq[String] = Layout.committedSchema(spark, curDir)
+      .fold(readResolved(spark, base, layer, vCur).columns.toSeq)(_.fieldNames.toSeq)
+    // a narrower updates frame would silently DROP the missing columns
+    // from every rewritten row (survivors are projected to updates'
+    // shape before the union) — refuse always; EXTRA columns are the
+    // additive-evolution case and need the explicit flag
+    require(layerColumns.toSet.subsetOf(updates.columns.toSet),
+      s"merge updates schema must match the layer: missing " +
+        s"${layerColumns.toSet.diff(updates.columns.toSet).mkString(",")}" +
+        (if (allowSchemaEvolution) "" else s"; extra " +
+          s"${updates.columns.toSet.diff(layerColumns.toSet).mkString(",")}"))
+    require(allowSchemaEvolution || updates.columns.toSet == layerColumns.toSet,
+      s"merge updates carry columns the layer lacks (" +
+        s"${updates.columns.toSet.diff(layerColumns.toSet).mkString(",")}) — " +
+        "pass allowSchemaEvolution = true to widen the layer additively")
 
     // touched partition values (updates ∪ deletes), driver-side, guarded.
     // deletes MUST carry the partition column: without it the anti-join
@@ -312,6 +351,7 @@ object Merge {
       case None => updates.select(partitionCol).distinct()
     }
     val touched = touchedDf.collect().map(_.getString(0)).toSeq
+    if (touched.isEmpty) return None
     require(touched.size <= maxTouchedPartitions,
       s"merge touches ${touched.size} partitions (guard: $maxTouchedPartitions) " +
         "— at that breadth a full rewrite via Layout.writeVersioned is the " +
@@ -320,69 +360,43 @@ object Merge {
       "merge partition values must be hive-safe ([A-Za-z0-9._-]+); got: " +
         touched.filter(v => v == null || !SafeValue.matches(v)).take(5).mkString(", "))
 
-    // inheritance works at partition-dir granularity: a base version
-    // written WITHOUT partitionBy has no partition dirs to inherit, and
-    // merging onto it would silently drop every untouched row
-    val effCur = effectiveDirs(spark, base, layer, vCur)
-    require(effCur.nonEmpty,
-      s"v$vCur of $layer is not hive-partitioned — rewrite it with " +
-        s"Layout.writeVersioned(partitionCols = Seq(\"$partitionCol\")) before merging")
-
     val affectedDirNames = touched.map(v => s"$partitionCol=$v")
+    val replacedDirs = affectedDirNames.flatMap(effCur.get)
     // pure-append fast path: every touched partition value is NEW (the
     // incremental bank/index layers append one bNNNN batch of dirs per
-    // delta), so there are no survivors to read — the resolved-layer
-    // read (one listing per chain root × partition dir) is skipped
-    // entirely; the schema check reads a single partition dir instead
-    val pureAppend = deleteKeys.isEmpty && !affectedDirNames.exists(effCur.contains)
-    // On an EVOLVED chain the single-dir sample is unsafe: the sampled
-    // dir can be a pre-evolution narrow partition, spuriously refusing a
-    // valid pure append that carries the evolved head schema (and the
-    // new marker's evolved flag would derive from the narrow dir). The
-    // resolved read carries the chain's widened schema; never-evolved
-    // chains keep the one-dir fast path.
-    val layerColumns: Seq[String] =
-      if (pureAppend && !chainEvolved(spark, base, layer, vCur)) {
-        val path = effCur(effCur.keys.min)
-        val root = path.substring(0, path.lastIndexOf('/'))
-        spark.read.option("basePath", root).parquet(path).columns.toSeq
-      } else readResolved(spark, base, layer, vCur).columns.toSeq
-    // a narrower updates frame would silently DROP the missing columns
-    // from every rewritten row (survivors are projected to updates'
-    // shape before the union) — refuse always; EXTRA columns are the
-    // additive-evolution case and need the explicit flag
-    require(layerColumns.toSet.subsetOf(updates.columns.toSet),
-      s"merge updates schema must match the layer: missing " +
-        s"${layerColumns.toSet.diff(updates.columns.toSet).mkString(",")}" +
-        (if (allowSchemaEvolution) "" else s"; extra " +
-          s"${updates.columns.toSet.diff(layerColumns.toSet).mkString(",")}"))
-    require(allowSchemaEvolution || updates.columns.toSet == layerColumns.toSet,
-      s"merge updates carry columns the layer lacks (" +
-        s"${updates.columns.toSet.diff(layerColumns.toSet).mkString(",")}) — " +
-        "pass allowSchemaEvolution = true to widen the layer additively")
+    // delta), so there are no survivors to read and nothing a delete
+    // key could remove — the resolved-layer read is skipped entirely
+    val pureAppend = replacedDirs.isEmpty
     val outCols: Seq[String] =
       layerColumns ++ updates.columns.filterNot(layerColumns.contains)
-    val newData =
-      if (pureAppend) updates.select(outCols.map(col): _*)
+    val (newData, replacedRows) =
+      if (pureAppend) (updates.select(outCols.map(col): _*), () => 0L)
       else {
         // survivors of the touched partitions: partition pruning keeps
-        // this read to the touched dirs only
-        val old = readResolved(spark, base, layer, vCur)
-          .filter(col(partitionCol).isin(touched: _*))
+        // this read to the touched dirs only, and the rows it reads are
+        // exactly the rows this version replaces
+        val (old, replaced) = Layout.observeRows(
+          readResolved(spark, base, layer, vCur).filter(col(partitionCol).isin(touched: _*)),
+          replacedDirs)
         val afterDeletes = deleteKeys match {
           case Some(d) => old.join(d, d.columns.toSeq.intersect(old.columns.toSeq), "left_anti")
           case None => old
         }
+        // a sort-merge anti-join, never a broadcast of the update keys:
+        // its exchange gives `old` a map stage of its own, which runs
+        // once. Broadcast, `old` would be read in the stage that feeds
+        // the range exchange below, whose sampling job re-runs that
+        // stage and would double `replaced`
         val survivors = afterDeletes.join(
-          updates.select(keyCols.map(col): _*), keyCols, "left_anti")
+          updates.select(keyCols.map(col): _*).hint("merge"), keyCols, "left_anti")
         // evolution: survivors gain the new columns as TYPED nulls
         val widened = outCols.foldLeft(survivors)((df, c) =>
           if (df.columns.contains(c)) df
           else df.withColumn(c,
             org.apache.spark.sql.functions.lit(null)
               .cast(updates.schema(c).dataType)))
-        widened.select(outCols.map(col): _*)
-          .unionByName(updates.select(outCols.map(col): _*))
+        (widened.select(outCols.map(col): _*)
+          .unionByName(updates.select(outCols.map(col): _*)), replaced)
       }
 
     val vNew = Layout.latestVersion(spark, base, layer).getOrElse(0) + 1
@@ -408,40 +422,41 @@ object Merge {
     // merge to the full shuffle width — re-shattering the small files
     // the packing exists to avoid. updates' stats come straight from
     // its source; the replaced dirs' file lengths are exact (an O(touched
-    // dirs) listing the attestation below repeats anyway) and keep a
-    // tiny upsert into a survivor-heavy partition writing its rewrite in
-    // parallel instead of one giant single-task file.
-    val replacedBytes: Long =
-      if (pureAppend) 0L
-      else affectedDirNames.flatMap(effCur.get).map { d =>
-        val f = fs(spark, d)
-        val it = f.listFiles(new Path(d), true)
-        var bytes = 0L
-        while (it.hasNext) bytes += it.next().getLen
-        bytes
-      }.sum
+    // dirs) listing) and keep a tiny upsert into a survivor-heavy
+    // partition writing its rewrite in parallel instead of one giant
+    // single-task file.
+    val replacedBytes: Long = replacedDirs.map { d =>
+      val f = fs(spark, d)
+      val it = f.listFiles(new Path(d), true)
+      var bytes = 0L
+      while (it.hasNext) bytes += it.next().getLen
+      bytes
+    }.sum
     val nPack = packCount(touched.size,
       updates.queryExecution.optimizedPlan.stats.sizeInBytes + replacedBytes,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    newData.repartitionByRange(nPack, (partitionCol +: keyCols).map(col): _*)
-      .write.mode("errorifexists").partitionBy(partitionCol).parquet(newDir)
+    // the written rows are observed ABOVE the range exchange: the range
+    // partitioner's sampling job runs the exchange's child plan a second
+    // time, and an observation below it would count those rows twice
+    val (packed, writtenRows) = Layout.observeRows(
+      newData.repartitionByRange(nPack, (partitionCol +: keyCols).map(col): _*),
+      Seq(newDir))
+    packed.write.mode("errorifexists").partitionBy(partitionCol).parquet(newDir)
 
     writeMarker(spark, newDir, MergeInfo(vCur, partitionCol, affectedDirNames,
       evolved = outCols.size > layerColumns.size))
-    // commit attests the EFFECTIVE row count. When the previous version's
-    // marker carries one, derive it in O(touched dirs): prior count −
-    // replaced dirs' footers + this version's local footers. Footer-
-    // walking the inherited dirs instead costs O(layer files) per batch —
-    // at 100 TB that was the single O(corpus) term left in a delta merge.
-    Layout.committedRowCount(spark, Layout.versionedDir(base, layer, vCur)) match {
-      case Some(prior) =>
-        val replaced = affectedDirNames.flatMap(effCur.get)
-        Layout.commitAttested(spark, newDir,
-          prior - Layout.parquetRows(spark, replaced) +
-            Layout.parquetRows(spark, Seq(newDir)))
-      case None =>
-        Layout.commit(spark, newDir, (effCur -- affectedDirNames).values.toSeq)
-    }
-    newDir
+    // commit attests the EFFECTIVE row count without a footer walk:
+    // vCur's attested count − the rows the replaced partitions held +
+    // the rows this write produced, both observed on the write job.
+    // Only a vCur marker without a count walks the inherited dirs'
+    // footers. The recorded schema is the written one, partition
+    // column last, as the version reads back.
+    val inherited = Layout.committedRowCount(spark, curDir)
+      .map(_ - replacedRows())
+      .getOrElse(Layout.parquetRows(spark, (effCur -- affectedDirNames).values.toSeq))
+    Layout.commitAttested(spark, newDir, inherited + writtenRows(),
+      Some(StructType(newData.schema.filterNot(_.name == partitionCol) :+
+        newData.schema(partitionCol))))
+    Some(newDir)
   }
 }

@@ -236,9 +236,10 @@ object CuratePipeline {
     * agg, once for the join). The map-only boundaries (`quality` gate,
     * `mixture` explode, `shards` hash) recompute from the nearest
     * upstream barrier for less than their materialization cost, and
-    * `decontam` needs no output barrier since r12's one-pass gram-stats
-    * rewrite banks the expensive part internally (the output is just
-    * prev ⋈ tiny-stats + filter) — see SCALE.md's barrier table. */
+    * `decontam` needs no output barrier: since r15 it is map-only over
+    * `prev`, a broadcast probe of each doc's sorted gram hashes against
+    * the one-row benchmark hash array, then a filter (see
+    * [[decontamStage]] and SCALE.md's barrier table). */
   val DefaultBarriers: Set[String] = Set("exact", "neardup", "curriculum")
 
   /** The composed stage frames, raw first. Each frame carries the
@@ -588,10 +589,11 @@ object CuratePipeline {
     val (raw, neardupDelta, shardDelta) =
       (frames("raw"), frames("neardup"), frames("shards").localCheckpoint(false))
 
-    // shards: identical routing, MERGE only the touched partitions
-    if (!shardDelta.isEmpty)
-      Merge.merge(spark, base, "curated/shards", shardDelta,
-        Seq("doc_id", "copy"), "shard_key")
+    // shards: identical routing, MERGE only the touched partitions. An
+    // empty frame publishes nothing: Merge.merge's touched-partition
+    // collect is the emptiness check for each of the four layers
+    Merge.merge(spark, base, "curated/shards", shardDelta,
+      Seq("doc_id", "copy"), "shard_key")
 
     // bank the kept delta's signatures as ONE new index partition
     val batchNo = Layout
@@ -601,9 +603,7 @@ object CuratePipeline {
     val newIdx = deltaIdx
       .join(neardupDelta.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .withColumn("batch", format_string("b%04d", lit(batchNo)))
-    if (!newIdx.isEmpty)
-      Merge.merge(spark, base, Frozen.NearDupIndex, newIdx,
-        Seq("doc_id"), "batch")
+    Merge.merge(spark, base, Frozen.NearDupIndex, newIdx, Seq("doc_id"), "batch")
     // bank the kept delta norms' fingerprints as one new batch of bucket
     // partitions (≤ NormBankBuckets new dirs, O(delta) bytes; no banked
     // fp can collide with a kept delta fp — the exact stage dropped
@@ -612,9 +612,7 @@ object CuratePipeline {
       .committedVersions(spark, base, Frozen.NormBank).last + 1
     val newNorms = normBankOf(frames("exact"))
       .withColumn("bucket", normBucket(normBatchNo, cfg.normBankBuckets))
-    if (!newNorms.isEmpty)
-      Merge.merge(spark, base, Frozen.NormBank, newNorms,
-        Seq("norm_fp"), "bucket")
+    Merge.merge(spark, base, Frozen.NormBank, newNorms, Seq("norm_fp"), "bucket")
     // bank this batch's NOVEL benchmark grams as one new batch partition
     // — O(delta) appended bytes, where r11 rewrote the whole gram bank
     // per batch (the bank stays distinct by construction: each batch
@@ -625,9 +623,7 @@ object CuratePipeline {
     val novelBenchGrams = benchGramSet(withTok(deltaDocs), cfg)
       .join(frozen.benchGrams, Seq("g"), "left_anti")
       .withColumn("batch", format_string("b%04d", lit(benchBatchNo)))
-    if (!novelBenchGrams.isEmpty)
-      Merge.merge(spark, base, Frozen.BenchGrams, novelBenchGrams,
-        Seq("g"), "batch")
+    Merge.merge(spark, base, Frozen.BenchGrams, novelBenchGrams, Seq("g"), "batch")
 
     // periodic chain flattening: every MERGE append deepens a layer's
     // inheritance chain, and every read of a merged layer unions one

@@ -4,24 +4,31 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.operators.Similarity
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 
 class FunctionsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  private def cosine(a: String, b: String) =
+    Similarity.cosine(VF.dot(col(a), col(b)), VF.l2Norm(col(a)), VF.l2Norm(col(b)))
+
   test("cosine of identical vectors is 1, orthogonal is 0, opposite is -1") {
     val df = Seq(
       (Seq(1.0, 0.0), Seq(1.0, 0.0)),
       (Seq(1.0, 0.0), Seq(0.0, 1.0)),
-      (Seq(1.0, 0.0), Seq(-1.0, 0.0))).toDF("a", "b")
-    val sims = df.select(VF.cosine(col("a"), col("b"))).as[Double].collect()
-    assert(sims.sameElements(Array(1.0, 0.0, -1.0)))
+      (Seq(1.0, 0.0), Seq(-1.0, 0.0)),
+      (Seq(0.0, 0.0), Seq(1.0, 0.0))).toDF("a", "b")
+    val sims = df.select(cosine("a", "b")).as[Option[Double]].collect()
+    assert(sims.sameElements(Array(Some(1.0), Some(0.0), Some(-1.0), None)))
   }
 
-  test("clipped cosine stays in [0,1] (reference quirk beats.py:217)") {
-    val df = Seq((Seq(1.0, 0.0), Seq(-1.0, 0.0))).toDF("a", "b")
-    assert(df.select(VF.cosineClipped01(col("a"), col("b"))).as[Double].head() == 0.0)
+  test("cosine with a zero vector on either side is null, not DIVIDE_BY_ZERO") {
+    val df = Seq((Seq(0.0, 0.0), Seq(1.0, 0.0)), (Seq(1.0, 0.0), Seq(0.0, 0.0)),
+      (Seq(0.0, 0.0), Seq(0.0, 0.0))).toDF("a", "b")
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true") // Spark 4's default
+    assert(df.select(cosine("a", "b")).as[Option[Double]].collect().forall(_.isEmpty))
   }
 
   test("l2Normalize yields unit norm; zero vector unchanged") {

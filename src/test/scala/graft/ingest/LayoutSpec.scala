@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{JobCount, SparkTestSession}
+import graft.core.Json
 
 class LayoutSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -188,5 +189,48 @@ class LayoutSpec extends AnyFunSuite {
       Layout.loadAsOf(spark, base, "normalized", between - 1000000L)
     }
     assert(e.getMessage.contains("earliest"))
+  }
+
+  test("a committed version loads under its marker's schema, with no job") {
+    val base = Files.createTempDirectory("graft_layout_schema").toString
+    val df = spark.range(50).select(col("id"), (col("id") % 3).as("k"),
+      format_string("x%d", col("id")).as("x"))
+    Layout.writeVersioned(df, base, "spans")
+    Layout.writeVersioned(df, base, "beats", partitionCols = Seq("k"))
+    for ((layer, cols) <- Seq("spans" -> Seq("id", "k", "x"), "beats" -> Seq("id", "x", "k"))) {
+      val (back, jobs) = JobCount(spark)(Layout.loadLatest(spark, base, layer))
+      assert(jobs == 0, s"loading $layer started $jobs jobs")
+      assert(back.columns.toSeq == cols && back.count() == 50)
+      // the partition column reads back as written (long), not as the
+      // narrower type its directory names would infer
+      assert(back.schema("k").dataType == org.apache.spark.sql.types.LongType)
+    }
+  }
+
+  test("writeVersioned attests the rows its write observed, above a sampled range exchange") {
+    val base = Files.createTempDirectory("graft_layout_attest").toString
+    Layout.writeVersioned(spark.range(3000).toDF().repartition(8), base, "spans")
+    // compact range-packs into several files: its range partitioner's
+    // sampling job runs beneath the observed frame and must not count
+    val dir = Layout.compact(spark, base, "spans", targetBytes = 4L << 10,
+      sortCol = Some("id"))
+    assert(Layout.loadLatest(spark, base, "spans").inputFiles.length > 1)
+    assert(Layout.committedRowCount(spark, dir).contains(3000L))
+    assert(Layout.committedRowCount(spark, s"$base/spans/v1").contains(3000L))
+  }
+
+  test("a marker without a recorded schema still loads by inference") {
+    val base = Files.createTempDirectory("graft_layout_noschema").toString
+    Layout.writeVersioned(Seq((1L, "a"), (2L, "b")).toDF("id", "x"), base, "spans",
+      partitionCols = Seq("x"))
+    val p = java.nio.file.Paths.get(base, "spans", "v1", Layout.CommitMarker)
+    val marker = Json.parse(Files.readString(p))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(marker.remove("schema") != null)
+    Files.writeString(p, marker.toString)
+    Files.deleteIfExists(p.resolveSibling(s".${Layout.CommitMarker}.crc"))
+    val back = Layout.loadLatest(spark, base, "spans")
+    assert(back.columns.toSeq == Seq("id", "x"))
+    assert(back.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
 }

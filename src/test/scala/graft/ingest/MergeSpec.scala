@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{JobCount, SparkTestSession}
+import graft.core.Json
 
 class MergeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -43,7 +44,7 @@ class MergeSpec extends AnyFunSuite {
     ).toDF("episode_id", "row_id", "payload")
 
     val newDir = Merge.merge(spark, base, "normalized", updates,
-      keyCols = Seq("row_id"), partitionCol = "episode_id")
+      keyCols = Seq("row_id"), partitionCol = "episode_id").get
 
     // only touched partitions exist under v2
     val v2Parts = new java.io.File(newDir).listFiles()
@@ -115,7 +116,7 @@ class MergeSpec extends AnyFunSuite {
     val base = freshLayer()
     val newDir = Merge.merge(spark, base, "normalized",
       Seq(("ep1", 1L, "a-v2")).toDF("episode_id", "row_id", "payload"),
-      Seq("row_id"), "episode_id")
+      Seq("row_id"), "episode_id").get
     val marker = scala.io.Source.fromFile(s"$newDir/${Layout.CommitMarker}")
     val content = try marker.mkString finally marker.close()
     // 5 effective rows: 2 rewritten in ep1 + 2 inherited ep2 + 1 inherited ep3
@@ -309,5 +310,108 @@ class MergeSpec extends AnyFunSuite {
         Seq((7L, 1L, "v")).toDF("episode_id", "row_id", "payload"),
         Seq("row_id"), "episode_id")
     }
+  }
+
+  private def rows(base: String): Set[(String, Long, String)] =
+    Layout.loadLatest(spark, base, "normalized")
+      .select("episode_id", "row_id", "payload")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+
+  test("a merge that touches no partition publishes nothing and returns None") {
+    val base = freshLayer()
+    val none = Seq(("ep1", 1L, "v")).toDF("episode_id", "row_id", "payload")
+      .filter(col("row_id") < 0)
+    val (out, jobs) = JobCount(spark)(Merge.merge(spark, base, "normalized", none,
+      Seq("row_id"), "episode_id", deleteKeys = Some(none.select("episode_id", "row_id"))))
+    assert(out.isEmpty)
+    assert(jobs <= 1, s"an empty merge costs at most its touched-partition collect: $jobs")
+    assert(Layout.versions(spark, base, "normalized") == Seq(1))
+  }
+
+  test("merge commits attest the rows observed on the write, sampled range exchange included") {
+    // enough touched partitions that the range exchange has several
+    // partitions, so its sampling job re-runs the plan beneath it: a
+    // count observed below the exchange would be inflated
+    val base = Files.createTempDirectory("graft_merge_attest").toString
+    val wide = spark.range(400).select(
+      format_string("ep%d", col("id") % 4).as("episode_id"),
+      col("id").as("row_id"), format_string("p%d", col("id")).as("payload"))
+    Layout.writeVersioned(wide, base, "normalized", partitionCols = Seq("episode_id"))
+    def attested(dir: String) = Layout.committedRowCount(spark, dir).get
+    // upsert: ep0/ep1 rewritten (replaced rows observed on the survivors
+    // read), ep7 new, 30 keys updated in place, 60 inserted, 10 deleted
+    val upserts = spark.range(0, 90).select(
+      format_string("ep%d", when(col("id") < 30, col("id") % 2).otherwise(lit(7))).as("episode_id"),
+      when(col("id") < 30, col("id") * 4 + col("id") % 2).otherwise(col("id") + 1000).as("row_id"),
+      lit("v2").as("payload"))
+    val deletes = Seq(("ep0", 200L), ("ep0", 204L), ("ep1", 201L), ("ep1", 205L),
+      ("ep0", 208L), ("ep0", 212L), ("ep1", 209L), ("ep1", 213L), ("ep0", 216L),
+      ("ep1", 217L)).toDF("episode_id", "row_id")
+    val d2 = Merge.merge(spark, base, "normalized", upserts, Seq("row_id"), "episode_id",
+      deleteKeys = Some(deletes)).get
+    assert(Merge.packCount(3, BigInt(0),
+      spark.conf.get("spark.sql.shuffle.partitions").toInt) > 1)
+    assert(attested(d2) == 400 + 60 - 10)
+    assert(attested(d2) == Layout.loadLatest(spark, base, "normalized").count())
+    // pure append of three new partitions: only the written rows count
+    val d3 = Merge.merge(spark, base, "normalized",
+      spark.range(120).select(format_string("ep%d", col("id") % 3 + 10).as("episode_id"),
+        (col("id") + 5000).as("row_id"), lit("v3").as("payload")),
+      Seq("row_id"), "episode_id").get
+    assert(attested(d3) == 450 + 120)
+    assert(attested(d3) == Layout.loadLatest(spark, base, "normalized").count())
+  }
+
+  test("merged and checkpointed versions load under their markers' schemas, with no job") {
+    val base = freshLayer()
+    Merge.merge(spark, base, "normalized",
+      Seq(("ep1", 1L, "a-v2"), ("ep4", 9L, "i-v2")).toDF("episode_id", "row_id", "payload"),
+      Seq("row_id"), "episode_id")
+    val (merged, jobs) = JobCount(spark)(Layout.loadLatest(spark, base, "normalized"))
+    assert(jobs == 0, s"loading a merged version started $jobs jobs")
+    assert(merged.columns.toSeq == Seq("row_id", "payload", "episode_id"))
+    assert(merged.count() == 6)
+    Merge.checkpoint(spark, base, "normalized")
+    val (ck, ckJobs) = JobCount(spark)(Layout.loadLatest(spark, base, "normalized"))
+    assert(ckJobs == 0, s"loading a checkpoint started $ckJobs jobs")
+    assert(ck.schema == merged.schema && ck.count() == 6)
+  }
+
+  test("a never-evolved chain whose older root lacks a column fails loudly") {
+    val base = Files.createTempDirectory("graft_merge_narrow").toString
+    Layout.writeVersioned(baseData().drop("payload"), base, "normalized",
+      partitionCols = Seq("episode_id"))
+    // a hand-built link: a wide ep1 rewrite published as a merge of v1
+    // whose marker declares no evolution
+    val v2 = Layout.writeVersioned(
+      Seq(("ep1", 1L, "a-v2")).toDF("episode_id", "row_id", "payload"),
+      base, "normalized", partitionCols = Seq("episode_id"))
+    Merge.writeMarker(spark, v2, Merge.MergeInfo(1, "episode_id", Seq("episode_id=ep1")))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Layout.loadLatest(spark, base, "normalized")
+    }
+    assert(e.getMessage.contains("payload"), e.getMessage)
+  }
+
+  test("markers without a recorded schema still load and merge by inference") {
+    val base = freshLayer()
+    Merge.merge(spark, base, "normalized",
+      Seq(("ep1", 1L, "a-v2")).toDF("episode_id", "row_id", "payload"),
+      Seq("row_id"), "episode_id")
+    val expected = rows(base)
+    Layout.committedVersions(spark, base, "normalized").foreach { v =>
+      val p = java.nio.file.Paths.get(Layout.versionedDir(base, "normalized", v), Layout.CommitMarker)
+      val marker = Json.parse(Files.readString(p))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      assert(marker.remove("schema") != null)
+      Files.writeString(p, marker.toString)
+      Files.deleteIfExists(p.resolveSibling(s".${Layout.CommitMarker}.crc"))
+      assert(Layout.committedSchema(spark, p.getParent.toString).isEmpty)
+    }
+    assert(rows(base) == expected)
+    Merge.merge(spark, base, "normalized",
+      Seq(("ep2", 3L, "c-v3")).toDF("episode_id", "row_id", "payload"),
+      Seq("row_id"), "episode_id")
+    assert(rows(base) == expected - (("ep2", 3L, "c-v1")) + (("ep2", 3L, "c-v3")))
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestSession
+import graft.{JobCount, SparkTestSession}
 import graft.ingest.{Layout, Merge}
 
 /** The incremental curate path end to end: full run on 90% of the
@@ -23,10 +23,11 @@ class CurateIncrementalSpec extends AnyFunSuite {
   private lazy val state = {
     val base = Files.createTempDirectory("graft_curate_inc").toString
     CuratePipeline.run(spark, docs.filter(pmod(col("doc_id"), lit(10)) =!= 3), base)
-    val acc = CuratePipeline.runIncremental(spark,
-      docs.filter(pmod(col("doc_id"), lit(10)) === 3), base)
+    val (delta, jobs) = JobCount(spark)(CuratePipeline.runIncremental(spark,
+      docs.filter(pmod(col("doc_id"), lit(10)) === 3), base))
+    val acc = delta
       .collect().map(r => r.getAs[String]("stage") -> r.getAs[Long]("n_docs")).toMap
-    (base, acc)
+    (base, acc, jobs)
   }
   private def base = state._1
   private def acc = state._2
@@ -221,5 +222,34 @@ class CurateIncrementalSpec extends AnyFunSuite {
       CuratePipeline.runIncremental(spark, collider, base)
     }
     assert(e.getMessage.contains("disjoint"))
+  }
+
+  test("the delta batch's job budget: no schema-inference job, no emptiness probe") {
+    // this delta started 64 jobs while frozen-layer loads and merges
+    // inferred their schemas and each merge was preceded by an isEmpty
+    // probe. It holds no benchmark member, so its bench-gram merge is
+    // empty and never inferred: 14 of those jobs are gone, not 15
+    assert(state._3 <= 64 - 14, s"runIncremental started ${state._3} jobs")
+  }
+
+  test("after apply and two deltas every curated head marker attests its loaded count") {
+    acc // the full run + the fixture's delta batch
+    // a second batch of fresh documents: the fixture's batch re-keyed
+    // with its words reversed, so exact and near-dup keep it and every
+    // layer merges again, the shards merge rewriting touched partitions
+    CuratePipeline.runIncremental(spark, docs.filter(pmod(col("doc_id"), lit(10)) === 3)
+      .withColumn("doc_id", col("doc_id") + 80000000L)
+      .withColumn("text", concat_ws(" ", reverse(split(col("text"), " ")))), base)
+    val layers = new java.io.File(s"$base/curated").listFiles()
+      .filter(_.isDirectory).map("curated/" + _.getName).toSeq
+    assert(layers.size == 13, layers)
+    layers.foreach { layer =>
+      val head = Layout.versionedDir(base, layer,
+        Layout.committedVersions(spark, base, layer).last)
+      assert(Layout.committedRowCount(spark, head)
+        .contains(Layout.loadLatest(spark, base, layer).count()), head)
+    }
+    assert(Merge.mergeInfo(spark, Layout.versionedDir(base, "curated/shards",
+      Layout.committedVersions(spark, base, "curated/shards").last)).nonEmpty)
   }
 }
