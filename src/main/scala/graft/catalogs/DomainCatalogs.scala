@@ -1,8 +1,10 @@
 package graft.catalogs
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.ingest.Layout
 
 /** Episode/speaker metadata catalogs as Spark SQL aggregations
   * (reference: src/lakehouse/catalogs/episodes.py:82-174,
@@ -69,28 +71,11 @@ object DomainCatalogs {
         Window.orderBy(col(metric).desc, col("speaker"))))
       .orderBy("rank")
 
-  /** S14 catalog sink: timestamped `{name}_{yyyyMMdd_HHmmss}` directory —
-    * lexically sortable, so load-latest is a directory listing + max
-    * (reference catalogs/episodes.py:176-203 save_catalog). */
-  def saveCatalog(df: DataFrame, dir: String, name: String, timestamp: String): String = {
-    val out = s"$dir/${name}_$timestamp"
-    df.write.mode("overwrite").parquet(out)
-    out
-  }
-
-  /** S14 load-latest counterpart (episodes.py:205-228): newest timestamped
-    * catalog by name order, via the Hadoop FS API (works on any store). */
-  def loadLatestCatalog(spark: org.apache.spark.sql.SparkSession, dir: String,
-      name: String): DataFrame = {
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val latest =
-      (if (fs.exists(d)) fs.listStatus(d).toSeq else Nil)
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith(s"${name}_"))
-        .sorted.lastOption
-        .getOrElse(throw new IllegalArgumentException(s"no $name catalogs under $dir"))
-    spark.read.parquet(s"$dir/$latest")
-  }
+  /** S14 load-latest (episodes.py:205-228): the newest committed
+    * version of catalog `name`, written by the `catalog` command as
+    * `Layout.writeVersioned(df, dir, name)`. An unfinished or failed
+    * write is never read, and the marker's schema spares the load an
+    * inference job. */
+  def loadLatestCatalog(spark: SparkSession, dir: String, name: String): DataFrame =
+    Layout.loadLatest(spark, dir, name)
 }

@@ -80,12 +80,10 @@ object Main {
       case "catalog" =>
         val Array(base) = positional(args, 1)
         val utts = spark.read.parquet(s"$base/normalized")
-        val ts = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")
-          .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
-        val p1 = DomainCatalogs.saveCatalog(
-          DomainCatalogs.episodeCatalog(utts), s"$base/catalogs", "episodes", ts)
-        val p2 = DomainCatalogs.saveCatalog(
-          DomainCatalogs.speakerCatalog(utts), s"$base/catalogs", "speakers", ts)
+        val p1 = graft.ingest.Layout.writeVersioned(
+          DomainCatalogs.episodeCatalog(utts), s"$base/catalogs", "episodes")
+        val p2 = graft.ingest.Layout.writeVersioned(
+          DomainCatalogs.speakerCatalog(utts), s"$base/catalogs", "speakers")
         println(s"catalogs written: $p1, $p2")
 
       case "quality" =>

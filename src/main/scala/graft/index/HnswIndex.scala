@@ -57,7 +57,7 @@ object HnswIndex {
     def graph: String = s"$dir/graph.parquet"
     def codebooks: String = s"$dir/codebooks.parquet"
     def metadata: String = IndexArtifact.metadataPath(dir)
-    def staging: String = s"$dir/rebuild_staging.parquet"
+    def staging: String = IndexArtifact.stagingPath(dir)
   }
 
   /** `pqM == 0` ⇒ no PQ codes stored (float / int8 storage only). */
@@ -110,16 +110,6 @@ object HnswIndex {
       nodeBase: Array[Int], adjOff: Array[Int], adjData: Array[Int],
       entry: Int, maxLevel: Int) {
     def n: Int = ids.length
-  }
-
-  /** Reconstruct the `_v` column on a frame read from storage (int8
-    * rows dequantize; a null scale marks the all-zero vector). */
-  private def restored(df: DataFrame): DataFrame = {
-    import graft.functions.{VectorFunctions => VF}
-    if (!df.columns.contains("_q")) df
-    else df.withColumn("_v", when(col("_qs").isNotNull,
-      VF.dequantizeInt8(col("_q"), col("_qs")))
-      .otherwise(transform(col("_q"), x => lit(0.0))))
   }
 
   // ---------------------------------------------------------------- build
@@ -323,7 +313,7 @@ object HnswIndex {
     val meta = readMetadata(spark, p)
     val existingRaw = spark.read.parquet(p.graph)
     val isQuant = existingRaw.columns.contains("_q")
-    val existing = restored(existingRaw)
+    val existing = IndexArtifact.restored(existingRaw)
       .select(col("cell_id").cast("int"), col("_id"), col("_v"))
     val fresh = vectors.join(
       existing.select(col("_id").as(idCol)), Seq(idCol), "left_anti").cache()
@@ -345,8 +335,7 @@ object HnswIndex {
         build(spark.read.parquet(p.staging), idCol, vecCol, meta.nCells,
           outDir, meta.m, meta.efConstruction, meta.seed, quantized = isQuant,
           pqM = meta.pqM, pqK = meta.pqK)
-        val sp = new org.apache.hadoop.fs.Path(p.staging)
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+        IndexArtifact.dropStaged(spark, p.staging)
         "rebuild"
       } else {
         val assignedNew = Similarity.assignToNearest(
@@ -369,29 +358,23 @@ object HnswIndex {
         // staging is safe on disk — un-publish before the partition
         // overwrite mutates the artifact
         IndexArtifact.unpublish(spark, outDir)
-        val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try {
-          val nodes = graphNodes(spark.read.parquet(p.staging), meta.m,
-            meta.efConstruction, meta.seed, hintCells = touched.length)
-          // PQ append re-encodes the touched cells with the PERSISTED
-          // codebooks — no retrain, exactly how FAISS add()s to a
-          // trained index (rebuild is where codebooks refit)
-          val stored =
-            if (meta.pqM > 0) {
-              val (cellIds, centArr) = loadedCentroids(spark.read.parquet(p.centroids))
-              quantizedStorage(withPqCodes(nodes, cellIds.zipWithIndex.toMap,
-                centArr, loadPqModel(spark, p, meta)))
-            } else if (isQuant) quantizedStorage(nodes)
-            else nodes
-          stored.write.mode("overwrite").partitionBy("cell_id").parquet(p.graph)
-        }
-        finally prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        val sp = new org.apache.hadoop.fs.Path(p.staging)
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+        val nodes = graphNodes(spark.read.parquet(p.staging), meta.m,
+          meta.efConstruction, meta.seed, hintCells = touched.length)
+        // PQ append re-encodes the touched cells with the PERSISTED
+        // codebooks — no retrain, exactly how FAISS add()s to a
+        // trained index (rebuild is where codebooks refit)
+        val stored =
+          if (meta.pqM > 0) {
+            val (cellIds, centArr) = loadedCentroids(spark.read.parquet(p.centroids))
+            quantizedStorage(withPqCodes(nodes, cellIds.zipWithIndex.toMap,
+              centArr, loadPqModel(spark, p, meta)))
+          } else if (isQuant) quantizedStorage(nodes)
+          else nodes
+        // dynamic: only the touched cells' partitions are replaced; as a
+        // write option it leaves the session's own setting alone
+        stored.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("cell_id").parquet(p.graph)
+        IndexArtifact.dropStaged(spark, p.staging)
         publishMetadata(spark, p, meta.copy(n = nExisting + nNew))
         "append"
       }
@@ -467,7 +450,7 @@ object HnswIndex {
 
   private def readGraph(spark: SparkSession, p: Paths): Dataset[CellGraph] = {
     import spark.implicits._
-    val ds = restored(spark.read.parquet(p.graph))
+    val ds = IndexArtifact.restored(spark.read.parquet(p.graph))
       .select(col("cell_id").cast("int"), col("_id"), col("_v"), col("_nn"),
         col("top_layer"), col("nbrs"))
       .as[(Int, Long, Seq[Double], Double, Int, Seq[Seq[Int]])]
@@ -824,7 +807,7 @@ object HnswIndex {
       // exact rerank against the ON-DISK int8 store: probed-cell parquet
       // read per batch (the IO the codes-only residency trades for)
       val shortlist = perCell.map(t => (t._1, t._2)).toDF("query_id", "neighbor_id")
-      val store = restored(spark.read.parquet(p.graph)
+      val store = IndexArtifact.restored(spark.read.parquet(p.graph)
           .filter(col("cell_id").isin(probedCells: _*)))
         .select(col("_id").as("neighbor_id"), col("_v").as("nv"))
       Similarity.rerank(shortlist, queries, store, k)

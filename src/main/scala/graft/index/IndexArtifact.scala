@@ -5,10 +5,11 @@ import scala.collection.concurrent.TrieMap
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, get, typedlit}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, get, lit, transform, typedlit, when}
 
 import graft.core.Json
+import graft.functions.{VectorFunctions => VF}
 
 /** The one commit protocol of an index artifact, shared by the IVF, PQ
   * and HNSW families (reference: faiss_builder.py:181-234 treats the
@@ -28,6 +29,9 @@ private[graft] object IndexArtifact {
 
   def metadataPath(dir: String): String = s"$dir/metadata.json"
 
+  /** Where a rebuild or update stages vectors before overwriting them. */
+  def stagingPath(dir: String): String = s"$dir/rebuild_staging.parquet"
+
   private def fsOf(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -43,7 +47,7 @@ private[graft] object IndexArtifact {
     new IllegalStateException(
       s"index at $dir is incomplete (no ${metadataPath(dir)}) — a writer " +
         "crashed mid-build or mid-update; rebuild from the corpus (a " +
-        s"crashed rebuild may have staged it at $dir/rebuild_staging.parquet)")
+        s"crashed rebuild may have staged it at ${stagingPath(dir)})")
 
   /** The published generation; refuses an unpublished artifact. */
   def published(spark: SparkSession, dir: String): Long =
@@ -61,6 +65,45 @@ private[graft] object IndexArtifact {
     Json.write(fs.create(tmp, true), metadata)
     if (!fs.rename(tmp, path))
       throw new IllegalStateException(s"could not publish $path (rename failed)")
+  }
+
+  def dropStaged(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    fsOf(spark, p).delete(p, true)
+  }
+
+  /** Stored vectors with `_v` reconstructed: int8 rows dequantize, and a
+    * null scale marks the all-zero vector. */
+  def restored(df: DataFrame): DataFrame =
+    if (!df.columns.contains("_q")) df
+    else df.withColumn("_v", when(col("_qs").isNotNull,
+      VF.dequantizeInt8(col("_q"), col("_qs")))
+      .otherwise(transform(col("_q"), x => lit(0.0))))
+
+  /** Build the unpublished artifact at `dir` over `vectors` and every
+    * vector it held before. A writer that crashed after [[unpublish]]
+    * left those in `stored` (mid-append or mid-overwrite) and in
+    * [[stagingPath]] (staged before `stored` was overwritten). Both, with
+    * `vectors`, are appended to `recovery.parquet`, so a crash here only
+    * adds duplicates; `build` runs over it deduplicated by id, and the
+    * staged copies go once it has published. With none of them on disk
+    * (a first build), `build` takes `vectors`. */
+  def rebuild(vectors: DataFrame, idCol: String, vecCol: String, dir: String,
+      stored: String)(build: DataFrame => Unit): Unit = {
+    val spark = vectors.sparkSession
+    val recovery = new Path(s"$dir/recovery.parquet")
+    val left = Seq(stored, stagingPath(dir)).flatMap { path =>
+      // absent, or a directory no write has committed a file to
+      try Some(restored(spark.read.parquet(path))) catch { case _: AnalysisException => None }
+    }.map(df => if (!df.columns.contains("_v")) df.select(idCol, vecCol)
+      else df.select(col("_id").as(idCol), col("_v").as(vecCol)))
+    if (left.isEmpty && !fsOf(spark, recovery).exists(recovery)) build(vectors)
+    else {
+      left.foldLeft(vectors.select(col(idCol), VF.vecAsDouble(col(vecCol)).as(vecCol)))(
+        _ unionByName _).write.mode("append").parquet(recovery.toString)
+      build(spark.read.parquet(recovery.toString).dropDuplicates(idCol))
+      Seq(stagingPath(dir), recovery.toString).foreach(dropStaged(spark, _))
+    }
   }
 
   /** The published metadata object. Bytes that do not parse as one

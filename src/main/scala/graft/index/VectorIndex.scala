@@ -22,7 +22,7 @@ object VectorIndex {
   final case class Paths(dir: String) {
     def centroids: String = s"$dir/centroids.parquet"
     def assigned: String = s"$dir/assigned.parquet"
-    def staging: String = s"$dir/rebuild_staging.parquet"
+    def staging: String = IndexArtifact.stagingPath(dir)
   }
 
   /** Build and persist: train centroids (on a sample), assign every
@@ -79,15 +79,6 @@ object VectorIndex {
     }
   }
 
-  /** Reconstruct the vector column on a frame read from storage. */
-  private def restored(df: DataFrame): DataFrame = {
-    import graft.functions.{VectorFunctions => VF}
-    if (!df.columns.contains("_q")) df
-    else df.withColumn("_v", when(col("_qs").isNotNull,
-      VF.dequantizeInt8(col("_q"), col("_qs")))
-      .otherwise(transform(col("_q"), x => lit(0.0)))) // null-scale = zero vec
-  }
-
   /** Precompute each indexed vector's L2 norm at WRITE time — searches
     * are many and builds are one, so the sqrt-dot belongs in the build
     * (FAISS likewise preprocesses vectors into the index). */
@@ -114,7 +105,7 @@ object VectorIndex {
     IndexArtifact.published(spark, outDir)
     val existingRaw = spark.read.parquet(p.assigned)
     val isQuant = existingRaw.columns.contains("_q")
-    val existing = restored(existingRaw)
+    val existing = IndexArtifact.restored(existingRaw)
     val fresh = vectors.join(
       existing.select(col("_id").as(idCol)), Seq(idCol), "left_anti").cache()
     try {
@@ -138,8 +129,7 @@ object VectorIndex {
           .write.mode("overwrite").parquet(p.staging)
         build(spark.read.parquet(p.staging), idCol, vecCol, nCells, outDir,
           quantized = isQuant)
-        val sp = new org.apache.hadoop.fs.Path(p.staging)
-        sp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(sp, true)
+        IndexArtifact.dropStaged(spark, p.staging)
         "rebuild"
       } else {
         val assigned = Similarity.assignToNearest(
@@ -188,7 +178,7 @@ object VectorIndex {
     // corpus norms were precomputed at build time; query norms are a
     // handful of sqrt-dots — both stay one-per-vector instead of one per
     // (query, candidate) pair after the fan-out
-    val corpus = restored(table.assigned)
+    val corpus = IndexArtifact.restored(table.assigned)
       .select(col("_id").as("neighbor_id"), col("_v").as("nv"), col("cell_id"), col("_nn"))
     // the expression returns positions into the sorted cell list;
     // candidates translates them back to the (possibly sparse) cell_id

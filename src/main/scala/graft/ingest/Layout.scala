@@ -34,15 +34,10 @@ object Layout {
     * so loads need no inference job. */
   val CommitMarker = "_graft_commit.json"
 
-  /** Standard layer directories (structure.py:20-30). */
-  val Layers: Seq[String] = Seq(
-    "raw", "normalized", "spans", "beats", "sections",
-    "embeddings", "ann_index", "catalogs")
-
   def versionedDir(base: String, layer: String, version: Int): String =
     s"$base/$layer/v$version"
 
-  private def fs(spark: SparkSession, path: String): FileSystem =
+  private[ingest] def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Existing version numbers of a layer, ascending (empty if none). */
@@ -66,7 +61,9 @@ object Layout {
     * metadata: one directory listing per visited dir, no data reads. */
   def listLayers(spark: SparkSession, base: String, maxDepth: Int = 3): Seq[String] = {
     val f = fs(spark, base)
-    val root = new Path(base)
+    // qualified like the paths listStatus returns, or a scheme-less base
+    // relativizes nothing and every layer comes back as an absolute path
+    val root = f.makeQualified(new Path(base))
     if (!f.exists(root)) return Nil
     def walk(p: Path, depth: Int): Seq[String] = {
       val kids = f.listStatus(p).toSeq.filter(_.isDirectory)
@@ -323,6 +320,25 @@ object Layout {
         case None    => df.repartition(nFiles)
       }
     writeVersioned(packed, base, layer, partitionCols = partitionCols)
+  }
+
+  /** Delete every version below the newest committed one, for a layer
+    * that keeps its current state and no history (a streaming
+    * aggregate's fold). The head must be self-contained: a merged or
+    * checkpointed head inherits files from the versions below it.
+    * Returns the directories removed. */
+  def expireHistory(spark: SparkSession, base: String, layer: String): Seq[String] = {
+    val f = fs(spark, base)
+    committedVersions(spark, base, layer).lastOption.toSeq.flatMap { head =>
+      val dir = versionedDir(base, layer, head)
+      require(Merge.mergeInfo(spark, dir).isEmpty && Merge.manifestInfo(spark, dir).isEmpty,
+        s"v$head of $layer inherits from older versions; compact it before expiring them")
+      versions(spark, base, layer).filter(_ < head).map { v =>
+        val old = versionedDir(base, layer, v)
+        f.delete(new Path(old), true)
+        old
+      }
+    }
   }
 
   /** Delete uncommitted version directories (crashed writers, rollbacks)

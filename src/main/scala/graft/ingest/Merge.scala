@@ -2,12 +2,13 @@ package graft.ingest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.core.Json
+import graft.ingest.Layout.fs
 
 /** Partition-scoped MERGE (upsert/delete) on the versioned layout — the
   * Delta-MERGE idea expressed through [[Layout]]'s marker protocol.
@@ -45,9 +46,6 @@ object Merge {
 
   final case class MergeInfo(baseVersion: Int, partitionCol: String,
       affected: Seq[String], evolved: Boolean = false)
-
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Hive-safe partition values: anything needing escaping is refused at
     * write time so dir-name ↔ value mapping stays the identity. */

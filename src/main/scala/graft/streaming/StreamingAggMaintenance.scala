@@ -1,50 +1,50 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ingest.Layout
 import graft.operators.IncrementalAgg
 
 /** Streaming maintenance of a materialized aggregate: each micro-batch
   * is folded into a keyed mergeable-state table ([[IncrementalAgg]])
-  * persisted as plain parquet — the streaming materialized view. Batch
+  * kept as a [[Layout]] layer — the streaming materialized view. Batch
   * work is ∝ micro-batch size + current state keys; the raw stream is
-  * never re-read. State writes go through a temp-dir swap so a crash
-  * mid-write leaves the previous state intact (the checkpoint re-drives
-  * the failed batch on restart).
+  * never re-read. Batch `id` writes version `id + 1` beside the current
+  * one, so a crash mid-write leaves the previous state committed (the
+  * checkpoint re-drives the failed batch on restart).
   */
 object StreamingAggMaintenance {
 
-  /** Read the current state table if it exists and is complete. */
-  def currentState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): Option[DataFrame] = {
-    val success = new Path(stateDir, "_SUCCESS")
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(success)) Some(spark.read.parquet(stateDir)) else None
+  /** `stateDir` as a Layout (base, layer): its versions are `stateDir/vN`. */
+  private def layerOf(stateDir: String): (String, String) = {
+    val p = new Path(stateDir)
+    (p.getParent.toString, p.getName)
   }
 
-  /** Highest batch id already folded into the state (-1 if none). The
-    * marker lives INSIDE the state dir and swaps atomically with it. */
-  private def appliedBatch(fs: org.apache.hadoop.fs.FileSystem, stateDir: String): Long = {
-    val dir = new Path(stateDir)
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.startsWith("_applied_") => s.stripPrefix("_applied_").toLong }
-      .foldLeft(-1L)(math.max)
+  /** The newest committed state version, and the state it holds. */
+  private def committed(spark: SparkSession, stateDir: String): Option[(Int, DataFrame)] = {
+    val (base, layer) = layerOf(stateDir)
+    Layout.committedVersions(spark, base, layer).lastOption
+      .map(v => v -> Layout.loadVersion(spark, base, layer, v))
   }
+
+  /** Read the current state table if one is committed. */
+  def currentState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    committed(spark, stateDir).map(_._2)
 
   /** Start a foreachBatch query maintaining `stateDir` from `stream`.
     * AvailableNow by default (drain-and-stop); pass a processing-time
     * trigger for continuous maintenance.
     *
     * Idempotent under foreachBatch redelivery: a crash between the state
-    * swap and the checkpoint commit makes Spark re-drive the same batch
-    * id, which would double-count into the state — so the applied batch
-    * id is recorded inside the state dir (it swaps atomically with the
-    * data) and redelivered ids are skipped. The state dir is therefore
-    * BOUND to its checkpoint: starting over with a fresh checkpoint
-    * (batch ids restart at 0) requires a fresh state dir too. */
+    * commit and the checkpoint commit makes Spark re-drive the same batch
+    * id, which would double-count into the state — so batch `id` commits
+    * state version `id + 1`, and a batch whose version is already
+    * committed is skipped. The state dir is therefore BOUND to its
+    * checkpoint: starting over with a fresh checkpoint (batch ids
+    * restart at 0) requires a fresh state dir too. */
   def run(stream: DataFrame, stateDir: String, checkpointDir: String,
       keys: Seq[String], specs: Seq[IncrementalAgg.Spec],
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -53,17 +53,15 @@ object StreamingAggMaintenance {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (batchId > appliedBatch(fs, stateDir)) {
-          val next = IncrementalAgg.refresh(
-            currentState(spark, stateDir), batch, keys, specs)
-          // state is both input and output of this batch: stage the new
-          // version first, then swap — never overwrite what you're reading
-          val tmp = s"$stateDir.next"
-          next.write.mode("overwrite").parquet(tmp)
-          fs.create(new Path(tmp, s"_applied_$batchId"), true).close()
-          fs.delete(new Path(stateDir), true)
-          fs.rename(new Path(tmp), new Path(stateDir))
+        val (base, layer) = layerOf(stateDir)
+        val current = committed(spark, stateDir)
+        val version = Math.toIntExact(batchId + 1)
+        if (version > current.fold(0)(_._1)) {
+          // an explicit version overwrites what a crashed attempt left
+          // there; the commit marker lands last, then older states go
+          Layout.writeVersioned(IncrementalAgg.refresh(current.map(_._2), batch, keys, specs),
+            base, layer, Some(version))
+          Layout.expireHistory(spark, base, layer)
         }
         ()
       }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalogs.DomainCatalogs
 import graft.embed.{Embedder, HashEncoder}
-import graft.ingest.Ingest
+import graft.ingest.{Ingest, Layout}
 import graft.multimodal.Multimodal
 import graft.quality.Quality
 import graft.segment.{Beats, Sections, Spans}
@@ -179,15 +179,25 @@ class DomainPipelineSpec extends AnyFunSuite {
   test("catalog save + load-latest round-trip (S14)") {
     val norm = spark.read.parquet(s"$lakeDir/normalized")
     val dir = s"$lakeDir/catalogs"
-    DomainCatalogs.saveCatalog(
-      DomainCatalogs.episodeCatalog(norm).limit(1), dir, "episodes", "20260101_000000")
-    DomainCatalogs.saveCatalog(
-      DomainCatalogs.episodeCatalog(norm), dir, "episodes", "20260102_000000")
+    Layout.writeVersioned(DomainCatalogs.episodeCatalog(norm).limit(1), dir, "episodes")
+    Layout.writeVersioned(DomainCatalogs.episodeCatalog(norm), dir, "episodes")
     val latest = DomainCatalogs.loadLatestCatalog(spark, dir, "episodes")
     assert(latest.count() == 2) // the newer, full catalog
     intercept[IllegalArgumentException] {
       DomainCatalogs.loadLatestCatalog(spark, dir, "speakers")
     }
+  }
+
+  test("a failed catalog write leaves the previous catalog the latest (S14)") {
+    val norm = spark.read.parquet(s"$lakeDir/normalized")
+    val dir = Files.createTempDirectory("graft_catalog_fail").toString
+    Layout.writeVersioned(DomainCatalogs.episodeCatalog(norm), dir, "episodes")
+    intercept[Exception] {
+      Layout.writeVersioned(DomainCatalogs.episodeCatalog(norm)
+        .withColumn("title", raise_error(lit("catalog writer failed"))), dir, "episodes")
+    }
+    val latest = DomainCatalogs.loadLatestCatalog(spark, dir, "episodes")
+    assert(latest.count() == 2 && latest.filter($"title" === "Pilot").count() == 1)
   }
 
   test("snapshot: checksums, semver bump, validation detects tampering") {

@@ -75,6 +75,18 @@ class CurateCliSpec extends AnyFunSuite {
     }
   }
 
+  test("lake-status names a layer relative to a lake path given without a scheme") {
+    import spark.implicits._
+    val lake = Files.createTempDirectory("graft_cli_status").toString
+    graft.ingest.Layout.writeVersioned(Seq(1, 2, 3).toDF("x"), s"$lake/catalogs", "episodes")
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) {
+      Main.run(spark, Array("lake-status", lake))
+    }
+    assert(out.toString.split("\n").toSeq.drop(1) ==
+      Seq("catalogs/episodes              1/1       v1     3          0      0"), out.toString)
+  }
+
   test("a command given too few arguments names its usage line") {
     val lake = Files.createTempDirectory("graft_cli_arity").toString
     val e = intercept[IllegalArgumentException] {
